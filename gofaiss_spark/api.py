@@ -497,14 +497,22 @@ def _local_search_np(index, qmat, k: int, params: dict):
         try:
             return _to_pool_handle(index).search(
                 qmat, k=k, nprobe=nprobe, refine=refine)
-        except Exception:
+        except Exception as exc:
             # pool spawn/IPC can fail in constrained environments —
-            # the in-process replica serves the same bits. Close and
-            # unregister the dead pool: leaving it cached would
-            # re-raise forever, and leaving it in _POOLS (or its
-            # workers alive) leaks processes + shm until interpreter
-            # exit — one fresh pool attempt per FAILED pool, never
-            # one per call.
+            # the in-process replica serves the same bits, but not
+            # silently: each fallback is counted and each dead pool
+            # warns once. Close and unregister the dead pool: leaving
+            # it cached would re-raise forever, and leaving it in
+            # _POOLS (or its workers alive) leaks processes + shm
+            # until interpreter exit — one fresh pool attempt per
+            # FAILED pool, never one per call.
+            import warnings
+
+            ls._count_fallback("POOL_FALLBACKS")
+            warnings.warn(
+                f"LocalServerPool failed ({type(exc).__name__}: {exc}); "
+                "serving this batch in process",
+                RuntimeWarning, stacklevel=2)
             dead = index.__dict__.pop("_tier_pool", None)
             if dead is not None:
                 try:

@@ -51,17 +51,16 @@ __all__ = [
 ]
 
 _POOL = None
-# When set (inside a LocalServerPool worker process), caps both the
-# serving thread-pool size and the cell-loop fan-out so W processes ×
-# T threads stays at the machine's core count.
+# When set (inside a LocalServerPool worker process or a shard task),
+# caps the serving thread-pool size so W processes × T threads stays
+# at the machine's core count.
 _MAX_CHUNKS: int | None = None
 
 
 def _pool():
-    """Shared serving thread pool. A per-call ThreadPoolExecutor
-    spawns ~2·n_workers OS threads per search — measured ~50-100 ms
-    per 10k-query batch, a third of the whole pruned-search budget —
-    so serving reuses one process-wide pool (workers are idle-cheap)."""
+    """Shared serving thread pool (LocalFlatIndex's query blocks). A
+    per-call ThreadPoolExecutor spawns OS threads on every search, so
+    serving reuses one process-wide pool (workers are idle-cheap)."""
     global _POOL
     if _POOL is None:
         import os as _os
@@ -79,28 +78,21 @@ def _pool():
     return _POOL
 
 
-def _fanout(default_cap: int = 16) -> int:
-    import os as _os
-
-    if _MAX_CHUNKS is not None:
-        return max(1, _MAX_CHUNKS)
-    return min(default_cap, _os.cpu_count() or 8)
-
-
-# observability: (query, block) pairs that took the exact-f64 fallback
-# because the f32 selection margin could not prove the cut exact —
-# read by tests to assert the guard actually fires on adversarial data.
-# Incremented under a lock: _exact_scan_topk runs from thread-pool
-# workers (do_block/do_final) and += on a module global is a
-# read-modify-write that would otherwise drop counts.
+# observability: queries that took the exact-f64 fallback because the
+# f32 selection margin could not prove the cut exact — read by tests
+# to assert the guard actually fires on adversarial data.
 GUARD_FALLBACKS = 0
-_GUARD_LOCK = _threading.Lock()
+# batches api served in process because their LocalServerPool failed
+POOL_FALLBACKS = 0
+# Counters are incremented under a lock: searches run from serving
+# threads and client threads at once, and += on a module global is a
+# read-modify-write that would otherwise drop counts.
+_COUNTER_LOCK = _threading.Lock()
 
 
-def _count_fallback() -> None:
-    global GUARD_FALLBACKS
-    with _GUARD_LOCK:
-        GUARD_FALLBACKS += 1
+def _count_fallback(counter: str = "GUARD_FALLBACKS") -> None:
+    with _COUNTER_LOCK:
+        globals()[counter] += 1
 
 
 def _cosine_from_ip(ip: np.ndarray, bnorm: np.ndarray,
@@ -267,8 +259,7 @@ class LocalFlatIndex:
                     continue
                 # later tiles: admit only candidates beating the
                 # running per-query bound (SIMD compare; introselect
-                # over every tile was the serial hot spot — the same
-                # bound-pruned shape as LocalIvfIndex.search). On
+                # over every tile was the serial hot spot). On
                 # uniform data almost no row improves per tile, so the
                 # row loop below touches a handful of queries; if many
                 # rows improve (clustered/sorted insert order) the
@@ -417,24 +408,34 @@ class LocalIvfIndex:
     search_ivf, pkg/index/ivf/ivf.go:115-161 semantics).
 
     CSR cell layout: rows sorted by (list_id, id) so every inverted
-    list is one contiguous slice — a probe is a dense GEMM over the
-    slice, never a gather. Probe selection runs in f64 with the same
-    distance formula as the distributed ``probe_lists``, so this
-    server scans the same cells the cluster path would; candidate
-    scoring is blocked f32 BLAS with an exact f64 re-score of the
-    survivors (the LocalFlatIndex contract: reported distances are
-    bit-identical to the distributed kernel's).
+    list is one contiguous slice. Probe selection runs in f64 with the
+    same distance formula as the distributed ``probe_lists``, so this
+    server scans the same cells the cluster path would. Candidates are
+    ranked by an f32 score and the top-(k+16) of each query are
+    re-scored exactly in f64 (the LocalFlatIndex contract: reported
+    distances are bit-identical to the distributed kernel's).
 
-    Selection is bound-pruned: each query's NEAREST cell runs a full
-    top-k2 argpartition whose k2-th best f32 score becomes the
-    query's pruning bound; every other probed cell admits only
-    candidates beating the bound via a SIMD compare (per-row
-    introselect over every scored row was ~55% of a serial 10k-query
-    batch; the compare is ~20× cheaper per element — measured 2.4×
-    end-to-end, 5.1k vs 2.1k QPS interleaved on the same box at
-    100k/nprobe=50). Pool membership is unchanged: it still contains
-    the global top-k2 by f32 score (the bound is an upper bound on
-    the global k2-th best), so results stay bit-identical.
+    Two ranking kernels share that head and tail; ``search`` picks one
+    per call from the shape of its input:
+
+    - per-query, when ``nq·nprobe`` is at most the number of cells
+      present in this index, i.e. when queries rarely share a cell:
+      each query gathers its probed cells' rows, scores them with one
+      f32 GEMV and keeps an argpartition of k+16. It costs a dozen
+      numpy calls per query, so small requests from concurrent
+      callers do not queue behind per-cell work on the GIL.
+    - cell-grouped, for batches: one f32 GEMM per probed cell over the
+      queries that probe it, an argpartition of k+16 per (query,
+      cell), then one per query over that pool. The pool is as wide
+      as the most probed cells PRESENT here for any query, so a
+      list-sharded replica holding nlist/W cells keeps a narrow pool.
+
+    The shared tail is the f32_select_margin guard (a query whose f32
+    cut cannot be proven exact is re-ranked in f64 over its probed
+    cells and counted in GUARD_FALLBACKS), the exact f64 re-score and
+    the ascending (distance, id) sort. The kernel starts no threads:
+    parallelism comes from client threads, LocalServerPool processes
+    and shard tasks.
 
     Scale posture: a serving REPLICA for an index that fits one node;
     the 100 TB corpus stays in partitionBy("list_id") Parquet and is
@@ -474,12 +475,31 @@ class LocalIvfIndex:
             self._inv_n_cache = _inv_norms_f32(self.norms_sq)
         return self._inv_n_cache
 
+    def _f32_scores(self, q: np.ndarray, sel) -> np.ndarray:
+        """f32 ranking scores of the stored rows ``sel`` (a slice or a
+        position array) for the f32 queries ``q``, lower is better."""
+        sc = q @ self.vecs[sel].T
+        if self.metric == "l2":
+            sc *= -2.0
+            sc += self.norms_sq[sel]
+        elif self.metric == "cosine":
+            # raw rows: divide by row norms here (zero rows → 0 →
+            # distance exactly 1.0, the zero-vector contract)
+            sc *= self._inv_n()[sel]
+            np.subtract(1.0, sc, out=sc)
+        else:
+            np.negative(sc, out=sc)
+        return sc
+
     def search(self, qmat: np.ndarray, k: int = 10,
                nprobe: int = 10) -> tuple[np.ndarray, np.ndarray]:
         """nprobe-pruned top-k for a query matrix → (ids (q, k),
-        dists (q, k)), ascending (distance, id). nprobe ≥ nlist ⇒
-        exact flat search (every cell scanned), the correctness-gate
-        property shared with search_ivf."""
+        dists (q, k)), ascending (distance, id). A query whose probed
+        cells hold fewer than k rows is padded with id int64.max and
+        distance inf. k ≤ 0 or k > n returns every candidate in the
+        probed cells (width n). nprobe ≥ nlist ⇒ exact flat search
+        (every cell scanned), the correctness-gate property shared
+        with search_ivf."""
         from gofaiss_spark.functions.distance import np_distance_matrix
 
         # RAW f64 queries for every exact path (probe selection, the
@@ -492,280 +512,134 @@ class LocalIvfIndex:
             q = (q64 / qn).astype(np.float32)
         else:
             q = q64.astype(np.float32)
-        nq, nlist = q.shape[0], self.nlist
+        nq, nlist, n = q.shape[0], self.nlist, len(self.ids)
         if nprobe <= 0 or nprobe > nlist:
             nprobe = nlist
+        k = min(k, n) if k > 0 else n
         k2 = k + 16
 
-        # stage 1 — probe selection, f64, same formula as probe_lists
-        # (threaded over query blocks: one monolithic f64 GEMM runs on
-        # BLAS's 2-thread cap and was ~40% of a pruned 10k-batch).
-        # The selected probes are sorted by centroid distance so
-        # column 0 is each query's NEAREST cell — the bound provider
-        # for the pruned pass below.
-        np_ = min(nprobe, nlist)
-        cells = np.empty((nq, np_), dtype=np.int64)
-
-        def do_probe(s: int, e: int) -> None:
-            dm = np_distance_matrix(self.centroids, q64[s:e], self.metric)
-            if nprobe < nlist:
-                sel = np.argpartition(dm, nprobe - 1, axis=0)[:nprobe, :]
-            else:
-                sel = np.broadcast_to(
-                    np.arange(nlist)[:, None], (nlist, e - s)
-                )
-            dv = np.take_along_axis(dm, sel, axis=0)
-            cells[s:e] = np.take_along_axis(
-                sel, np.argsort(dv, axis=0, kind="stable"), axis=0
-            ).T
-
-        pspans = [(s, min(s + 1024, nq)) for s in range(0, nq, 1024)]
-        if len(pspans) > 1:
-            list(_pool().map(lambda se: do_probe(*se), pspans))
+        # head — probe selection, f64, same formula as probe_lists
+        dm = np_distance_matrix(self.centroids, q64, self.metric)
+        if nprobe < nlist:
+            cells = np.argpartition(dm, nprobe - 1, axis=0)[:nprobe].T
         else:
-            do_probe(0, nq)
-
-        # stage 2 — candidate pool: each (query, PRESENT probe rank)
-        # owns a disjoint k2-slot block, so per-cell writes are
-        # race-free and the cell loops thread cleanly (GEMM + numpy
-        # reductions release the GIL). Ranks are dense over cells
-        # present in THIS index: on a full index that is just the
-        # probe rank (pool width nprobe·k2, unchanged), but a
-        # list-sharded replica holds ~nlist/W of the probed cells and
-        # a full-width pool is mostly memset traffic (at 1M/8 shards/
-        # nprobe=100 the pool shrinks ~4× and the per-task np.full
-        # cost with it).
-        present = self.offsets[1:] > self.offsets[:-1]
-        pc = present[cells]  # (nq, np_) bool
-        prank = np.cumsum(pc, axis=1) - 1  # dense rank where pc
-        npp = max(1, int(pc.sum(axis=1).max(initial=0)))
-        pool_w = npp * k2
-        pool_s = np.full((nq, pool_w), np.inf, dtype=np.float32)
-        pool_i = np.full((nq, pool_w), -1, dtype=np.int64)
-        slot = np.arange(k2)
-
-        def cell_scores(qidx: np.ndarray, s0: int, s1: int) -> np.ndarray:
-            # cell-major rows are contiguous; .T is BLAS-native transB
-            # (a column slice of the full (dim, n) transpose would
-            # stride by n floats per row and stall the GEMM)
-            sc = q[qidx] @ self.vecs[s0:s1].T  # (g, w) f32
-            if self.metric == "l2":
-                sc *= -2.0
-                sc += self.norms_sq[None, s0:s1]
-            elif self.metric == "cosine":
-                # raw rows: divide by row norms here (zero rows → 0
-                # → distance exactly 1.0, the zero-vector contract)
-                sc *= self._inv_n()[None, s0:s1]
-                np.subtract(1.0, sc, out=sc)
-            else:
-                np.negative(sc, out=sc)
-            return sc
-
-        # pass A — each query's nearest cell: full top-k2 selection,
-        # which also yields the per-query pruning bound (its k2-th
-        # best f32 score). Any candidate anywhere that belongs in the
-        # global top-k2-by-f32 must beat the global k2-th best, which
-        # is ≤ this cell's k2-th best — so pass B can discard on a
-        # SIMD compare instead of running argpartition per cell (the
-        # measured hot spot: introselect over every scored row was
-        # ~55% of a serial 10k-query batch; the compare is ~20×
-        # cheaper per element).
-        bound = np.full(nq, np.inf, dtype=np.float32)
-        # The bound provider is each query's nearest PRESENT cell:
-        # on a full index that is cells[:, 0] (rank 0), but a
-        # list-sharded serving replica (operators/shard_serve.py)
-        # holds only nlist/W cells — rank 0 is usually empty there,
-        # and an inf bound collapses pass B into per-row introselect
-        # over every scored cell (measured 10× on the 1M/8-shard
-        # workload). Any present cell's k2-th best upper-bounds this
-        # index's k2-th best, so the bound stays valid shard-locally.
-        first = np.argmax(pc, axis=1)  # first present rank (0 if none)
-        flat0 = cells[np.arange(nq), first]
-        order0 = np.argsort(flat0, kind="stable")
-        b0 = np.searchsorted(flat0[order0], np.arange(nlist + 1))
-
-        def do_cell0(c: int) -> None:
-            g0, g1 = b0[c], b0[c + 1]
-            s0, s1 = self.offsets[c], self.offsets[c + 1]
-            w = s1 - s0
-            if g1 == g0 or w == 0:
-                return
-            qidx = order0[g0:g1]
-            sc = cell_scores(qidx, s0, s1)
-            kk = min(k2, w)
-            if kk < w:
-                p = np.argpartition(sc, kk - 1, axis=1)[:, :kk]
-            else:
-                p = np.broadcast_to(np.arange(w), (sc.shape[0], w))
-            psc = np.take_along_axis(sc, p, axis=1)
-            # each query's first present rank is dense rank 0, so
-            # pass A always writes slot block 0
-            pool_s[qidx[:, None], slot[None, :kk]] = psc
-            pool_i[qidx[:, None], slot[None, :kk]] = p + s0
-            if w >= k2:
-                # loose ulp margin so borderline f32 ties survive
-                bmax = psc.max(axis=1)
-                bound[qidx] = bmax + np.abs(bmax) * 1e-3 + 1e-3
-
-        # pass B — remaining probe ranks: score, keep only candidates
-        # beating the bound (typically a handful per row), fall back
-        # to per-row top-k2 selection only for rows where the bound
-        # kept more than k2 (small/unbounded nearest cells)
-        if np_ > 1:
-            # every PRESENT (query, rank) pair except each query's
-            # pass-A rank; absent cells have no rows to score
-            ranks = np.broadcast_to(np.arange(np_), (nq, np_))
-            keep = pc & (ranks != first[:, None])
-            qq, rr = np.nonzero(keep)
-            flat_b = cells[qq, rr]
-            order_b = np.argsort(flat_b, kind="stable")
-            qidx_b = qq[order_b]
-            rank_b = prank[qq, rr][order_b]  # dense slot-block index
-            bnds = np.searchsorted(flat_b[order_b], np.arange(nlist + 1))
+            cells = np.broadcast_to(np.arange(nlist), (nq, nlist))
+        sizes = np.diff(self.offsets)
+        ncand = sizes[cells].sum(axis=1)  # rows in each query's cells
+        # rows (nq, w): each query's top-min(k2, ncand) row positions
+        # by f32 score, rs their scores; row −1 / score inf pad the
+        # queries with fewer candidates
+        w = int(min(k2, ncand.max(initial=0)))
+        if nq * nprobe <= np.count_nonzero(sizes):
+            rows, rs = self._rank_per_query(q, cells, sizes, w)
         else:
-            bnds = np.zeros(nlist + 1, dtype=np.int64)
+            rows, rs = self._rank_by_cell(q, cells, sizes, w)
 
-        def do_cell(c: int) -> None:
-            g0, g1 = bnds[c], bnds[c + 1]
-            s0, s1 = self.offsets[c], self.offsets[c + 1]
-            w = s1 - s0
-            if g1 == g0 or w == 0:
-                return
-            qg = qidx_b[g0:g1]
-            rk = rank_b[g0:g1]
-            sc = cell_scores(qg, s0, s1)
-            kk = min(k2, w)
-            m = sc <= bound[qg][:, None]
-            cnt = m.sum(axis=1)
-            over = np.flatnonzero(cnt > kk)
-            if over.size:
-                sco = sc[over]
-                p = np.argpartition(sco, kk - 1, axis=1)[:, :kk]
-                cols = rk[over, None] * k2 + slot[None, :kk]
-                pool_s[qg[over, None], cols] = np.take_along_axis(
-                    sco, p, axis=1
-                )
-                pool_i[qg[over, None], cols] = p + s0
-                m[over] = False
-                cnt[over] = 0
-            idx_r, idx_c = np.nonzero(m)
-            if idx_r.size:
-                starts = np.zeros(len(cnt) + 1, dtype=np.int64)
-                np.cumsum(cnt, out=starts[1:])
-                pos = np.arange(idx_r.size) - starts[idx_r]
-                flat_cols = rk[idx_r] * k2 + pos
-                pool_s[qg[idx_r], flat_cols] = sc[idx_r, idx_c]
-                pool_i[qg[idx_r], flat_cols] = idx_c + s0
+        # tail — margin guard (same contract as LocalFlatIndex /
+        # _local_topk_candidates): a query with more than k2 candidate
+        # rows rejected some, each with an f32 score ≥ its k2-th best
+        # (P). If P minus the k-th best exceeds 2× the f32 error bound
+        # no rejected row can enter the exact top-k; otherwise re-rank
+        # the query's probed cells exactly in f64.
+        full = np.flatnonzero(ncand > k2)
+        if full.size:
+            sf = rs[full].astype(np.float64)
+            pmax = sf.max(axis=1)
+            tk = np.partition(sf, k - 1, axis=1)[:, k - 1]
+            err = f32_select_margin(self.metric, q64.shape[1], self._bmax(),
+                                    np.linalg.norm(q64[full], axis=1))
+            for i in full[pmax - tk <= 2.0 * err]:
+                row_sel = np.concatenate([
+                    np.arange(self.offsets[c], self.offsets[c + 1])
+                    for c in cells[i]])
+                rows[i] = _exact_scan_topk(self.vecs, self.ids, self.metric,
+                                           q64[i], k2, row_sel=row_sel)
 
-        def run_cell_loop(bounds_arr, fn):
-            live = np.flatnonzero(bounds_arr[1:] > bounds_arr[:-1])
-            if len(live) > 8 and nq * nprobe > 4096:
-                # measured on the 100k/nprobe=50/10k-query workload:
-                # throughput peaks at ~16 chunks and REGRESSES at 32 —
-                # the non-GEMM numpy work (fancy-index writes, nonzero)
-                # holds the GIL, and >16 workers only adds BLAS
-                # oversubscription on the per-cell GEMMs. (The real
-                # scaling fix is LocalServerPool: processes, not
-                # threads.)
-                nthread = _fanout(16)
-                # round-robin the cells in descending work order
-                # (queries × cell size) so strided chunks balance
-                # even under skewed list sizes
-                work = ((bounds_arr[live + 1] - bounds_arr[live])
-                        * (self.offsets[live + 1] - self.offsets[live]))
-                live = live[np.argsort(-work, kind="stable")]
-                chunks = [live[i::nthread] for i in range(nthread)]
-
-                def run(chunk):
-                    for c in chunk:
-                        fn(int(c))
-
-                list(_pool().map(run, chunks))
-            else:
-                for c in live:
-                    fn(int(c))
-
-        run_cell_loop(b0, do_cell0)
-        if np_ > 1:
-            run_cell_loop(bnds, do_cell)
-
-        # stage 4 — per-query top-k2 from the pool, exact f64 re-score
-        # (blocked + threaded: the gather and einsum are memory-bound,
-        # so per-block buffers keep the f64 candidate tensor cache-
-        # sized instead of materializing (nq, k2, dim) at once)
-        kk2 = min(k2, pool_w)
-        kout = min(k, kk2) if k > 0 else kk2
-        out_ids = np.empty((nq, kout), dtype=np.int64)
-        out_d = np.empty((nq, kout), dtype=np.float64)
-
-        def do_final(s: int, e: int) -> None:
-            ps, pi = pool_s[s:e], pool_i[s:e]
-            part = np.argpartition(ps, kk2 - 1, axis=1)[:, :kk2]
-            rows = np.take_along_axis(pi, part, axis=1)
-            if k > 0:
-                # margin guard (same contract as LocalFlatIndex /
-                # _local_topk_candidates): the pool holds the global
-                # top-k2 by f32 among SCORED rows, so every scored-
-                # but-rejected candidate's f32 score >= P (the kk2-th
-                # smallest). An infinite P means nothing was rejected
-                # (underfull pool) — trivially safe. On violation,
-                # re-rank the query's probed cells exactly in f64.
-                psel = np.take_along_axis(ps, part, axis=1)
-                pmax = psel.max(axis=1).astype(np.float64)
-                kt = min(k, kk2)
-                tk = (np.partition(psel, kt - 1, axis=1)[:, kt - 1]
-                      .astype(np.float64) if kt < kk2
-                      else pmax)
-                qn64 = np.linalg.norm(q64[s:e], axis=1)
-                err = f32_select_margin(
-                    self.metric, q64.shape[1], self._bmax(), qn64)
-                # pmax/tk are inf on rows whose probed cells held
-                # fewer than k candidates; the isfinite mask drops
-                # them but the subtraction itself would still warn
-                # (inf - inf) on every underfull batch — silence it
-                with np.errstate(invalid="ignore"):
-                    unsafe = np.isfinite(pmax) & (pmax - tk <= 2.0 * err)
-                for r in np.flatnonzero(unsafe):
-                    g = s + r
-                    cs_p = cells[g][pc[g]]
-                    row_sel = (np.concatenate([
-                        np.arange(self.offsets[c], self.offsets[c + 1])
-                        for c in cs_p
-                    ]) if cs_p.size else np.empty(0, dtype=np.int64))
-                    pos = _exact_scan_topk(
-                        self.vecs, self.ids, self.metric, q64[g],
-                        kk2, row_sel=row_sel)
-                    rows[r, :len(pos)] = pos
-                    rows[r, len(pos):] = -1
-            valid = rows >= 0
-            rows_safe = np.where(valid, rows, 0)
-            cand = self.vecs[rows_safe].astype(np.float64)
-            qb = q64[s:e]
+        # exact f64 re-score of the real (non-pad) candidates, in
+        # query blocks that keep the f64 candidate rows near 16 MB
+        out_ids = np.full((nq, k), np.iinfo(np.int64).max, dtype=np.int64)
+        out_d = np.full((nq, k), np.inf, dtype=np.float64)
+        kout = min(k, w)
+        blk = max(1, 16384 // max(1, w))
+        for s in range(0, nq, blk):
+            d = np.full(rows[s:s + blk].shape, np.inf)
+            pid = np.full(d.shape, np.iinfo(np.int64).max)
+            bi, si = np.nonzero(rows[s:s + blk] >= 0)
+            r = rows[s + bi, si]
+            cand = self.vecs[r].astype(np.float64)
+            qb = q64[s + bi]
             if self.metric == "l2":
-                diff = cand - qb[:, None, :]
-                d = np.sqrt(np.einsum("bkd,bkd->bk", diff, diff))
+                diff = cand - qb
+                d[bi, si] = np.sqrt(np.einsum("kd,kd->k", diff, diff))
             elif self.metric == "cosine":
                 # f64 row norms of the stored rows, same contract as
                 # LocalFlatIndex's re-score
-                bn = np.sqrt(np.einsum("bkd,bkd->bk", cand, cand))
-                d = _cosine_from_ip(
-                    np.einsum("bkd,bd->bk", cand, qb), bn,
-                    np.linalg.norm(qb, axis=1)[:, None])
+                bn = np.sqrt(np.einsum("kd,kd->k", cand, cand))
+                d[bi, si] = _cosine_from_ip(np.einsum("kd,kd->k", cand, qb),
+                                            bn, np.linalg.norm(qb, axis=1))
             else:
-                d = -np.einsum("bkd,bd->bk", cand, qb)
-            d = np.where(valid, d, np.inf)
-            pid = np.where(valid, self.ids[rows_safe], np.iinfo(np.int64).max)
-            sel = np.lexsort((pid, d), axis=1)[:, :kout]
-            out_ids[s:e] = np.take_along_axis(pid, sel, axis=1)
-            out_d[s:e] = np.take_along_axis(d, sel, axis=1)
-
-        fb = 512
-        spans = [(s, min(s + fb, nq)) for s in range(0, nq, fb)]
-        if len(spans) > 1:
-            list(_pool().map(lambda se: do_final(*se), spans))
-        else:
-            do_final(0, nq)
+                d[bi, si] = -np.einsum("kd,kd->k", cand, qb)
+            pid[bi, si] = self.ids[r]
+            o = np.lexsort((pid, d), axis=1)[:, :kout]
+            out_ids[s:s + blk, :kout] = np.take_along_axis(pid, o, axis=1)
+            out_d[s:s + blk, :kout] = np.take_along_axis(d, o, axis=1)
         return out_ids, out_d
+
+    def _rank_per_query(self, q, cells, sizes, w: int):
+        """Small requests: per query, one gather of its probed cells'
+        rows, one f32 GEMV and an argpartition of ``w``."""
+        rows = np.full((len(q), w), -1, dtype=np.int64)
+        rs = np.full((len(q), w), np.inf, dtype=np.float32)
+        ln = sizes[cells].ravel()
+        cum = np.concatenate([[0], np.cumsum(ln)])
+        # every query's candidate row positions, query after query;
+        # query i owns pos[bounds[i]:bounds[i + 1]]
+        pos = (np.repeat(self.offsets[cells].ravel() - cum[:-1], ln)
+               + np.arange(cum[-1]))
+        bounds = cum[::cells.shape[1]]
+        for i in range(len(q)):
+            r = pos[bounds[i]:bounds[i + 1]]
+            sc = self._f32_scores(q[i], r)
+            if len(r) > w:
+                p = np.argpartition(sc, w - 1)[:w]
+                r, sc = r[p], sc[p]
+            rows[i, :len(r)] = r
+            rs[i, :len(r)] = sc
+        return rows, rs
+
+    def _rank_by_cell(self, q, cells, sizes, w: int):
+        """Batches: one f32 GEMM per probed cell over the queries that
+        probe it into a per-query pool of (present cell, slot) blocks,
+        then the per-query top ``w`` of that pool."""
+        pc = sizes[cells] > 0
+        slot = np.cumsum(pc, axis=1) - 1  # rank among present cells
+        ks = int(min(w, sizes.max(initial=0)))
+        pw = int(pc.sum(axis=1).max(initial=0)) * ks
+        pool_s = np.full((len(q), pw), np.inf, dtype=np.float32)
+        pool_i = np.full((len(q), pw), -1, dtype=np.int64)
+        qq, jj = np.nonzero(pc)
+        cc = cells[qq, jj]
+        order = np.argsort(cc, kind="stable")
+        qq, cc, base = qq[order], cc[order], slot[qq, jj][order] * ks
+        bnds = np.searchsorted(cc, np.arange(self.nlist + 1))
+        for c in np.flatnonzero(bnds[1:] > bnds[:-1]):
+            s0, s1 = self.offsets[c], self.offsets[c + 1]
+            g = slice(bnds[c], bnds[c + 1])
+            sc = self._f32_scores(q[qq[g]], slice(s0, s1))
+            kk = min(ks, s1 - s0)
+            if kk < s1 - s0:
+                p = np.argpartition(sc, kk - 1, axis=1)[:, :kk]
+                sc = np.take_along_axis(sc, p, axis=1)
+            else:
+                p = np.arange(kk)[None, :]
+            cols = base[g, None] + np.arange(kk)
+            pool_s[qq[g, None], cols] = sc
+            pool_i[qq[g, None], cols] = p + s0
+        if pw > w:
+            p = np.argpartition(pool_s, w - 1, axis=1)[:, :w]
+            pool_s = np.take_along_axis(pool_s, p, axis=1)
+            pool_i = np.take_along_axis(pool_i, p, axis=1)
+        return pool_i, pool_s
 
 
 def to_local_ivf(ivf_index) -> LocalIvfIndex:

@@ -557,3 +557,190 @@ class TestServerPool:
         finally:
             shm.close()
             shm.unlink()
+
+
+# --- LocalIvfIndex kernels against a brute-force f64 scan (pure NumPy) ---
+
+IVF_DIM, IVF_NLIST = 16, 32
+
+
+def _ivf_replica(metric: str, layout: str) -> "LocalIvfIndex":
+    """A clustered LocalIvfIndex in one of three layouts: ``full`` (every
+    cell populated), ``shard`` (a list-sharded replica in the
+    ``shard_serve._load_shard`` layout: all nlist centroids, 3 of every
+    4 cells empty) and ``tiny`` (every cell smaller than k)."""
+    from gofaiss_spark.functions.distance import np_distance_matrix
+    from gofaiss_spark.operators.local_serve import LocalIvfIndex
+
+    rng = np.random.default_rng(17)
+    n = 3 * IVF_NLIST if layout == "tiny" else 3000
+    centres = rng.normal(size=(8, IVF_DIM))
+    x = (centres[rng.integers(0, 8, n)]
+         + rng.normal(scale=0.3, size=(n, IVF_DIM))).astype(np.float32)
+    x[5] = 0.0  # a zero row: cosine's zero-vector contract
+    cents = x[rng.choice(n, IVF_NLIST, replace=False)].astype(np.float64)
+    cell = np.argmin(np_distance_matrix(cents, x.astype(np.float64), metric),
+                     axis=0)
+    if layout == "tiny":
+        cell = np.arange(n) % IVF_NLIST
+    ids = rng.permutation(n).astype(np.int64)
+    if layout == "shard":
+        keep = cell % 4 == 1
+        x, cell, ids = x[keep], cell[keep], ids[keep]
+    order = np.lexsort((ids, cell))
+    vecs = np.ascontiguousarray(x[order])
+    return LocalIvfIndex(
+        ids=ids[order], vecs=vecs, metric=metric, centroids=cents,
+        offsets=np.searchsorted(cell[order], np.arange(IVF_NLIST + 1)),
+        norms_sq=np.einsum("ij,ij->i", vecs, vecs))
+
+
+def _probed_bruteforce(idx, q64: np.ndarray, k: int, nprobe: int):
+    """Per query: every row of its probed cells scored exactly in f64
+    (the same per-pair formulas as the kernel's re-score), ascending
+    (distance, id), padded to width k with (int64.max, inf)."""
+    from gofaiss_spark.functions.distance import np_distance_matrix
+
+    dm = np_distance_matrix(idx.centroids, q64, idx.metric)
+    nq = len(q64)
+    out_ids = np.full((nq, k), np.iinfo(np.int64).max, dtype=np.int64)
+    out_d = np.full((nq, k), np.inf)
+    for i in range(nq):
+        cells = (np.argpartition(dm[:, i], nprobe - 1)[:nprobe]
+                 if nprobe < idx.nlist else np.arange(idx.nlist))
+        rows = np.concatenate([np.arange(idx.offsets[c], idx.offsets[c + 1])
+                               for c in cells])
+        vb = idx.vecs[rows].astype(np.float64)
+        qq = np.repeat(q64[i][None, :], len(rows), axis=0)
+        if idx.metric == "l2":
+            diff = vb - qq
+            d = np.sqrt(np.einsum("kd,kd->k", diff, diff))
+        elif idx.metric == "cosine":
+            denom = (np.sqrt(np.einsum("kd,kd->k", vb, vb))
+                     * np.linalg.norm(qq, axis=1))
+            with np.errstate(divide="ignore", invalid="ignore"):
+                d = 1.0 - np.clip(np.einsum("kd,kd->k", vb, qq) / denom,
+                                  -1.0, 1.0)
+            d[denom == 0.0] = 1.0
+        else:
+            d = -np.einsum("kd,kd->k", vb, qq)
+        o = np.lexsort((idx.ids[rows], d))[:k]
+        out_ids[i, :len(o)] = idx.ids[rows][o]
+        out_d[i, :len(o)] = d[o]
+    return out_ids, out_d
+
+
+def _ivf_queries(idx, nq: int, seed: int) -> np.ndarray:
+    rng = np.random.default_rng(seed)
+    q = idx.vecs[rng.integers(0, len(idx.vecs), nq)].astype(np.float64)
+    return q + rng.normal(scale=0.05, size=q.shape)
+
+
+@pytest.mark.parametrize("layout", ["full", "shard", "tiny"])
+@pytest.mark.parametrize("metric", ["l2", "cosine", "dot"])
+def test_ivf_kernels_bit_identical_to_probed_scan(metric, layout,
+                                                  monkeypatch):
+    """Both LocalIvfIndex ranking kernels return exactly the top-k of
+    an f64 scan of each query's probed cells — ids and distances — at
+    batch sizes on both sides of the per-query / cell-grouped rule."""
+    from gofaiss_spark.operators.local_serve import LocalIvfIndex
+
+    idx = _ivf_replica(metric, layout)
+    ran = []
+
+    def spy(name):
+        kernel = getattr(LocalIvfIndex, name)
+
+        def wrapped(self, *args):
+            ran.append(name)
+            return kernel(self, *args)
+        return wrapped
+
+    for name in ("_rank_per_query", "_rank_by_cell"):
+        monkeypatch.setattr(LocalIvfIndex, name, spy(name))
+    for nq in (1, 2, 16, 17, 64, 1024):
+        q64 = _ivf_queries(idx, nq, seed=nq)
+        if metric == "cosine":
+            q64[0] = 0.0  # zero query
+        for nprobe in (1, 4, IVF_NLIST):
+            ids, d = idx.search(q64, k=10, nprobe=nprobe)
+            want_ids, want_d = _probed_bruteforce(idx, q64, 10, nprobe)
+            np.testing.assert_array_equal(ids, want_ids)
+            np.testing.assert_array_equal(d, want_d)
+    assert set(ran) == {"_rank_per_query", "_rank_by_cell"}
+
+
+@pytest.mark.parametrize("k", [0, -1, -17])
+def test_ivf_nonpositive_k_returns_every_probed_candidate(k):
+    """k ≤ 0 means every candidate in the probed cells (the search_ivf,
+    LocalFlatIndex and LocalIvfPqIndex contract), for both kernels."""
+    idx = _ivf_replica("l2", "full")
+    n = len(idx.ids)
+    for nq in (2, 64):
+        q64 = _ivf_queries(idx, nq, seed=3)
+        ids, d = idx.search(q64, k=k, nprobe=4)
+        assert ids.shape == d.shape == (nq, n)
+        want_ids, want_d = _probed_bruteforce(idx, q64, n, 4)
+        np.testing.assert_array_equal(ids, want_ids)
+        np.testing.assert_array_equal(d, want_d)
+
+
+def test_ivf_concurrent_callers_match_serial():
+    """Four threads share one LocalIvfIndex: every answer equals the
+    serial one, and GUARD_FALLBACKS rises by exactly the serial count
+    (no lost updates), with batches for both kernels."""
+    import sys
+    import threading
+
+    from gofaiss_spark.operators import local_serve
+    from gofaiss_spark.operators.local_serve import LocalIvfIndex
+
+    # near-ties far below f32 resolution trip the margin guard
+    rng = np.random.default_rng(7)
+    u = rng.normal(size=IVF_DIM)
+    u /= np.linalg.norm(u)
+    v = rng.normal(size=IVF_DIM)
+    v -= (v @ u) * u
+    v /= np.linalg.norm(v)
+    n = 400
+    base = (100.0 * u + (1.0 + rng.permutation(n)[:, None] * 1e-4)
+            * v).astype(np.float32)
+    cell = np.arange(n) % 4
+    order = np.lexsort((np.arange(n), cell))
+    vecs = np.ascontiguousarray(base[order])
+    idx = LocalIvfIndex(
+        ids=np.arange(n, dtype=np.int64)[order], vecs=vecs, metric="l2",
+        centroids=np.stack([base[cell == c].mean(0) for c in range(4)]
+                           ).astype(np.float64),
+        offsets=np.searchsorted(cell[order], np.arange(5)),
+        norms_sq=np.einsum("ij,ij->i", vecs, vecs))
+    batches = [(100.0 * u + rng.normal(scale=1e-3, size=(m, IVF_DIM)))
+               for m in (1, 3, 16, 40) * 4]
+    before = local_serve.GUARD_FALLBACKS
+    serial = [idx.search(b, k=10, nprobe=2) for b in batches]
+    serial_fallbacks = local_serve.GUARD_FALLBACKS - before
+    assert serial_fallbacks > 0
+
+    got = [None] * len(batches)
+
+    def client(t: int) -> None:
+        for j in range(t, len(batches), 4):
+            got[j] = idx.search(batches[j], k=10, nprobe=2)
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        before = local_serve.GUARD_FALLBACKS
+        threads = [threading.Thread(target=client, args=(t,))
+                   for t in range(4)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert local_serve.GUARD_FALLBACKS - before == serial_fallbacks
+    for (ids, d), (sids, sd) in zip(got, serial):
+        np.testing.assert_array_equal(ids, sids)
+        np.testing.assert_array_equal(d, sd)

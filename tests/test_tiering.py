@@ -241,6 +241,38 @@ def test_pool_failure_closes_and_unregisters(base, monkeypatch):
     assert idx.__dict__.get("_tier_pool") is not boom
 
 
+
+def test_pool_fallback_is_counted_and_warns(monkeypatch):
+    """A batch the LocalServerPool cannot serve falls back to the
+    in-process replica visibly: the answer is unchanged, the module
+    counter POOL_FALLBACKS rises and exactly one warning is raised."""
+    import types
+    import warnings
+
+    from gofaiss_spark.operators import local_serve as ls
+
+    rng = np.random.default_rng(3)
+    vecs = rng.normal(size=(N, DIM)).astype(np.float32)
+    h = ls.LocalFlatIndex(ids=np.arange(N, dtype=np.int64), vecs=vecs,
+                          metric="l2",
+                          norms_sq=np.einsum("ij,ij->i", vecs, vecs))
+    index = types.SimpleNamespace(_tier_local=h)
+    want_ids, want_d = h.search(vecs[:NQ], k=K)
+
+    def boom(_index):
+        raise OSError("no shared memory")
+
+    monkeypatch.setattr(api, "_to_pool_handle", boom)
+    monkeypatch.setattr(api, "POOL_MIN_BATCH", 1)
+    before = ls.POOL_FALLBACKS
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        ids, d = api._local_search_np(index, vecs[:NQ], K, {})
+    np.testing.assert_array_equal(ids, want_ids)
+    np.testing.assert_array_equal(d, want_d)
+    assert ls.POOL_FALLBACKS == before + 1
+    assert len(caught) == 1 and "no shared memory" in str(caught[0].message)
+
 def test_localization_cached_once(base):
     _, vdf, qdf = base
     idx = api.build_index(vdf, index_type="flat")
