@@ -120,15 +120,6 @@ def distance_col(metric: str, a, b, norm_a=None, norm_b=None) -> Column:
     return inner_product_distance(a, b)
 
 
-def squared_distance_col(metric: str, a, b) -> Column:
-    """Monotone-equivalent distance for argmin comparisons: skips the
-    sqrt for l2 (the reference's own trick, pq.go:153, ivfpq.go:526)."""
-    validate_metric(metric)
-    if metric == "l2":
-        return l2_distance_squared(a, b)
-    return distance_col(metric, a, b)
-
-
 # ---------------------------------------------------------------------------
 # NumPy batch kernels (pandas-UDF backend)
 # ---------------------------------------------------------------------------

@@ -47,13 +47,6 @@ def bpe_ish_token_count(text) -> Column:
     )
 
 
-def char_ngrams(text, n: int = 3) -> Column:
-    """Distinct character n-grams of the lowercased text."""
-    t = F.lower(_as_col(text))
-    idx = F.sequence(F.lit(1), F.greatest(F.length(t) - (n - 1), F.lit(0)))
-    return F.array_distinct(F.transform(idx, lambda i: F.substring(t, i, F.lit(n))))
-
-
 def word_ngrams(text, n: int = 3) -> Column:
     """Word n-grams (space-joined) WITH duplicates, order-preserving —
     the repetition-analysis unit; ``word_shingles`` is its distinct
@@ -85,14 +78,6 @@ def word_shingles(text, n: int = 3) -> Column:
     """Word n-gram shingles (space-joined), order-preserving with
     duplicates removed — the MinHash/Jaccard input unit."""
     return F.array_distinct(word_ngrams(text, n))
-
-
-def stopword_ratio(text, lang: str = "en") -> Column:
-    """Fraction of tokens that are (lang) stopwords."""
-    toks = tokenize(text)
-    sw = F.array(*[F.lit(w) for w in STOPWORDS[lang]])
-    hits = F.size(F.filter(toks, lambda x: F.array_contains(sw, F.lower(x))))
-    return F.when(F.size(toks) == 0, 0.0).otherwise(hits / F.size(toks))
 
 
 def punct_ratio(text) -> Column:

@@ -249,54 +249,6 @@ def probe_lists(
     )
 
 
-def _scored_candidates(
-    candidates: DataFrame,
-    query_ids: np.ndarray,
-    query_mat: np.ndarray,
-    k: int,
-    metric: str,
-    vec_col: str = "vec",
-    id_col: str = "id",
-) -> DataFrame:
-    """Distance per (query, candidate) row + per-batch partial top-k.
-
-    Input rows carry their query_id (from the probe-pair join), so a
-    batch mixes queries; we group by query inside the batch and emit
-    ≤ k rows per (batch, query)."""
-    qindex = {int(qid): i for i, qid in enumerate(query_ids)}
-
-    def part(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            base = np.stack(pdf[vec_col].to_numpy())
-            ids = pdf[id_col].to_numpy(dtype=np.int64)
-            qids = pdf["query_id"].to_numpy(dtype=np.int64)
-            out_q, out_i, out_d = [], [], []
-            for qid in np.unique(qids):
-                mask = qids == qid
-                qvec = query_mat[qindex[int(qid)]][None, :]
-                d = np_distance_matrix(base[mask], qvec, metric)[:, 0]
-                sub_ids = ids[mask]
-                kk = min(k, d.shape[0]) if k > 0 else d.shape[0]
-                if kk < d.shape[0]:
-                    sel = np.argpartition(d, kk - 1)[:kk]
-                else:
-                    sel = np.arange(d.shape[0])
-                out_q.append(np.full(sel.shape[0], qid, dtype=np.int64))
-                out_i.append(sub_ids[sel])
-                out_d.append(d[sel])
-            yield pd.DataFrame(
-                {
-                    "query_id": np.concatenate(out_q),
-                    "id": np.concatenate(out_i),
-                    "distance": np.concatenate(out_d),
-                }
-            )
-
-    return candidates.mapInPandas(part, schema=RESULT_SCHEMA)
-
-
 def search_ivf(
     index: IvfIndex,
     queries: DataFrame,

@@ -16,6 +16,24 @@ the serving-tier pattern for production ANN too: the 100 TB corpus
 lives in partitioned Parquet (the distributed paths build and refresh
 it), while hot serving replicas hold a shard in memory.
 
+Every local kernel has the reference's search shape — score the
+candidates, sort them, take k (flat.go:106-113, ivf.go:153-160) — on
+one of two shared skeletons:
+
+- the scan family (``LocalFlatIndex``, ``LocalPqIndex``,
+  ``LocalSqIndex``) runs ``_scan_topk``: base tiles of 8,192 rows ×
+  query blocks of 128, each query keeping a pool of its best
+  candidates;
+- the cell family (``LocalIvfIndex``, ``LocalIvfPqIndex``,
+  ``LocalIvfSqIndex``) runs ``_probe_cells``, the f64 probe head of the
+  distributed ``probe_lists``, then ``_rank_by_cell``: one score call
+  per probed cell over the queries that probe it.
+
+Both end in ``_pool_topk``: an exact f64 distance per surviving pair
+and one (distance, id) sort. The kernels start no threads;
+parallelism comes from client threads, ``LocalServerPool`` processes
+and shard tasks.
+
 Scale posture: bounded by driver/replica RAM by construction (the
 same bound the reference lives under — 16 GB in its published runs);
 everything larger goes through the distributed search paths.
@@ -30,6 +48,7 @@ import numpy as np
 
 from gofaiss_spark.functions.distance import (
     f32_select_margin,
+    np_distance_matrix,
     validate_metric,
 )
 
@@ -50,44 +69,22 @@ __all__ = [
     "to_local_sq",
 ]
 
-_POOL = None
-# When set (inside a LocalServerPool worker process or a shard task),
-# caps the serving thread-pool size so W processes × T threads stays
-# at the machine's core count.
-_MAX_CHUNKS: int | None = None
-
-
-def _pool():
-    """Shared serving thread pool (LocalFlatIndex's query blocks). A
-    per-call ThreadPoolExecutor spawns OS threads on every search, so
-    serving reuses one process-wide pool (workers are idle-cheap)."""
-    global _POOL
-    if _POOL is None:
-        import os as _os
-        from concurrent.futures import ThreadPoolExecutor
-
-        cap = _MAX_CHUNKS if _MAX_CHUNKS is not None else 32
-        # Inside a pool worker (_MAX_CHUNKS set) honor worker_threads
-        # exactly — worker_threads=1 must mean ONE serving thread so the
-        # default 32x1 topology stays at the machine's core count.
-        floor = 1 if _MAX_CHUNKS is not None else 2
-        _POOL = ThreadPoolExecutor(
-            max_workers=max(floor, min(cap, _os.cpu_count() or 8)),
-            thread_name_prefix="gofaiss-serve",
-        )
-    return _POOL
-
-
 # observability: queries that took the exact-f64 fallback because the
 # f32 selection margin could not prove the cut exact — read by tests
 # to assert the guard actually fires on adversarial data.
 GUARD_FALLBACKS = 0
 # batches api served in process because their LocalServerPool failed
 POOL_FALLBACKS = 0
-# Counters are incremented under a lock: searches run from serving
-# threads and client threads at once, and += on a module global is a
+# Counters are incremented under a lock: searches run from several
+# client threads at once, and += on a module global is a
 # read-modify-write that would otherwise drop counts.
 _COUNTER_LOCK = _threading.Lock()
+
+# result padding: a query with fewer than k candidates gets id
+# int64.max and distance inf (candidate pools pad with row −1)
+_PAD_ID = np.iinfo(np.int64).max
+# scan-family blocking: one 128 × 8,192 score block is 4 MB in f32
+_QBLOCK, _TILE = 128, 8192
 
 
 def _count_fallback(counter: str = "GUARD_FALLBACKS") -> None:
@@ -120,262 +117,297 @@ def _inv_norms_f32(norms_sq: np.ndarray) -> np.ndarray:
     return np.ascontiguousarray(inv)
 
 
-def _exact_scan_topk(vecs: np.ndarray, ids: np.ndarray, metric: str,
-                     q64: np.ndarray, kk: int,
-                     row_sel: np.ndarray | None = None,
-                     tile: int = 262144) -> np.ndarray:
-    """Exact f64 top-``kk`` ROW POSITIONS for one query, ascending
-    (distance, id) — the margin-guard fallback path shared by
-    LocalFlatIndex / LocalIvfIndex. Tiled so the f64 cast never
-    materializes more than ``tile`` rows; ``q64`` must be the RAW f64
-    query — do NOT pre-normalize for cosine: the raw-row contract
-    computes ``_cosine_from_ip`` on raw stored rows and the raw query
-    (identical inputs to np_distance_matrix and the SQL oracle), and
-    a normalized query would perturb values ~1e-16, diverging from
-    the exact re-score at 6dp-rounding boundaries."""
-    _count_fallback()
-    n = vecs.shape[0] if row_sel is None else len(row_sel)
-    best_d = np.empty(0, dtype=np.float64)
-    best_id = np.empty(0, dtype=np.int64)
-    best_pos = np.empty(0, dtype=np.int64)
-    for t0 in range(0, n, tile):
-        te = min(t0 + tile, n)
-        pos = (np.arange(t0, te, dtype=np.int64) if row_sel is None
-               else np.asarray(row_sel[t0:te], dtype=np.int64))
-        vb = vecs[pos].astype(np.float64)
-        if metric == "l2":
-            diff = vb - q64
-            d = np.sqrt(np.einsum("ij,ij->i", diff, diff))
-        elif metric == "cosine":
-            bn = np.sqrt(np.einsum("ij,ij->i", vb, vb))
-            d = _cosine_from_ip(vb @ q64, bn, np.linalg.norm(q64))
+def _l2(x: np.ndarray, q64: np.ndarray) -> np.ndarray:
+    """Exact f64 L2 between each row of ``x`` and the matching row of
+    ``q64``. One value per pair, so it never depends on how the pairs
+    were batched or sharded."""
+    diff = x.astype(np.float64, copy=False) - q64
+    return np.sqrt(np.einsum("kd,kd->k", diff, diff))
+
+
+def _widths(k: int, n: int, refine: int | None = None) -> tuple[int, int]:
+    """(k, kc) for an index of n rows: k ≤ 0 or k > n means all n
+    rows, and kc is the candidate pool width — k (k·refine for a
+    refined search) plus 16 to absorb the f32 / ADC ranking error."""
+    k = min(k, n) if k > 0 else n
+    return k, (k * refine if refine else k) + 16
+
+
+def _pool_topk(ids: np.ndarray, rows: np.ndarray, k: int, dist
+               ) -> tuple[np.ndarray, np.ndarray]:
+    """Shared tail of every kernel: the (ids (nq, k), dists (nq, k))
+    top-k of each query's candidate pool, ascending (distance, id).
+
+    ``rows`` (nq, w) holds row positions, −1 for padding;
+    ``dist(qi, si, r)`` returns the reported f64 distance of each real
+    pair (query qi, pool column si, row r). Pairs are scored about 16k
+    at a time, which bounds the gathered f64 rows. A query with fewer
+    than k candidates is padded with (int64.max, inf)."""
+    nq, w = rows.shape
+    out_ids = np.full((nq, k), _PAD_ID, dtype=np.int64)
+    out_d = np.full((nq, k), np.inf, dtype=np.float64)
+    kout = min(k, w)
+    blk = max(1, 16384 // max(1, w))
+    for s in range(0, nq, blk):
+        rb = rows[s:s + blk]
+        d = np.full(rb.shape, np.inf)
+        pid = np.full(rb.shape, _PAD_ID)
+        bi, si = np.nonzero(rb >= 0)
+        r = rb[bi, si]
+        d[bi, si] = dist(s + bi, si, r)
+        pid[bi, si] = ids[r]
+        o = np.lexsort((pid, d), axis=1)[:, :kout]
+        out_ids[s:s + blk, :kout] = np.take_along_axis(pid, o, axis=1)
+        out_d[s:s + blk, :kout] = np.take_along_axis(d, o, axis=1)
+    return out_ids, out_d
+
+
+def _scan_topk(n: int, nq: int, kc: int, tile, dtype
+               ) -> tuple[np.ndarray, np.ndarray]:
+    """The scan family's candidate pools: each query's kc (kc ≤ n)
+    best rows of all n by a ranking score, lower is better. Returns
+    rows (nq, kc) and their scores in ``dtype``.
+
+    ``tile(t0, t1)`` sets up base rows t0:t1 and returns a function
+    mapping a query slice to its (queries, t1 − t0) score block.
+    Tiles of 8,192 rows meet query blocks of 128, so a score block
+    stays cache-sized. A column enters a block's merge only if it
+    scores at most some query's pool maximum, which is inf until the
+    pool is full; a rejected column scores above every pool maximum,
+    so the pools hold the exact top-kc by score."""
+    pool_s = np.full((nq, kc), np.inf, dtype=dtype)
+    pool_i = np.full((nq, kc), -1, dtype=np.int64)
+    for t0 in range(0, n, _TILE):
+        t1 = min(t0 + _TILE, n)
+        score = tile(t0, t1)
+        cols = np.arange(t0, t1)
+        for q0 in range(0, nq, _QBLOCK):
+            qs = slice(q0, q0 + _QBLOCK)
+            sc = score(qs)
+            keep = (sc <= pool_s[qs].max(axis=1)[:, None]).any(axis=0)
+            if not keep.any():
+                continue
+            sc, c = sc[:, keep], cols[keep]
+            cs = np.concatenate([pool_s[qs], sc], axis=1)
+            ci = np.concatenate([pool_i[qs], np.broadcast_to(c, sc.shape)],
+                                axis=1)
+            p = np.argpartition(cs, kc - 1, axis=1)[:, :kc]
+            pool_s[qs] = np.take_along_axis(cs, p, axis=1)
+            pool_i[qs] = np.take_along_axis(ci, p, axis=1)
+    return pool_i, pool_s
+
+
+def _probe_cells(centroids: np.ndarray, offsets: np.ndarray,
+                 q64: np.ndarray, metric: str, nprobe: int
+                 ) -> tuple[np.ndarray, np.ndarray]:
+    """The cell family's probe head: each query's probed cells (nq,
+    nprobe) by the f64 formula of the distributed probe_lists, so every
+    tier scans the same cells, and the number of rows in them. nprobe
+    ≤ 0 or > nlist probes every cell."""
+    nlist = centroids.shape[0]
+    if 0 < nprobe < nlist:
+        dm = np_distance_matrix(centroids, q64, metric)
+        cells = np.argpartition(dm, nprobe - 1, axis=0)[:nprobe].T
+    else:
+        cells = np.broadcast_to(np.arange(nlist), (len(q64), nlist))
+    return cells, np.diff(offsets)[cells].sum(axis=1)
+
+
+def _rank_by_cell(offsets: np.ndarray, cells: np.ndarray, w: int,
+                  score, dtype) -> tuple[np.ndarray, np.ndarray]:
+    """The cell family's batch kernel: each query's top ``w`` rows of
+    its probed cells by a ranking score, lower is better. Returns rows
+    (nq, w), −1 for padding, and their scores in ``dtype``, inf for
+    padding.
+
+    ``score(c, qi, s0, s1)`` returns the (len(qi), s1 − s0) scores of
+    cell c's rows s0:s1 for the queries qi that probe it. Each cell's
+    top min(w, largest cell) go into a per-query pool of (present
+    cell, slot) blocks, so a list-sharded replica holding nlist/W cells
+    keeps a narrow pool; one argpartition per query then cuts it to
+    w."""
+    sizes = np.diff(offsets)
+    pc = sizes[cells] > 0
+    slot = np.cumsum(pc, axis=1) - 1  # rank among present cells
+    ks = int(min(w, sizes.max(initial=0)))
+    pw = int(pc.sum(axis=1).max(initial=0)) * ks
+    pool_s = np.full((len(cells), pw), np.inf, dtype=dtype)
+    pool_i = np.full((len(cells), pw), -1, dtype=np.int64)
+    qq, jj = np.nonzero(pc)
+    cc = cells[qq, jj]
+    order = np.argsort(cc, kind="stable")
+    qq, cc, base = qq[order], cc[order], slot[qq, jj][order] * ks
+    bnds = np.searchsorted(cc, np.arange(len(offsets)))
+    for c in np.flatnonzero(bnds[1:] > bnds[:-1]):
+        s0, s1 = offsets[c], offsets[c + 1]
+        g = slice(bnds[c], bnds[c + 1])
+        sc = score(c, qq[g], s0, s1)
+        kk = min(ks, s1 - s0)
+        if kk < s1 - s0:
+            p = np.argpartition(sc, kk - 1, axis=1)[:, :kk]
+            sc = np.take_along_axis(sc, p, axis=1)
         else:
-            d = -(vb @ q64)
-        cd = np.concatenate([best_d, d])
-        cid = np.concatenate([best_id, ids[pos]])
-        cpos = np.concatenate([best_pos, pos])
-        o = np.lexsort((cid, cd))[:kk]
-        best_d, best_id, best_pos = cd[o], cid[o], cpos[o]
-    return best_pos
+            p = np.arange(kk)[None, :]
+        cols = base[g, None] + np.arange(kk)
+        pool_s[qq[g, None], cols] = sc
+        pool_i[qq[g, None], cols] = p + s0
+    if pw > w:
+        p = np.argpartition(pool_s, w - 1, axis=1)[:, :w]
+        pool_s = np.take_along_axis(pool_s, p, axis=1)
+        pool_i = np.take_along_axis(pool_i, p, axis=1)
+    return pool_i, pool_s
 
 
-@dataclass
-class LocalFlatIndex:
-    ids: np.ndarray  # (n,) int64
-    # (n, dim) float32 — RAW rows for every metric. Cosine divides by
-    # the row norms inside the ranking pass instead of pre-normalizing
-    # the stored rows: the exact f64 re-score then runs on the same
-    # raw values np_distance_matrix (and a SQL oracle over the parquet
-    # rows) sees, so all three tiers report identical distances — a
-    # pre-normalized copy is perturbed ~1e-7 by the f32 division,
-    # which flips 6dp-rounded values (round-7 cosine driver rows).
-    vecs: np.ndarray
-    metric: str
-    # (n,) float32 — required for EVERY metric: the l2 surrogate score
-    # reads it, cosine derives the ranking inv-norms from it, and
-    # _bmax() feeds it to the margin guard for dot
-    norms_sq: np.ndarray
+class _RawRows:
+    """What LocalFlatIndex and LocalIvfIndex share: both keep RAW f32
+    rows ``vecs`` with their squared norms ``norms_sq`` (required for
+    every metric: the l2 surrogate score reads them, cosine derives
+    its ranking inv-norms from them and dot's margin guard its max
+    norm). They rank candidates by an f32 score, guard the f32 cut
+    with f32_select_margin and report exact f64 distances on the raw
+    rows — the values np_distance_matrix, the distributed kernel and a
+    SQL oracle over the parquet rows compute. A pre-normalized cosine
+    copy would be perturbed ~1e-7 by the f32 division, which flips
+    6dp-rounded values (round-7 cosine driver rows)."""
 
-    def search(self, qmat: np.ndarray, k: int = 10,
-               block: int | None = None,
-               tile: int | None = None) -> tuple[np.ndarray, np.ndarray]:
-        """Exact top-k for a query matrix: (ids (q, k), dists (q, k)),
-        ascending by (distance, id) — identical ordering contract to
-        search_flat.
-
-        Kernel shape (the FAISS knn blocked brute-force): queries in
-        blocks of ``block``, base in tiles of ``tile``, so every score
-        tile (block × tile f32 ≈ 4 MB) stays cache-resident with a
-        running top-k merge per block — a full (q × n) score matrix
-        would stream hundreds of MB through DRAM per pass and leave
-        the kernel bandwidth-bound. Blocks run on a thread pool (the
-        non-GEMM numpy ops release the GIL). f32 generates the
-        top-(k+16) candidates; an exact f64 re-score makes reported
-        distances and orderings identical to the distributed kernel
-        (the refine_exact pattern). The f32 cut is margin-guarded
-        (f32_select_margin): queries whose selection gap cannot be
-        proven larger than the f32 error bound fall back to an exact
-        f64 ranking, so the identity holds by construction."""
-        # keep the RAW f64 query for every exact path: the re-score and
-        # guard fallbacks then compute on exactly the inputs
-        # np_distance_matrix sees (the distributed kernel's contract).
-        # Cosine normalizes the query in f64 ONLY for the f32 ranking
-        # copy (score magnitudes ~1); an f32-normalized query leaking
-        # into the "exact f64" re-score perturbs it by ~1e-7, which
-        # flips near-tie rankings (the r5 verdict's exactness bug).
-        q64full = np.ascontiguousarray(qmat, dtype=np.float64)
-        if self.metric == "cosine":
-            qn = np.linalg.norm(q64full, axis=1, keepdims=True)
-            qn[qn == 0] = 1.0
-            q = (q64full / qn).astype(np.float32)
-        else:
-            q = q64full.astype(np.float32)
-        nq = q.shape[0]
-        if block is None:
-            # measured @100k: small blocks win small batches (more
-            # thread parallelism), bigger blocks win sustained load
-            # (less per-block overhead)
-            block = 128 if nq <= 2048 else 256
-        if tile is None:
-            tile = 64 * block
-        n = len(self.ids)
-        k = min(k, n) if k > 0 else n
-        k2 = min(n, k + 16)
-        out_ids = np.empty((nq, k), dtype=np.int64)
-        out_d = np.empty((nq, k), dtype=np.float64)
-        vt = self._vt()
-
-        def do_block(s: int) -> None:
-            qb = q[s:s + block]
-            b = qb.shape[0]
-            best_s = best_i = None
-            bound = None  # per-query k2-th best so far (f32 + margin)
-            sc_buf = np.empty((b, tile), dtype=np.float32)
-            for t0 in range(0, n, tile):
-                te = min(t0 + tile, n)
-                w = te - t0
-                sc = sc_buf[:, :w]
-                np.matmul(qb, vt[:, t0:te], out=sc)
-                if self.metric == "l2":
-                    sc *= -2.0
-                    sc += self.norms_sq[None, t0:te]
-                elif self.metric == "cosine":
-                    # raw rows: divide by the row norms here (zero
-                    # rows get inv 0 → sc 0 → distance exactly 1.0,
-                    # the zero-vector contract)
-                    sc *= self._inv_n()[None, t0:te]
-                    np.subtract(1.0, sc, out=sc)
-                else:
-                    np.negative(sc, out=sc)
-                kk = min(k2, w)
-                if best_s is None:
-                    # first tile: full top-k2 selection seeds the bound
-                    p = np.argpartition(sc, kk - 1, axis=1)[:, :kk]
-                    best_s = np.take_along_axis(sc, p, axis=1).copy()
-                    best_i = p.astype(np.int64) + t0
-                    if kk == k2:
-                        bmax = best_s.max(axis=1)
-                        bound = bmax + np.abs(bmax) * 1e-3 + 1e-3
-                    continue
-                # later tiles: admit only candidates beating the
-                # running per-query bound (SIMD compare; introselect
-                # over every tile was the serial hot spot). On
-                # uniform data almost no row improves per tile, so the
-                # row loop below touches a handful of queries; if many
-                # rows improve (clustered/sorted insert order) the
-                # vectorized argpartition path is cheaper — pick per
-                # tile by survivor count.
-                improved = None
-                if bound is not None:
-                    m = sc <= bound[:, None]
-                    improved = np.flatnonzero(m.any(axis=1))
-                    if improved.size == 0:
-                        continue
-                if improved is not None and improved.size <= max(32, b // 4):
-                    for r in improved:
-                        cols = np.flatnonzero(m[r])
-                        if cols.size > k2:
-                            top = np.argpartition(sc[r, cols], k2 - 1)[:k2]
-                            cols = cols[top]
-                        cs = np.concatenate([best_s[r], sc[r, cols]])
-                        ci = np.concatenate(
-                            [best_i[r], cols.astype(np.int64) + t0]
-                        )
-                        sel = np.argpartition(cs, k2 - 1)[:k2]
-                        best_s[r] = cs[sel]
-                        best_i[r] = ci[sel]
-                        bm = best_s[r].max()
-                        bound[r] = bm + abs(bm) * 1e-3 + 1e-3
-                    continue
-                p = np.argpartition(sc, kk - 1, axis=1)[:, :kk]
-                psc = np.take_along_axis(sc, p, axis=1)
-                pid = p.astype(np.int64) + t0
-                cs = np.concatenate([best_s, psc], axis=1)
-                ci = np.concatenate([best_i, pid], axis=1)
-                sel = np.argpartition(cs, k2 - 1, axis=1)[:, :k2]
-                best_s = np.take_along_axis(cs, sel, axis=1)
-                best_i = np.take_along_axis(ci, sel, axis=1)
-                if best_s.shape[1] == k2:
-                    bmax = best_s.max(axis=1)
-                    bound = bmax + np.abs(bmax) * 1e-3 + 1e-3
-            # margin guard: survivors are the global top-k2 by f32
-            # score (pool invariant), so every rejected score >= the
-            # k2-th best survivor (P). If P minus the k-th best (T)
-            # exceeds 2x the f32 error bound, no rejected candidate
-            # can belong to the exact top-k; otherwise rank the
-            # affected query exactly in f64 — the cut is proven, not
-            # assumed (same contract as _local_topk_candidates).
-            qb64 = q64full[s:s + block]
-            if n > k2 and best_s.shape[1] == k2:
-                pmax = best_s.max(axis=1).astype(np.float64)
-                tk = (np.partition(best_s, k - 1, axis=1)[:, k - 1]
-                      .astype(np.float64) if k < k2 else pmax)
-                qn64 = np.linalg.norm(qb64, axis=1)
-                err = f32_select_margin(
-                    self.metric, qb.shape[1], self._bmax(), qn64)
-                # inf - inf = nan when a row is underfull; the mask
-                # already excludes those rows, so suppress the
-                # RuntimeWarning the throwaway subtraction would emit
-                with np.errstate(invalid="ignore"):
-                    unsafe = np.isfinite(pmax) & (pmax - tk <= 2.0 * err)
-                for r in np.flatnonzero(unsafe):
-                    pos = _exact_scan_topk(
-                        self.vecs, self.ids, self.metric,
-                        qb64[r], k2)
-                    best_i[r] = pos
-            # exact f64 re-score of the surviving candidates
-            cand = self.vecs[best_i].astype(np.float64)  # (b, k2, dim)
-            if self.metric == "l2":
-                diff = cand - qb64[:, None, :]
-                d = np.sqrt(np.einsum("bkd,bkd->bk", diff, diff))
-            elif self.metric == "cosine":
-                # raw candidate rows, raw f64 query, f64 row norms —
-                # exactly np_distance_matrix's formula on the same
-                # inputs the distributed kernel (and a SQL oracle
-                # over the parquet rows) scores
-                bn = np.sqrt(np.einsum("bkd,bkd->bk", cand, cand))
-                d = _cosine_from_ip(
-                    np.einsum("bkd,bd->bk", cand, qb64), bn,
-                    np.linalg.norm(qb64, axis=1)[:, None])
-            else:
-                d = -np.einsum("bkd,bd->bk", cand, qb64)
-            pid = self.ids[best_i]
-            order = np.lexsort((pid, d), axis=1)[:, :k]  # asc (dist, id)
-            out_ids[s:s + block] = np.take_along_axis(pid, order, axis=1)
-            out_d[s:s + block] = np.take_along_axis(d, order, axis=1)
-
-        starts = list(range(0, nq, block))
-        if len(starts) > 1:
-            list(_pool().map(do_block, starts))
-        else:
-            for s in starts:
-                do_block(s)
-        return out_ids, out_d
-
-    def _vt(self) -> np.ndarray:
-        if getattr(self, "_vt_cache", None) is None:
-            self._vt_cache = np.ascontiguousarray(self.vecs.T)
-        return self._vt_cache
-
-    def _inv_n(self) -> np.ndarray:
-        """f32 reciprocal row norms for the cosine ranking pass
-        (zero-norm rows → 0, so their score is exactly 1.0 — the
-        zero-vector contract of np_distance_matrix)."""
-        if getattr(self, "_inv_n_cache", None) is None:
-            self._inv_n_cache = _inv_norms_f32(self.norms_sq)
-        return self._inv_n_cache
+    def _queries(self, qmat: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+        """(raw f64 queries for every exact path, f32 ranking copy).
+        Cosine normalizes only the ranking copy, and in f64: an
+        f32-normalized query leaking into the exact re-score perturbs
+        it by ~1e-7, which flips near-tie rankings (the r5 verdict's
+        exactness bug)."""
+        q64 = np.ascontiguousarray(qmat, dtype=np.float64)
+        if self.metric != "cosine":
+            return q64, q64.astype(np.float32)
+        qn = np.linalg.norm(q64, axis=1, keepdims=True)
+        qn[qn == 0] = 1.0
+        return q64, (q64 / qn).astype(np.float32)
 
     def _bmax(self) -> float:
         """Max base-row norm (margin-guard input). The cosine margin
-        is norm-independent (ranking scores are normalized); norms_sq
-        is computed for every metric at build (to_local /
-        _read_shard_arrays)."""
+        is norm-independent (ranking scores are normalized)."""
         if getattr(self, "_bmax_cache", None) is None:
             if self.metric == "cosine" or len(self.ids) == 0:
                 self._bmax_cache = 1.0
             else:
                 self._bmax_cache = float(np.sqrt(self.norms_sq.max()))
         return self._bmax_cache
+
+    def _inv_n(self) -> np.ndarray:
+        """f32 reciprocal row norms for the cosine ranking score."""
+        if getattr(self, "_inv_n_cache", None) is None:
+            self._inv_n_cache = _inv_norms_f32(self.norms_sq)
+        return self._inv_n_cache
+
+    def _f32_scores(self, sc: np.ndarray, sel) -> np.ndarray:
+        """Turn the f32 inner products ``sc`` of queries with the
+        stored rows ``sel`` (a slice or a position array) into ranking
+        scores in place, lower is better."""
+        if self.metric == "l2":
+            sc *= -2.0
+            sc += self.norms_sq[sel]
+        elif self.metric == "cosine":
+            # raw rows: divide by row norms here (zero rows → 0 →
+            # distance exactly 1.0, the zero-vector contract)
+            sc *= self._inv_n()[sel]
+            np.subtract(1.0, sc, out=sc)
+        else:
+            np.negative(sc, out=sc)
+        return sc
+
+    def _exact(self, q64: np.ndarray, r: np.ndarray) -> np.ndarray:
+        """Exact f64 distance of each stored row ``r`` to the matching
+        raw query row of ``q64`` — np_distance_matrix's formulas on
+        the raw rows, with f64 row norms for cosine."""
+        cand = self.vecs[r].astype(np.float64)
+        if self.metric == "l2":
+            return _l2(cand, q64)
+        ip = np.einsum("kd,kd->k", cand, q64)
+        if self.metric == "cosine":
+            return _cosine_from_ip(
+                ip, np.sqrt(np.einsum("kd,kd->k", cand, cand)),
+                np.linalg.norm(q64, axis=1))
+        return -ip
+
+    def _guard(self, rows: np.ndarray, rs: np.ndarray, full: np.ndarray,
+               k: int, q64: np.ndarray, row_sel) -> None:
+        """The margin guard (the _local_topk_candidates contract). Each
+        query in ``full`` had more candidates than its pool holds, so
+        every rejected row scores at least the pool's maximum P. If P
+        minus the k-th best exceeds 2× the f32 error bound, no rejected
+        row can enter the exact top-k; otherwise the query's pool is
+        replaced by an exact f64 ranking of ``row_sel(i)`` (None:
+        every row) and counted in GUARD_FALLBACKS."""
+        if not full.size:
+            return
+        sf = rs[full].astype(np.float64)
+        pmax = sf.max(axis=1)
+        tk = np.partition(sf, k - 1, axis=1)[:, k - 1]
+        err = f32_select_margin(self.metric, q64.shape[1], self._bmax(),
+                                np.linalg.norm(q64[full], axis=1))
+        for i in full[pmax - tk <= 2.0 * err]:
+            rows[i] = self._exact_topk(q64[i], rows.shape[1], row_sel(i))
+
+    def _exact_topk(self, q: np.ndarray, kk: int, row_sel) -> np.ndarray:
+        """The guard's fallback: the top-``kk`` row positions of
+        ``row_sel`` (None: every row) for the raw f64 query ``q``,
+        ranked by the exact ``_exact`` distance and ascending
+        (distance, id). Rows are scored 65,536 at a time, which bounds
+        the f64 copy."""
+        _count_fallback()
+        sel = np.arange(len(self.ids)) if row_sel is None else row_sel
+        best_d = np.empty(0)
+        best = np.empty(0, dtype=np.int64)
+        for t0 in range(0, len(sel), 65536):
+            pos = sel[t0:t0 + 65536]
+            d = self._exact(np.broadcast_to(q, (len(pos), len(q))), pos)
+            d, pos = np.concatenate([best_d, d]), np.concatenate([best, pos])
+            o = np.lexsort((self.ids[pos], d))[:kk]
+            best_d, best = d[o], pos[o]
+        return best
+
+
+@dataclass
+class LocalFlatIndex(_RawRows):
+    ids: np.ndarray        # (n,) int64
+    vecs: np.ndarray       # (n, dim) f32, RAW for every metric
+    metric: str
+    norms_sq: np.ndarray   # (n,) f32
+
+    def search(self, qmat: np.ndarray, k: int = 10
+               ) -> tuple[np.ndarray, np.ndarray]:
+        """Exact top-k for a query matrix: (ids (q, k), dists (q, k)),
+        ascending by (distance, id) — identical ordering contract to
+        search_flat. k ≤ 0 or k > n returns every row.
+
+        The FAISS knn blocked brute-force on the scan skeleton
+        (``_scan_topk``): an f32 GEMM per (base tile, query block)
+        picks each query's top-(k+16), the margin guard proves that
+        cut exact (or re-ranks the query in f64) and an exact f64
+        re-score makes reported distances and orderings identical to
+        the distributed kernel (the refine_exact pattern). The kernel
+        starts no threads."""
+        q64, q = self._queries(qmat)
+        n = len(self.ids)
+        k, kc = _widths(k, n)
+        kc = min(kc, n)
+        vt = self._vt()
+        rows, rs = _scan_topk(
+            n, len(q), kc,
+            lambda t0, t1: lambda qs: self._f32_scores(q[qs] @ vt[:, t0:t1],
+                                                       slice(t0, t1)),
+            np.float32)
+        if n > kc:
+            self._guard(rows, rs, np.arange(len(q)), k, q64, lambda i: None)
+        return _pool_topk(self.ids, rows, k,
+                          lambda qi, si, r: self._exact(q64[qi], r))
+
+    def _vt(self) -> np.ndarray:
+        """(dim, n) copy of vecs: a small query block multiplies a
+        tile of it ~2× faster than the row-major rows' transpose."""
+        if getattr(self, "_vt_cache", None) is None:
+            self._vt_cache = np.ascontiguousarray(self.vecs.T)
+        return self._vt_cache
 
 
 def to_local(index_or_vectors, vec_col: str = "vec",
@@ -395,7 +427,7 @@ def to_local(index_or_vectors, vec_col: str = "vec",
     pdf = df.select(id_col, vec_col).orderBy(id_col).toPandas()
     ids = pdf[id_col].to_numpy(dtype=np.int64)
     # RAW rows for every metric — cosine divides by row norms inside
-    # the ranking kernel (LocalFlatIndex.vecs contract)
+    # the ranking kernel (the _RawRows contract)
     vecs = np.stack(pdf[vec_col].to_numpy()).astype(np.float32)
     norms_sq = np.einsum("ij,ij->i", vecs, vecs)
     return LocalFlatIndex(ids=ids, vecs=np.ascontiguousarray(vecs),
@@ -403,17 +435,17 @@ def to_local(index_or_vectors, vec_col: str = "vec",
 
 
 @dataclass
-class LocalIvfIndex:
+class LocalIvfIndex(_RawRows):
     """Driver-colocated IVF serving (the in-process analogue of
     search_ivf, pkg/index/ivf/ivf.go:115-161 semantics).
 
     CSR cell layout: rows sorted by (list_id, id) so every inverted
-    list is one contiguous slice. Probe selection runs in f64 with the
-    same distance formula as the distributed ``probe_lists``, so this
-    server scans the same cells the cluster path would. Candidates are
-    ranked by an f32 score and the top-(k+16) of each query are
-    re-scored exactly in f64 (the LocalFlatIndex contract: reported
-    distances are bit-identical to the distributed kernel's).
+    list is one contiguous slice. The shared probe head selects cells
+    with the same f64 formula as the distributed ``probe_lists``, so
+    this server scans the same cells the cluster path would.
+    Candidates are ranked by an f32 score and the top-(k+16) of each
+    query are re-scored exactly in f64 (reported distances are
+    bit-identical to the distributed kernel's).
 
     Two ranking kernels share that head and tail; ``search`` picks one
     per call from the shape of its input:
@@ -424,18 +456,14 @@ class LocalIvfIndex:
       f32 GEMV and keeps an argpartition of k+16. It costs a dozen
       numpy calls per query, so small requests from concurrent
       callers do not queue behind per-cell work on the GIL.
-    - cell-grouped, for batches: one f32 GEMM per probed cell over the
-      queries that probe it, an argpartition of k+16 per (query,
-      cell), then one per query over that pool. The pool is as wide
-      as the most probed cells PRESENT here for any query, so a
-      list-sharded replica holding nlist/W cells keeps a narrow pool.
+    - cell-grouped, for batches: the shared ``_rank_by_cell`` pool
+      with one f32 GEMM per probed cell over the queries that probe
+      it.
 
-    The shared tail is the f32_select_margin guard (a query whose f32
-    cut cannot be proven exact is re-ranked in f64 over its probed
-    cells and counted in GUARD_FALLBACKS), the exact f64 re-score and
-    the ascending (distance, id) sort. The kernel starts no threads:
-    parallelism comes from client threads, LocalServerPool processes
-    and shard tasks.
+    The tail is the f32_select_margin guard (a query whose f32 cut
+    cannot be proven exact is re-ranked in f64 over its probed cells
+    and counted in GUARD_FALLBACKS), the exact f64 re-score and the
+    ascending (distance, id) sort. The kernel starts no threads.
 
     Scale posture: a serving REPLICA for an index that fits one node;
     the 100 TB corpus stays in partitionBy("list_id") Parquet and is
@@ -444,52 +472,15 @@ class LocalIvfIndex:
     """
 
     ids: np.ndarray        # (n,) int64, cell-major
-    vecs: np.ndarray       # (n, dim) f32, cell-major, RAW for every
-    # metric (cosine divides by row norms in the ranking pass — the
-    # LocalFlatIndex.vecs contract: exact paths see the same raw
-    # values the distributed kernel and a SQL oracle score)
+    vecs: np.ndarray       # (n, dim) f32, cell-major, RAW for every metric
     metric: str
     centroids: np.ndarray  # (nlist, dim) f64, as trained (not re-normalized)
     offsets: np.ndarray    # (nlist + 1,) int64 CSR cell boundaries
-    # (n,) f32 — required for EVERY metric (l2 surrogate, cosine
-    # ranking inv-norms, _bmax's margin-guard input for dot)
-    norms_sq: np.ndarray
+    norms_sq: np.ndarray   # (n,) f32
 
     @property
     def nlist(self) -> int:
         return self.centroids.shape[0]
-
-    def _bmax(self) -> float:
-        """Max base-row norm (margin-guard input)."""
-        if getattr(self, "_bmax_cache", None) is None:
-            if self.metric == "cosine" or len(self.ids) == 0:
-                self._bmax_cache = 1.0
-            else:
-                self._bmax_cache = float(np.sqrt(self.norms_sq.max()))
-        return self._bmax_cache
-
-    def _inv_n(self) -> np.ndarray:
-        """f32 reciprocal row norms for the cosine ranking pass (see
-        LocalFlatIndex._inv_n)."""
-        if getattr(self, "_inv_n_cache", None) is None:
-            self._inv_n_cache = _inv_norms_f32(self.norms_sq)
-        return self._inv_n_cache
-
-    def _f32_scores(self, q: np.ndarray, sel) -> np.ndarray:
-        """f32 ranking scores of the stored rows ``sel`` (a slice or a
-        position array) for the f32 queries ``q``, lower is better."""
-        sc = q @ self.vecs[sel].T
-        if self.metric == "l2":
-            sc *= -2.0
-            sc += self.norms_sq[sel]
-        elif self.metric == "cosine":
-            # raw rows: divide by row norms here (zero rows → 0 →
-            # distance exactly 1.0, the zero-vector contract)
-            sc *= self._inv_n()[sel]
-            np.subtract(1.0, sc, out=sc)
-        else:
-            np.negative(sc, out=sc)
-        return sc
 
     def search(self, qmat: np.ndarray, k: int = 10,
                nprobe: int = 10) -> tuple[np.ndarray, np.ndarray]:
@@ -500,90 +491,26 @@ class LocalIvfIndex:
         probed cells (width n). nprobe ≥ nlist ⇒ exact flat search
         (every cell scanned), the correctness-gate property shared
         with search_ivf."""
-        from gofaiss_spark.functions.distance import np_distance_matrix
-
-        # RAW f64 queries for every exact path (probe selection, the
-        # guard fallbacks, the final re-score) — cosine normalizes
-        # only the f32 ranking copy, mirroring LocalFlatIndex.search
-        q64 = np.ascontiguousarray(qmat, dtype=np.float64)
-        if self.metric == "cosine":
-            qn = np.linalg.norm(q64, axis=1, keepdims=True)
-            qn[qn == 0] = 1.0
-            q = (q64 / qn).astype(np.float32)
-        else:
-            q = q64.astype(np.float32)
-        nq, nlist, n = q.shape[0], self.nlist, len(self.ids)
-        if nprobe <= 0 or nprobe > nlist:
-            nprobe = nlist
-        k = min(k, n) if k > 0 else n
-        k2 = k + 16
-
-        # head — probe selection, f64, same formula as probe_lists
-        dm = np_distance_matrix(self.centroids, q64, self.metric)
-        if nprobe < nlist:
-            cells = np.argpartition(dm, nprobe - 1, axis=0)[:nprobe].T
-        else:
-            cells = np.broadcast_to(np.arange(nlist), (nq, nlist))
+        q64, q = self._queries(qmat)
+        cells, ncand = _probe_cells(self.centroids, self.offsets, q64,
+                                    self.metric, nprobe)
+        k, kc = _widths(k, len(self.ids))
+        w = int(min(kc, ncand.max(initial=0)))
         sizes = np.diff(self.offsets)
-        ncand = sizes[cells].sum(axis=1)  # rows in each query's cells
-        # rows (nq, w): each query's top-min(k2, ncand) row positions
-        # by f32 score, rs their scores; row −1 / score inf pad the
-        # queries with fewer candidates
-        w = int(min(k2, ncand.max(initial=0)))
-        if nq * nprobe <= np.count_nonzero(sizes):
+        if cells.size <= np.count_nonzero(sizes):
             rows, rs = self._rank_per_query(q, cells, sizes, w)
         else:
-            rows, rs = self._rank_by_cell(q, cells, sizes, w)
-
-        # tail — margin guard (same contract as LocalFlatIndex /
-        # _local_topk_candidates): a query with more than k2 candidate
-        # rows rejected some, each with an f32 score ≥ its k2-th best
-        # (P). If P minus the k-th best exceeds 2× the f32 error bound
-        # no rejected row can enter the exact top-k; otherwise re-rank
-        # the query's probed cells exactly in f64.
-        full = np.flatnonzero(ncand > k2)
-        if full.size:
-            sf = rs[full].astype(np.float64)
-            pmax = sf.max(axis=1)
-            tk = np.partition(sf, k - 1, axis=1)[:, k - 1]
-            err = f32_select_margin(self.metric, q64.shape[1], self._bmax(),
-                                    np.linalg.norm(q64[full], axis=1))
-            for i in full[pmax - tk <= 2.0 * err]:
-                row_sel = np.concatenate([
-                    np.arange(self.offsets[c], self.offsets[c + 1])
-                    for c in cells[i]])
-                rows[i] = _exact_scan_topk(self.vecs, self.ids, self.metric,
-                                           q64[i], k2, row_sel=row_sel)
-
-        # exact f64 re-score of the real (non-pad) candidates, in
-        # query blocks that keep the f64 candidate rows near 16 MB
-        out_ids = np.full((nq, k), np.iinfo(np.int64).max, dtype=np.int64)
-        out_d = np.full((nq, k), np.inf, dtype=np.float64)
-        kout = min(k, w)
-        blk = max(1, 16384 // max(1, w))
-        for s in range(0, nq, blk):
-            d = np.full(rows[s:s + blk].shape, np.inf)
-            pid = np.full(d.shape, np.iinfo(np.int64).max)
-            bi, si = np.nonzero(rows[s:s + blk] >= 0)
-            r = rows[s + bi, si]
-            cand = self.vecs[r].astype(np.float64)
-            qb = q64[s + bi]
-            if self.metric == "l2":
-                diff = cand - qb
-                d[bi, si] = np.sqrt(np.einsum("kd,kd->k", diff, diff))
-            elif self.metric == "cosine":
-                # f64 row norms of the stored rows, same contract as
-                # LocalFlatIndex's re-score
-                bn = np.sqrt(np.einsum("kd,kd->k", cand, cand))
-                d[bi, si] = _cosine_from_ip(np.einsum("kd,kd->k", cand, qb),
-                                            bn, np.linalg.norm(qb, axis=1))
-            else:
-                d[bi, si] = -np.einsum("kd,kd->k", cand, qb)
-            pid[bi, si] = self.ids[r]
-            o = np.lexsort((pid, d), axis=1)[:, :kout]
-            out_ids[s:s + blk, :kout] = np.take_along_axis(pid, o, axis=1)
-            out_d[s:s + blk, :kout] = np.take_along_axis(d, o, axis=1)
-        return out_ids, out_d
+            rows, rs = _rank_by_cell(
+                self.offsets, cells, w,
+                lambda c, qi, s0, s1: self._f32_scores(
+                    q[qi] @ self.vecs[s0:s1].T, slice(s0, s1)),
+                np.float32)
+        self._guard(rows, rs, np.flatnonzero(ncand > kc), k, q64,
+                    lambda i: np.concatenate([
+                        np.arange(self.offsets[c], self.offsets[c + 1])
+                        for c in cells[i]]))
+        return _pool_topk(self.ids, rows, k,
+                          lambda qi, si, r: self._exact(q64[qi], r))
 
     def _rank_per_query(self, q, cells, sizes, w: int):
         """Small requests: per query, one gather of its probed cells'
@@ -599,47 +526,13 @@ class LocalIvfIndex:
         bounds = cum[::cells.shape[1]]
         for i in range(len(q)):
             r = pos[bounds[i]:bounds[i + 1]]
-            sc = self._f32_scores(q[i], r)
+            sc = self._f32_scores(q[i] @ self.vecs[r].T, r)
             if len(r) > w:
                 p = np.argpartition(sc, w - 1)[:w]
                 r, sc = r[p], sc[p]
             rows[i, :len(r)] = r
             rs[i, :len(r)] = sc
         return rows, rs
-
-    def _rank_by_cell(self, q, cells, sizes, w: int):
-        """Batches: one f32 GEMM per probed cell over the queries that
-        probe it into a per-query pool of (present cell, slot) blocks,
-        then the per-query top ``w`` of that pool."""
-        pc = sizes[cells] > 0
-        slot = np.cumsum(pc, axis=1) - 1  # rank among present cells
-        ks = int(min(w, sizes.max(initial=0)))
-        pw = int(pc.sum(axis=1).max(initial=0)) * ks
-        pool_s = np.full((len(q), pw), np.inf, dtype=np.float32)
-        pool_i = np.full((len(q), pw), -1, dtype=np.int64)
-        qq, jj = np.nonzero(pc)
-        cc = cells[qq, jj]
-        order = np.argsort(cc, kind="stable")
-        qq, cc, base = qq[order], cc[order], slot[qq, jj][order] * ks
-        bnds = np.searchsorted(cc, np.arange(self.nlist + 1))
-        for c in np.flatnonzero(bnds[1:] > bnds[:-1]):
-            s0, s1 = self.offsets[c], self.offsets[c + 1]
-            g = slice(bnds[c], bnds[c + 1])
-            sc = self._f32_scores(q[qq[g]], slice(s0, s1))
-            kk = min(ks, s1 - s0)
-            if kk < s1 - s0:
-                p = np.argpartition(sc, kk - 1, axis=1)[:, :kk]
-                sc = np.take_along_axis(sc, p, axis=1)
-            else:
-                p = np.arange(kk)[None, :]
-            cols = base[g, None] + np.arange(kk)
-            pool_s[qq[g, None], cols] = sc
-            pool_i[qq[g, None], cols] = p + s0
-        if pw > w:
-            p = np.argpartition(pool_s, w - 1, axis=1)[:, :w]
-            pool_s = np.take_along_axis(pool_s, p, axis=1)
-            pool_i = np.take_along_axis(pool_i, p, axis=1)
-        return pool_i, pool_s
 
 
 def to_local_ivf(ivf_index) -> LocalIvfIndex:
@@ -681,37 +574,34 @@ def to_local_ivf(ivf_index) -> LocalIvfIndex:
 # the DataFrame paths (search_pq/search_ivfpq/search_sq) produce —
 # identical table formula (pq.adc_tables), identical gather-sum,
 # identical sqrt — so a sharded deployment of these kernels merges
-# exactly. ``refine`` re-ranks the ADC top-(k·refine) against the
-# index's own stored rows with the exact-f64 formula LocalFlatIndex
-# uses (requires vecs; the FAISS RefineFlat pattern).
+# exactly. ``refine`` re-ranks the top-(k·refine) against the index's
+# own stored rows in exact f64 L2 (requires vecs; the FAISS RefineFlat
+# pattern), so quantization costs recall only, never distance
+# accuracy.
 # ---------------------------------------------------------------------
 
 
-def _adc_pool_topk(ids: np.ndarray, d: np.ndarray, k: int,
-                   vecs: np.ndarray | None, rows: np.ndarray,
-                   q64: np.ndarray, refine: int | None
-                   ) -> tuple[np.ndarray, np.ndarray]:
-    """Shared tail of the quantized kernels: given per-query candidate
-    ROW POSITIONS ``rows`` (nq, c) and their ADC distances ``d``
-    (nq, c), return exact (ids, dists) top-k ascending (distance, id).
-    With ``refine``, re-score every candidate in exact f64 L2 against
-    the stored rows first (so quantization costs recall only, never
-    distance accuracy — refine_exact semantics)."""
-    if refine is not None:
-        cand = vecs[rows].astype(np.float64)  # (nq, c, dim)
-        diff = cand - q64[:, None, :]
-        d = np.sqrt(np.einsum("bkd,bkd->bk", diff, diff))
-    pid = ids[rows]
-    order = np.lexsort((pid, d), axis=1)[:, :k]
-    return (np.take_along_axis(pid, order, axis=1),
-            np.take_along_axis(d, order, axis=1))
+def _refiner(index, q64: np.ndarray, refine: int | None):
+    """The quantized kinds' ``refine`` check. Returns None without
+    refine, else the ``_pool_topk`` distance that re-scores a pair in
+    exact f64 L2 against the stored row."""
+    if refine is None:
+        return None
+    if index.vecs is None:
+        raise ValueError("refine requires stored vectors "
+                         "(save/serve with vectors=)")
+    if index.metric != "l2":
+        raise ValueError(
+            "refine re-ranks in exact L2; build the index with "
+            f"metric='l2' (got {index.metric!r})")
+    return lambda qi, si, r: _l2(index.vecs[r], q64[qi])
 
 
 @dataclass
 class LocalPqIndex:
     """In-memory ADC serving for a PQ index (pq.go:127-179 semantics;
     distance = sqrt(Σ subspace table entries), bit-equal to
-    search_pq's)."""
+    search_pq's), on the scan skeleton."""
 
     ids: np.ndarray        # (n,) int64
     codes: np.ndarray      # (n, M) uint16
@@ -720,45 +610,31 @@ class LocalPqIndex:
     metric: str = "l2"
 
     def search(self, qmat: np.ndarray, k: int = 10,
-               refine: int | None = None,
-               tile: int = 262144) -> tuple[np.ndarray, np.ndarray]:
+               refine: int | None = None) -> tuple[np.ndarray, np.ndarray]:
         from gofaiss_spark.operators.pq import adc_accumulate, adc_tables
 
-        if refine is not None:
-            if self.vecs is None:
-                raise ValueError("refine requires stored vectors "
-                                 "(save/serve with vectors=)")
-            if self.metric != "l2":
-                raise ValueError(
-                    "refine re-ranks in exact L2; build the index with "
-                    f"metric='l2' (got {self.metric!r})")
         q64 = np.ascontiguousarray(qmat, dtype=np.float64)
-        nq, n = q64.shape[0], len(self.ids)
-        k = min(k, n) if k > 0 else n
-        kc = min(n, (k * refine if refine else k) + 16)
+        refined = _refiner(self, q64, refine)
+        n = len(self.ids)
+        k, kc = _widths(k, n, refine)
         tables = adc_tables(self.codebooks, q64)  # (q, M, ksub)
-        best_d = None
-        best_pos = None
-        for t0 in range(0, n, tile):
-            te = min(t0 + tile, n)
-            d2 = adc_accumulate(tables, self.codes[t0:te])
-            pos = np.broadcast_to(np.arange(t0, te), d2.shape)
-            if best_d is not None:
-                d2 = np.concatenate([best_d, d2], axis=1)
-                pos = np.concatenate([best_pos, pos], axis=1)
-            kk = min(kc, d2.shape[1])
-            sel = np.argpartition(d2, kk - 1, axis=1)[:, :kk]
-            best_d = np.take_along_axis(d2, sel, axis=1)
-            best_pos = np.take_along_axis(pos, sel, axis=1)
-        return _adc_pool_topk(self.ids, np.sqrt(best_d), k, self.vecs,
-                              best_pos, q64, refine)
+        rows, d2 = _scan_topk(
+            n, len(q64), min(kc, n),
+            lambda t0, t1: lambda qs: adc_accumulate(tables[qs],
+                                                     self.codes[t0:t1]),
+            np.float64)
+        return _pool_topk(self.ids, rows, k, refined or (
+            lambda qi, si, r: np.sqrt(d2[qi, si])))
 
 
 @dataclass
 class LocalIvfPqIndex:
     """In-memory nprobe-pruned residual-ADC serving (ivfpq.go:222-284
     semantics; fixes the reference façade bug the distributed
-    search_ivfpq fixes — tables are per-(query, list) residuals)."""
+    search_ivfpq fixes — tables are per-(query, list) residuals). Each
+    probed cell builds its residual tables once for the queries that
+    probe it (the search_ivfpq kernel shape), on the shared
+    ``_rank_by_cell`` pool."""
 
     ids: np.ndarray        # (n,) int64, cell-major
     codes: np.ndarray      # (n, M) uint16, cell-major
@@ -775,81 +651,23 @@ class LocalIvfPqIndex:
     def search(self, qmat: np.ndarray, k: int = 10, nprobe: int = 10,
                refine: int | None = None
                ) -> tuple[np.ndarray, np.ndarray]:
-        from gofaiss_spark.functions.distance import np_distance_matrix
         from gofaiss_spark.operators.pq import adc_accumulate, adc_tables
 
-        if refine is not None:
-            if self.vecs is None:
-                raise ValueError("refine requires stored vectors "
-                                 "(save/serve with vectors=)")
-            if self.metric != "l2":
-                raise ValueError(
-                    "refine re-ranks in exact L2; build the index with "
-                    f"metric='l2' (got {self.metric!r})")
         q64 = np.ascontiguousarray(qmat, dtype=np.float64)
-        nq, nlist = q64.shape[0], self.nlist
-        if nprobe <= 0 or nprobe > nlist:
-            nprobe = nlist
-        n = len(self.ids)
-        k = min(k, n) if k > 0 else n
-        kc = (k * refine if refine else k) + 16
-        # probe selection: same f64 formula as probe_lists
-        dm = np_distance_matrix(self.centroids, q64, self.metric)
-        if nprobe < nlist:
-            cells = np.argpartition(dm, nprobe - 1, axis=0)[:nprobe, :].T
-        else:
-            cells = np.broadcast_to(np.arange(nlist), (nq, nlist))
-        # scan-once probe map: group queries by probed cell so each
-        # cell's residual tables are built exactly once (the
-        # search_ivfpq kernel shape)
-        qq = np.repeat(np.arange(nq), cells.shape[1])
-        cc = cells.ravel()
-        keep = self.offsets[cc + 1] > self.offsets[cc]
-        qq, cc = qq[keep], cc[keep]
-        order = np.argsort(cc, kind="stable")
-        qq, cc = qq[order], cc[order]
-        bnds = np.searchsorted(cc, np.arange(nlist + 1))
-        pool_d: list[list[np.ndarray]] = [[] for _ in range(nq)]
-        pool_p: list[list[np.ndarray]] = [[] for _ in range(nq)]
-        for c in np.flatnonzero(bnds[1:] > bnds[:-1]):
-            s0, s1 = self.offsets[c], self.offsets[c + 1]
-            qidx = qq[bnds[c]:bnds[c + 1]]
-            resid = q64[qidx] - self.centroids[int(c)][None, :]
-            tabs = adc_tables(self.codebooks, resid)  # (g, M, ksub)
-            d2 = adc_accumulate(tabs, self.codes[s0:s1])
-            b = d2.shape[1]
-            kk = min(kc, b)
-            if kk < b:
-                sel = np.argpartition(d2, kk - 1, axis=1)[:, :kk]
-                dsel = np.take_along_axis(d2, sel, axis=1)
-            else:
-                sel = np.broadcast_to(np.arange(b), d2.shape)
-                dsel = d2
-            for gi, qi in enumerate(qidx):
-                pool_d[qi].append(dsel[gi])
-                pool_p[qi].append(sel[gi].astype(np.int64) + s0)
-        out_ids = np.empty((nq, k), dtype=np.int64)
-        out_d = np.empty((nq, k), dtype=np.float64)
-        for qi in range(nq):
-            if pool_d[qi]:
-                dq = np.concatenate(pool_d[qi])
-                pq_ = np.concatenate(pool_p[qi])
-            else:
-                dq = np.empty(0, dtype=np.float64)
-                pq_ = np.empty(0, dtype=np.int64)
-            kk = min(kc, len(dq))
-            if kk < len(dq):
-                sel = np.argpartition(dq, kk - 1)[:kk]
-                dq, pq_ = dq[sel], pq_[sel]
-            take = min(k, len(dq))
-            i1, d1 = _adc_pool_topk(
-                self.ids, np.sqrt(dq)[None, :], take, self.vecs,
-                pq_[None, :], q64[qi][None, :], refine)
-            out_ids[qi, :take] = i1[0]
-            out_d[qi, :take] = d1[0]
-            out_ids[qi, take:] = np.iinfo(np.int64).max
-            out_d[qi, take:] = np.inf
-        return out_ids, out_d
+        refined = _refiner(self, q64, refine)
+        cells, ncand = _probe_cells(self.centroids, self.offsets, q64,
+                                    self.metric, nprobe)
+        k, kc = _widths(k, len(self.ids), refine)
+
+        def score(c, qi, s0, s1):
+            tabs = adc_tables(self.codebooks, q64[qi] - self.centroids[c])
+            return adc_accumulate(tabs, self.codes[s0:s1])
+
+        rows, d2 = _rank_by_cell(self.offsets, cells,
+                                 int(min(kc, ncand.max(initial=0))),
+                                 score, np.float64)
+        return _pool_topk(self.ids, rows, k, refined or (
+            lambda qi, si, r: np.sqrt(d2[qi, si])))
 
 
 @dataclass
@@ -866,50 +684,31 @@ class LocalSqIndex:
     metric: str = "l2"
 
     def search(self, qmat: np.ndarray, k: int = 10,
-               refine: int | None = None,
-               tile: int = 131072) -> tuple[np.ndarray, np.ndarray]:
-        if refine is not None:
-            if self.vecs is None:
-                raise ValueError("refine requires stored vectors "
-                                 "(save/serve with vectors=)")
-            if self.metric != "l2":
-                raise ValueError(
-                    "refine re-ranks in exact L2; build the index with "
-                    f"metric='l2' (got {self.metric!r})")
+               refine: int | None = None) -> tuple[np.ndarray, np.ndarray]:
         q64 = np.ascontiguousarray(qmat, dtype=np.float64)
-        nq, n = q64.shape[0], len(self.ids)
-        k = min(k, n) if k > 0 else n
-        kc = min(n, (k * refine if refine else k) + 16)
+        refined = _refiner(self, q64, refine)
+        n = len(self.ids)
+        k, kc = _widths(k, n, refine)
         qsq = np.einsum("ij,ij->i", q64, q64)
-        best_d = None
-        best_pos = None
-        for t0 in range(0, n, tile):
-            te = min(t0 + tile, n)
-            x = self.vmin + self.codes[t0:te].astype(np.float64) * self.step
+
+        def tile(t0, t1):
+            x = self.vmin + self.codes[t0:t1].astype(np.float64) * self.step
             xsq = np.einsum("ij,ij->i", x, x)
-            d2 = (xsq[None, :] + qsq[:, None] - 2.0 * (q64 @ x.T))
-            np.maximum(d2, 0.0, out=d2)
-            pos = np.broadcast_to(np.arange(t0, te), d2.shape)
-            if best_d is not None:
-                d2 = np.concatenate([best_d, d2], axis=1)
-                pos = np.concatenate([best_pos, pos], axis=1)
-            kk = min(kc, d2.shape[1])
-            sel = np.argpartition(d2, kk - 1, axis=1)[:, :kk]
-            best_d = np.take_along_axis(d2, sel, axis=1)
-            best_pos = np.take_along_axis(pos, sel, axis=1)
-        # per-pair re-score of the survivors: the GEMM above is only
-        # the SELECTOR — its accumulation order depends on tile/shard
-        # shape (±1e-13), so sharded and single-node runs would
-        # disagree in the last float digits. The diff-einsum below is
-        # batch-shape-independent, making reported distances identical
-        # across any sharding of the same rows (the LocalFlatIndex
-        # re-score contract).
-        xc = (self.vmin
-              + self.codes[best_pos].astype(np.float64) * self.step)
-        diff = xc - q64[:, None, :]
-        d = np.sqrt(np.einsum("bkd,bkd->bk", diff, diff))
-        return _adc_pool_topk(self.ids, d, k, self.vecs,
-                              best_pos, q64, refine)
+
+            def score(qs):
+                d2 = xsq[None, :] + qsq[qs, None] - 2.0 * (q64[qs] @ x.T)
+                return np.maximum(d2, 0.0, out=d2)
+            return score
+
+        rows, _ = _scan_topk(n, len(q64), min(kc, n), tile, np.float64)
+        # the GEMM above only SELECTS: its accumulation order depends
+        # on the block shape (±1e-13), so reported distances come from
+        # a per-pair re-score that is identical across any sharding of
+        # the same rows
+        return _pool_topk(self.ids, rows, k, refined or (
+            lambda qi, si, r: _l2(
+                self.vmin + self.codes[r].astype(np.float64) * self.step,
+                q64[qi])))
 
 
 @dataclass
@@ -925,11 +724,11 @@ class LocalIvfSqIndex:
     quantized serving arm: near-exact in-cell ordering (8 bits per
     DIMENSION vs PQ's 8 bits per 8-dim subspace) at GEMM speed.
 
-    Distance contract: the f32 decode-GEMM is only the SELECTOR; the
-    kc survivors are re-scored per-pair in exact f64 over the decoded
-    residuals (batch-shape-independent diff-einsum), so reported
-    distances are identical across any sharding of the same rows —
-    the LocalSqIndex / LocalFlatIndex re-score contract."""
+    Distance contract: the f32 residual decode-GEMM of each probed
+    cell is only the SELECTOR; the kc survivors are re-scored per pair
+    in exact f64 over the decoded residuals, so reported distances are
+    identical across any sharding of the same rows — the LocalSqIndex
+    / LocalFlatIndex re-score contract."""
 
     ids: np.ndarray        # (n,) int64, cell-major
     codes: np.ndarray      # (n, dim) uint8, cell-major
@@ -947,102 +746,33 @@ class LocalIvfSqIndex:
     def search(self, qmat: np.ndarray, k: int = 10, nprobe: int = 10,
                refine: int | None = None
                ) -> tuple[np.ndarray, np.ndarray]:
-        from gofaiss_spark.functions.distance import np_distance_matrix
-
-        if refine is not None:
-            if self.vecs is None:
-                raise ValueError("refine requires stored vectors "
-                                 "(save/serve with vectors=)")
-            if self.metric != "l2":
-                raise ValueError(
-                    "refine re-ranks in exact L2; build the index with "
-                    f"metric='l2' (got {self.metric!r})")
         q64 = np.ascontiguousarray(qmat, dtype=np.float64)
-        nq, nlist = q64.shape[0], self.nlist
-        if nprobe <= 0 or nprobe > nlist:
-            nprobe = nlist
-        n = len(self.ids)
-        k = min(k, n) if k > 0 else n
-        kc = (k * refine if refine else k) + 16
-        # probe selection: same f64 formula as probe_lists
-        dm = np_distance_matrix(self.centroids, q64, self.metric)
-        if nprobe < nlist:
-            cells = np.argpartition(dm, nprobe - 1, axis=0)[:nprobe, :].T
-        else:
-            cells = np.broadcast_to(np.arange(nlist), (nq, nlist))
-        # scan-once probe map (the LocalIvfPqIndex shape): group
-        # queries by probed cell so each cell is decoded exactly once
-        qq = np.repeat(np.arange(nq), cells.shape[1])
-        cc = cells.ravel()
-        keep = self.offsets[cc + 1] > self.offsets[cc]
-        qq, cc = qq[keep], cc[keep]
-        order = np.argsort(cc, kind="stable")
-        qq, cc = qq[order], cc[order]
-        bnds = np.searchsorted(cc, np.arange(nlist + 1))
+        refined = _refiner(self, q64, refine)
+        cells, ncand = _probe_cells(self.centroids, self.offsets, q64,
+                                    self.metric, nprobe)
+        k, kc = _widths(k, len(self.ids), refine)
         vmin32 = self.vmin.astype(np.float32)
         step32 = self.step.astype(np.float32)
-        pool_d: list[list[np.ndarray]] = [[] for _ in range(nq)]
-        pool_p: list[list[np.ndarray]] = [[] for _ in range(nq)]
-        for c in np.flatnonzero(bnds[1:] > bnds[:-1]):
-            s0, s1 = self.offsets[c], self.offsets[c + 1]
-            qidx = qq[bnds[c]:bnds[c + 1]]
-            rq = (q64[qidx] - self.centroids[int(c)][None, :]).astype(
-                np.float32)  # (g, dim) residual queries
-            # f32 decode + BLAS GEMM: the selector hot loop — one
-            # dense multiply per (query, row), no gather
+
+        def score(c, qi, s0, s1):
+            rq = (q64[qi] - self.centroids[c]).astype(np.float32)
             x = vmin32 + self.codes[s0:s1].astype(np.float32) * step32
-            sc = rq @ x.T  # (g, b)
+            sc = rq @ x.T
             sc *= -2.0
             sc += np.einsum("ij,ij->i", x, x)[None, :]
             sc += np.einsum("ij,ij->i", rq, rq)[:, None]
-            np.maximum(sc, 0.0, out=sc)
-            b = sc.shape[1]
-            kk = min(kc, b)
-            if kk < b:
-                sel = np.argpartition(sc, kk - 1, axis=1)[:, :kk]
-                dsel = np.take_along_axis(sc, sel, axis=1)
-            else:
-                sel = np.broadcast_to(np.arange(b), sc.shape)
-                dsel = sc
-            for gi, qi in enumerate(qidx):
-                pool_d[qi].append(dsel[gi].astype(np.float64))
-                pool_p[qi].append(sel[gi].astype(np.int64) + s0)
-        cell_of = None
-        out_ids = np.empty((nq, k), dtype=np.int64)
-        out_d = np.empty((nq, k), dtype=np.float64)
-        for qi in range(nq):
-            if pool_d[qi]:
-                dq = np.concatenate(pool_d[qi])
-                pq_ = np.concatenate(pool_p[qi])
-            else:
-                dq = np.empty(0, dtype=np.float64)
-                pq_ = np.empty(0, dtype=np.int64)
-            kk = min(kc, len(dq))
-            if kk < len(dq):
-                sel = np.argpartition(dq, kk - 1)[:kk]
-                pq_ = pq_[sel]
-            take = min(k, len(pq_))
-            # exact f64 per-pair re-score of the survivors in residual
-            # space: d(q, c + decode(code)) = ||decode(code) − (q−c)||
-            if len(pq_):
-                if cell_of is None:
-                    cell_of = np.searchsorted(
-                        self.offsets, np.arange(n), side="right") - 1
-                xc = self.vmin + self.codes[pq_].astype(
-                    np.float64) * self.step
-                rqp = q64[qi][None, :] - self.centroids[cell_of[pq_]]
-                diff = xc - rqp
-                d = np.sqrt(np.einsum("kd,kd->k", diff, diff))
-            else:
-                d = np.empty(0, dtype=np.float64)
-            i1, d1 = _adc_pool_topk(
-                self.ids, d[None, :], take, self.vecs,
-                pq_[None, :], q64[qi][None, :], refine)
-            out_ids[qi, :take] = i1[0]
-            out_d[qi, :take] = d1[0]
-            out_ids[qi, take:] = np.iinfo(np.int64).max
-            out_d[qi, take:] = np.inf
-        return out_ids, out_d
+            return np.maximum(sc, 0.0, out=sc)
+
+        def dist(qi, si, r):
+            # d(q, c + decode(code)) = ||decode(code) − (q − c)||
+            cell = np.searchsorted(self.offsets, r, side="right") - 1
+            x = self.vmin + self.codes[r].astype(np.float64) * self.step
+            return _l2(x, q64[qi] - self.centroids[cell])
+
+        rows, _ = _rank_by_cell(self.offsets, cells,
+                                int(min(kc, ncand.max(initial=0))),
+                                score, np.float32)
+        return _pool_topk(self.ids, rows, k, refined or dist)
 
 
 def to_local_pq(pq_index, vectors=None) -> LocalPqIndex:
@@ -1125,18 +855,18 @@ def _aligned_vecs(vectors, ids: np.ndarray) -> np.ndarray | None:
 # ---------------------------------------------------------------------
 # Process-parallel serving pool — the GIL-free scaling tier.
 #
-# The in-process kernels above stop scaling past ~4-16 threads: only
-# the BLAS GEMMs drop the GIL, and the selection/scatter numpy work
-# serializes (measured: 1 thread 4.3s, best threaded ~2.0s on the
-# 100k/nprobe=50/10k-query workload — a 2.1× ceiling on 32 cores).
-# LocalServerPool shards a query batch across OS processes instead:
-# the index arrays are published ONCE into POSIX shared memory, W
-# spawned workers attach zero-copy views, and each worker runs the
-# identical kernel on a contiguous query slice with a small private
-# thread budget (W × T sized to the core count). Per-query results
-# are independent of batch composition, so the concatenated output is
-# bit-identical to a single-process search (gated in
-# tests/test_local_serve.py).
+# The in-process kernels above start no threads, and threads would
+# not scale them far: only the BLAS GEMMs drop the GIL, and the
+# selection/scatter numpy work serializes (measured: 1 thread 4.3s,
+# best threaded ~2.0s on the 100k/nprobe=50/10k-query workload — a
+# 2.1× ceiling on 32 cores). LocalServerPool shards a query batch
+# across OS processes instead: the index arrays are published ONCE
+# into POSIX shared memory, W spawned workers attach zero-copy views,
+# and each worker runs the identical kernel on a contiguous query
+# slice with a private BLAS thread budget of ``worker_threads`` (W × T
+# sized to the core count). Per-query results are independent of
+# batch composition, so the concatenated output is bit-identical to a
+# single-process search (gated in tests/test_local_serve.py).
 #
 # This is the standard single-node serving architecture (one memory
 # copy of the index, N serving processes) — the same shape a
@@ -1456,8 +1186,8 @@ def _shm_attach(meta):
 
 def _mp_worker_init(spec: dict) -> None:
     """Runs once in every spawned worker: attach the shared-memory
-    index arrays (zero-copy) and cap this worker's thread fan-out."""
-    global _WORKER_INDEX, _MAX_CHUNKS
+    index arrays (zero-copy) and cap this worker's BLAS threads."""
+    global _WORKER_INDEX
     import os as _os
 
     # BLAS thread cap. PRIMARY mechanism: env inheritance during the
@@ -1497,7 +1227,6 @@ def _mp_worker_init(spec: dict) -> None:
         shm, arr = _shm_attach(meta)
         _WORKER_SHM.append(shm)  # keep alive for the process lifetime
         arrays[key] = arr
-    _MAX_CHUNKS = int(spec["worker_threads"])
     kind, metric = spec["kind"], spec["metric"]
     if kind == "ivf":
         _WORKER_INDEX = LocalIvfIndex(
@@ -1593,11 +1322,12 @@ def _mp_search_hnsw_cells(qmeta: dict, items: list, k: int, ef: int):
 
 
 class LocalServerPool:
-    """Serve a LocalFlatIndex / LocalIvfIndex from W worker processes
-    sharing one in-memory copy of the index.
+    """Serve any local index — Flat, IVF, PQ, IVFPQ, SQ, IVFSQ or
+    routed HNSW — from W worker processes sharing one in-memory copy
+    of the index.
 
     ``workers × worker_threads`` should be sized to the core count
-    (default: W = cores / worker_threads, capped at 16). The spawn
+    (default: W = cores / worker_threads, capped at 32). The spawn
     context is used (fork-safety with loaded BLAS); workers inherit
     ``OPENBLAS/OMP/MKL_NUM_THREADS = worker_threads`` so per-process
     BLAS pools don't oversubscribe.

@@ -806,9 +806,9 @@ class ShardedSearcher:
         the merged result's distances are exact, and its candidate
         pool is a SUPERSET of the single-node refine pool (every
         global ADC top-(k·refine) member is also in its own shard's
-        top-(k·refine))."""
-        if k <= 0:
-            raise ValueError(f"k must be positive, got {k}")
+        top-(k·refine)). k ≤ 0 returns every probed candidate, as the
+        local and distributed tiers do: the width is the largest
+        per-query count."""
         self._maybe_refresh()
         if refine is not None and not self.meta.get("has_vectors"):
             raise ValueError(
@@ -816,31 +816,19 @@ class ShardedSearcher:
         q = np.ascontiguousarray(qmat, dtype=np.float32)
         nq = q.shape[0]
         if nq == 0:
-            return (np.empty((0, k), dtype=np.int64),
-                    np.empty((0, k), dtype=np.float64))
+            return (np.empty((0, max(k, 0)), dtype=np.int64),
+                    np.empty((0, max(k, 0)), dtype=np.float64))
         meta = self.meta
         path, build_id = self.path, meta["build_id"]
         kind = meta["kind"]
         npr = nprobe if nprobe is not None else 10
         sc = self.spark.sparkContext
         bq = sc.broadcast(q)
-
-        w = self.meta["num_shards"]
         n_slices = self.slices
 
         def part(pdfs):
-            import os as _os
-
             import pandas as pd
 
-            from gofaiss_spark.operators import local_serve as _ls
-
-            # with W×G concurrent single-shard tasks on the cluster,
-            # each task's kernel runs (near-)single-threaded so one
-            # host's tasks don't oversubscribe its cores
-            _ls._MAX_CHUNKS = max(
-                1, (_os.cpu_count() or 8) // max(1, min(w * n_slices, 64))
-            )
             qv = bq.value
             nq_all = len(qv)
             for pdf in pdfs:
@@ -888,7 +876,9 @@ class ShardedSearcher:
         qi, ids, dist = qi[order], ids[order], dist[order]
         starts = np.searchsorted(qi, np.arange(nq + 1))
         avail = np.diff(starts)
-        kout = min(k, int(avail.max(initial=0)))
+        kout = int(avail.max(initial=0))
+        if k > 0:
+            kout = min(k, kout)
         out_ids = np.full((nq, kout), np.iinfo(np.int64).max, dtype=np.int64)
         out_d = np.full((nq, kout), np.inf, dtype=np.float64)
         take = np.minimum(avail, kout)

@@ -595,35 +595,110 @@ def _ivf_replica(metric: str, layout: str) -> "LocalIvfIndex":
         norms_sq=np.einsum("ij,ij->i", vecs, vecs))
 
 
-def _probed_bruteforce(idx, q64: np.ndarray, k: int, nprobe: int):
-    """Per query: every row of its probed cells scored exactly in f64
-    (the same per-pair formulas as the kernel's re-score), ascending
-    (distance, id), padded to width k with (int64.max, inf)."""
-    from gofaiss_spark.functions.distance import np_distance_matrix
+def _quantized_replica(kind: str, layout: str):
+    """An IVFPQ (M=4, 64 codewords) or IVFSQ (SQ8) replica over the
+    residuals of ``_ivf_replica("l2", layout)``'s rows, with the rows
+    stored for refine."""
+    from gofaiss_spark.operators.local_serve import (
+        LocalIvfPqIndex,
+        LocalIvfSqIndex,
+    )
 
-    dm = np_distance_matrix(idx.centroids, q64, idx.metric)
-    nq = len(q64)
-    out_ids = np.full((nq, k), np.iinfo(np.int64).max, dtype=np.int64)
-    out_d = np.full((nq, k), np.inf)
-    for i in range(nq):
-        cells = (np.argpartition(dm[:, i], nprobe - 1)[:nprobe]
-                 if nprobe < idx.nlist else np.arange(idx.nlist))
-        rows = np.concatenate([np.arange(idx.offsets[c], idx.offsets[c + 1])
-                               for c in cells])
+    idx = _ivf_replica("l2", layout)
+    rng = np.random.default_rng(23)
+    cell = np.searchsorted(idx.offsets, np.arange(len(idx.ids)),
+                           side="right") - 1
+    resid = idx.vecs.astype(np.float64) - idx.centroids[cell]
+    common = dict(ids=idx.ids, centroids=idx.centroids,
+                  offsets=idx.offsets, vecs=idx.vecs)
+    if kind == "ivfpq":
+        books, codes = _pq_codes(resid, 4, 64, rng)
+        return LocalIvfPqIndex(codes=codes, codebooks=books, **common)
+    vmin = resid.min(axis=0)
+    step = (resid.max(axis=0) - vmin) / 255.0
+    codes = np.rint((resid - vmin) / step).astype(np.uint8)
+    return LocalIvfSqIndex(codes=codes, vmin=vmin, step=step, **common)
+
+
+def _pq_codes(x: np.ndarray, m: int, ksub: int, rng):
+    """Codebooks sampled from ``x``'s subvectors and each row's
+    nearest codewords: enough structure for a brute-force check."""
+    sub = x.reshape(len(x), m, -1)
+    books = np.stack([sub[rng.integers(0, len(x), ksub), j]
+                      for j in range(m)])
+    codes = np.stack([
+        np.argmin(((sub[:, j, None, :] - books[j][None]) ** 2).sum(-1),
+                  axis=1) for j in range(m)], axis=1)
+    return books, codes.astype(np.uint16)
+
+
+def _exact_distances(idx, q: np.ndarray, rows: np.ndarray) -> np.ndarray:
+    """f64 distance of one query to the stored rows ``rows`` as each
+    index kind reports it, pair by pair: the metric's formula on the
+    raw rows (Flat, IVF), sqrt of the f64 ADC sum (PQ, IVFPQ) or the
+    exact L2 to the decoded point (SQ, IVFSQ). The cell kinds code
+    each row's residual to its cell centroid."""
+    from gofaiss_spark.operators.pq import adc_accumulate, adc_tables
+
+    if hasattr(idx, "norms_sq"):
         vb = idx.vecs[rows].astype(np.float64)
-        qq = np.repeat(q64[i][None, :], len(rows), axis=0)
+        qq = np.repeat(q[None, :], len(rows), axis=0)
         if idx.metric == "l2":
             diff = vb - qq
-            d = np.sqrt(np.einsum("kd,kd->k", diff, diff))
-        elif idx.metric == "cosine":
+            return np.sqrt(np.einsum("kd,kd->k", diff, diff))
+        if idx.metric == "cosine":
             denom = (np.sqrt(np.einsum("kd,kd->k", vb, vb))
                      * np.linalg.norm(qq, axis=1))
             with np.errstate(divide="ignore", invalid="ignore"):
                 d = 1.0 - np.clip(np.einsum("kd,kd->k", vb, qq) / denom,
                                   -1.0, 1.0)
             d[denom == 0.0] = 1.0
+            return d
+        return -np.einsum("kd,kd->k", vb, qq)
+    if hasattr(idx, "offsets"):
+        cell = np.searchsorted(idx.offsets, rows, side="right") - 1
+        target = q[None, :] - idx.centroids[cell]
+    else:
+        cell = np.zeros(len(rows), dtype=np.int64)
+        target = np.repeat(q[None, :], len(rows), axis=0)
+    if hasattr(idx, "codebooks"):
+        d2 = np.empty(len(rows))
+        for c in np.unique(cell):
+            m = cell == c
+            tabs = adc_tables(idx.codebooks, target[m][:1])
+            d2[m] = adc_accumulate(tabs, idx.codes[rows[m]])[0]
+        return np.sqrt(d2)
+    diff = idx.vmin + idx.codes[rows].astype(np.float64) * idx.step - target
+    return np.sqrt(np.einsum("kd,kd->k", diff, diff))
+
+
+def _probed_bruteforce(idx, q64: np.ndarray, k: int, nprobe: int | None,
+                       refine: int | None = None):
+    """Per query: every row of its probed cells (every row without
+    cells) scored by ``_exact_distances``, ascending (distance, id),
+    padded to width k with (int64.max, inf). ``refine`` re-ranks the
+    top k·refine + 16 by exact L2 to the stored rows."""
+    from gofaiss_spark.functions.distance import np_distance_matrix
+
+    nq = len(q64)
+    out_ids = np.full((nq, k), np.iinfo(np.int64).max, dtype=np.int64)
+    out_d = np.full((nq, k), np.inf)
+    if nprobe is not None:
+        dm = np_distance_matrix(idx.centroids, q64, idx.metric)
+    for i in range(nq):
+        if nprobe is None:
+            rows = np.arange(len(idx.ids))
         else:
-            d = -np.einsum("kd,kd->k", vb, qq)
+            cells = (np.argpartition(dm[:, i], nprobe - 1)[:nprobe]
+                     if nprobe < idx.nlist else np.arange(idx.nlist))
+            rows = np.concatenate([
+                np.arange(idx.offsets[c], idx.offsets[c + 1])
+                for c in cells])
+        d = _exact_distances(idx, q64[i], rows)
+        if refine:
+            rows = rows[np.lexsort((idx.ids[rows], d))[:k * refine + 16]]
+            diff = idx.vecs[rows].astype(np.float64) - q64[i]
+            d = np.sqrt(np.einsum("kd,kd->k", diff, diff))
         o = np.lexsort((idx.ids[rows], d))[:k]
         out_ids[i, :len(o)] = idx.ids[rows][o]
         out_d[i, :len(o)] = d[o]
@@ -637,37 +712,95 @@ def _ivf_queries(idx, nq: int, seed: int) -> np.ndarray:
 
 
 @pytest.mark.parametrize("layout", ["full", "shard", "tiny"])
-@pytest.mark.parametrize("metric", ["l2", "cosine", "dot"])
-def test_ivf_kernels_bit_identical_to_probed_scan(metric, layout,
-                                                  monkeypatch):
-    """Both LocalIvfIndex ranking kernels return exactly the top-k of
-    an f64 scan of each query's probed cells — ids and distances — at
-    batch sizes on both sides of the per-query / cell-grouped rule."""
-    from gofaiss_spark.operators.local_serve import LocalIvfIndex
+@pytest.mark.parametrize("metric,kind,refine", [
+    pytest.param("l2", "ivf", None, id="l2"),
+    pytest.param("cosine", "ivf", None, id="cosine"),
+    pytest.param("dot", "ivf", None, id="dot"),
+    pytest.param("l2", "ivfpq", None, id="ivfpq"),
+    pytest.param("l2", "ivfpq", 4, id="ivfpq-refine4"),
+    pytest.param("l2", "ivfsq", None, id="ivfsq"),
+    pytest.param("l2", "ivfsq", 4, id="ivfsq-refine4"),
+])
+def test_ivf_kernels_bit_identical_to_probed_scan(metric, kind, refine,
+                                                  layout, monkeypatch):
+    """The cell-family kernels return exactly the top-k of an f64
+    scan of each query's probed cells — ids and distances — at batch
+    sizes on both sides of LocalIvfIndex's per-query / cell-grouped
+    rule; for IVFPQ and IVFSQ with and without refine."""
+    from gofaiss_spark.operators import local_serve
 
-    idx = _ivf_replica(metric, layout)
+    idx = (_ivf_replica(metric, layout) if kind == "ivf"
+           else _quantized_replica(kind, layout))
     ran = []
 
-    def spy(name):
-        kernel = getattr(LocalIvfIndex, name)
+    def spy(owner, name):
+        kernel = getattr(owner, name)
 
-        def wrapped(self, *args):
+        def wrapped(*args):
             ran.append(name)
-            return kernel(self, *args)
-        return wrapped
+            return kernel(*args)
+        monkeypatch.setattr(owner, name, wrapped)
 
-    for name in ("_rank_per_query", "_rank_by_cell"):
-        monkeypatch.setattr(LocalIvfIndex, name, spy(name))
+    spy(local_serve.LocalIvfIndex, "_rank_per_query")
+    spy(local_serve, "_rank_by_cell")
+    kw = {} if kind == "ivf" else {"refine": refine}
     for nq in (1, 2, 16, 17, 64, 1024):
         q64 = _ivf_queries(idx, nq, seed=nq)
         if metric == "cosine":
             q64[0] = 0.0  # zero query
         for nprobe in (1, 4, IVF_NLIST):
-            ids, d = idx.search(q64, k=10, nprobe=nprobe)
-            want_ids, want_d = _probed_bruteforce(idx, q64, 10, nprobe)
+            ids, d = idx.search(q64, k=10, nprobe=nprobe, **kw)
+            want_ids, want_d = _probed_bruteforce(idx, q64, 10, nprobe,
+                                                  refine)
             np.testing.assert_array_equal(ids, want_ids)
             np.testing.assert_array_equal(d, want_d)
-    assert set(ran) == {"_rank_per_query", "_rank_by_cell"}
+    # LocalIvfIndex runs both kernels; the quantized kinds only pool
+    assert set(ran) == ({"_rank_per_query", "_rank_by_cell"}
+                        if kind == "ivf" else {"_rank_by_cell"})
+
+
+@pytest.mark.parametrize("kind", ["flat", "pq", "sq"])
+def test_scan_kernels_bit_identical_to_bruteforce(kind):
+    """The scan-family kernels (Flat, PQ, SQ) return exactly the top-k
+    of an f64 brute force over every row. n spans three 8,192-row
+    tiles and nq two 128-query blocks; rows and queries are sorted
+    along one axis, so a later tile passes the column filter for one
+    query block and is rejected outright for the other."""
+    from gofaiss_spark.operators.local_serve import (
+        LocalFlatIndex,
+        LocalPqIndex,
+        LocalSqIndex,
+    )
+
+    rng = np.random.default_rng(29)
+    n, dim = 20_000, 8
+    x = rng.normal(size=(n, dim))
+    x[:, 0] = np.linspace(0.0, 100.0, n)
+    x = x.astype(np.float32)
+    q64 = rng.normal(size=(200, dim))
+    q64[:, 0] = np.sort(np.concatenate([rng.uniform(0, 30, 128),
+                                        rng.uniform(70, 100, 72)]))
+    ids = rng.permutation(n).astype(np.int64)
+    x64 = x.astype(np.float64)
+    if kind == "pq":
+        books, codes = _pq_codes(x64, 4, 256, rng)
+        metrics = {"l2": LocalPqIndex(ids=ids, codes=codes,
+                                      codebooks=books)}
+    elif kind == "sq":
+        vmin = x64.min(axis=0)
+        step = (x64.max(axis=0) - vmin) / 255.0
+        metrics = {"l2": LocalSqIndex(
+            ids=ids, codes=np.rint((x64 - vmin) / step).astype(np.uint8),
+            vmin=vmin, step=step)}
+    else:
+        metrics = {m: LocalFlatIndex(ids, x, m, np.einsum("ij,ij->i", x, x))
+                   for m in ("l2", "cosine", "dot")}
+    for idx in metrics.values():
+        for nq in (1, 200):
+            ids_, d = idx.search(q64[:nq], k=10)
+            want_ids, want_d = _probed_bruteforce(idx, q64[:nq], 10, None)
+            np.testing.assert_array_equal(ids_, want_ids)
+            np.testing.assert_array_equal(d, want_d)
 
 
 @pytest.mark.parametrize("k", [0, -1, -17])

@@ -77,11 +77,6 @@ class TestFlatSharded:
         path = str(tmp_path_factory.mktemp("shard") / "flat_bad")
         with pytest.raises(ValueError, match="num_shards"):
             save_sharded(vectors, path, num_shards=0)
-        save_sharded(vectors, path, num_shards=2)
-        with ShardedSearcher(spark, path) as srv:
-            with pytest.raises(ValueError, match="k must be positive"):
-                srv.search(
-                    np.zeros((1, srv.meta["dim"]), dtype=np.float32), k=0)
 
 
 class TestIvfSharded:
@@ -122,6 +117,24 @@ class TestIvfSharded:
             b = srv.search(qmat, k=5, nprobe=4)  # warm (host shm cache)
         np.testing.assert_array_equal(a[0], b[0])
         np.testing.assert_array_equal(a[1], b[1])
+
+    def test_nonpositive_k_matches_local_ivf(self, spark, ivf, qmat,
+                                             tmp_path_factory):
+        """k ≤ 0 returns every probed candidate, as the local replica
+        does; the merge is as wide as the largest per-query count, and
+        an empty batch has shape (0, 0)."""
+        path = str(tmp_path_factory.mktemp("shard") / "ivf_k0")
+        save_sharded(ivf, path, num_shards=4)
+        with ShardedSearcher(spark, path) as srv:
+            sids, sd = srv.search(qmat, k=0, nprobe=2)
+            eids, ed = srv.search(qmat[:0], k=0, nprobe=2)
+        lids, ld = to_local_ivf(ivf).search(qmat, k=0, nprobe=2)
+        w = sids.shape[1]
+        assert w == np.isfinite(ld).sum(axis=1).max()
+        assert not np.isfinite(ld[:, w:]).any()
+        np.testing.assert_array_equal(sids, lids[:, :w])
+        np.testing.assert_array_equal(sd, ld[:, :w])
+        assert eids.shape == ed.shape == (0, 0)
 
     def test_stats(self, spark, ivf, tmp_path_factory):
         path = str(tmp_path_factory.mktemp("shard") / "ivf_stats")
