@@ -26,6 +26,7 @@ from gofaiss_spark.operators.lsh import LshIndex, build_lsh, search_lsh
 from gofaiss_spark.operators.pq import PqIndex, build_pq, search_pq
 from gofaiss_spark.operators.ivfsq import IvfSqIndex, build_ivfsq, search_ivfsq
 from gofaiss_spark.operators.sq import SqIndex, build_sq, search_sq
+from gofaiss_spark.operators.topk import collect_queries
 from gofaiss_spark.operators.topk import range_search as _range_search
 
 INDEX_TYPES = (
@@ -561,16 +562,6 @@ def _np_results_to_df(spark, qids, ids, dists) -> DataFrame:
         out, schema="query_id long, id long, distance double, rank int")
 
 
-def _collect_queries(queries: DataFrame):
-    import numpy as np
-
-    qp = queries.select("query_id", "qvec").toPandas()
-    qids = qp["query_id"].to_numpy(dtype=np.int64)
-    if len(qp) == 0:
-        return qids, np.empty((0, 1), dtype=np.float64)
-    return qids, np.stack(qp["qvec"].to_numpy()).astype(np.float64)
-
-
 class TierServer:
     """One-call serving handle (``api.serve``): a bound (index, tier)
     pair. ``search`` accepts either a (query_id, qvec) DataFrame
@@ -684,7 +675,7 @@ def search(index, queries: DataFrame, k: int = DEFAULT_K, params: dict | None = 
         else:
             index = _load_cached(spark, index)
     if isinstance(index, ShardedSearcher):
-        qids, qmat = _collect_queries(queries)
+        qids, qmat = collect_queries(queries)
         ids, d = index.search(
             qmat, k=k, nprobe=params.get("nprobe", DEFAULT_NPROBE),
             refine=params.get("refine"))
@@ -696,7 +687,7 @@ def search(index, queries: DataFrame, k: int = DEFAULT_K, params: dict | None = 
         if mb is None:
             raise TypeError(
                 f"{type(index).__name__} has no local adapter")
-        qids, qmat = _collect_queries(queries)
+        qids, qmat = collect_queries(queries)
         if len(qids) == 0:
             return queries.sparkSession.createDataFrame(
                 [], "query_id long, id long, distance double, rank int")

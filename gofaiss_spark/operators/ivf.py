@@ -13,10 +13,10 @@ Spark shape (SURVEY.md §1.3):
   partition pruning (SURVEY.md §4 row 4): a probe of 10/316 lists
   reads ~3% of the files. This is THE scale property of IVF — at
   100 TB the scan cost is data × nprobe/nlist.
-- search: per-query top-nprobe over centroids is a driver-side NumPy
-  argsort (tiny); candidate scan is a partition-pruned filter + a
-  broadcast join against the (query_id, list_id) probe pairs; top-k
-  is the two-phase local top-k (no n×q shuffle).
+- search: the driver probes each query's nprobe nearest centroids
+  once (tiny); the candidate scan is a partition-pruned list_id
+  filter and one mapInArrow that runs the local IVF kernel over each
+  Arrow batch; a Window merges the per-batch top-k (no n×q shuffle).
 """
 
 from __future__ import annotations
@@ -30,8 +30,13 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from gofaiss_spark.functions.distance import np_distance_matrix, validate_metric
-from gofaiss_spark.operators.topk import RESULT_SCHEMA, topk
+from gofaiss_spark.functions.distance import (
+    np_distance_matrix,
+    np_paired_distance,
+    validate_metric,
+)
+from gofaiss_spark.operators.local_serve import _probe_cells
+from gofaiss_spark.operators.topk import search_index
 
 
 def default_nlist(n: int) -> int:
@@ -229,22 +234,15 @@ def probe_lists(
     nprobe: int,
     metric: str,
 ) -> pd.DataFrame:
-    """Stage 1 of search (ivf.go:131-141): per query the nprobe
-    nearest centroids. Driver-side NumPy — the centroid table is tiny
-    by construction. nprobe ≤ 0 or > nlist ⇒ nlist (ivf.go:122-129)."""
-    nlist = centroids.shape[0]
-    if nprobe <= 0 or nprobe > nlist:
-        nprobe = nlist
-    dmat = np_distance_matrix(centroids, query_mat, metric)  # (nlist, q)
-    if nprobe < nlist:
-        sel = np.argpartition(dmat, nprobe - 1, axis=0)[:nprobe, :]
-    else:
-        sel = np.broadcast_to(np.arange(nlist)[:, None], (nlist, dmat.shape[1]))
-    q = query_mat.shape[0]
+    """Stage 1 of search (ivf.go:131-141) as (query_id, list_id) rows:
+    per query its nprobe nearest centroids, by the probe head every
+    tier runs (local_serve._probe_cells). nprobe ≤ 0 or > nlist ⇒
+    nlist (ivf.go:122-129)."""
+    cells = _probe_cells(centroids, query_mat, metric, nprobe)
     return pd.DataFrame(
         {
-            "query_id": np.repeat(query_ids, sel.shape[0]),
-            "list_id": sel.ravel(order="F").astype(np.int32),
+            "query_id": np.repeat(query_ids, cells.shape[1]),
+            "list_id": cells.ravel().astype(np.int32),
         }
     )
 
@@ -257,85 +255,16 @@ def search_ivf(
     qvec_col: str = "qvec",
     query_id_col: str = "query_id",
 ) -> DataFrame:
-    """nprobe-pruned ANN search (ivf.go:115-161).
+    """nprobe-pruned ANN search (ivf.go:115-161) on the shared
+    distributed kernel (topk.search_index): the driver probes once,
+    and each Arrow batch of the probed lists' rows runs
+    LocalIvfIndex.search_cells.
 
     Returns (query_id, id, distance, rank). With nprobe ≥ nlist this
     is EXACTLY flat search (every list scanned) — the property the
     correctness gate exploits.
     """
-    qrows = queries.select(
-        F.col(query_id_col).alias("query_id"), F.col(qvec_col).alias("qvec")
-    ).toPandas()
-    if len(qrows) == 0:
-        spark = index.assignments.sparkSession
-        return spark.createDataFrame([], RESULT_SCHEMA + ", rank int")
-    query_ids = qrows["query_id"].to_numpy(dtype=np.int64)
-    query_mat = np.stack(qrows["qvec"].to_numpy()).astype(np.float64)
-
-    probes = probe_lists(index.centroids, query_ids, query_mat, nprobe, index.metric)
-    spark = index.assignments.sparkSession
-    probed_list_ids = [int(x) for x in probes["list_id"].unique()]
-
-    # Probe map {list_id -> query row indices}, broadcast with the
-    # query matrix. Design rule: candidate rows are NEVER joined to
-    # queries (that replicates every vector once per probing query —
-    # at 1000 queries × nprobe=10 it multiplied the scanned bytes
-    # ~100×). The isin filter still drives static partition pruning
-    # on a partitioned artifact; each surviving row crosses Arrow
-    # exactly once and is scored against all its probing queries in
-    # one BLAS call per (list, batch).
-    qindex = {int(qid): i for i, qid in enumerate(query_ids)}
-    probe_map: dict[int, np.ndarray] = {}
-    for qid, lid in zip(probes["query_id"], probes["list_id"]):
-        probe_map.setdefault(int(lid), []).append(qindex[int(qid)])
-    probe_map = {lid: np.asarray(v, dtype=np.int64) for lid, v in probe_map.items()}
-
-    sc = spark.sparkContext
-    bc = sc.broadcast((query_mat, query_ids, probe_map))
-    metric = index.metric
-
-    candidates = index.assignments.filter(
-        F.col("list_id").isin(probed_list_ids)
-    ).select("list_id", "id", "vec")
-
-    def part(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        qmat, qids_arr, pmap = bc.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            out_q, out_i, out_d = [], [], []
-            for lid, grp in pdf.groupby("list_id", sort=False):
-                qidx = pmap.get(int(lid))
-                if qidx is None:
-                    continue
-                base = np.stack(grp["vec"].to_numpy())
-                ids = grp["id"].to_numpy(dtype=np.int64)
-                d = np_distance_matrix(base, qmat[qidx], metric)  # (b, nq)
-                b = d.shape[0]
-                kk = min(k, b) if k > 0 else b
-                for j in range(qidx.shape[0]):
-                    dj = d[:, j]
-                    sel = (
-                        np.argpartition(dj, kk - 1)[:kk]
-                        if kk < b
-                        else np.arange(b)
-                    )
-                    out_q.append(
-                        np.full(sel.shape[0], qids_arr[qidx[j]], dtype=np.int64)
-                    )
-                    out_i.append(ids[sel])
-                    out_d.append(dj[sel])
-            if out_q:
-                yield pd.DataFrame(
-                    {
-                        "query_id": np.concatenate(out_q),
-                        "id": np.concatenate(out_i),
-                        "distance": np.concatenate(out_d),
-                    }
-                )
-
-    cand = candidates.mapInPandas(part, schema=RESULT_SCHEMA)
-    return topk(cand, k)
+    return search_index(index, queries, k, nprobe, qvec_col, query_id_col)
 
 
 def ivf_health(index: IvfIndex) -> DataFrame:
@@ -352,7 +281,8 @@ def ivf_health(index: IvfIndex) -> DataFrame:
     Returns (list_id, n_vectors, mean_dist) sorted nowhere — order
     belongs to the caller."""
     cents = np.ascontiguousarray(index.centroids, dtype=np.float64)
-    metric = index.metric
+    # distortion is the cosine distance for cosine indexes, else L2
+    dist_metric = "cosine" if index.metric == "cosine" else "l2"
 
     def part(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -360,21 +290,7 @@ def ivf_health(index: IvfIndex) -> DataFrame:
                 continue
             vecs = np.stack(pdf["vec"].to_numpy()).astype(np.float64)
             lids = pdf["list_id"].to_numpy(dtype=np.int64)
-            assigned = cents[lids]
-            if metric == "cosine":
-                from gofaiss_spark.functions.distance import np_distance_matrix
-
-                # row-wise cosine distance to the assigned centroid
-                d = np.array(
-                    [
-                        np_distance_matrix(
-                            vecs[i : i + 1], assigned[i : i + 1], "cosine"
-                        )[0, 0]
-                        for i in range(len(lids))
-                    ]
-                )
-            else:
-                d = np.linalg.norm(vecs - assigned, axis=1)
+            d = np_paired_distance(vecs, cents[lids], dist_metric)
             yield pd.DataFrame({"list_id": lids, "dist": d})
 
     dists = index.assignments.select("list_id", "vec").mapInPandas(

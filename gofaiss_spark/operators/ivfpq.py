@@ -15,8 +15,10 @@ Spark shape: codes table is (id, list_id, code) — written
 ``partitionBy("list_id")`` for nprobe partition pruning exactly like
 IVF. The ADC tables are per (query, probed list) because codes
 encode residuals: table[q,l][m][k] = ||(q − c_l)_m − cb[m][k]||²
-(ivfpq.go:515-531). That's q × nprobe × M × ksub doubles — for 100
-queries × nprobe 10 × 8 × 256 ≈ 16 MB — still broadcastable.
+(ivfpq.go:515-531). Search builds them inside each Arrow batch's
+LocalIvfPqIndex, once per probed list present in the batch, from the
+broadcast queries, centroids and codebooks — never all q × nprobe
+tables on the driver.
 """
 
 from __future__ import annotations
@@ -34,17 +36,10 @@ from gofaiss_spark.functions.vector import vector_subtract
 from gofaiss_spark.operators.ivf import (
     assign_to_centroids,
     default_nlist,
-    probe_lists,
     train_kmeans_centroids,
 )
-from gofaiss_spark.operators.pq import (
-    adc_accumulate,
-    adc_tables,
-    encode_pq,
-    train_pq_codebooks,
-    validate_pq_params,
-)
-from gofaiss_spark.operators.topk import RESULT_SCHEMA, topk
+from gofaiss_spark.operators.pq import train_pq_codebooks, validate_pq_params
+from gofaiss_spark.operators.topk import search_index
 
 
 def default_m(dim: int) -> int:
@@ -294,115 +289,15 @@ def search_ivfpq(
     refine: int | None = None,
     base: DataFrame | None = None,
 ) -> DataFrame:
-    """nprobe-pruned ADC search (ivfpq.go:222-284).
-
-    Per probed (query, list): residual query → squared-L2 tables →
-    gather-sum over codes → sqrt → top-k.
+    """nprobe-pruned ADC search (ivfpq.go:222-284) on the shared
+    distributed kernel (topk.search_index): per Arrow batch of the
+    probed lists' codes, LocalIvfPqIndex.search_cells — per probed
+    (query, list) residual tables → gather-sum over codes → sqrt →
+    top-k.
 
     ``refine=r`` re-ranks the top-(k·r) ADC candidates with exact L2
     against ``base`` (the original vectors DataFrame) — the FAISS
     RefineFlat pattern; the residual-quantization error then costs
     recall only, never distance accuracy."""
-    if refine is not None:
-        if refine < 1:
-            raise ValueError(f"refine must be >= 1, got {refine}")
-        if base is None:
-            raise ValueError("refine requires base= (the original vectors)")
-    k_cand = k * refine if refine is not None and k > 0 else k
-    qrows = queries.select(
-        F.col(query_id_col).alias("query_id"), F.col(qvec_col).alias("qvec")
-    ).toPandas()
-    spark = index.codes.sparkSession
-    if len(qrows) == 0:
-        return spark.createDataFrame([], RESULT_SCHEMA + ", rank int")
-    query_ids = qrows["query_id"].to_numpy(dtype=np.int64)
-    query_mat = np.stack(qrows["qvec"].to_numpy()).astype(np.float64)
-
-    probes = probe_lists(index.centroids, query_ids, query_mat, nprobe, index.metric)
-    probed_list_ids = [int(x) for x in probes["list_id"].unique()]
-
-    # Probe map + on-the-fly residual ADC tables. Two scale rules:
-    # (1) codes are NEVER joined to queries (row duplication per
-    # probing query); (2) tables are built per (list, batch) inside
-    # the kernel from the broadcast codebooks/centroids/queries —
-    # precomputing all q·nprobe tables driver-side and shipping them
-    # in the closure was ~160 MB serialized per task at 1000 queries.
-    qindex = {int(qid): i for i, qid in enumerate(query_ids)}
-    probe_map: dict[int, np.ndarray] = {}
-    for qid, lid in zip(probes["query_id"], probes["list_id"]):
-        probe_map.setdefault(int(lid), []).append(qindex[int(qid)])
-    probe_map = {lid: np.asarray(v, dtype=np.int64) for lid, v in probe_map.items()}
-
-    sc = spark.sparkContext
-    bc = sc.broadcast(
-        (query_mat, query_ids, probe_map, index.centroids, index.codebooks)
-    )
-
-    candidates = index.codes.filter(F.col("list_id").isin(probed_list_ids)).select(
-        "list_id", "id", "code"
-    )
-    if not index.colocated:
-        # Group each list's rows into one partition so its ADC tables
-        # are built exactly once. Loaded artifacts are already
-        # list-contiguous on disk (partitionBy("list_id")) and skip
-        # this; the shuffle moves only narrow (list_id, id, M-byte
-        # code) rows. Capped at one partition per probed list.
-        nparts = min(
-            index.codes.sparkSession.sparkContext.defaultParallelism,
-            max(1, len(probed_list_ids)),
-        )
-        candidates = candidates.repartition(nparts, "list_id")
-
-    def part(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        qmat, qids_arr, pmap, cents, books = bc.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            out_q, out_i, out_d = [], [], []
-            for lid, grp in pdf.groupby("list_id", sort=False):
-                qidx = pmap.get(int(lid))
-                if qidx is None:
-                    continue
-                resid = qmat[qidx] - cents[int(lid)][None, :]  # (nq, dim)
-                tabs = adc_tables(books, resid)  # (nq, M, ksub)
-                codes = np.stack(grp["code"].to_numpy()).astype(np.int64)  # (b, M)
-                ids = grp["id"].to_numpy(dtype=np.int64)
-                b = codes.shape[0]
-                kk = min(k_cand, b) if k_cand > 0 else b
-                # vectorized over the queries probing this list:
-                # M contiguous-column takes of (nq, b), then one
-                # batched top-k (adc_accumulate: ~2× the fancy gather)
-                nq = qidx.shape[0]
-                d2 = adc_accumulate(tabs, codes)
-                if kk < b:
-                    sel = np.argpartition(d2, kk - 1, axis=1)[:, :kk]
-                else:
-                    sel = np.broadcast_to(np.arange(b), (nq, b))
-                out_q.append(np.repeat(qids_arr[qidx], sel.shape[1]))
-                out_i.append(ids[sel.ravel()])
-                out_d.append(
-                    np.sqrt(np.take_along_axis(d2, sel, axis=1).ravel())
-                )
-            if out_q:
-                yield pd.DataFrame(
-                    {
-                        "query_id": np.concatenate(out_q),
-                        "id": np.concatenate(out_i),
-                        "distance": np.concatenate(out_d),
-                    }
-                )
-
-    cand = candidates.mapInPandas(part, schema=RESULT_SCHEMA)
-    if refine is not None:
-        from gofaiss_spark.operators.topk import refine_exact
-
-        return refine_exact(
-            topk(cand, k_cand),
-            base,
-            queries,
-            k,
-            metric=index.metric,
-            qvec_col=qvec_col,
-            query_id_col=query_id_col,
-        )
-    return topk(cand, k)
+    return search_index(index, queries, k, nprobe, qvec_col, query_id_col,
+                        refine, base)

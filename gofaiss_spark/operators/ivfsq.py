@@ -8,9 +8,10 @@ per-dimension residual reconstruction error is bounded by one step.
 
 Spark shape mirrors IVFPQ (operators/ivfpq.py): codes are
 (id, list_id, code) written ``partitionBy("list_id")`` so nprobe
-search prunes parquet partitions; search is the scan-once probe-map
-kernel — codes are never joined to queries, and the per-list decode
-runs once per (list, batch) from broadcast (centroids, vmin, step).
+search prunes parquet partitions; search runs LocalIvfSqIndex over
+each Arrow batch of the probed lists' codes (topk.search_index) —
+codes are never joined to queries, and each list's decode runs once
+per batch from the broadcast (centroids, vmin, step).
 Reported distances carry the analytic bound ‖step‖₂ (hard-checked by
 the driver's ivfsq_topk), and ``refine=`` re-ranks them exact.
 """
@@ -29,12 +30,11 @@ from gofaiss_spark.functions.distance import validate_metric
 from gofaiss_spark.operators.ivf import (
     assign_to_centroids,
     default_nlist,
-    probe_lists,
     train_kmeans_centroids,
 )
 from gofaiss_spark.operators.ivfpq import _with_residual
 from gofaiss_spark.operators.sq import _LEVELS
-from gofaiss_spark.operators.topk import RESULT_SCHEMA, topk
+from gofaiss_spark.operators.topk import search_index
 
 
 @dataclass
@@ -173,102 +173,8 @@ def search_ivfsq(
     refine: int | None = None,
     base: DataFrame | None = None,
 ) -> DataFrame:
-    """nprobe-pruned decode-and-score search; same scale rules as
-    search_ivfpq (no query joins, broadcast probe map, per-list
-    kernel work once per batch). ``refine=r`` re-ranks top-(k·r)
-    exact."""
-    if refine is not None:
-        if refine < 1:
-            raise ValueError(f"refine must be >= 1, got {refine}")
-        if base is None:
-            raise ValueError("refine requires base= (the original vectors)")
-    k_cand = k * refine if refine is not None and k > 0 else k
-    qrows = queries.select(
-        F.col(query_id_col).alias("query_id"), F.col(qvec_col).alias("qvec")
-    ).toPandas()
-    spark = index.codes.sparkSession
-    if len(qrows) == 0:
-        return spark.createDataFrame([], RESULT_SCHEMA + ", rank int")
-    query_ids = qrows["query_id"].to_numpy(dtype=np.int64)
-    query_mat = np.stack(qrows["qvec"].to_numpy()).astype(np.float64)
-
-    probes = probe_lists(
-        index.centroids, query_ids, query_mat, nprobe, index.metric
-    )
-    probed_list_ids = [int(x) for x in probes["list_id"].unique()]
-    qindex = {int(qid): i for i, qid in enumerate(query_ids)}
-    probe_map: dict[int, np.ndarray] = {}
-    for qid, lid in zip(probes["query_id"], probes["list_id"]):
-        probe_map.setdefault(int(lid), []).append(qindex[int(qid)])
-    probe_map = {
-        lid: np.asarray(v, dtype=np.int64) for lid, v in probe_map.items()
-    }
-
-    sc = spark.sparkContext
-    bc = sc.broadcast(
-        (query_mat, query_ids, probe_map, index.centroids, index.vmin, index.step)
-    )
-
-    candidates = index.codes.filter(
-        F.col("list_id").isin(probed_list_ids)
-    ).select("list_id", "id", "code")
-    if not index.colocated:
-        nparts = min(
-            spark.sparkContext.defaultParallelism, max(1, len(probed_list_ids))
-        )
-        candidates = candidates.repartition(nparts, "list_id")
-
-    def part(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        qmat, qids_arr, pmap, cents, mn, st = bc.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            out_q, out_i, out_d = [], [], []
-            for lid, grp in pdf.groupby("list_id", sort=False):
-                qidx = pmap.get(int(lid))
-                if qidx is None:
-                    continue
-                rq = qmat[qidx] - cents[int(lid)][None, :]  # (nq, dim)
-                codes = np.stack(grp["code"].to_numpy()).astype(np.float64)
-                x = mn + codes * st  # decoded residuals (b, dim)
-                ids = grp["id"].to_numpy(dtype=np.int64)
-                b = x.shape[0]
-                d2 = (
-                    np.einsum("ij,ij->i", x, x)[None, :]
-                    + np.einsum("ij,ij->i", rq, rq)[:, None]
-                    - 2.0 * (rq @ x.T)
-                )  # (nq, b)
-                np.maximum(d2, 0.0, out=d2)
-                kk = min(k_cand, b) if k_cand > 0 else b
-                if kk < b:
-                    sel = np.argpartition(d2, kk - 1, axis=1)[:, :kk]
-                else:
-                    sel = np.broadcast_to(np.arange(b), (d2.shape[0], b))
-                out_q.append(np.repeat(qids_arr[qidx], sel.shape[1]))
-                out_i.append(ids[sel.ravel()])
-                out_d.append(
-                    np.sqrt(np.take_along_axis(d2, sel, axis=1).ravel())
-                )
-            if out_q:
-                yield pd.DataFrame(
-                    {
-                        "query_id": np.concatenate(out_q),
-                        "id": np.concatenate(out_i),
-                        "distance": np.concatenate(out_d),
-                    }
-                )
-
-    cand = candidates.mapInPandas(part, schema=RESULT_SCHEMA)
-    if refine is not None:
-        from gofaiss_spark.operators.topk import refine_exact
-
-        return refine_exact(
-            topk(cand, k_cand),
-            base,
-            queries,
-            k,
-            metric=index.metric,
-            qvec_col=qvec_col,
-            query_id_col=query_id_col,
-        )
-    return topk(cand, k)
+    """nprobe-pruned decode-and-score search on the shared distributed
+    kernel (topk.search_index, LocalIvfSqIndex.search_cells per Arrow
+    batch). ``refine=r`` re-ranks top-(k·r) exact."""
+    return search_index(index, queries, k, nprobe, qvec_col, query_id_col,
+                        refine, base)

@@ -25,14 +25,20 @@ one of two shared skeletons:
   query blocks of 128, each query keeping a pool of its best
   candidates;
 - the cell family (``LocalIvfIndex``, ``LocalIvfPqIndex``,
-  ``LocalIvfSqIndex``) runs ``_probe_cells``, the f64 probe head of the
-  distributed ``probe_lists``, then ``_rank_by_cell``: one score call
-  per probed cell over the queries that probe it.
+  ``LocalIvfSqIndex``) runs ``_probe_cells``, the f64 probe head
+  every tier shares, then ``_rank_by_cell``: one score call per
+  probed cell over the queries that probe it.
 
 Both end in ``_pool_topk``: an exact f64 distance per surviving pair
 and one (distance, id) sort. The kernels start no threads;
 parallelism comes from client threads, ``LocalServerPool`` processes
 and shard tasks.
+
+Every tier builds these indexes with one builder (``local_arrays`` +
+``local_index``): ``to_local*`` over a collected index, the sharded
+tier over a shard, and the distributed searches over each Arrow batch
+of candidate rows, whose per-batch top-k the ``topk`` Window merges.
+So every tier reports the same distances by construction.
 
 Scale posture: bounded by driver/replica RAM by construction (the
 same bound the reference lives under — 16 GB in its published runs);
@@ -42,7 +48,7 @@ everything larger goes through the distributed search paths.
 from __future__ import annotations
 
 import threading as _threading
-from dataclasses import dataclass
+from dataclasses import dataclass, fields
 
 import numpy as np
 
@@ -197,20 +203,18 @@ def _scan_topk(n: int, nq: int, kc: int, tile, dtype
     return pool_i, pool_s
 
 
-def _probe_cells(centroids: np.ndarray, offsets: np.ndarray,
-                 q64: np.ndarray, metric: str, nprobe: int
-                 ) -> tuple[np.ndarray, np.ndarray]:
-    """The cell family's probe head: each query's probed cells (nq,
-    nprobe) by the f64 formula of the distributed probe_lists, so every
-    tier scans the same cells, and the number of rows in them. nprobe
-    ≤ 0 or > nlist probes every cell."""
+def _probe_cells(centroids: np.ndarray, q64: np.ndarray, metric: str,
+                 nprobe: int) -> np.ndarray:
+    """The cell family's probe head (ivf.go:131-141): each query's
+    probed cells (nq, nprobe), its nprobe nearest centroids in f64.
+    Every tier probes with this one function (the distributed search
+    once per request, on the driver). nprobe ≤ 0 or > nlist probes
+    every cell (ivf.go:122-129)."""
     nlist = centroids.shape[0]
     if 0 < nprobe < nlist:
         dm = np_distance_matrix(centroids, q64, metric)
-        cells = np.argpartition(dm, nprobe - 1, axis=0)[:nprobe].T
-    else:
-        cells = np.broadcast_to(np.arange(nlist), (len(q64), nlist))
-    return cells, np.diff(offsets)[cells].sum(axis=1)
+        return np.argpartition(dm, nprobe - 1, axis=0)[:nprobe].T
+    return np.broadcast_to(np.arange(nlist), (len(q64), nlist))
 
 
 def _rank_by_cell(offsets: np.ndarray, cells: np.ndarray, w: int,
@@ -265,10 +269,11 @@ class _RawRows:
     its ranking inv-norms from them and dot's margin guard its max
     norm). They rank candidates by an f32 score, guard the f32 cut
     with f32_select_margin and report exact f64 distances on the raw
-    rows — the values np_distance_matrix, the distributed kernel and a
-    SQL oracle over the parquet rows compute. A pre-normalized cosine
-    copy would be perturbed ~1e-7 by the f32 division, which flips
-    6dp-rounded values (round-7 cosine driver rows)."""
+    rows, one value per (query, row) pair on every tier (the
+    distributed search runs these indexes over its Arrow batches). A
+    pre-normalized cosine copy would be perturbed ~1e-7 by the f32
+    division, which flips 6dp-rounded values (round-7 cosine driver
+    rows)."""
 
     def _queries(self, qmat: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
         """(raw f64 queries for every exact path, f32 ranking copy).
@@ -331,7 +336,7 @@ class _RawRows:
 
     def _guard(self, rows: np.ndarray, rs: np.ndarray, full: np.ndarray,
                k: int, q64: np.ndarray, row_sel) -> None:
-        """The margin guard (the _local_topk_candidates contract). Each
+        """The margin guard, which makes the f32 cut exact. Each
         query in ``full`` had more candidates than its pool holds, so
         every rejected row scores at least the pool's maximum P. If P
         minus the k-th best exceeds 2× the f32 error bound, no rejected
@@ -384,8 +389,9 @@ class LocalFlatIndex(_RawRows):
         (``_scan_topk``): an f32 GEMM per (base tile, query block)
         picks each query's top-(k+16), the margin guard proves that
         cut exact (or re-ranks the query in f64) and an exact f64
-        re-score makes reported distances and orderings identical to
-        the distributed kernel (the refine_exact pattern). The kernel
+        re-score per pair reports the same distances for any split of
+        the rows: the distributed search_flat runs this kernel over
+        each Arrow batch and merges by (distance, id). The kernel
         starts no threads."""
         q64, q = self._queries(qmat)
         n = len(self.ids)
@@ -415,23 +421,19 @@ def to_local(index_or_vectors, vec_col: str = "vec",
     """Collect a FlatIndex (or a (id, vec) DataFrame) into a
     driver-resident server. One Arrow collect; bounded by driver RAM
     by contract."""
+    from pyspark.sql import functions as F
+
     from gofaiss_spark.operators.flat import FlatIndex
 
     if isinstance(index_or_vectors, FlatIndex):
-        df = index_or_vectors.vectors
         metric = metric or index_or_vectors.metric
+        df = index_or_vectors.vectors
     else:
-        df = index_or_vectors
         metric = metric or "l2"
+        df = index_or_vectors
     validate_metric(metric)
-    pdf = df.select(id_col, vec_col).orderBy(id_col).toPandas()
-    ids = pdf[id_col].to_numpy(dtype=np.int64)
-    # RAW rows for every metric — cosine divides by row norms inside
-    # the ranking kernel (the _RawRows contract)
-    vecs = np.stack(pdf[vec_col].to_numpy()).astype(np.float32)
-    norms_sq = np.einsum("ij,ij->i", vecs, vecs)
-    return LocalFlatIndex(ids=ids, vecs=np.ascontiguousarray(vecs),
-                          metric=metric, norms_sq=norms_sq)
+    return _to_local(FlatIndex(metric, 0, df.select(
+        F.col(id_col).alias("id"), F.col(vec_col).alias("vec"))))
 
 
 @dataclass
@@ -440,12 +442,13 @@ class LocalIvfIndex(_RawRows):
     search_ivf, pkg/index/ivf/ivf.go:115-161 semantics).
 
     CSR cell layout: rows sorted by (list_id, id) so every inverted
-    list is one contiguous slice. The shared probe head selects cells
-    with the same f64 formula as the distributed ``probe_lists``, so
-    this server scans the same cells the cluster path would.
-    Candidates are ranked by an f32 score and the top-(k+16) of each
-    query are re-scored exactly in f64 (reported distances are
-    bit-identical to the distributed kernel's).
+    list is one contiguous slice. ``search`` is the shared probe head
+    ``_probe_cells`` plus ``search_cells``; the distributed
+    ``search_ivf`` probes once on the driver and runs ``search_cells``
+    over each Arrow batch of the probed rows, so both tiers scan the
+    same cells with the same kernel. Candidates are ranked by an f32
+    score and the top-(k+16) of each query are re-scored exactly in
+    f64, one value per (query, row) pair whatever the batch.
 
     Two ranking kernels share that head and tail; ``search`` picks one
     per call from the shape of its input:
@@ -491,9 +494,15 @@ class LocalIvfIndex(_RawRows):
         probed cells (width n). nprobe ≥ nlist ⇒ exact flat search
         (every cell scanned), the correctness-gate property shared
         with search_ivf."""
+        return self.search_cells(qmat, _probe_cells(
+            self.centroids, qmat, self.metric, nprobe), k)
+
+    def search_cells(self, qmat: np.ndarray, cells: np.ndarray,
+                     k: int = 10) -> tuple[np.ndarray, np.ndarray]:
+        """``search`` after the probe: the top-k of each query's
+        ``cells`` (nq, nprobe) row."""
         q64, q = self._queries(qmat)
-        cells, ncand = _probe_cells(self.centroids, self.offsets, q64,
-                                    self.metric, nprobe)
+        ncand = np.diff(self.offsets)[cells].sum(axis=1)
         k, kc = _widths(k, len(self.ids))
         w = int(min(kc, ncand.max(initial=0)))
         sizes = np.diff(self.offsets)
@@ -538,46 +547,25 @@ class LocalIvfIndex(_RawRows):
 def to_local_ivf(ivf_index) -> LocalIvfIndex:
     """Collect an IvfIndex's assignments into a driver-resident cell-
     major server. One Arrow collect, bounded by replica RAM by
-    contract (same bound the reference's in-process server has)."""
-    import pandas as pd  # noqa: F401  (toPandas dependency, explicit)
-
-    metric = ivf_index.metric
-    validate_metric(metric)
-    pdf = (
-        ivf_index.assignments.select("id", "vec", "list_id")
-        .orderBy("list_id", "id")
-        .toPandas()
-    )
-    ids = pdf["id"].to_numpy(dtype=np.int64)
-    # RAW rows and as-trained centroids for every metric: cosine probe
-    # selection is normalization-invariant (np_distance_matrix
-    # normalizes in f64 internally), and the ranking kernel divides by
-    # row norms itself — so the probed set and reported distances are
-    # bit-identical to the distributed search_ivf on the same index
-    vecs = np.stack(pdf["vec"].to_numpy()).astype(np.float32)
-    lids = pdf["list_id"].to_numpy(dtype=np.int64)
-    nlist = ivf_index.centroids.shape[0]
-    offsets = np.searchsorted(lids, np.arange(nlist + 1)).astype(np.int64)
-    cents = np.asarray(ivf_index.centroids, dtype=np.float64)
-    return LocalIvfIndex(
-        ids=ids, vecs=np.ascontiguousarray(vecs), metric=metric,
-        centroids=cents, offsets=offsets,
-        norms_sq=np.einsum("ij,ij->i", vecs, vecs),
-    )
+    contract (same bound the reference's in-process server has). Raw
+    rows and as-trained centroids for every metric, as on every
+    tier."""
+    validate_metric(ivf_index.metric)
+    return _to_local(ivf_index)
 
 
 # ---------------------------------------------------------------------
 # Quantized serving kernels — the in-memory operating point for the
 # compressed index families (PQ/IVFPQ/SQ/IVFSQ), mirroring the reference's
 # biggest-index regime (ivfpq.go:57-76) the way LocalFlatIndex mirrors
-# flat.go. Contract: reported ADC distances are the SAME f64 values
-# the DataFrame paths (search_pq/search_ivfpq/search_sq) produce —
-# identical table formula (pq.adc_tables), identical gather-sum,
-# identical sqrt — so a sharded deployment of these kernels merges
-# exactly. ``refine`` re-ranks the top-(k·refine) against the index's
-# own stored rows in exact f64 L2 (requires vecs; the FAISS RefineFlat
-# pattern), so quantization costs recall only, never distance
-# accuracy.
+# flat.go. Contract: a reported distance is one f64 value per (query,
+# row) pair (the ADC table sum and sqrt, or the decoded row's exact
+# L2), so the sharded tier and the distributed searches, which run
+# these kernels over their shards and Arrow batches, merge to the
+# local answer exactly. ``refine`` re-ranks the top-(k·refine) against
+# the index's own stored rows in exact f64 L2 (requires vecs; the
+# FAISS RefineFlat pattern), so quantization costs recall only, never
+# distance accuracy.
 # ---------------------------------------------------------------------
 
 
@@ -600,8 +588,8 @@ def _refiner(index, q64: np.ndarray, refine: int | None):
 @dataclass
 class LocalPqIndex:
     """In-memory ADC serving for a PQ index (pq.go:127-179 semantics;
-    distance = sqrt(Σ subspace table entries), bit-equal to
-    search_pq's), on the scan skeleton."""
+    distance = sqrt(Σ subspace table entries)), on the scan
+    skeleton."""
 
     ids: np.ndarray        # (n,) int64
     codes: np.ndarray      # (n, M) uint16
@@ -633,8 +621,7 @@ class LocalIvfPqIndex:
     semantics; fixes the reference façade bug the distributed
     search_ivfpq fixes — tables are per-(query, list) residuals). Each
     probed cell builds its residual tables once for the queries that
-    probe it (the search_ivfpq kernel shape), on the shared
-    ``_rank_by_cell`` pool."""
+    probe it, on the shared ``_rank_by_cell`` pool."""
 
     ids: np.ndarray        # (n,) int64, cell-major
     codes: np.ndarray      # (n, M) uint16, cell-major
@@ -651,12 +638,18 @@ class LocalIvfPqIndex:
     def search(self, qmat: np.ndarray, k: int = 10, nprobe: int = 10,
                refine: int | None = None
                ) -> tuple[np.ndarray, np.ndarray]:
+        return self.search_cells(qmat, _probe_cells(
+            self.centroids, qmat, self.metric, nprobe), k, refine)
+
+    def search_cells(self, qmat: np.ndarray, cells: np.ndarray,
+                     k: int = 10, refine: int | None = None
+                     ) -> tuple[np.ndarray, np.ndarray]:
+        """``search`` after the probe (see LocalIvfIndex)."""
         from gofaiss_spark.operators.pq import adc_accumulate, adc_tables
 
         q64 = np.ascontiguousarray(qmat, dtype=np.float64)
         refined = _refiner(self, q64, refine)
-        cells, ncand = _probe_cells(self.centroids, self.offsets, q64,
-                                    self.metric, nprobe)
+        ncand = np.diff(self.offsets)[cells].sum(axis=1)
         k, kc = _widths(k, len(self.ids), refine)
 
         def score(c, qi, s0, s1):
@@ -672,9 +665,10 @@ class LocalIvfPqIndex:
 
 @dataclass
 class LocalSqIndex:
-    """In-memory scalar-quantizer serving: decode (vmin + code·step)
-    and exact f64 L2 on the decoded points — identical distance
-    formula to search_sq (norms identity, clamp at 0, sqrt)."""
+    """In-memory scalar-quantizer serving: decode (vmin + code·step);
+    an f64 norms-identity GEMM selects each query's candidates and
+    the reported distance is the exact f64 L2 to the decoded point,
+    re-scored per pair."""
 
     ids: np.ndarray    # (n,) int64
     codes: np.ndarray  # (n, dim) uint8
@@ -714,8 +708,8 @@ class LocalSqIndex:
 @dataclass
 class LocalIvfSqIndex:
     """In-memory nprobe-pruned scalar-quantized serving (IVFSQ:
-    ivfsq.go-style residual SQ8 under an IVF coarse quantizer;
-    distributed twin is search_ivfsq, operators/ivfsq.py:166).
+    residual SQ8 under an IVF coarse quantizer; the distributed
+    search_ivfsq runs it over each Arrow batch).
 
     Why this kind exists next to LocalIvfPqIndex: the per-row scan
     cost of SQ decode is a dense f32 GEMM (BLAS) instead of PQ's
@@ -746,10 +740,16 @@ class LocalIvfSqIndex:
     def search(self, qmat: np.ndarray, k: int = 10, nprobe: int = 10,
                refine: int | None = None
                ) -> tuple[np.ndarray, np.ndarray]:
+        return self.search_cells(qmat, _probe_cells(
+            self.centroids, qmat, self.metric, nprobe), k, refine)
+
+    def search_cells(self, qmat: np.ndarray, cells: np.ndarray,
+                     k: int = 10, refine: int | None = None
+                     ) -> tuple[np.ndarray, np.ndarray]:
+        """``search`` after the probe (see LocalIvfIndex)."""
         q64 = np.ascontiguousarray(qmat, dtype=np.float64)
         refined = _refiner(self, q64, refine)
-        cells, ncand = _probe_cells(self.centroids, self.offsets, q64,
-                                    self.metric, nprobe)
+        ncand = np.diff(self.offsets)[cells].sum(axis=1)
         k, kc = _widths(k, len(self.ids), refine)
         vmin32 = self.vmin.astype(np.float32)
         step32 = self.step.astype(np.float32)
@@ -778,67 +778,23 @@ class LocalIvfSqIndex:
 def to_local_pq(pq_index, vectors=None) -> LocalPqIndex:
     """Collect a PqIndex's codes into a driver-resident ADC server.
     ``vectors``: optional (id, vec) DataFrame enabling refine."""
-    pdf = pq_index.codes.select("id", "code").orderBy("id").toPandas()
-    ids = pdf["id"].to_numpy(dtype=np.int64)
-    codes = (np.stack(pdf["code"].to_numpy()).astype(np.uint16)
-             if len(ids) else np.empty((0, pq_index.m), dtype=np.uint16))
-    vecs = _aligned_vecs(vectors, ids)
-    return LocalPqIndex(ids=ids, codes=np.ascontiguousarray(codes),
-                        codebooks=np.asarray(pq_index.codebooks,
-                                             dtype=np.float64),
-                        vecs=vecs)
+    return _to_local(pq_index, vectors)
 
 
 def to_local_ivfpq(ivfpq_index, vectors=None) -> LocalIvfPqIndex:
     """Collect an IvfPqIndex into a cell-major driver-resident ADC
     server (CSR layout, same as to_local_ivf)."""
-    pdf = (ivfpq_index.codes.select("id", "code", "list_id")
-           .orderBy("list_id", "id").toPandas())
-    ids = pdf["id"].to_numpy(dtype=np.int64)
-    codes = (np.stack(pdf["code"].to_numpy()).astype(np.uint16)
-             if len(ids) else np.empty((0, ivfpq_index.m), dtype=np.uint16))
-    lids = pdf["list_id"].to_numpy(dtype=np.int64)
-    nlist = ivfpq_index.centroids.shape[0]
-    offsets = np.searchsorted(lids, np.arange(nlist + 1)).astype(np.int64)
-    vecs = _aligned_vecs(vectors, ids)
-    return LocalIvfPqIndex(
-        ids=ids, codes=np.ascontiguousarray(codes),
-        codebooks=np.asarray(ivfpq_index.codebooks, dtype=np.float64),
-        centroids=np.asarray(ivfpq_index.centroids, dtype=np.float64),
-        offsets=offsets, vecs=vecs, metric=ivfpq_index.metric)
+    return _to_local(ivfpq_index, vectors)
 
 
 def to_local_sq(sq_index, vectors=None) -> LocalSqIndex:
-    pdf = sq_index.codes.select("id", "code").orderBy("id").toPandas()
-    ids = pdf["id"].to_numpy(dtype=np.int64)
-    codes = (np.stack(pdf["code"].to_numpy()).astype(np.uint8)
-             if len(ids) else np.empty((0, sq_index.dim), dtype=np.uint8))
-    vecs = _aligned_vecs(vectors, ids)
-    return LocalSqIndex(ids=ids, codes=np.ascontiguousarray(codes),
-                        vmin=np.asarray(sq_index.vmin, dtype=np.float64),
-                        step=np.asarray(sq_index.step, dtype=np.float64),
-                        vecs=vecs)
+    return _to_local(sq_index, vectors)
 
 
 def to_local_ivfsq(ivfsq_index, vectors=None) -> LocalIvfSqIndex:
     """Collect an IvfSqIndex into a cell-major driver-resident
     decode-GEMM server (CSR layout, same as to_local_ivfpq)."""
-    pdf = (ivfsq_index.codes.select("id", "code", "list_id")
-           .orderBy("list_id", "id").toPandas())
-    ids = pdf["id"].to_numpy(dtype=np.int64)
-    codes = (np.stack(pdf["code"].to_numpy()).astype(np.uint8)
-             if len(ids) else np.empty((0, ivfsq_index.dim),
-                                       dtype=np.uint8))
-    lids = pdf["list_id"].to_numpy(dtype=np.int64)
-    nlist = ivfsq_index.centroids.shape[0]
-    offsets = np.searchsorted(lids, np.arange(nlist + 1)).astype(np.int64)
-    vecs = _aligned_vecs(vectors, ids)
-    return LocalIvfSqIndex(
-        ids=ids, codes=np.ascontiguousarray(codes),
-        vmin=np.asarray(ivfsq_index.vmin, dtype=np.float64),
-        step=np.asarray(ivfsq_index.step, dtype=np.float64),
-        centroids=np.asarray(ivfsq_index.centroids, dtype=np.float64),
-        offsets=offsets, vecs=vecs, metric=ivfsq_index.metric)
+    return _to_local(ivfsq_index, vectors)
 
 
 def _aligned_vecs(vectors, ids: np.ndarray) -> np.ndarray | None:
@@ -850,6 +806,113 @@ def _aligned_vecs(vectors, ids: np.ndarray) -> np.ndarray | None:
     pdf = pdf.loc[ids]
     return np.ascontiguousarray(
         np.stack(pdf["vec"].to_numpy()).astype(np.float32))
+
+
+# ---------------------------------------------------------------------
+# Rows → local index: the one builder of every tier. The distributed
+# searches build a Local*Index over each Arrow batch of candidate rows,
+# to_local* over a collected index and the sharded tier over a shard's
+# parquet slice, so every tier scores with the same kernels.
+# ---------------------------------------------------------------------
+
+_KINDS = {"flat": LocalFlatIndex, "ivf": LocalIvfIndex,
+          "pq": LocalPqIndex, "ivfpq": LocalIvfPqIndex,
+          "sq": LocalSqIndex, "ivfsq": LocalIvfSqIndex}
+_CELL_KINDS = ("ivf", "ivfpq", "ivfsq")
+
+
+def _list_matrix(col, width: int, dtype) -> np.ndarray:
+    """(n, width) matrix of an Arrow list column (an Array or a
+    ChunkedArray): one offsets-aware flatten per chunk over its
+    contiguous values buffer, no Python object per row. ``width``
+    only shapes an empty column."""
+    parts = [ch.flatten().to_numpy(zero_copy_only=False)
+             for ch in getattr(col, "chunks", [col])]
+    flat = parts[0] if len(parts) == 1 else np.concatenate(
+        parts or [np.empty(0, dtype=dtype)])
+    n = len(col)
+    return (flat.reshape(n, -1) if n else flat.reshape(0, width)
+            ).astype(dtype, copy=False)
+
+
+def local_arrays(tbl, spec: dict) -> dict:
+    """Arrow rows (a Table or RecordBatch of id, vec or code, list_id
+    for the cell kinds, and vec beside code when refine rows ride
+    along) → the arrays of a ``spec["kind"]`` local index. Rows are
+    sorted by id, or by (list_id, id) with CSR offsets over
+    ``spec["nlist"]`` cells; ids are unique, so the order is total.
+    ``spec`` is a shard meta dict or ``_index_parts``'s: kind, dim,
+    m (PQ kinds) and nlist (cell kinds)."""
+    kind, names = spec["kind"], tbl.schema.names
+    ids = tbl.column("id").to_numpy(zero_copy_only=False).astype(
+        np.int64, copy=False)
+    out = {}
+    if kind in _CELL_KINDS:
+        lids = tbl.column("list_id").to_numpy(zero_copy_only=False)
+        order = np.lexsort((ids, lids))
+        out["offsets"] = np.searchsorted(
+            lids[order], np.arange(spec["nlist"] + 1)).astype(np.int64)
+    else:
+        order = np.argsort(ids, kind="stable")
+    out["ids"] = np.ascontiguousarray(ids[order])
+    dim = spec.get("dim") or 0
+    if "code" in names:
+        sq = kind in ("sq", "ivfsq")
+        codes = _list_matrix(tbl.column("code"), dim if sq else spec["m"],
+                             np.uint8 if sq else np.uint16)
+        out["codes"] = np.ascontiguousarray(codes[order])
+    if "vec" in names:
+        # RAW f32 rows for every metric (the _RawRows contract)
+        vecs = _list_matrix(tbl.column("vec"), dim, np.float32)
+        out["vecs"] = np.ascontiguousarray(vecs[order])
+        if "code" not in names:
+            out["norms_sq"] = np.einsum("ij,ij->i", out["vecs"],
+                                        out["vecs"])
+    return out
+
+
+def local_index(kind: str, metric: str, arrays: dict):
+    """The Local*Index of ``kind`` over ``arrays`` (views, not
+    copies): rows from ``local_arrays`` plus the quantizer arrays
+    (centroids, codebooks, vmin, step). Entries the kind has no field
+    for are ignored."""
+    cls = _KINDS[kind]
+    names = {f.name for f in fields(cls)}
+    return cls(metric=metric,
+               **{key: a for key, a in arrays.items() if key in names})
+
+
+def _index_parts(index) -> tuple[dict, dict, object]:
+    """A distributed index as the builder's inputs: its spec (kind,
+    metric, dim, m, nlist), its quantizer arrays in f64 and its rows
+    DataFrame (id, vec or code, and list_id for the cell kinds)."""
+    kind = {"FlatIndex": "flat", "IvfIndex": "ivf", "PqIndex": "pq",
+            "IvfPqIndex": "ivfpq", "SqIndex": "sq",
+            "IvfSqIndex": "ivfsq"}[type(index).__name__]
+    spec = {"kind": kind, "metric": getattr(index, "metric", "l2"),
+            "dim": index.dim, "m": getattr(index, "m", None)}
+    side = {key: np.asarray(getattr(index, key), dtype=np.float64)
+            for key in ("centroids", "codebooks", "vmin", "step")
+            if getattr(index, key, None) is not None}
+    cols = ["id", "vec" if kind in ("flat", "ivf") else "code"]
+    if kind in _CELL_KINDS:
+        spec["nlist"] = len(side["centroids"])
+        cols.append("list_id")
+    rows = getattr(index, {"flat": "vectors", "ivf": "assignments"}.get(
+        kind, "codes"))
+    return spec, side, rows.select(*cols)
+
+
+def _to_local(index, vectors=None):
+    """Collect a distributed index into its driver-resident
+    Local*Index: one Arrow collect through the shared builder.
+    ``vectors``: optional (id, vec) DataFrame of the rows refine
+    re-scores."""
+    spec, side, rows = _index_parts(index)
+    arrays = local_arrays(rows.toArrow(), spec)
+    if vectors is not None:
+        arrays["vecs"] = _aligned_vecs(vectors, arrays["ids"])
+    return local_index(spec["kind"], spec["metric"], {**arrays, **side})
 
 
 # ---------------------------------------------------------------------
@@ -1228,39 +1291,7 @@ def _mp_worker_init(spec: dict) -> None:
         _WORKER_SHM.append(shm)  # keep alive for the process lifetime
         arrays[key] = arr
     kind, metric = spec["kind"], spec["metric"]
-    if kind == "ivf":
-        _WORKER_INDEX = LocalIvfIndex(
-            ids=arrays["ids"], vecs=arrays["vecs"], metric=metric,
-            centroids=arrays["centroids"], offsets=arrays["offsets"],
-            norms_sq=arrays["norms_sq"],
-        )
-    elif kind == "ivfpq":
-        _WORKER_INDEX = LocalIvfPqIndex(
-            ids=arrays["ids"], codes=arrays["codes"],
-            codebooks=arrays["codebooks"], centroids=arrays["centroids"],
-            offsets=arrays["offsets"], vecs=arrays.get("vecs"),
-            metric=metric,
-        )
-    elif kind == "pq":
-        _WORKER_INDEX = LocalPqIndex(
-            ids=arrays["ids"], codes=arrays["codes"],
-            codebooks=arrays["codebooks"], vecs=arrays.get("vecs"),
-            metric=metric,
-        )
-    elif kind == "sq":
-        _WORKER_INDEX = LocalSqIndex(
-            ids=arrays["ids"], codes=arrays["codes"],
-            vmin=arrays["vmin"], step=arrays["step"],
-            vecs=arrays.get("vecs"), metric=metric,
-        )
-    elif kind == "ivfsq":
-        _WORKER_INDEX = LocalIvfSqIndex(
-            ids=arrays["ids"], codes=arrays["codes"],
-            vmin=arrays["vmin"], step=arrays["step"],
-            centroids=arrays["centroids"], offsets=arrays["offsets"],
-            vecs=arrays.get("vecs"), metric=metric,
-        )
-    elif kind == "hnsw_routed":
+    if kind == "hnsw_routed":
         graphs, cents = _unpack_graphs(arrays)
         _WORKER_INDEX = LocalHnswRoutedIndex(
             graphs=graphs, centroids=cents, metric=metric,
@@ -1268,10 +1299,7 @@ def _mp_worker_init(spec: dict) -> None:
             default_nprobe=spec["hnsw_opts"]["default_nprobe"],
         )
     else:
-        _WORKER_INDEX = LocalFlatIndex(
-            ids=arrays["ids"], vecs=arrays["vecs"], metric=metric,
-            norms_sq=arrays["norms_sq"],
-        )
+        _WORKER_INDEX = local_index(kind, metric, arrays)
 
 
 def _mp_ping(_: int) -> bool:
@@ -1365,34 +1393,11 @@ class LocalServerPool:
                 "oversubscribe cores)",
                 RuntimeWarning,
             )
-        if isinstance(index, LocalIvfIndex):
-            kind, named = "ivf", {
-                "ids": index.ids, "vecs": index.vecs,
-                "norms_sq": index.norms_sq, "centroids": index.centroids,
-                "offsets": index.offsets,
-            }
-        elif isinstance(index, LocalIvfPqIndex):
-            kind, named = "ivfpq", {
-                "ids": index.ids, "codes": index.codes,
-                "codebooks": index.codebooks,
-                "centroids": index.centroids, "offsets": index.offsets,
-            }
-        elif isinstance(index, LocalPqIndex):
-            kind, named = "pq", {
-                "ids": index.ids, "codes": index.codes,
-                "codebooks": index.codebooks,
-            }
-        elif isinstance(index, LocalSqIndex):
-            kind, named = "sq", {
-                "ids": index.ids, "codes": index.codes,
-                "vmin": index.vmin, "step": index.step,
-            }
-        elif isinstance(index, LocalIvfSqIndex):
-            kind, named = "ivfsq", {
-                "ids": index.ids, "codes": index.codes,
-                "vmin": index.vmin, "step": index.step,
-                "centroids": index.centroids, "offsets": index.offsets,
-            }
+        kind = {cls: kd for kd, cls in _KINDS.items()}.get(type(index))
+        if kind is not None:
+            # every array field, and the refine rows when present
+            named = {f.name: getattr(index, f.name) for f in fields(index)
+                     if isinstance(getattr(index, f.name), np.ndarray)}
         elif isinstance(index, LocalHnswRoutedIndex):
             kind = "hnsw_routed"
             named = _pack_graphs(index.graphs, index.centroids)
@@ -1411,11 +1416,6 @@ class LocalServerPool:
                     [g is not None for g in index.graphs], dtype=bool),
                 "n_total": int(index.n_total),
             }
-        elif isinstance(index, LocalFlatIndex):
-            kind, named = "flat", {
-                "ids": index.ids, "vecs": index.vecs,
-                "norms_sq": index.norms_sq,
-            }
         else:
             raise TypeError(
                 f"LocalServerPool serves LocalFlatIndex/LocalIvfIndex/"
@@ -1423,10 +1423,6 @@ class LocalServerPool:
                 f"LocalIvfSqIndex/LocalHnswRoutedIndex, "
                 f"got {type(index).__name__}"
             )
-        # refine needs the stored rows in every worker too
-        if getattr(index, "vecs", None) is not None and kind in (
-                "pq", "ivfpq", "sq", "ivfsq"):
-            named["vecs"] = index.vecs
         self.kind = kind
         spec_arrays = {}
         for key, arr in named.items():

@@ -14,11 +14,11 @@ Spark shape:
   stride init is reproducible.
 - codes are the big table: (id, code ARRAY<SMALLINT>) — M bytes of
   information per vector ((dim·4)/M compression, pq.go:207-233).
-- search broadcasts the per-query tables (q × M × Ksub doubles —
-  tiny) into a mapInPandas over codes: a gather + sum per row, then
-  per-batch partial top-k. No shuffle until the ≤ partitions×q×k
-  candidate rows. This is SURVEY.md §4 row 3's "broadcast the table
-  into a pandas UDF" plan — codes never explode into M×n rows.
+- search is one mapInArrow over codes (topk.search_index): each
+  Arrow batch becomes a LocalPqIndex, which builds the per-query
+  tables (q × M × Ksub doubles — tiny), gathers + sums per row and
+  keeps the batch's top-k. No shuffle until the ≤ batches×q×k
+  candidate rows; codes never explode into M×n rows.
 """
 
 from __future__ import annotations
@@ -32,7 +32,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from gofaiss_spark.functions.kmeans_np import lloyd_kmeans
-from gofaiss_spark.operators.topk import RESULT_SCHEMA, topk
+from gofaiss_spark.operators.topk import search_index
 
 
 def validate_pq_params(dim: int, m: int, nbits: int) -> tuple[int, int]:
@@ -274,68 +274,15 @@ def search_pq(
     refine: int | None = None,
     base: DataFrame | None = None,
 ) -> DataFrame:
-    """ADC search (pq.go:127-179): table gather + per-batch top-k.
-    Returns (query_id, id, distance, rank); distance = sqrt(Σ table).
+    """ADC search (pq.go:127-179) on the shared distributed kernel
+    (topk.search_index, LocalPqIndex.search per Arrow batch): table
+    gather + per-batch top-k. Returns (query_id, id, distance, rank);
+    distance = sqrt(Σ table).
 
     ``refine=r`` re-ranks the top-(k·r) ADC candidates with exact L2
     against ``base`` (the original vectors DataFrame) — the FAISS
     RefineFlat pattern; quantization then costs recall only, never
     distance accuracy. ``base`` is required with refine: PQ stores
     codes, the originals live in the lake."""
-    if refine is not None:
-        if refine < 1:
-            raise ValueError(f"refine must be >= 1, got {refine}")
-        if base is None:
-            raise ValueError("refine requires base= (the original vectors)")
-    k_cand = k * refine if refine is not None and k > 0 else k
-    qrows = queries.select(
-        F.col(query_id_col).alias("query_id"), F.col(qvec_col).alias("qvec")
-    ).toPandas()
-    spark = index.codes.sparkSession
-    if len(qrows) == 0:
-        return spark.createDataFrame([], RESULT_SCHEMA + ", rank int")
-    query_ids = qrows["query_id"].to_numpy(dtype=np.int64)
-    query_mat = np.stack(qrows["qvec"].to_numpy()).astype(np.float64)
-    tables = adc_tables(index.codebooks, query_mat)  # (q, M, ksub)
-    mm = index.m
-
-    def part(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # Vectorized over queries: M gathers of (q, B) beat a
-        # 100-query Python loop of (B, M) gathers ~5× at q=100.
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            codes = np.stack(pdf["code"].to_numpy()).astype(np.int64)  # (B, M)
-            ids = pdf["id"].to_numpy(dtype=np.int64)
-            b = codes.shape[0]
-            nq = tables.shape[0]
-            d2 = adc_accumulate(tables, codes)
-            kk = min(k_cand, b) if k_cand > 0 else b
-            if kk < b:
-                sel = np.argpartition(d2, kk - 1, axis=1)[:, :kk]  # (q, kk)
-            else:
-                sel = np.broadcast_to(np.arange(b), (nq, b))
-            yield pd.DataFrame(
-                {
-                    "query_id": np.repeat(query_ids, sel.shape[1]),
-                    "id": ids[sel.ravel()],
-                    "distance": np.sqrt(
-                        np.take_along_axis(d2, sel, axis=1).ravel()
-                    ),
-                }
-            )
-
-    cand = index.codes.select("id", "code").mapInPandas(part, schema=RESULT_SCHEMA)
-    if refine is not None:
-        from gofaiss_spark.operators.topk import refine_exact
-
-        return refine_exact(
-            topk(cand, k_cand),
-            base,
-            queries,
-            k,
-            metric="l2",
-            qvec_col=qvec_col,
-            query_id_col=query_id_col,
-        )
-    return topk(cand, k)
+    return search_index(index, queries, k, qvec_col=qvec_col,
+                        query_id_col=query_id_col, refine=refine, base=base)

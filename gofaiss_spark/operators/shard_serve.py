@@ -426,28 +426,22 @@ def _load_centroids_np(path: str, nlist: int, dim: int) -> np.ndarray:
 
 
 def _read_shard_arrays(path: str, shard_id: int, meta: dict) -> dict:
-    """Read one shard's parquet slice into the CSR array set (the
-    cold path — runs once per host per shard).
-
-    r13 (verdict item 9 — sharded-family fixed costs): the read is
-    Arrow-NATIVE. Parquet list columns arrive as one contiguous
-    values buffer plus offsets, so the (n, width) matrices come from
-    a flatten+reshape over that buffer instead of the old
-    ``to_pandas()`` + ``np.stack`` path, which materialized one
-    Python list object per row and re-gathered them row-by-row —
-    pure per-task overhead on every cold shard attach (guide §4.2:
-    keep whole batches in native code). Row order (list_id, id) and
-    every emitted array are identical (ids are unique, so the sort
-    key is total)."""
+    """Read one shard's parquet slice into its local index's arrays
+    (the cold path — runs once per host per shard): the shared
+    Arrow-native builder ``local_serve.local_arrays`` (the one the
+    distributed searches and ``to_local*`` use) plus the centroids and
+    codebooks sidecars."""
+    import pyarrow as pa
     import pyarrow.parquet as pq
+
+    from gofaiss_spark.operators.local_serve import _CELL_KINDS, local_arrays
 
     kind = meta["kind"]
     quantized = kind in ("pq", "ivfpq", "sq", "ivfsq")
-    celled = kind in ("ivf", "ivfpq", "ivfsq")
     shard_dir = f"{path}/shards/shard_id={int(shard_id)}"
     cols = ["id"]
     cols += ["code"] if quantized else ["vec"]
-    if celled:
+    if kind in _CELL_KINDS:
         cols.append("list_id")
     if quantized and meta.get("has_vectors"):
         cols.append("vec")
@@ -464,64 +458,16 @@ def _read_shard_arrays(path: str, shard_id: int, meta: dict) -> dict:
                 f"manifest records {rows[int(shard_id)]} rows — torn "
                 "artifact"
             )
-        tbl = None
-
-    def _flat_col(name: str) -> np.ndarray:
-        if tbl is None:
-            return np.empty(0, dtype=np.int64)
-        return tbl.column(name).to_numpy(zero_copy_only=False)
-
-    def _fixed_list(name: str, width: int, dtype) -> np.ndarray:
-        """(n, width) matrix from a parquet list column: per chunk,
-        one offsets-aware flatten over the contiguous values buffer."""
-        if tbl is None or tbl.num_rows == 0:
-            return np.empty((0, width), dtype=dtype)
-        parts = []
-        for ch in tbl.column(name).chunks:
-            flat = ch.flatten().to_numpy(zero_copy_only=False)
-            parts.append(flat.reshape(-1, width))
-        out = parts[0] if len(parts) == 1 else np.concatenate(parts)
-        return out.astype(dtype, copy=False)
-
-    ids = _flat_col("id").astype(np.int64, copy=False)
-    dim = meta["dim"]
-    if celled:
-        lids = _flat_col("list_id").astype(np.int64, copy=False)
-        order = np.lexsort((ids, lids))  # (list_id, id) — unique ids
-        lids = lids[order]
-    else:
-        order = np.argsort(ids, kind="stable")
-    ids = np.ascontiguousarray(ids[order])
-    arrays = {"ids": ids}
-
-    if quantized:
-        width = dim if kind in ("sq", "ivfsq") else meta["m"]
-        cdtype = np.uint8 if kind in ("sq", "ivfsq") else np.uint16
-        codes = _fixed_list("code", width, cdtype)
-        arrays["codes"] = np.ascontiguousarray(codes[order])
-        if meta.get("has_vectors"):
-            rvec = _fixed_list("vec", dim, np.float32)
-            arrays["vecs"] = np.ascontiguousarray(rvec[order])
-        if kind in ("pq", "ivfpq"):
-            arrays["codebooks"] = np.ascontiguousarray(
-                np.load(f"{path}/codebooks.npy"))
-    else:
-        # RAW rows + as-trained centroids for every metric: the local
-        # kernels divide by row norms inside the cosine ranking pass
-        # (LocalFlatIndex.vecs contract), so per-shard distances are
-        # bit-identical to the distributed kernel on the same rows —
-        # a pre-normalized copy would perturb them ~1e-7 and sharded
-        # merges would disagree with a flat oracle at 6dp
-        vecs = np.ascontiguousarray(_fixed_list("vec", dim, np.float32)[order])
-        arrays["vecs"] = vecs
-        arrays["norms_sq"] = np.einsum("ij,ij->i", vecs, vecs)
-
-    if celled:
-        nlist = meta["nlist"]
-        cents = _load_centroids_np(path, nlist, dim)
-        arrays["centroids"] = np.ascontiguousarray(cents)
-        arrays["offsets"] = np.searchsorted(
-            lids, np.arange(nlist + 1)).astype(np.int64)
+        tbl = pa.table({c: pa.array([], pa.list_(pa.float32())
+                                    if c in ("vec", "code") else pa.int64())
+                        for c in cols})
+    arrays = local_arrays(tbl, meta)
+    if kind in ("pq", "ivfpq"):
+        arrays["codebooks"] = np.ascontiguousarray(
+            np.load(f"{path}/codebooks.npy"))
+    if kind in _CELL_KINDS:
+        arrays["centroids"] = np.ascontiguousarray(
+            _load_centroids_np(path, meta["nlist"], meta["dim"]))
     return arrays
 
 
@@ -657,20 +603,13 @@ def _unlink_shard_segments(build_id: str, shard_id: int) -> int:
 
 
 def _load_shard(path: str, build_id: str, shard_id: int, meta: dict):
-    """Load one shard as a LocalFlatIndex / LocalIvfIndex view over
-    the HOST shared-memory cache. Runs inside executor python workers.
+    """Load one shard as its Local*Index (``local_index``), a view
+    over the HOST shared-memory cache. Runs inside executor python workers.
 
     Order: per-worker handle cache → attach host segments → (under a
     host-local flock, so concurrent slice tasks of one cold shard
     build once) read parquet + export segments, then attach."""
-    from gofaiss_spark.operators.local_serve import (
-        LocalFlatIndex,
-        LocalIvfIndex,
-        LocalIvfPqIndex,
-        LocalIvfSqIndex,
-        LocalPqIndex,
-        LocalSqIndex,
-    )
+    from gofaiss_spark.operators.local_serve import local_index
 
     key = (path, build_id, int(shard_id))
     hit = _CACHE.get(key)
@@ -704,38 +643,9 @@ def _load_shard(path: str, build_id: str, shard_id: int, meta: dict):
             finally:
                 fcntl.flock(lf, fcntl.LOCK_UN)
 
-    metric = meta["metric"]
-    kind = meta["kind"]
-    if kind == "ivf":
-        idx = LocalIvfIndex(ids=arrays["ids"], vecs=arrays["vecs"],
-                            metric=metric, centroids=arrays["centroids"],
-                            offsets=arrays["offsets"],
-                            norms_sq=arrays["norms_sq"])
-    elif kind == "ivfpq":
-        idx = LocalIvfPqIndex(ids=arrays["ids"], codes=arrays["codes"],
-                              codebooks=arrays["codebooks"],
-                              centroids=arrays["centroids"],
-                              offsets=arrays["offsets"],
-                              vecs=arrays.get("vecs"), metric=metric)
-    elif kind == "pq":
-        idx = LocalPqIndex(ids=arrays["ids"], codes=arrays["codes"],
-                           codebooks=arrays["codebooks"],
-                           vecs=arrays.get("vecs"), metric=metric)
-    elif kind == "sq":
-        idx = LocalSqIndex(ids=arrays["ids"], codes=arrays["codes"],
-                           vmin=np.asarray(meta["vmin"], dtype=np.float64),
-                           step=np.asarray(meta["step"], dtype=np.float64),
-                           vecs=arrays.get("vecs"), metric=metric)
-    elif kind == "ivfsq":
-        idx = LocalIvfSqIndex(
-            ids=arrays["ids"], codes=arrays["codes"],
-            vmin=np.asarray(meta["vmin"], dtype=np.float64),
-            step=np.asarray(meta["step"], dtype=np.float64),
-            centroids=arrays["centroids"], offsets=arrays["offsets"],
-            vecs=arrays.get("vecs"), metric=metric)
-    else:
-        idx = LocalFlatIndex(ids=arrays["ids"], vecs=arrays["vecs"],
-                             metric=metric, norms_sq=arrays["norms_sq"])
+    quantizer = {key: np.asarray(meta[key], dtype=np.float64)
+                 for key in ("vmin", "step") if key in meta}
+    idx = local_index(meta["kind"], meta["metric"], {**arrays, **quantizer})
     _CACHE[key] = (idx, handles)
     while len(_CACHE) > _CACHE_MAX:
         _, (_, old_handles) = _CACHE.popitem(last=False)

@@ -13,9 +13,10 @@ Spark shapes:
   partial-aggregated columns — no Python, no extra scan);
 - **encode** = Arrow-batched clip/round kernel, embarrassingly
   parallel;
-- **search** = the same two-phase local top-k as flat: per-partition
-  decode + BLAS distance + partial top-k, then a
-  (partitions × q × k)-row window — shuffle size independent of n.
+- **search** = the same two-phase top-k as flat (topk.search_index):
+  a LocalSqIndex per Arrow batch decodes, scores and keeps its top-k,
+  then a (batches × q × k)-row window — shuffle size independent of
+  n.
 - reported distances are reconstruction-approximate; the quantization
   step bound makes them hard-checkable (|d_sq − d_exact| ≤ ‖step‖₂,
   driver query sq_topk), and ``refine=`` re-ranks them exact.
@@ -31,7 +32,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from gofaiss_spark.operators.topk import RESULT_SCHEMA, topk
+from gofaiss_spark.operators.topk import search_index
 
 _LEVELS = 255  # codes in [0, 255] — uint8 range, stored as smallint
 
@@ -127,69 +128,9 @@ def search_sq(
     refine: int | None = None,
     base: DataFrame | None = None,
 ) -> DataFrame:
-    """Decode + BLAS two-phase top-k (same shuffle shape as flat's
-    ``method="local"``). ``refine=r`` re-ranks top-(k·r) with exact L2
-    against ``base`` (see operators/topk.refine_exact)."""
-    if refine is not None:
-        if refine < 1:
-            raise ValueError(f"refine must be >= 1, got {refine}")
-        if base is None:
-            raise ValueError("refine requires base= (the original vectors)")
-    k_cand = k * refine if refine is not None and k > 0 else k
-    qrows = queries.select(
-        F.col(query_id_col).alias("query_id"), F.col(qvec_col).alias("qvec")
-    ).toPandas()
-    qmat = (
-        np.stack(qrows["qvec"].to_numpy()).astype(np.float64)
-        if len(qrows)
-        else np.zeros((0, index.dim))
-    )
-    qids = qrows["query_id"].to_numpy(dtype=np.int64)
-    sc = index.codes.sparkSession.sparkContext
-    bc = sc.broadcast((qmat, qids, index.vmin, index.step))
-
-    def part(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        qm, qi, mn, st = bc.value
-        if qm.shape[0] == 0:
-            return
-        qsq = np.einsum("ij,ij->i", qm, qm)  # (q,)
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            codes = np.stack(pdf["code"].to_numpy()).astype(np.float64)
-            x = mn + codes * st  # decode (b, dim)
-            ids = pdf["id"].to_numpy(dtype=np.int64)
-            b = x.shape[0]
-            xsq = np.einsum("ij,ij->i", x, x)  # (b,)
-            d2 = xsq[:, None] + qsq[None, :] - 2.0 * (x @ qm.T)  # (b, q)
-            np.maximum(d2, 0.0, out=d2)
-            kk = min(k_cand, b) if k_cand > 0 else b
-            if kk < b:
-                sel = np.argpartition(d2, kk - 1, axis=0)[:kk, :]
-            else:
-                sel = np.broadcast_to(np.arange(b)[:, None], (b, d2.shape[1]))
-            out_ids = ids[sel].ravel(order="F")
-            out_d = np.sqrt(np.take_along_axis(d2, sel, axis=0)).ravel(
-                order="F"
-            )
-            out_q = np.repeat(qi, sel.shape[0])
-            yield pd.DataFrame(
-                {"query_id": out_q, "id": out_ids, "distance": out_d}
-            )
-
-    cand = index.codes.select("id", "code").mapInPandas(
-        part, schema=RESULT_SCHEMA
-    )
-    if refine is not None:
-        from gofaiss_spark.operators.topk import refine_exact
-
-        return refine_exact(
-            topk(cand, k_cand),
-            base,
-            queries,
-            k,
-            metric="l2",
-            qvec_col=qvec_col,
-            query_id_col=query_id_col,
-        )
-    return topk(cand, k)
+    """Decode + score per Arrow batch on the shared distributed
+    kernel (topk.search_index, LocalSqIndex.search). ``refine=r``
+    re-ranks top-(k·r) with exact L2 against ``base`` (see
+    operators/topk.refine_exact)."""
+    return search_index(index, queries, k, qvec_col=qvec_col,
+                        query_id_col=query_id_col, refine=refine, base=base)

@@ -13,38 +13,27 @@ Two physical strategies, identical results:
   shuffle after scoring carries n×q rows — fine at test scale, and the
   plan DuckDB can replicate fold-for-fold (correctness oracle).
 
-- ``method="local"`` (default): two-phase top-k. Phase 1 is a
-  mapInPandas partial top-k: each input partition computes a BLAS
-  distance matrix against the broadcast query batch and keeps only its
-  local k best per query — no shuffle, n×q scores reduced to
-  (partitions × q × k) candidate rows. Phase 2 is an exact window
-  top-k over that small remainder. At 100 TB this is the only shape
-  that works: the shuffle is O(partitions·q·k), independent of n.
+- ``method="local"`` (default): two-phase top-k (``search_index``,
+  the distributed kernel of every index kind). Phase 1 is one
+  mapInArrow: each Arrow batch becomes the same LocalFlatIndex the
+  local and sharded tiers serve, and its search keeps the batch's k
+  best per query — no shuffle, n×q scores reduced to (batches × q × k)
+  candidate rows. Phase 2 is an exact window top-k over that small
+  remainder. At 100 TB this is the only shape that works: the shuffle
+  is O(batches·q·k), independent of n.
 
 Ties break by (distance, id) — deterministic across runs and engines.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from gofaiss_spark.functions.distance import (
-    distance_col,
-    f32_select_margin,
-    np_distance_matrix,
-    validate_metric,
-)
+from gofaiss_spark.functions.distance import distance_col, validate_metric
 
 RESULT_SCHEMA = "query_id long, id long, distance double"
-
-#: distance-matrix budget (cells) per BLAS call in the local-top-k
-#: kernel — bounds the (B, q) allocation at ~128 MB of float64
-_QUERY_CHUNK_CELLS = 16_000_000
 
 
 def score_pairs(
@@ -98,175 +87,104 @@ def topk(
     return ranked
 
 
-def _local_topk_candidates(
-    vectors: DataFrame,
-    query_ids: np.ndarray,
-    query_mat: np.ndarray,
-    k: int,
-    metric: str,
-    vec_col: str,
-    id_col: str,
+def collect_queries(queries: DataFrame, qvec_col: str = "qvec",
+                    query_id_col: str = "query_id"
+                    ) -> tuple[np.ndarray, np.ndarray]:
+    """(query ids, f64 query matrix) of a (query_id, qvec) batch: one
+    Arrow collect, bounded by contract (a query batch, not a table)."""
+    from gofaiss_spark.operators.local_serve import _list_matrix
+
+    tbl = queries.select(
+        F.col(query_id_col).alias("query_id"), F.col(qvec_col).alias("qvec")
+    ).toArrow()
+    return (tbl.column("query_id").to_numpy().astype(np.int64, copy=False),
+            _list_matrix(tbl.column("qvec"), 1, np.float64))
+
+
+def search_index(
+    index,
+    queries: DataFrame,
+    k: int = 10,
+    nprobe: int = 10,
+    qvec_col: str = "qvec",
+    query_id_col: str = "query_id",
+    refine: int | None = None,
+    base: DataFrame | None = None,
 ) -> DataFrame:
-    """Phase 1: per-arrow-batch partial top-k via BLAS (no shuffle).
+    """The distributed top-k of every index kind (REPOSE's shape: one
+    local index per partition and one global merge).
 
-    Kernel contract (the LocalFlatIndex pattern, local_serve.py:84):
-    a single f32 GEMM ranks each arrow batch's rows per query and
-    selects the top-(k+16) candidates; only those survivors get an
-    exact f64 re-score (direct (a-b)² form — exact 0 on identical
-    vectors, no norms-identity noise), so reported distances and
-    orderings are identical to a full f64 scan at ~4× less compute
-    and half the memory traffic — the difference between riding out
-    a throttled window and stalling in one.
+    One mapInArrow over the index's rows builds, per Arrow batch, the
+    same Local*Index the other tiers build (local_serve.local_arrays
+    + local_index) and yields its top-k, at most nq × k (query_id, id,
+    distance) rows with the padding dropped; the ``topk`` Window then
+    merges them by (distance, id). Every distance is the local
+    kernel's per-pair value, so the answer equals the local replica's
+    by construction, and the shuffle carries O(batches·nq·k) rows,
+    independent of n. The cell kinds probe once, on the driver
+    (``_probe_cells``): the probed cells prune the list_id partitions
+    and ride to every batch, which runs ``search_cells``.
 
-    The exactness claim is ENFORCED, not assumed: the f32 cut is
-    guarded by an error bound (f32_select_margin). Per query, if the
-    gap between the selection pivot (best rejected f32 score) and the
-    k-th-best survivor is not larger than twice the bound, the kernel
-    falls back to an exact f64 ranking of the whole batch for that
-    query — so pathological near-ties (clustered large-magnitude
-    vectors with gaps below f32 resolution, or exact duplicates tied
-    at the boundary) cannot silently drop a true neighbor.
+    ``refine=r`` (quantized kinds) takes the top-(k·r) and re-ranks
+    them exact against ``base`` (the original (id, vec) rows) with
+    ``refine_exact``."""
+    from gofaiss_spark.operators.local_serve import (
+        _PAD_ID,
+        _index_parts,
+        _probe_cells,
+        local_arrays,
+        local_index,
+    )
 
-    Large query batches are processed in column chunks so the (B, q)
-    score matrix stays ~64 MB regardless of q — each query's partial
-    top-k is independent, so chunking the query axis needs no merge.
-    Measured: without chunking, a 10k-query batch allocates ~400 MB
-    per Arrow batch and drops BLAS throughput ~3× (memory bound)."""
-    chunk_cells = _QUERY_CHUNK_CELLS  # driver-captured → testable
+    if refine is not None:
+        if refine < 1:
+            raise ValueError(f"refine must be >= 1, got {refine}")
+        if base is None:
+            raise ValueError("refine requires base= (the original vectors)")
+    kc = k * refine if refine is not None and k > 0 else k
+    spec, side, rows = _index_parts(index)
+    spark = rows.sparkSession
+    query_ids, qmat = collect_queries(queries, qvec_col, query_id_col)
+    if len(query_ids) == 0:
+        return spark.createDataFrame([], RESULT_SCHEMA + ", rank int")
+    cells = None
+    if "centroids" in side:
+        cells = _probe_cells(side["centroids"], qmat, spec["metric"], nprobe)
+        probed = [int(c) for c in np.unique(cells)]
+        rows = rows.filter(F.col("list_id").isin(probed))
+        if not getattr(index, "colocated", True):
+            # in-memory IVFPQ/IVFSQ builds hold a slice of every list
+            # in every partition: group each list's rows so its
+            # residual tables are built once. Loaded artifacts are
+            # list-contiguous on disk and skip the shuffle.
+            rows = rows.repartition(
+                min(spark.sparkContext.defaultParallelism, len(probed)),
+                "list_id")
+    bc = spark.sparkContext.broadcast((query_ids, qmat, cells, side))
 
-    def part(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        qn = query_mat.shape[0]
-        q32 = query_mat.astype(np.float32)
-        if metric == "cosine":
-            qnrm = np.linalg.norm(q32, axis=1, keepdims=True)
-            qnrm[qnrm == 0] = 1.0
-            q32 = q32 / qnrm
-        q64 = np.ascontiguousarray(query_mat, dtype=np.float64)
-        q64n = np.linalg.norm(q64, axis=1)
-        dim = q64.shape[1] if q64.ndim == 2 else 0
-        for pdf in batches:
-            if len(pdf) == 0:
+    def part(batches):
+        import pyarrow as pa
+
+        qids, q, cells, side = bc.value
+        for batch in batches:
+            if batch.num_rows == 0:
                 continue
-            base = np.stack(pdf[vec_col].to_numpy())
-            ids = pdf[id_col].to_numpy(dtype=np.int64)
-            b = base.shape[0]
-            b64 = base.astype(np.float64)
-            b32 = base.astype(np.float32)
-            if metric == "l2":
-                bn32 = np.einsum("ij,ij->i", b32, b32)
-                bmax = float(np.sqrt(bn32.max(initial=0.0)))
-            elif metric == "cosine":
-                b64n = np.linalg.norm(b64, axis=1)
-                bnrm = b64n.astype(np.float32)[:, None].copy()
-                bnrm[bnrm == 0] = 1.0
-                b32 = b32 / bnrm
-                bmax = 1.0
-            else:
-                bmax = float(np.linalg.norm(b64, axis=1).max(initial=0.0))
-            # per-query f32-cut error bound for THIS batch's magnitudes
-            err = f32_select_margin(metric, dim, bmax, q64n)
-            kk = min(k + 16, b)
-            chunk = max(256, chunk_cells // max(b, 1))
-            outs = []
-            for s in range(0, qn, chunk):
-                qc = min(chunk, qn - s)
-                # f32 ranking scores: order-equivalent to the metric
-                # per query column (l2 drops the constant |q|² term)
-                sc = b32 @ q32[s : s + qc].T  # (b, qc)
-                if metric == "l2":
-                    sc *= -2.0
-                    sc += bn32[:, None]
-                else:
-                    np.negative(sc, out=sc)
-                if kk < b:
-                    # kth=kk: positions [:kk] are the survivors, the
-                    # element AT kk is the best rejected f32 score —
-                    # the selection pivot the margin guard checks
-                    part_idx = np.argpartition(sc, kk, axis=0)
-                    sel = part_idx[:kk, :]
-                    pivot = sc[
-                        part_idx[kk], np.arange(qc)
-                    ].astype(np.float64)
-                    surv = np.take_along_axis(sc, sel, axis=0)
-                    kth = np.partition(
-                        surv, min(k, kk) - 1, axis=0
-                    )[min(k, kk) - 1].astype(np.float64)
-                    # guard: pivot - kth > 2*err proves no rejected
-                    # candidate can belong to the exact top-k; on
-                    # violation (near-ties beyond the +16 buffer, or
-                    # exact duplicates) rank that query in exact f64
-                    for j in np.flatnonzero(
-                        pivot - kth <= 2.0 * err[s : s + qc]
-                    ):
-                        qj = q64[s + j]
-                        if metric == "l2":
-                            diff = b64 - qj
-                            dj = np.einsum("ij,ij->i", diff, diff)
-                        elif metric == "cosine":
-                            den = b64n * q64n[s + j]
-                            with np.errstate(
-                                divide="ignore", invalid="ignore"
-                            ):
-                                dj = 1.0 - np.clip(
-                                    (b64 @ qj) / den, -1.0, 1.0
-                                )
-                            dj[den == 0.0] = 1.0
-                        else:
-                            dj = -(b64 @ qj)
-                        sel[:, j] = np.lexsort((ids, dj))[:kk]
-                else:
-                    sel = np.broadcast_to(
-                        np.arange(b)[:, None], (b, qc)
-                    ).copy()
-                # exact f64 re-score of the survivors only, in query
-                # sub-blocks so the (cb, kk, dim) candidate tensor
-                # stays cache-sized
-                dsel = np.empty(sel.shape, dtype=np.float64)
-                cb = 1024
-                for cs in range(0, qc, cb):
-                    ce = min(cs + cb, qc)
-                    cand = b64[sel[:, cs:ce].T]  # (cbq, kk, dim)
-                    qb = q64[s + cs : s + ce]
-                    if metric == "l2":
-                        diff = cand - qb[:, None, :]
-                        d = np.sqrt(np.einsum("bkd,bkd->bk", diff, diff))
-                    elif metric == "cosine":
-                        ip = np.einsum("bkd,bd->bk", cand, qb)
-                        denom = (b64n[sel[:, cs:ce].T]
-                                 * q64n[s + cs : s + ce, None])
-                        with np.errstate(divide="ignore", invalid="ignore"):
-                            cossim = ip / denom
-                        d = 1.0 - np.clip(cossim, -1.0, 1.0)
-                        d[denom == 0.0] = 1.0
-                    else:
-                        d = -np.einsum("bkd,bd->bk", cand, qb)
-                    dsel[:, cs:ce] = d.T
-                # distances are exact now — emit exactly top-k per
-                # batch (deterministic (distance, id) order), keeping
-                # the shuffle at k rows per (query, partition)
-                csel = ids[sel]
-                ko = min(k, kk)
-                if ko < kk:
-                    o = np.lexsort((csel, dsel), axis=0)[:ko, :]
-                    csel = np.take_along_axis(csel, o, axis=0)
-                    dsel = np.take_along_axis(dsel, o, axis=0)
-                outs.append(
-                    pd.DataFrame(
-                        {
-                            "query_id": np.repeat(
-                                query_ids[s : s + qc], ko
-                            ),
-                            "id": csel.ravel(order="F"),
-                            "distance": dsel.ravel(order="F"),
-                        }
-                    )
-                )
-            yield outs[0] if len(outs) == 1 else pd.concat(
-                outs, ignore_index=True
-            )
+            idx = local_index(spec["kind"], spec["metric"],
+                              {**local_arrays(batch, spec), **side})
+            ids, d = (idx.search(q, kc) if cells is None
+                      else idx.search_cells(q, cells, kc))
+            real = (ids != _PAD_ID).ravel()
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(np.repeat(qids, ids.shape[1])[real]),
+                 pa.array(ids.ravel()[real]), pa.array(d.ravel()[real])],
+                names=["query_id", "id", "distance"])
 
-    sel_df = vectors.select(id_col, vec_col)
-    return sel_df.mapInPandas(part, schema=RESULT_SCHEMA)
+    cand = rows.mapInArrow(part, RESULT_SCHEMA)
+    if refine is None:
+        return topk(cand, k)
+    return refine_exact(topk(cand, kc), base, queries, k,
+                        metric=spec["metric"], qvec_col=qvec_col,
+                        query_id_col=query_id_col)
 
 
 def search_flat(
@@ -300,22 +218,11 @@ def search_flat(
             vectors, queries, metric, vec_col, qvec_col, id_col, query_id_col
         )
         return topk(scored, k)
-    qrows = (
-        queries.select(
-            F.col(query_id_col).alias("query_id"), F.col(qvec_col).alias("qvec")
-        )
-        .toPandas()
-    )
-    if len(qrows) == 0:
-        spark = vectors.sparkSession
-        empty = spark.createDataFrame([], RESULT_SCHEMA + ", rank int")
-        return empty
-    query_ids = qrows["query_id"].to_numpy(dtype=np.int64)
-    query_mat = np.stack(qrows["qvec"].to_numpy()).astype(np.float64)
-    cand = _local_topk_candidates(
-        vectors, query_ids, query_mat, k, metric, vec_col, id_col
-    )
-    return topk(cand, k)
+    from gofaiss_spark.operators.flat import FlatIndex
+
+    rows = vectors.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec"))
+    return search_index(FlatIndex(metric, 0, rows), queries, k,
+                        qvec_col=qvec_col, query_id_col=query_id_col)
 
 
 def refine_exact(

@@ -104,28 +104,21 @@ def test_range_search_exact(vectors, queries):
     assert len(expected) > 0
 
 
-def test_chunked_query_kernel_identical(spark, monkeypatch):
-    """Forcing the multi-chunk path (tiny distance-matrix budget)
-    returns byte-identical results to the single-chunk path."""
-    import sys
+def test_chunked_query_kernel_identical(embeddings):
+    """A 300-query batch (past the kernel's 128-query block) returns
+    byte-identical results to its three 100-query slices: each
+    query's answer does not depend on the batch it rides in."""
+    v = embeddings.select(
+        F.col("vec_id").alias("id"), F.col("embedding").alias("vec"))
 
-    from gofaiss_spark.operators.topk import search_flat
+    def answer(lo, hi):
+        q = embeddings.filter(
+            (F.col("vec_id") >= lo) & (F.col("vec_id") < hi)
+        ).select(F.col("vec_id").alias("query_id"),
+                 F.col("embedding").alias("qvec"))
+        return sorted((r.query_id, r.rank, r.id, r.distance)
+                      for r in search_flat(v, q, k=7).collect())
 
-    topk_mod = sys.modules["gofaiss_spark.operators.topk"]
-    from pyspark.sql import functions as F
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    v = emb.select(F.col("vec_id").alias("id"), F.col("embedding").alias("vec"))
-    q = emb.filter(F.col("vec_id") < 300).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec")
-    )
-    base = sorted(
-        (r.query_id, r.rank, r.id, round(r.distance, 9))
-        for r in search_flat(v, q, k=7).collect()
-    )
-    monkeypatch.setattr(topk_mod, "_QUERY_CHUNK_CELLS", 1)  # chunk = 256
-    chunked = sorted(
-        (r.query_id, r.rank, r.id, round(r.distance, 9))
-        for r in search_flat(v, q, k=7).collect()
-    )
-    assert base == chunked
+    whole = answer(0, 300)
+    assert len(whole) == 300 * 7
+    assert whole == answer(0, 100) + answer(100, 200) + answer(200, 300)

@@ -1,5 +1,7 @@
-"""Driver-colocated flat serving (operators/local_serve.py):
-result-identical to the distributed search_flat on every metric."""
+"""Driver-colocated serving (operators/local_serve.py): the local
+kernels, the process pool, and the tier equality — the distributed
+searches run these kernels over each Arrow batch, so their answers
+equal the local replica's, ids and distances bit for bit."""
 
 import numpy as np
 import pytest
@@ -8,32 +10,56 @@ from pyspark.sql import functions as F
 from gofaiss_spark.operators.local_serve import to_local
 from gofaiss_spark.operators.topk import search_flat
 
+# query batch sizes of every tier-equality check: empty, one, many
+NQ = (0, 1, 64)
+
 
 @pytest.fixture(scope="module")
-def vq(spark):
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    v = emb.select(F.col("vec_id").alias("id"), F.col("embedding").alias("vec")).cache()
-    q = emb.filter(F.col("vec_id") < 50).select(
+def vq(embeddings):
+    # four partitions, so the distributed searches merge per-batch
+    # top-k lists from several Arrow batches
+    v = embeddings.select(
+        F.col("vec_id").alias("id"), F.col("embedding").alias("vec")
+    ).repartition(4).cache()
+    q = embeddings.filter(F.col("vec_id") < 50).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec")
     ).cache()
     return v, q
 
 
-@pytest.mark.parametrize("metric", ["l2", "cosine", "dot"])
-def test_local_matches_distributed(spark, vq, metric):
-    v, q = vq
-    dist = {
-        (r.query_id, r.rank): (r.id, round(r.distance, 5))
-        for r in search_flat(v, q, k=7, metric=metric).collect()
-    }
-    local = to_local(v, metric=metric)
+def _query_batch(emb, n: int):
+    """The first n embeddings as a (query_id, qvec) DataFrame, and as
+    the (ids, matrix) pair the local tier is given."""
+    q = emb.filter(F.col("vec_id") < n).select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec"))
     qp = q.orderBy("query_id").toPandas()
-    qids = qp["query_id"].to_numpy()
-    qmat = np.stack(qp["qvec"].to_numpy())
-    ids, d = local.search(qmat, k=7)
-    for row, qid in enumerate(qids):
-        for rank in range(7):
-            assert dist[(qid, rank + 1)] == (ids[row, rank], round(float(d[row, rank]), 5))
+    qmat = (np.stack(qp["qvec"].to_numpy()) if len(qp)
+            else np.zeros((0, 64), dtype=np.float32))
+    return q, qp["query_id"].to_numpy(), qmat
+
+
+def _assert_tiers_equal(res, qids, ids, d):
+    """The distributed (query_id, id, distance, rank) rows are exactly
+    the local (ids, dists) matrices: same ids at the same ranks and
+    the same f64 distances, bit for bit. Local padding (id int64.max)
+    has no distributed row."""
+    pad = np.iinfo(np.int64).max
+    got = sorted((r.query_id, r.rank, r.id, r.distance)
+                 for r in res.collect())
+    want = sorted((int(qid), j + 1, int(ids[i, j]), float(d[i, j]))
+                  for i, qid in enumerate(qids)
+                  for j in range(ids.shape[1]) if ids[i, j] != pad)
+    assert got == want
+
+
+@pytest.mark.parametrize("metric", ["l2", "cosine", "dot"])
+def test_local_matches_distributed(embeddings, vq, metric):
+    v, _ = vq
+    local = to_local(v, metric=metric)
+    for nq in NQ:
+        q, qids, qmat = _query_batch(embeddings, nq)
+        _assert_tiers_equal(search_flat(v, q, k=7, metric=metric),
+                            qids, *local.search(qmat, k=7))
 
 
 def test_local_k_bounds(spark, vq):
@@ -91,26 +117,23 @@ class TestLocalIvf:
                     ids[row, rank], round(float(d[row, rank]), 6)
                 )
 
-    def test_pruned_matches_distributed_ivf(self, spark, vq, built):
-        from gofaiss_spark.operators.ivf import search_ivf
+    def test_pruned_matches_distributed_ivf(self, embeddings, vq, built):
+        """search_ivf equals LocalIvfIndex.search for every metric,
+        nprobe 1, 4 and nlist, and 0, 1 and 64 queries."""
+        from gofaiss_spark.operators.ivf import build_ivf, search_ivf
+        from gofaiss_spark.operators.local_serve import to_local_ivf
 
-        v, q = vq
-        idx, local, qids, qmat = built
-        ids, d = local.search(qmat, k=5, nprobe=4)
-        dist = {
-            (r.query_id, r.rank): (r.id, round(r.distance, 5))
-            for r in search_ivf(idx, q, k=5, nprobe=4).collect()
-        }
-        agree = total = 0
-        for row, qid in enumerate(qids):
-            for rank in range(5):
-                total += 1
-                got = (ids[row, rank], round(float(d[row, rank]), 5))
-                if dist.get((qid, rank + 1)) == got:
-                    agree += 1
-        # identical cells probed (same f64 centroid formula) -> the
-        # result sets agree; tolerate rare centroid-distance ties
-        assert agree / total >= 0.99
+        v, _ = vq
+        for metric in ("l2", "cosine", "dot"):
+            idx = (built[0] if metric == "l2" else
+                   build_ivf(v, nlist=16, metric=metric, trainer="local"))
+            local = to_local_ivf(idx)
+            for nq in NQ:
+                q, qids, qmat = _query_batch(embeddings, nq)
+                for nprobe in (1, 4, idx.nlist):
+                    _assert_tiers_equal(
+                        search_ivf(idx, q, k=5, nprobe=nprobe), qids,
+                        *local.search(qmat, k=5, nprobe=nprobe))
 
     def test_cell_layout_consistency(self, built):
         idx, local, _, _ = built
@@ -119,89 +142,53 @@ class TestLocalIvf:
         assert np.all(np.diff(local.offsets) >= 0)
 
 
-class TestLocalQuantized:
-    """LocalPqIndex / LocalIvfPqIndex / LocalSqIndex: the in-memory
-    ADC kernels must report the same distances as the DataFrame
-    search paths (same tables, same gather-sum, same sqrt), and
-    refine-all must reduce to the exact flat result bit-for-bit."""
+def _assert_cell_kind_tiers_equal(embeddings, idx, local, search):
+    """An IVFPQ/IVFSQ distributed search equals its local replica at
+    nprobe 1, 4 and nlist, for 0, 1 and 64 queries."""
+    for nq in NQ:
+        q, qids, qmat = _query_batch(embeddings, nq)
+        for nprobe in (1, 4, idx.nlist):
+            _assert_tiers_equal(search(idx, q, k=5, nprobe=nprobe), qids,
+                                *local.search(qmat, k=5, nprobe=nprobe))
 
-    def test_local_pq_matches_search_pq(self, spark, vq):
+
+class TestLocalQuantized:
+    """LocalPqIndex / LocalIvfPqIndex / LocalSqIndex / LocalIvfSqIndex:
+    the distributed searches return the local answers bit for bit,
+    and refine-all must reduce to the exact flat result."""
+
+    def test_local_pq_matches_search_pq(self, embeddings, vq):
         from gofaiss_spark.operators.local_serve import to_local_pq
         from gofaiss_spark.operators.pq import build_pq, search_pq
 
-        v, q = vq
+        v, _ = vq
         idx = build_pq(v, m=8, seed=42)
         idx.codes.cache().count()
-        dist = {
-            (r.query_id, r.rank): (r.id, round(r.distance, 5))
-            for r in search_pq(idx, q, k=7).collect()
-        }
         local = to_local_pq(idx)
-        qp = q.orderBy("query_id").toPandas()
-        qids = qp["query_id"].to_numpy()
-        qmat = np.stack(qp["qvec"].to_numpy())
-        ids, d = local.search(qmat, k=7)
-        for row, qid in enumerate(qids):
-            for rank in range(7):
-                assert dist[(qid, rank + 1)] == (
-                    ids[row, rank], round(float(d[row, rank]), 5))
+        for nq in NQ:
+            q, qids, qmat = _query_batch(embeddings, nq)
+            _assert_tiers_equal(search_pq(idx, q, k=7), qids,
+                                *local.search(qmat, k=7))
 
-    def test_local_ivfpq_matches_search_ivfpq(self, spark, vq):
+    def test_local_ivfpq_matches_search_ivfpq(self, embeddings, vq):
         from gofaiss_spark.operators.ivfpq import build_ivfpq, search_ivfpq
         from gofaiss_spark.operators.local_serve import to_local_ivfpq
 
-        v, q = vq
+        v, _ = vq
         idx = build_ivfpq(v, nlist=8, m=8, seed=42)
         idx.codes.cache().count()
-        local = to_local_ivfpq(idx)
-        qp = q.orderBy("query_id").toPandas()
-        qids = qp["query_id"].to_numpy()
-        qmat = np.stack(qp["qvec"].to_numpy())
-        for npr in (3, 8):
-            dist = {
-                (r.query_id, r.rank): (r.id, round(r.distance, 5))
-                for r in search_ivfpq(idx, q, k=5, nprobe=npr).collect()
-            }
-            ids, d = local.search(qmat, k=5, nprobe=npr)
-            agree = total = 0
-            for row, qid in enumerate(qids):
-                for rank in range(5):
-                    total += 1
-                    got = (ids[row, rank], round(float(d[row, rank]), 5))
-                    if dist.get((qid, rank + 1)) == got:
-                        agree += 1
-            # identical ADC values; tolerate rare exact-ADC-tie order
-            assert agree / total >= 0.99
+        _assert_cell_kind_tiers_equal(embeddings, idx, to_local_ivfpq(idx),
+                                      search_ivfpq)
 
-    def test_local_ivfsq_matches_search_ivfsq(self, spark, vq):
-        """LocalIvfSqIndex (r9): same decoded-residual distance values
-        as the distributed search_ivfsq at 5dp (the local kernel's
-        per-pair f64 re-score vs the distributed GEMM accumulation
-        agree to ~1e-13; 5dp rounding absorbs it)."""
+    def test_local_ivfsq_matches_search_ivfsq(self, embeddings, vq):
         from gofaiss_spark.operators.ivfsq import build_ivfsq, search_ivfsq
         from gofaiss_spark.operators.local_serve import to_local_ivfsq
 
-        v, q = vq
+        v, _ = vq
         idx = build_ivfsq(v, nlist=8, seed=42)
         idx.codes.cache().count()
-        local = to_local_ivfsq(idx)
-        qp = q.orderBy("query_id").toPandas()
-        qids = qp["query_id"].to_numpy()
-        qmat = np.stack(qp["qvec"].to_numpy())
-        for npr in (3, 8):
-            dist = {
-                (r.query_id, r.rank): (r.id, round(r.distance, 5))
-                for r in search_ivfsq(idx, q, k=5, nprobe=npr).collect()
-            }
-            ids, d = local.search(qmat, k=5, nprobe=npr)
-            agree = total = 0
-            for row, qid in enumerate(qids):
-                for rank in range(5):
-                    total += 1
-                    got = (ids[row, rank], round(float(d[row, rank]), 5))
-                    if dist.get((qid, rank + 1)) == got:
-                        agree += 1
-            assert agree / total >= 0.99
+        _assert_cell_kind_tiers_equal(embeddings, idx, to_local_ivfsq(idx),
+                                      search_ivfsq)
         idx.codes.unpersist()
 
     def test_local_ivfsq_refine_requires_vecs(self, spark, vq):
@@ -234,26 +221,18 @@ class TestLocalQuantized:
         assert np.isfinite(d).all()
         assert (ids < 20).all()
 
-    def test_local_sq_matches_search_sq(self, spark, vq):
+    def test_local_sq_matches_search_sq(self, embeddings, vq):
         from gofaiss_spark.operators.local_serve import to_local_sq
         from gofaiss_spark.operators.sq import build_sq, search_sq
 
-        v, q = vq
+        v, _ = vq
         idx = build_sq(v)
         idx.codes.cache().count()
-        dist = {
-            (r.query_id, r.rank): (r.id, round(r.distance, 5))
-            for r in search_sq(idx, q, k=7).collect()
-        }
         local = to_local_sq(idx)
-        qp = q.orderBy("query_id").toPandas()
-        qids = qp["query_id"].to_numpy()
-        qmat = np.stack(qp["qvec"].to_numpy())
-        ids, d = local.search(qmat, k=7)
-        for row, qid in enumerate(qids):
-            for rank in range(7):
-                assert dist[(qid, rank + 1)] == (
-                    ids[row, rank], round(float(d[row, rank]), 5))
+        for nq in NQ:
+            q, qids, qmat = _query_batch(embeddings, nq)
+            _assert_tiers_equal(search_sq(idx, q, k=7), qids,
+                                *local.search(qmat, k=7))
 
     def test_pq_refine_all_equals_flat(self, spark, vq):
         import math

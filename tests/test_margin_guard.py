@@ -1,10 +1,10 @@
 """Adversarial margin-guard tests (round-5 verdict item 2).
 
-The f32-select kernels (operators/topk.py:_local_topk_candidates,
-LocalFlatIndex/LocalIvfIndex in operators/local_serve.py) rank
-candidates in single precision and exactly re-score only the
-top-(k+16). These tests construct inputs where f32 ranking error
-EXCEEDS the true distance gaps — near-ties below f32 resolution and
+The f32-select kernels (LocalFlatIndex/LocalIvfIndex in
+operators/local_serve.py, which the distributed search_flat and
+search_ivf also run over each Arrow batch) rank candidates in single
+precision and exactly re-score only the top-(k+16). These tests
+construct inputs where f32 ranking error EXCEEDS the true distance gaps — near-ties below f32 resolution and
 exact duplicates tied past the +16 buffer — and assert the guarded
 kernels still return the exact f64 answer (reference analogue: the
 exactness contract of the flat scan, pkg/index/flat/flat.go:74-114).
