@@ -35,7 +35,7 @@ from gofaiss_spark.functions.distance import (
     np_paired_distance,
     validate_metric,
 )
-from gofaiss_spark.operators.local_serve import _probe_cells
+from gofaiss_spark.operators.local_serve import _list_matrix, _probe_cells
 from gofaiss_spark.operators.topk import search_index
 
 
@@ -100,13 +100,22 @@ LOCAL_TRAIN_MAX_CELLS = 32_000_000
 
 
 def collect_vector_matrix(df, vec_col: str = "vec", order_col: str | None = "id"):
-    """Collect a (bounded) vector column to a float64 matrix, Arrow
-    path first (toPandas is ~2x plain collect for array columns; falls
-    back transparently when Arrow is off in the session)."""
-    if order_col is not None and order_col in df.columns:
-        df = df.orderBy(order_col)
-    pdf = df.select(F.col(vec_col).alias("_v")).toPandas()
-    return np.array([np.asarray(v) for v in pdf["_v"]], dtype=np.float64)
+    """Collect a (bounded) vector column to a float64 matrix with one
+    Arrow collect, rows in ``order_col`` order: a stable driver-side
+    argsort of the collected keys, the order a Spark ``orderBy`` gives
+    unique keys, without its sort jobs. ``order_col`` None or absent
+    keeps the collect's order. Rows of different lengths raise."""
+    import pyarrow.compute as pc
+
+    keyed = order_col is not None and order_col in df.columns
+    tbl = df.select(vec_col, *([order_col] if keyed else [])).toArrow()
+    lens = pc.list_value_length(tbl.column(0)).to_numpy(zero_copy_only=False)
+    if lens.size and lens.min() != lens.max():
+        raise ValueError("vectors differ in dimension")
+    mat = _list_matrix(tbl.column(0), 0, np.float64)
+    if keyed:
+        mat = mat[np.argsort(tbl.column(1).to_numpy(), kind="stable")]
+    return mat
 
 
 def train_kmeans_centroids(
@@ -123,23 +132,23 @@ def train_kmeans_centroids(
     the reference's iteration budget. Requires n ≥ k (ivf.go:75-77).
 
     ``trainer="mllib"`` (default): MLlib KMeans — distributed, init
-    k-means‖. ``trainer="local"``: collect the training set (bounded
-    by LOCAL_TRAIN_MAX_CELLS) and run the driver-side BLAS Lloyd with
-    seeded k-means++ init — ~5-10× faster at sample scale, and its
-    centroids converge tighter (lower distortion → near-uniform list
-    sizes, no straggler partitions at scale). Tradeoff, measured at
-    100k uniform-random: balanced lists cover FEWER true neighbors
-    per probed cell than MLlib's under-converged imbalanced ones, so
-    recall at a fixed nprobe is lower (0.36 vs 0.51 at nprobe=10/316)
-    even though cost per probe is proportionally lower too. Default
-    stays "mllib" to keep the recorded recall/QPS operating points;
-    pick "local" for build-speed or balanced-partition serving.
+    k-means‖. ``trainer="local"``: one aggregate job counts the
+    training set's cells exactly; when they fit LOCAL_TRAIN_MAX_CELLS,
+    collect it (``collect_vector_matrix``, rows in id order) and run
+    the driver-side BLAS Lloyd with seeded k-means++ init — ~5-10×
+    faster at sample scale, and its centroids converge tighter (lower
+    distortion → near-uniform list sizes, no straggler partitions at
+    scale). Tradeoff, measured at 100k uniform-random: balanced lists
+    cover FEWER true neighbors per probed cell than MLlib's
+    under-converged imbalanced ones, so recall at a fixed nprobe is
+    lower (0.36 vs 0.51 at nprobe=10/316) even though cost per probe
+    is proportionally lower too. Default stays "mllib" to keep the
+    recorded recall/QPS operating points; pick "local" for
+    build-speed or balanced-partition serving.
     """
     if trainer == "local":
-        n = vectors.count()
-        dim_row = vectors.select(F.size(vec_col).alias("d")).first()
-        dim = int(dim_row["d"]) if dim_row is not None else 0
-        if n * dim <= LOCAL_TRAIN_MAX_CELLS:
+        cells = vectors.agg(F.sum(F.size(vec_col))).first()[0] or 0
+        if cells <= LOCAL_TRAIN_MAX_CELLS:
             from gofaiss_spark.functions.kmeans_np import lloyd_kmeans
 
             data = collect_vector_matrix(vectors, vec_col)
@@ -216,14 +225,13 @@ def build_ivf(
     train_df = vectors
     if train_fraction is not None and train_fraction < 1.0:
         train_df = vectors.sample(fraction=train_fraction, seed=seed)
-    sample = train_df.select(F.first(F.size(vec_col)).alias("d")).collect()
-    dim = int(sample[0]["d"])
     cents = train_kmeans_centroids(
         train_df, nlist, seed=seed, vec_col=vec_col, trainer=trainer
     )
     assignments = assign_to_centroids(vectors, cents, metric, vec_col, id_col)
     return IvfIndex(
-        metric=metric, nlist=nlist, dim=dim, centroids=cents, assignments=assignments
+        metric=metric, nlist=nlist, dim=cents.shape[1], centroids=cents,
+        assignments=assignments,
     )
 
 

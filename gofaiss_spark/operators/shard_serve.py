@@ -75,6 +75,7 @@ from collections import OrderedDict
 import numpy as np
 
 from gofaiss_spark.functions.distance import validate_metric
+from gofaiss_spark.plans.artifacts import _read_matrix, _write_json, _write_matrix
 
 SHARD_META = "_shard_meta.json"
 CURRENT_PTR = "_current.json"
@@ -113,7 +114,6 @@ def save_sharded(index_or_vectors, path: str, num_shards: int,
     from gofaiss_spark.operators.ivfsq import IvfSqIndex
     from gofaiss_spark.operators.pq import PqIndex
     from gofaiss_spark.operators.sq import SqIndex
-    from gofaiss_spark.plans.artifacts import _centroids_to_df, _write_df
 
     if num_shards < 1:
         raise ValueError(f"num_shards must be >= 1, got {num_shards}")
@@ -140,6 +140,7 @@ def save_sharded(index_or_vectors, path: str, num_shards: int,
         metric = metric or index_or_vectors.metric
         df = index_or_vectors.assignments.select("id", "vec", "list_id")
         centroids = np.asarray(index_or_vectors.centroids, dtype=np.float64)
+        dim = index_or_vectors.dim
         cols = ["id", "vec", "list_id"]
     elif isinstance(index_or_vectors, IvfPqIndex):
         kind = "ivfpq"
@@ -188,6 +189,7 @@ def save_sharded(index_or_vectors, path: str, num_shards: int,
         if isinstance(index_or_vectors, FlatIndex):
             df = index_or_vectors.vectors
             metric = metric or index_or_vectors.metric
+            dim = index_or_vectors.dim
         else:
             df = index_or_vectors
             metric = metric or "l2"
@@ -229,7 +231,6 @@ def save_sharded(index_or_vectors, path: str, num_shards: int,
                 "pass the full base-vector DataFrame")
         cols = cols + ["vec"]
 
-    spark = df.sparkSession
     # IVF/IVFPQ shard by LIST, not id: a cell fragmented across W
     # shards shrinks every per-cell GEMM/ADC batch by W× and the
     # serving kernel goes overhead-bound (measured 3.5× slower at
@@ -247,34 +248,27 @@ def save_sharded(index_or_vectors, path: str, num_shards: int,
      .write.mode("overwrite").partitionBy("shard_id")
      .parquet(f"{path}/shards"))
     if centroids is not None:
-        _write_df(_centroids_to_df(spark, centroids),
-                  f"{path}/centroids", "parquet")
+        _write_matrix(f"{path}/centroids", centroids)
     if codebooks is not None:
         np.save(f"{path}/codebooks.npy", codebooks)
-    if dim is None:
+    if dim is None:  # a raw DataFrame: the only case that runs its plan again
         dim = len(df.select("vec").first()["vec"])
-    # present-shards manifest: partitionBy writes NO directory for an
-    # empty shard (sparse id space, num_shards > nlist), so readers
-    # need the authoritative per-shard row counts — a missing
-    # directory with shard_rows[s] == 0 is a valid empty shard, not a
-    # corrupt artifact
-    counts = {int(r["shard_id"]): int(r["cnt"]) for r in (
-        sharded.groupBy("shard_id").agg(F.count("*").alias("cnt"))
-        .collect())}
     meta = {
         "kind": kind,
         "metric": metric,
         "num_shards": int(num_shards),
         "dim": int(dim),
         "nlist": int(centroids.shape[0]) if centroids is not None else None,
-        "shard_rows": [counts.get(s, 0) for s in range(num_shards)],
+        # partitionBy writes no directory for an empty shard (sparse
+        # ids, num_shards > nlist): with 0 rows here, a missing
+        # directory is a valid empty shard, not a torn artifact
+        "shard_rows": _footer_rows(path, num_shards),
         "has_vectors": vectors is not None,
         # cache key component: a rewrite at the same path must change it
         "build_id": os.urandom(8).hex(),
         **quant,
     }
-    with open(os.path.join(path, SHARD_META), "w") as f:
-        json.dump(meta, f)
+    _write_json(os.path.join(path, SHARD_META), meta)
     if persisted is not None:
         persisted.unpersist()
     return meta
@@ -354,12 +348,8 @@ def refresh_sharded(index_or_vectors, path: str, num_shards: int,
             old_gen = json.load(f)["generation"]
     except FileNotFoundError:
         pass
-    tmp_ptr = os.path.join(path, f".{CURRENT_PTR}.tmp")
-    with open(tmp_ptr, "w") as f:
-        json.dump({"generation": gen, "build_id": meta["build_id"]}, f)
-        f.flush()
-        os.fsync(f.fileno())
-    os.replace(tmp_ptr, ptr)  # the atomic publish point
+    # the atomic publish point
+    _write_json(ptr, {"generation": gen, "build_id": meta["build_id"]})
 
     # drop_old IMPLIES the shm release: deleting the old artifact
     # destroys the only record of its build_id, so skipping the
@@ -412,17 +402,19 @@ def _spark_of(index_or_vectors, vectors):
     return None
 
 
-def _load_centroids_np(path: str, nlist: int, dim: int) -> np.ndarray:
+def _footer_rows(path: str, num_shards: int) -> list[int]:
+    """Rows per shard, summed from the Parquet footers under
+    ``path/shards`` (no data is read; an empty shard has no
+    directory)."""
     import pyarrow.parquet as pq
 
-    t = pq.read_table(f"{path}/centroids").to_pandas()
-    t = t.sort_values("list_id")
-    out = np.stack(t["centroid"].to_numpy()).astype(np.float64)
-    if out.shape != (nlist, dim):
-        raise ValueError(
-            f"centroids shape {out.shape} != ({nlist}, {dim})"
-        )
-    return out
+    rows = [0] * num_shards
+    for s in range(num_shards):
+        d = f"{path}/shards/shard_id={s}"
+        if os.path.isdir(d):
+            rows[s] = sum(pq.read_metadata(os.path.join(d, fn)).num_rows
+                          for fn in os.listdir(d) if fn.endswith(".parquet"))
+    return rows
 
 
 def _read_shard_arrays(path: str, shard_id: int, meta: dict) -> dict:
@@ -466,8 +458,8 @@ def _read_shard_arrays(path: str, shard_id: int, meta: dict) -> dict:
         arrays["codebooks"] = np.ascontiguousarray(
             np.load(f"{path}/codebooks.npy"))
     if kind in _CELL_KINDS:
-        arrays["centroids"] = np.ascontiguousarray(
-            _load_centroids_np(path, meta["nlist"], meta["dim"]))
+        arrays["centroids"] = _read_matrix(
+            f"{path}/centroids", (meta["nlist"], meta["dim"]))
     return arrays
 
 
@@ -822,21 +814,8 @@ class ShardedSearcher:
         return False
 
     def stats(self) -> dict:
-        import pyarrow.parquet as pq
-
-        rows = self.meta.get("shard_rows")
-        if rows is not None:
-            total = int(sum(rows))
-        else:
-            total = 0
-            for s in range(self.num_shards):
-                d = f"{self.path}/shards/shard_id={s}"
-                if not os.path.isdir(d):
-                    continue  # validly-empty shard writes no directory
-                for fn in os.listdir(d):
-                    if fn.endswith(".parquet"):
-                        total += pq.read_metadata(
-                            os.path.join(d, fn)).num_rows
+        total = int(sum(self.meta.get("shard_rows")
+                        or _footer_rows(self.path, self.num_shards)))
         return {
             "kind": self.meta["kind"],
             "metric": self.meta["metric"],

@@ -18,16 +18,26 @@ partitionBy("list_id") is the load-bearing choice: an nprobe search
 filters list_id IN (...) and Catalyst prunes the untouched partition
 directories at file-listing time — scan cost scales with
 nprobe/nlist, not table size (SURVEY.md §4 row 4).
+
+The small matrices (centroids, codebooks) are written and read on the
+driver with pyarrow, in the columns and types a Spark write gives, so
+no Spark job moves driver-sized data; older Spark-written directories
+read the same way. Every Spark-written component has a
+``_schema.json`` sidecar in both formats, which ``load_index`` reads
+instead of running Spark's schema inference (without one, it infers).
+Sidecars are replaced atomically (``_write_json``).
 """
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
 
 import numpy as np
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 FORMAT_VERSION = "1.0.0"
 
@@ -87,8 +97,7 @@ def migrate_index(spark: SparkSession, path: str, target: str | None = None) -> 
         to_version, fn = _MIGRATIONS[cur]
         meta = fn(spark, path, dict(meta))
         meta["format_version"] = to_version
-        with open(os.path.join(path, "_meta.json"), "w") as f:
-            json.dump(meta, f, indent=2)
+        _write_json(os.path.join(path, "_meta.json"), meta, indent=2)
     return meta
 
 
@@ -109,10 +118,26 @@ def _read_meta_raw(path: str) -> dict:
         return json.load(f)
 
 
+def _write_json(path: str, obj, **dump_kw) -> None:
+    """Write ``obj`` as JSON to ``path`` atomically: a sibling ``.tmp``
+    file, fsync, then ``os.replace``, so a reader or a crash midway
+    sees the previous file or the new one, never a torn one."""
+    tmp = f"{path}.tmp"
+    try:
+        with open(tmp, "w") as f:
+            json.dump(obj, f, **dump_kw)
+            f.flush()
+            os.fsync(f.fileno())
+        os.replace(tmp, path)
+    finally:
+        if os.path.exists(tmp):  # the write failed midway
+            os.unlink(tmp)
+
+
 def _write_meta(path: str, meta: dict) -> None:
     os.makedirs(path, exist_ok=True)
-    with open(os.path.join(path, "_meta.json"), "w") as f:
-        json.dump({**meta, "format_version": FORMAT_VERSION}, f, indent=2)
+    _write_json(os.path.join(path, "_meta.json"),
+                {**meta, "format_version": FORMAT_VERSION}, indent=2)
 
 
 def _read_meta(path: str) -> dict:
@@ -122,41 +147,71 @@ def _read_meta(path: str) -> dict:
     return meta
 
 
-def _centroids_to_df(spark: SparkSession, centroids: np.ndarray):
-    return spark.createDataFrame(
-        [(int(i), [float(x) for x in c]) for i, c in enumerate(centroids)],
-        schema="list_id int, centroid array<double>",
-    )
+_MATRIX_KEYS = {2: ("list_id",), 3: ("m", "k")}
 
 
-def _codebooks_to_df(spark: SparkSession, codebooks: np.ndarray):
-    mm, ksub, _ = codebooks.shape
-    rows = [
-        (int(m), int(k), [float(x) for x in codebooks[m, k]])
-        for m in range(mm)
-        for k in range(ksub)
-    ]
-    return spark.createDataFrame(rows, schema="m int, k int, centroid array<double>")
+def _write_matrix(path: str, mat: np.ndarray, fmt: str = "parquet") -> None:
+    """Write a small matrix (centroids or codebooks) from the driver,
+    one row per leading index, in the columns and types a Spark write
+    gave (``list_id int, centroid array<double>`` or ``m int, k int,
+    centroid array<double>``). Replaces the whole directory, so no part
+    file of an earlier save survives to be read."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    mat = np.asarray(mat, dtype=np.float64)
+    keys = _MATRIX_KEYS[mat.ndim]
+    idx = np.indices(mat.shape[:-1]).reshape(len(keys), -1).astype(np.int32)
+    rows = mat.reshape(-1, mat.shape[-1])
+    offsets = np.arange(0, rows.size + 1, rows.shape[1], dtype=np.int32)
+    tbl = pa.table({
+        **{k: pa.array(col) for k, col in zip(keys, idx)},
+        "centroid": pa.ListArray.from_arrays(offsets, rows.ravel()),
+    })
+    shutil.rmtree(path, ignore_errors=True)
+    os.makedirs(path)
+    if fmt == "json":
+        with open(os.path.join(path, "part-00000.json"), "w") as f:
+            f.writelines(json.dumps(r) + "\n" for r in tbl.to_pylist())
+    else:
+        # dictionary pages only add bytes to a matrix of distinct
+        # doubles (128×128: 161.5 KB with them, 132.6 KB without)
+        pq.write_table(tbl, os.path.join(path, "part-00000.parquet"),
+                       use_dictionary=False)
 
 
-def _df_to_centroids(df, nlist: int, dim: int) -> np.ndarray:
-    out = np.zeros((nlist, dim), dtype=np.float64)
-    for r in df.collect():
-        out[r.list_id] = np.asarray(r.centroid)
+def _read_matrix(path: str, shape: tuple, fmt: str = "parquet") -> np.ndarray:
+    """Read a small matrix written by ``_write_matrix``, or by an older
+    Spark write of the same rows, on the driver. Files whose names
+    start with ``_`` or ``.`` (``_SUCCESS``, ``.crc``) are skipped."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from gofaiss_spark.operators.local_serve import _list_matrix
+
+    if fmt == "json":
+        recs = []
+        for name in sorted(os.listdir(path)):
+            if not name.startswith(("_", ".")):
+                with open(os.path.join(path, name)) as f:
+                    recs += map(json.loads, filter(str.strip, f))
+        tbl = pa.Table.from_pylist(recs)
+    else:
+        tbl = pq.read_table(path)
+    out = np.zeros(shape, dtype=np.float64)
+    at = tuple(tbl.column(k).to_numpy() for k in _MATRIX_KEYS[len(shape)])
+    out[at] = _list_matrix(tbl.column("centroid"), shape[-1], np.float64)
     return out
 
 
-def _df_to_codebooks(df, m: int, ksub: int, dsub: int) -> np.ndarray:
-    out = np.zeros((m, ksub, dsub), dtype=np.float64)
-    for r in df.collect():
-        out[r.m, r.k] = np.asarray(r.centroid)
-    return out
+SCHEMA_FILE = "_schema.json"
 
 
 def _write_df(df, path: str, fmt: str, partition_by: str | None = None) -> None:
-    """Write one artifact component. For the JSON debug format a
-    ``_schema.json`` sidecar (underscore prefix → ignored by Spark's
-    hidden-file filter) preserves exact types for the round-trip."""
+    """Write one Spark component and its ``_schema.json`` sidecar
+    (underscore prefix → ignored by Spark's hidden-file filter), which
+    keeps exact types for the JSON round-trip and lets ``_read_df``
+    skip schema inference."""
     if partition_by:
         # Cluster rows by the partition key BEFORE the partitioned
         # write (optimization r12; guide §6 — coalesce on write, aim
@@ -171,9 +226,33 @@ def _write_df(df, path: str, fmt: str, partition_by: str | None = None) -> None:
     if partition_by:
         w = w.partitionBy(partition_by)
     getattr(w, fmt)(path)
-    if fmt == "json":
-        with open(os.path.join(path, "_schema.json"), "w") as f:
-            f.write(df.schema.json())
+    _write_json(os.path.join(path, SCHEMA_FILE), df.schema.jsonValue())
+
+
+def _read_schema(path: str):
+    """The schema a component's ``_schema.json`` records, or None."""
+    try:
+        with open(os.path.join(path, SCHEMA_FILE)) as f:
+            return StructType.fromJson(json.load(f))
+    except FileNotFoundError:
+        return None
+
+
+def _read_df(spark: SparkSession, path: str, fmt: str = "parquet"):
+    """Read one Spark component with the schema its ``_schema.json``
+    records (no inference job); without the sidecar, infer."""
+    schema = _read_schema(path)
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return getattr(reader, fmt)(path)
+
+
+def _drop_stale_schema(path: str, schema) -> None:
+    """After an append of rows of ``schema`` to the component at
+    ``path``, drop its ``_schema.json`` unless it records the same
+    columns and types, so it never disagrees with the files."""
+    kept = _read_schema(path)
+    if kept is not None and kept.simpleString() != schema.simpleString():
+        os.unlink(os.path.join(path, SCHEMA_FILE))
 
 
 def export_index_json(index, path: str) -> None:
@@ -186,53 +265,25 @@ def export_index_json(index, path: str) -> None:
     save_index(index, path, fmt="json")
 
 
-def _is_pca(index) -> bool:
-    from gofaiss_spark.operators.pca import PcaModel
-
-    return isinstance(index, PcaModel)
-
-
-def _is_sq(index) -> bool:
-    from gofaiss_spark.operators.sq import SqIndex
-
-    return isinstance(index, SqIndex)
-
-
-def _is_ivfsq(index) -> bool:
-    from gofaiss_spark.operators.ivfsq import IvfSqIndex
-
-    return isinstance(index, IvfSqIndex)
-
-
-def _is_hnsw_sharded(index) -> bool:
-    from gofaiss_spark.operators.hnsw import HnswShardedIndex
-
-    return isinstance(index, HnswShardedIndex)
-
-
-def _is_opq(index) -> bool:
-    from gofaiss_spark.operators.opq import OpqIndex
-
-    return isinstance(index, OpqIndex)
-
-
-def _is_hnsw_routed(index) -> bool:
-    from gofaiss_spark.operators.hnsw import HnswRoutedIndex
-
-    return isinstance(index, HnswRoutedIndex)
-
-
 def save_index(index, path: str, fmt: str = "parquet") -> None:
     """Persist any index artifact (Save parity: flat.go:123-147,
     ivfpq.go:367-470 — but Parquet, not gob; ``fmt="json"`` gives the
     debug export of pkg/storage/json.go)."""
     from gofaiss_spark.operators.flat import FlatIndex
+    from gofaiss_spark.operators.hnsw import (
+        HnswIndex,
+        HnswRoutedIndex,
+        HnswShardedIndex,
+    )
     from gofaiss_spark.operators.ivf import IvfIndex
     from gofaiss_spark.operators.ivfpq import IvfPqIndex
+    from gofaiss_spark.operators.ivfsq import IvfSqIndex
     from gofaiss_spark.operators.lsh import LshIndex
+    from gofaiss_spark.operators.opq import OpqIndex
+    from gofaiss_spark.operators.pca import PcaModel
     from gofaiss_spark.operators.pq import PqIndex
-
     from gofaiss_spark.operators.retrieval import TextIndex, save_text_index
+    from gofaiss_spark.operators.sq import SqIndex
 
     if fmt not in ("parquet", "json"):
         raise ValueError(f"unknown artifact format {fmt!r}")
@@ -264,8 +315,7 @@ def save_index(index, path: str, fmt: str = "parquet") -> None:
                 "params": {"nlist": index.nlist},
             }
         )
-        spark = index.assignments.sparkSession
-        _write_df(_centroids_to_df(spark, index.centroids), f"{path}/centroids", fmt)
+        _write_matrix(f"{path}/centroids", index.centroids, fmt)
         _write_df(index.assignments, f"{path}/assignments", fmt, "list_id")
     elif isinstance(index, PqIndex):
         wm(
@@ -276,10 +326,9 @@ def save_index(index, path: str, fmt: str = "parquet") -> None:
                 "params": {"m": index.m, "nbits": index.nbits},
             }
         )
-        spark = index.codes.sparkSession
-        _write_df(_codebooks_to_df(spark, index.codebooks), f"{path}/codebooks", fmt)
+        _write_matrix(f"{path}/codebooks", index.codebooks, fmt)
         _write_df(index.codes, f"{path}/codes", fmt)
-    elif _is_opq(index):
+    elif isinstance(index, OpqIndex):
         wm(
             {
                 "index_type": "opq",
@@ -304,7 +353,7 @@ def save_index(index, path: str, fmt: str = "parquet") -> None:
             schema="i int, row array<double>",
         )
         _write_df(rot_df, f"{path}/rotation", fmt)
-        _write_df(_codebooks_to_df(spark, index.pq.codebooks), f"{path}/codebooks", fmt)
+        _write_matrix(f"{path}/codebooks", index.pq.codebooks, fmt)
         _write_df(index.pq.codes, f"{path}/codes", fmt)
     elif isinstance(index, IvfPqIndex):
         wm(
@@ -319,9 +368,8 @@ def save_index(index, path: str, fmt: str = "parquet") -> None:
                 },
             }
         )
-        spark = index.codes.sparkSession
-        _write_df(_centroids_to_df(spark, index.centroids), f"{path}/centroids", fmt)
-        _write_df(_codebooks_to_df(spark, index.codebooks), f"{path}/codebooks", fmt)
+        _write_matrix(f"{path}/centroids", index.centroids, fmt)
+        _write_matrix(f"{path}/codebooks", index.codebooks, fmt)
         _write_df(index.codes, f"{path}/codes", fmt, "list_id")
     elif isinstance(index, LshIndex):
         wm(
@@ -343,7 +391,7 @@ def save_index(index, path: str, fmt: str = "parquet") -> None:
         # is the artifact-size killer at scale)
         _write_df(index.buckets, f"{path}/buckets", fmt, "t")
         _write_df(index.vectors, f"{path}/vectors", fmt)
-    elif _is_ivfsq(index):
+    elif isinstance(index, IvfSqIndex):
         wm(
             {
                 "index_type": "ivfsq",
@@ -356,10 +404,9 @@ def save_index(index, path: str, fmt: str = "parquet") -> None:
                 },
             }
         )
-        spark = index.codes.sparkSession
-        _write_df(_centroids_to_df(spark, index.centroids), f"{path}/centroids", fmt)
+        _write_matrix(f"{path}/centroids", index.centroids, fmt)
         _write_df(index.codes, f"{path}/codes", fmt, "list_id")
-    elif _is_sq(index):
+    elif isinstance(index, SqIndex):
         wm(
             {
                 "index_type": "sq",
@@ -372,7 +419,7 @@ def save_index(index, path: str, fmt: str = "parquet") -> None:
             }
         )
         _write_df(index.codes, f"{path}/codes", fmt)
-    elif _is_pca(index):
+    elif isinstance(index, PcaModel):
         # components are k×dim floats (a few KB) — they ride in the
         # meta like the LSH projections; no table to write
         wm(
@@ -391,7 +438,7 @@ def save_index(index, path: str, fmt: str = "parquet") -> None:
                 },
             }
         )
-    elif _is_hnsw_sharded(index):
+    elif isinstance(index, HnswShardedIndex):
         # per-shard graph blobs: the table IS the index (one pickled
         # graph per shard row, bounded by rows_per_shard at build);
         # partitionBy("shard_id") so a future selective-shard serve
@@ -412,7 +459,7 @@ def save_index(index, path: str, fmt: str = "parquet") -> None:
             }
         )
         _write_df(index.blobs, f"{path}/shards", "parquet", "shard_id")
-    elif _is_hnsw_routed(index):
+    elif isinstance(index, HnswRoutedIndex):
         # routed variant: hnsw_sharded's blob table plus the coarse
         # centroid routing table (IVF-style); shards partitioned by
         # shard_id so a routed serve over the persisted artifact can
@@ -432,14 +479,9 @@ def save_index(index, path: str, fmt: str = "parquet") -> None:
                 },
             }
         )
-        spark = index.blobs.sparkSession
-        _write_df(
-            _centroids_to_df(spark, index.centroids), f"{path}/centroids", "parquet"
-        )
+        _write_matrix(f"{path}/centroids", index.centroids)
         _write_df(index.blobs, f"{path}/shards", "parquet", "shard_id")
     else:
-        from gofaiss_spark.operators.hnsw import HnswIndex
-
         if not isinstance(index, HnswIndex):
             raise TypeError(f"cannot save index of type {type(index).__name__}")
         g = index.graph
@@ -478,29 +520,32 @@ def load_index(spark: SparkSession, path: str):
     NewSearcher/detectIndexType analogue (search.go:42-53, :193-208),
     but dispatching on declared metadata instead of a type switch."""
     from gofaiss_spark.operators.flat import FlatIndex
+    from gofaiss_spark.operators.hnsw import (
+        MAX_LEVEL_CAP,
+        HnswGraph,
+        HnswIndex,
+        HnswRoutedIndex,
+        HnswShardedIndex,
+    )
     from gofaiss_spark.operators.ivf import IvfIndex
     from gofaiss_spark.operators.ivfpq import IvfPqIndex
+    from gofaiss_spark.operators.ivfsq import IvfSqIndex
     from gofaiss_spark.operators.lsh import LshIndex
+    from gofaiss_spark.operators.opq import OpqIndex
+    from gofaiss_spark.operators.pca import PcaModel
     from gofaiss_spark.operators.pq import PqIndex
+    from gofaiss_spark.operators.retrieval import load_text_index
+    from gofaiss_spark.operators.sq import SqIndex
 
     meta = _read_meta(path)
     itype = meta["index_type"]
     if itype == "text_bm25":
-        from gofaiss_spark.operators.retrieval import load_text_index
-
         return load_text_index(spark, path)
     dim = int(meta["dim"])
     fmt = meta.get("format", "parquet")
 
     def rd(name: str):
-        p = f"{path}/{name}"
-        if fmt == "json":
-            from pyspark.sql.types import StructType
-
-            with open(os.path.join(p, "_schema.json")) as f:
-                schema = StructType.fromJson(json.load(f))
-            return spark.read.schema(schema).json(p)
-        return spark.read.parquet(p)
+        return _read_df(spark, f"{path}/{name}", fmt)
 
     if itype == "flat":
         return FlatIndex(
@@ -510,7 +555,7 @@ def load_index(spark: SparkSession, path: str):
         )
     if itype == "ivf":
         nlist = int(meta["params"]["nlist"])
-        cents = _df_to_centroids(rd("centroids"), nlist, dim)
+        cents = _read_matrix(f"{path}/centroids", (nlist, dim), fmt)
         return IvfIndex(
             metric=meta["metric"],
             nlist=nlist,
@@ -521,7 +566,7 @@ def load_index(spark: SparkSession, path: str):
     if itype == "pq":
         m = int(meta["params"]["m"])
         nbits = int(meta["params"]["nbits"])
-        cb = _df_to_codebooks(rd("codebooks"), m, 1 << nbits, dim // m)
+        cb = _read_matrix(f"{path}/codebooks", (m, 1 << nbits, dim // m), fmt)
         return PqIndex(
             dim=dim,
             m=m,
@@ -530,11 +575,9 @@ def load_index(spark: SparkSession, path: str):
             codes=rd("codes"),
         )
     if itype == "opq":
-        from gofaiss_spark.operators.opq import OpqIndex
-
         m = int(meta["params"]["m"])
         nbits = int(meta["params"]["nbits"])
-        cb = _df_to_codebooks(rd("codebooks"), m, 1 << nbits, dim // m)
+        cb = _read_matrix(f"{path}/codebooks", (m, 1 << nbits, dim // m), fmt)
         rot = np.zeros((dim, dim), dtype=np.float64)
         for r in rd("rotation").collect():
             rot[r.i] = np.asarray(r.row)
@@ -551,8 +594,8 @@ def load_index(spark: SparkSession, path: str):
     if itype == "ivfpq":
         p = meta["params"]
         nlist, m, nbits = int(p["nlist"]), int(p["m"]), int(p["nbits"])
-        cents = _df_to_centroids(rd("centroids"), nlist, dim)
-        cb = _df_to_codebooks(rd("codebooks"), m, 1 << nbits, dim // m)
+        cents = _read_matrix(f"{path}/centroids", (nlist, dim), fmt)
+        cb = _read_matrix(f"{path}/codebooks", (m, 1 << nbits, dim // m), fmt)
         return IvfPqIndex(
             metric=meta["metric"],
             nlist=nlist,
@@ -579,11 +622,9 @@ def load_index(spark: SparkSession, path: str):
             vectors=rd("vectors"),
         )
     if itype == "ivfsq":
-        from gofaiss_spark.operators.ivfsq import IvfSqIndex
-
         p = meta["params"]
         nlist = int(p["nlist"])
-        cents = _df_to_centroids(rd("centroids"), nlist, dim)
+        cents = _read_matrix(f"{path}/centroids", (nlist, dim), fmt)
         return IvfSqIndex(
             metric=meta["metric"],
             nlist=nlist,
@@ -595,8 +636,6 @@ def load_index(spark: SparkSession, path: str):
             colocated=True,  # partitionBy("list_id") artifact
         )
     if itype == "sq":
-        from gofaiss_spark.operators.sq import SqIndex
-
         p = meta["params"]
         return SqIndex(
             dim=dim,
@@ -606,8 +645,6 @@ def load_index(spark: SparkSession, path: str):
             codes=rd("codes"),
         )
     if itype == "pca":
-        from gofaiss_spark.operators.pca import PcaModel
-
         p = meta["params"]
         return PcaModel(
             dim=dim,
@@ -618,12 +655,6 @@ def load_index(spark: SparkSession, path: str):
             ),
         )
     if itype == "hnsw":
-        from gofaiss_spark.operators.hnsw import (
-            MAX_LEVEL_CAP,
-            HnswGraph,
-            HnswIndex,
-        )
-
         p = meta["params"]
         rows = rd("nodes").toPandas()
         ids = rows["id"].to_numpy(dtype=np.int64)
@@ -654,11 +685,9 @@ def load_index(spark: SparkSession, path: str):
             graph=g, ef_search=int(p["ef_search"]), seed=int(p["seed"]), spark=spark
         )
     if itype == "hnsw_sharded":
-        from gofaiss_spark.operators.hnsw import HnswShardedIndex
-
         p = meta["params"]
         return HnswShardedIndex(
-            blobs=spark.read.parquet(f"{path}/shards"),
+            blobs=_read_df(spark, f"{path}/shards"),
             metric=meta["metric"],
             m=int(p["m"]),
             ef_construction=int(p["ef_construction"]),
@@ -667,15 +696,11 @@ def load_index(spark: SparkSession, path: str):
             spark=spark,
         )
     if itype == "hnsw_routed":
-        from gofaiss_spark.operators.hnsw import HnswRoutedIndex
-
         p = meta["params"]
         nlist = int(p["nlist"])
-        cents = _df_to_centroids(
-            spark.read.parquet(f"{path}/centroids"), nlist, dim
-        )
+        cents = _read_matrix(f"{path}/centroids", (nlist, dim))
         return HnswRoutedIndex(
-            blobs=spark.read.parquet(f"{path}/shards"),
+            blobs=_read_df(spark, f"{path}/shards"),
             centroids=cents,
             metric=meta["metric"],
             m=int(p["m"]),
@@ -718,8 +743,6 @@ def _swap_dir(tmp: str, dst: str) -> None:
     """Replace ``dst`` with ``tmp`` (local-FS artifact layout; on a
     real lake this is the table format's commit — Iceberg/Delta
     rewrite-files, or a HDFS rename)."""
-    import shutil
-
     old = dst + ".old"
     shutil.rmtree(old, ignore_errors=True)
     os.rename(dst, old)
@@ -744,27 +767,20 @@ def compact_index(
     partition directories; search results are byte-identical (gated
     in tests). Returns {table: {files_before, files_after, rows}}.
     """
-    from pyspark.sql import functions as F  # noqa: F401
-
     meta = _read_meta(path)
     tables, partitioned = _DATA_TABLES.get(meta["index_type"], ([], []))
     report: dict = {}
     for name in tables:
         tdir = f"{path}/{name}"
         before = len(_parquet_files(tdir))
-        df = spark.read.parquet(tdir)
+        df = _read_df(spark, tdir)
         rows = df.count()
         tmp = f"{path}/.{name}.compact"
         if name in partitioned:
-            (
-                df.repartition("list_id")
-                .write.mode("overwrite")
-                .partitionBy("list_id")
-                .parquet(tmp)
-            )
+            _write_df(df, tmp, "parquet", "list_id")
         else:
             n_files = max(1, -(-rows // target_rows_per_file))
-            df.coalesce(n_files).write.mode("overwrite").parquet(tmp)
+            _write_df(df.coalesce(n_files), tmp, "parquet")
         _swap_dir(tmp, tdir)
         report[name] = {
             "files_before": before,
@@ -789,10 +805,6 @@ def remove_from_index(spark: SparkSession, path: str, ids) -> int:
     skips). Unpartitioned tables rewrite wholesale. Returns the
     number of rows removed from the primary data table.
     """
-    import shutil
-
-    from pyspark.sql import functions as F
-
     if not isinstance(ids, (list, tuple)):
         ids = [r[0] for r in ids.collect()]
     ids = [int(i) for i in ids]
@@ -802,7 +814,7 @@ def remove_from_index(spark: SparkSession, path: str, ids) -> int:
     for name in tables:
         primary = name == tables[0]
         tdir = f"{path}/{name}"
-        df = spark.read.parquet(tdir)
+        df = _read_df(spark, tdir)
         id_col = "id" if "id" in df.columns else df.columns[0]
         hit = F.col(id_col).isin(ids)
         if name in partitioned:
@@ -817,9 +829,9 @@ def remove_from_index(spark: SparkSession, path: str, ids) -> int:
                 removed = sub.filter(hit).count()
             keep = sub.filter(~hit)
             tmp = f"{path}/.{name}.remove"
-            keep.repartition("list_id").write.mode("overwrite").partitionBy(
-                "list_id"
-            ).parquet(tmp)
+            # the rewritten lists keep the table's schema, so its
+            # ``_schema.json`` stays true
+            _write_df(keep, tmp, "parquet", "list_id")
             for lid in affected:
                 old = f"{tdir}/list_id={lid}"
                 new = f"{tmp}/list_id={lid}"
@@ -834,6 +846,6 @@ def remove_from_index(spark: SparkSession, path: str, ids) -> int:
             if primary:
                 removed = n
             tmp = f"{path}/.{name}.remove"
-            df.filter(~hit).write.mode("overwrite").parquet(tmp)
+            _write_df(df.filter(~hit), tmp, "parquet")
             _swap_dir(tmp, tdir)
     return removed

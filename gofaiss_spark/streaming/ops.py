@@ -294,7 +294,7 @@ def stream_add_to_ivf(
 
     def add_batch(batch: DataFrame, batch_id: int) -> None:
         from gofaiss_spark.operators.ivf import assign_to_centroids
-        from gofaiss_spark.plans.artifacts import load_index
+        from gofaiss_spark.plans.artifacts import _drop_stale_schema, load_index
 
         if batch.isEmpty():
             return
@@ -304,9 +304,9 @@ def stream_add_to_ivf(
             idx.centroids,
             idx.metric,
         )
-        assigned.write.mode("append").partitionBy("list_id").parquet(
-            f"{index_path}/assignments"
-        )
+        table = f"{index_path}/assignments"
+        assigned.write.mode("append").partitionBy("list_id").parquet(table)
+        _drop_stale_schema(table, assigned.schema)
 
     return (
         stream.writeStream.foreachBatch(add_batch)

@@ -376,11 +376,14 @@ def test_refresh_generation_bump_keeps_cached_searcher(base, tmp_path):
     (_meta.json / _shard_meta.json), whose rewrite still means 'a
     different artifact now lives at this path'."""
     _, vdf, qdf = base
-    from gofaiss_spark.operators.shard_serve import refresh_sharded
+    from gofaiss_spark.operators.shard_serve import (
+        refresh_sharded,
+        release_shards,
+    )
 
     idx = api.build_index(vdf, index_type="ivf", params={"nlist": 6})
     path = str(tmp_path / "refresh_root")
-    refresh_sharded(idx, path, num_shards=2)
+    meta1 = refresh_sharded(idx, path, num_shards=2)
     try:
         srv1 = api.serve(path, spark=vdf.sparkSession)
         got1 = _rows(api.search(path, qdf, k=K, params={"nprobe": 6}))
@@ -406,3 +409,7 @@ def test_refresh_generation_bump_keeps_cached_searcher(base, tmp_path):
         assert got2 != got1
     finally:
         api.invalidate_cached(path)
+        # the first generation's shm was kept alive on purpose
+        # (release_old=False); the test owns its release
+        release_shards(vdf.sparkSession,
+                       os.path.join(path, f"gen-{meta1['build_id']}"))
