@@ -87,6 +87,13 @@ def get_spark(app_name: str = "gofaiss_spark", cpus: int | None = None) -> Spark
         # without this; the traceback made the r6 bench stage-3004
         # crash adjudicable (r6 verdict item 1c). Negligible overhead.
         .config("spark.python.worker.faulthandler.enabled", "true")
+        # Spark keys its Python worker pools by environment, and the SQL
+        # runners (pandas/Arrow UDFs) add this variable to theirs. Giving
+        # RDD jobs (the sharded tier's serving job) the same value lets
+        # both share one pool of workers instead of starting a second
+        # daemon with its own workers (perfbench sharded_batch on 4
+        # CPUs: 250 MB more peak RSS with two pools).
+        .config("spark.executorEnv.SPARK_SIMPLIFIED_TRACEBACK", "1")
     )
     # Before every task PySpark calls importlib.invalidate_caches(),
     # and before CPython 3.13 that re-reads the zip directory of each

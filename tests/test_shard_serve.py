@@ -649,3 +649,23 @@ class TestRobustness:
         shutil.rmtree(f"{path}/shards/shard_id=1")
         with pytest.raises(FileNotFoundError, match="torn"):
             ss._read_shard_arrays(path, 1, meta)
+
+    def test_serving_job_shares_the_udf_worker_pool(self, spark):
+        # The serving job is an RDD job. Spark starts a separate worker
+        # daemon for every distinct worker environment; get_spark gives
+        # RDD jobs the environment the pandas/Arrow UDF runners use, so
+        # both kinds of job run in workers forked by one daemon.
+        import os
+
+        import pandas as pd
+
+        def parent_pid(it):
+            for _ in it:
+                pass
+            yield pd.DataFrame({"ppid": [os.getppid()]})
+
+        udf = {r.ppid for r in spark.range(0, 4, 1, 4)
+               .mapInPandas(parent_pid, schema="ppid long").collect()}
+        rdd = set(spark.sparkContext.parallelize(range(4), 4)
+                  .mapPartitions(lambda it: [os.getppid()]).collect())
+        assert udf == rdd and len(udf) == 1
