@@ -4177,6 +4177,7 @@ def _doc_bm25_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     load_text_index), so the driver hash-checks the partition-pruned
     probe path (literal bucket+term pushdown) against the identical
     oracle. A pruning bug that drops postings breaks the hash."""
+    import shutil
     import tempfile
 
     from gofaiss_spark.operators.retrieval import (
@@ -4189,12 +4190,17 @@ def _doc_bm25_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     idx = build_text_index(docs)
     path = tempfile.mkdtemp(prefix="gfs_text_idx_")
-    save_text_index(idx, path)
-    loaded = load_text_index(spark, path)
-    q = spark.createDataFrame(
-        _BM25_QUERY_TEXTS, "query_id long, query_text string"
-    )
-    return search_bm25(loaded, q, k=TOPK_K)
+    try:
+        save_text_index(idx, path)
+        loaded = load_text_index(spark, path)
+        q = spark.createDataFrame(
+            _BM25_QUERY_TEXTS, "query_id long, query_text string"
+        )
+        res = search_bm25(loaded, q, k=TOPK_K)
+        # evaluate before the artifact is removed
+        return spark.createDataFrame(res.toPandas(), schema=res.schema)
+    finally:
+        shutil.rmtree(path, ignore_errors=True)
 
 
 def _doc_tfidf_terms(spark: SparkSession, sf_dir: str) -> DataFrame:

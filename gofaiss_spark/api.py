@@ -15,6 +15,7 @@ from __future__ import annotations
 
 import atexit
 import os
+import threading
 import time
 
 from pyspark.sql import DataFrame, SparkSession
@@ -186,8 +187,12 @@ def cache_index(index) -> None:
 # additionally hides the EXECUTION TIER. Three tiers exist (SCALE.md):
 #
 #   local        driver-colocated replica (operators/local_serve.py) —
-#                the single-node serving regime; a LocalServerPool of
-#                spawn workers is used for large batches (GIL-free).
+#                the single-node serving regime. ``serve()`` spawns the
+#                replica's LocalServerPool of spawn workers, and every
+#                request of the served handle runs there (GIL-free),
+#                split into tasks of at least POOL_TASK_QUERIES (16)
+#                queries, at most workers × 2: a small request is one
+#                task, so concurrent callers each take a worker.
 #   sharded      executor-colocated shm shards (operators/
 #                shard_serve.py) over a partitioned artifact.
 #   distributed  the Spark plan (scan per query batch) — the only tier
@@ -196,11 +201,14 @@ def cache_index(index) -> None:
 #
 # ``tier="auto"`` (the DEFAULT for api.search) routes by artifact
 # size: an index whose localized footprint fits LOCAL_TIER_CAP_MB
-# serves from a driver replica (inside the local tier, batch shape
-# picks pool vs in-process at POOL_MIN_BATCH), a ShardedSearcher
-# handle — or a saved shard-partitioned artifact path — serves from
-# its executor/host-colocated shards, anything else runs the
-# distributed plan. Localization
+# serves from a driver replica, a ShardedSearcher handle — or a saved
+# shard-partitioned artifact path — serves from its executor/host-
+# colocated shards, anything else runs the distributed plan. Inside
+# the local tier a request runs in process only when no pool is
+# resident and it is a one-shot call below POOL_MIN_BATCH (a call at
+# or above it spawns the pool), when it overrides ef_search (the pool
+# bakes ef at spawn), or when the pool cannot spawn or fails (counted
+# in POOL_FALLBACKS, with a warning). Localization
 # happens ONCE per index object (cached), so the first call pays the
 # collect and steady-state serving runs at replica speed. All tiers
 # return bit-identical results by construction (the local kernels are
@@ -388,7 +396,8 @@ def resolve_tier(index, params: dict | None = None,
     object, a live ShardedSearcher, or a saved-artifact PATH (a
     shard-partitioned artifact routes to the sharded tier; batch
     shape never changes the tier — inside the local tier it only
-    picks pool vs in-process serving at POOL_MIN_BATCH).
+    decides whether a one-shot call spawns the pool, at
+    POOL_MIN_BATCH).
 
     ``n_queries`` is the deprecated pre-r10 second positional
     parameter — batch shape no longer affects the tier, so it is
@@ -461,23 +470,79 @@ def _to_local_handle(index):
     return h
 
 
-def _to_pool_handle(index):
-    """LocalServerPool per index object (cached; closed at exit)."""
-    p = index.__dict__.get("_tier_pool")
-    if p is None:
-        from gofaiss_spark.operators.local_serve import LocalServerPool
+def _pool_lock(index):
+    """The index's own pool lock: concurrent first calls spawn one
+    pool, and a spawn on one index stalls no other index's requests."""
+    return index.__dict__.setdefault("_tier_pool_lock", threading.Lock())
 
-        p = LocalServerPool(_to_local_handle(index))
-        index.__dict__["_tier_pool"] = p
-        _POOLS.append(p)
+
+def _to_pool_handle(index):
+    """LocalServerPool per index object (cached; closed at exit). A
+    cached pool is read without the lock; only a spawn takes it."""
+    p = index.__dict__.get("_tier_pool")
+    if p is not None:
+        return p
+    with _pool_lock(index):
+        p = index.__dict__.get("_tier_pool")
+        if p is None:
+            from gofaiss_spark.operators.local_serve import LocalServerPool
+
+            p = LocalServerPool(_to_local_handle(index))
+            index.__dict__["_tier_pool"] = p
+            _POOLS.append(p)
+        return p
+
+
+def _uncache_pool(index, pool=None):
+    """Pop the index's cached pool (only if it is ``pool``, when one is
+    given) and unregister it → the pool popped, or None."""
+    if index.__dict__.get("_tier_pool") is None:
+        return None
+    with _pool_lock(index):
+        p = index.__dict__.get("_tier_pool")
+        if p is None or (pool is not None and p is not pool):
+            return None
+        del index.__dict__["_tier_pool"]
+    try:
+        _POOLS.remove(p)
+    except ValueError:
+        pass
     return p
+
+
+def _drop_pool(index, pool, exc: Exception, what: str) -> None:
+    """A pool that cannot spawn (``pool`` None) or that failed: the
+    in-process replica serves the same bits, but not silently. Count
+    the fallback in POOL_FALLBACKS, warn, and close and unregister the
+    dead pool. Left cached it would re-raise forever; left in _POOLS
+    (or its workers alive) it leaks processes + shm until interpreter
+    exit. Of the concurrent requests that saw one pool fail, only the
+    one that uncaches it counts and warns, and none touches a fresh
+    pool cached since — one count per FAILED pool, never one per
+    call."""
+    import warnings
+
+    from gofaiss_spark.operators import local_serve as ls
+
+    if pool is not None:
+        if _uncache_pool(index, pool) is None:
+            return  # another request already dropped it
+        try:
+            pool.close()
+        except Exception:
+            pass
+    ls._count_fallback("POOL_FALLBACKS")
+    warnings.warn(
+        f"LocalServerPool failed ({type(exc).__name__}: {exc}); {what}",
+        RuntimeWarning, stacklevel=3)
 
 
 def _local_search_np(index, qmat, k: int, params: dict):
     """Serve a query matrix from the driver replica → (ids, dists).
-    Pool for large batches; in-process for small ones (the pool's
-    scatter overhead loses below POOL_MIN_BATCH) and for per-call
-    ef_search overrides (the pool bakes ef at spawn)."""
+    The pool serves every request when one is resident (``serve()``
+    spawns it) and a one-shot request of POOL_MIN_BATCH queries or
+    more (spawning the pool); the replica serves the rest in process,
+    and per-call ef_search overrides (the pool bakes ef at spawn)."""
     from gofaiss_spark.operators import local_serve as ls
     from gofaiss_spark.operators.hnsw import HnswIndex, HnswRoutedIndex
 
@@ -493,53 +558,39 @@ def _local_search_np(index, qmat, k: int, params: dict):
         nprobe = params.get("nprobe", DEFAULT_NPROBE)
     refine = params.get("refine")
     ef = params.get("ef_search")
-    use_pool = len(qmat) >= POOL_MIN_BATCH and ef is None
-    if use_pool:
-        try:
-            return _to_pool_handle(index).search(
-                qmat, k=k, nprobe=nprobe, refine=refine)
-        except Exception as exc:
-            # pool spawn/IPC can fail in constrained environments —
-            # the in-process replica serves the same bits, but not
-            # silently: each fallback is counted and each dead pool
-            # warns once. Close and unregister the dead pool: leaving
-            # it cached would re-raise forever, and leaving it in
-            # _POOLS (or its workers alive) leaks processes + shm
-            # until interpreter exit — one fresh pool attempt per
-            # FAILED pool, never one per call.
-            import warnings
 
-            ls._count_fallback("POOL_FALLBACKS")
-            warnings.warn(
-                f"LocalServerPool failed ({type(exc).__name__}: {exc}); "
-                "serving this batch in process",
-                RuntimeWarning, stacklevel=2)
-            dead = index.__dict__.pop("_tier_pool", None)
-            if dead is not None:
-                try:
-                    dead.close()
-                except Exception:
-                    pass
-                try:
-                    _POOLS.remove(dead)
-                except ValueError:
-                    pass
-    h = _to_local_handle(index)
-    if isinstance(h, ls.LocalFlatIndex):
+    def in_process():
+        h = _to_local_handle(index)
+        if isinstance(h, ls.LocalFlatIndex):
+            return h.search(qmat, k=k)
+        if isinstance(h, ls.LocalIvfIndex):
+            return h.search(qmat, k=k, nprobe=nprobe)
+        if isinstance(h, (ls.LocalIvfPqIndex, ls.LocalIvfSqIndex)):
+            return h.search(qmat, k=k, nprobe=nprobe, refine=refine)
+        if isinstance(h, (ls.LocalPqIndex, ls.LocalSqIndex)):
+            return h.search(qmat, k=k, refine=refine)
+        # LocalHnswRoutedIndex (1-cell for plain HNSW)
+        if isinstance(index, HnswIndex):
+            return h.search(qmat, k=k, nprobe=1, ef_search=ef)
+        if isinstance(index, HnswRoutedIndex):
+            return h.search(qmat, k=k, nprobe=params.get("nprobe"),
+                            ef_search=ef)
         return h.search(qmat, k=k)
-    if isinstance(h, ls.LocalIvfIndex):
-        return h.search(qmat, k=k, nprobe=nprobe)
-    if isinstance(h, (ls.LocalIvfPqIndex, ls.LocalIvfSqIndex)):
-        return h.search(qmat, k=k, nprobe=nprobe, refine=refine)
-    if isinstance(h, (ls.LocalPqIndex, ls.LocalSqIndex)):
-        return h.search(qmat, k=k, refine=refine)
-    # LocalHnswRoutedIndex (1-cell for plain HNSW)
-    if isinstance(index, HnswIndex):
-        return h.search(qmat, k=k, nprobe=1, ef_search=ef)
-    if isinstance(index, HnswRoutedIndex):
-        return h.search(qmat, k=k, nprobe=params.get("nprobe"),
-                        ef_search=ef)
-    return h.search(qmat, k=k)
+
+    pool = index.__dict__.get("_tier_pool")
+    if ef is None and (pool is not None or len(qmat) >= POOL_MIN_BATCH):
+        try:
+            if pool is None:
+                pool = _to_pool_handle(index)
+            return pool.search(qmat, k=k, nprobe=nprobe, refine=refine)
+        except Exception as exc:
+            # a request the replica rejects as well (a wrong query
+            # dimension, say) is the caller's error: it raises here
+            # and the pool stays
+            out = in_process()
+            _drop_pool(index, pool, exc, "serving this batch in process")
+            return out
+    return in_process()
 
 
 def _np_results_to_df(spark, qids, ids, dists) -> DataFrame:
@@ -601,13 +652,9 @@ class TierServer:
         return _local_search_np(self.index, qmat, k, params)
 
     def close(self) -> None:
-        p = self.index.__dict__.pop("_tier_pool", None) if hasattr(
+        p = _uncache_pool(self.index) if hasattr(
             self.index, "__dict__") else None
         if p is not None:
-            try:
-                _POOLS.remove(p)
-            except ValueError:
-                pass
             p.close()
 
 
@@ -641,6 +688,10 @@ def serve(index, tier: str = "auto", spark: SparkSession | None = None):
                 f"{type(index).__name__} has no local adapter — use "
                 f"tier='distributed' or a sharded artifact")
         _to_local_handle(index)  # localize eagerly: serving handle
+        try:
+            _to_pool_handle(index)  # and spawn its pool: set-up, not serving
+        except Exception as exc:
+            _drop_pool(index, None, exc, "serving in process")
     return TierServer(index, tier, spark=spark)
 
 

@@ -47,6 +47,7 @@ everything larger goes through the distributed search paths.
 
 from __future__ import annotations
 
+import os as _os
 import threading as _threading
 from dataclasses import dataclass, fields
 
@@ -85,6 +86,18 @@ POOL_FALLBACKS = 0
 # client threads at once, and += on a module global is a
 # read-modify-write that would otherwise drop counts.
 _COUNTER_LOCK = _threading.Lock()
+
+# The fewest queries a LocalServerPool task carries: a request is
+# split into nq // POOL_TASK_QUERIES tasks, at least one and at most
+# workers × 2, so a request below 2 × POOL_TASK_QUERIES runs as ONE
+# task. Measured on a 50k × 128 IVF replica (nlist 128, nprobe 4,
+# 4 CPUs, 4 workers, closed-loop clients): split at 16 queries a
+# task, one client's 32- to 511-query requests reached 1.5-3× the
+# qps they reach as one task (a lone task leaves three workers
+# idle). With 4 clients a split gained nothing at 16-128 queries and
+# cost 30-55% at 256-511 (every worker is already busy; each extra
+# task adds a round trip), still 1.2-1.6× the in-process replica.
+POOL_TASK_QUERIES = 16
 
 # result padding: a query with fewer than k candidates gets id
 # int64.max and distance inf (candidate pools pad with row −1)
@@ -455,10 +468,11 @@ class LocalIvfIndex(_RawRows):
 
     - per-query, when ``nq·nprobe`` is at most the number of cells
       present in this index, i.e. when queries rarely share a cell:
-      each query gathers its probed cells' rows, scores them with one
-      f32 GEMV and keeps an argpartition of k+16. It costs a dozen
-      numpy calls per query, so small requests from concurrent
-      callers do not queue behind per-cell work on the GIL.
+      each query scores every probed cell with one f32 GEMV over the
+      cell's contiguous row slice (no gather) and keeps an
+      argpartition of k+16. On a 50k×128 replica at nprobe 4 an
+      8-query call took ~1.9 ms this way against ~2.6 ms with a
+      gather of the probed rows (4-CPU box, one BLAS thread).
     - cell-grouped, for batches: the shared ``_rank_by_cell`` pool
       with one f32 GEMM per probed cell over the queries that probe
       it.
@@ -502,12 +516,12 @@ class LocalIvfIndex(_RawRows):
         """``search`` after the probe: the top-k of each query's
         ``cells`` (nq, nprobe) row."""
         q64, q = self._queries(qmat)
-        ncand = np.diff(self.offsets)[cells].sum(axis=1)
+        sizes, present, _ = self._cells()
+        ncand = sizes[cells].sum(axis=1)
         k, kc = _widths(k, len(self.ids))
         w = int(min(kc, ncand.max(initial=0)))
-        sizes = np.diff(self.offsets)
-        if cells.size <= np.count_nonzero(sizes):
-            rows, rs = self._rank_per_query(q, cells, sizes, w)
+        if cells.size <= present:
+            rows, rs = self._rank_per_query(q, cells, w)
         else:
             rows, rs = _rank_by_cell(
                 self.offsets, cells, w,
@@ -521,21 +535,31 @@ class LocalIvfIndex(_RawRows):
         return _pool_topk(self.ids, rows, k,
                           lambda qi, si, r: self._exact(q64[qi], r))
 
-    def _rank_per_query(self, q, cells, sizes, w: int):
-        """Small requests: per query, one gather of its probed cells'
-        rows, one f32 GEMV and an argpartition of ``w``."""
+    def _cells(self) -> tuple[np.ndarray, int, list]:
+        """(rows per cell, number of non-empty cells, the CSR offsets
+        as Python ints), computed once per index."""
+        if getattr(self, "_cells_cache", None) is None:
+            sizes = np.diff(self.offsets)
+            self._cells_cache = (sizes, int(np.count_nonzero(sizes)),
+                                 self.offsets.tolist())
+        return self._cells_cache
+
+    def _rank_per_query(self, q, cells, w: int):
+        """Small requests: per query, one f32 GEMV over each probed
+        cell's contiguous row slice (no gather of the rows) and an
+        argpartition of ``w`` over the query's candidates."""
         rows = np.full((len(q), w), -1, dtype=np.int64)
         rs = np.full((len(q), w), np.inf, dtype=np.float32)
-        ln = sizes[cells].ravel()
-        cum = np.concatenate([[0], np.cumsum(ln)])
-        # every query's candidate row positions, query after query;
-        # query i owns pos[bounds[i]:bounds[i + 1]]
-        pos = (np.repeat(self.offsets[cells].ravel() - cum[:-1], ln)
-               + np.arange(cum[-1]))
-        bounds = cum[::cells.shape[1]]
-        for i in range(len(q)):
-            r = pos[bounds[i]:bounds[i + 1]]
-            sc = self._f32_scores(q[i] @ self.vecs[r].T, r)
+        off = self._cells()[2]
+        for i, probed in enumerate(cells.tolist()):
+            spans = [(off[c], off[c + 1]) for c in probed
+                     if off[c + 1] > off[c]]
+            if not spans:
+                continue
+            sc = np.concatenate([
+                self._f32_scores(self.vecs[s0:s1] @ q[i], slice(s0, s1))
+                for s0, s1 in spans])
+            r = np.concatenate([np.arange(s0, s1) for s0, s1 in spans])
             if len(r) > w:
                 p = np.argpartition(sc, w - 1)[:w]
                 r, sc = r[p], sc[p]
@@ -1251,7 +1275,6 @@ def _mp_worker_init(spec: dict) -> None:
     """Runs once in every spawned worker: attach the shared-memory
     index arrays (zero-copy) and cap this worker's BLAS threads."""
     global _WORKER_INDEX
-    import os as _os
 
     # BLAS thread cap. PRIMARY mechanism: env inheritance during the
     # spawn window (LocalServerPool.__init__ sets the vars before
@@ -1360,16 +1383,19 @@ class LocalServerPool:
     ``OPENBLAS/OMP/MKL_NUM_THREADS = worker_threads`` so per-process
     BLAS pools don't oversubscribe.
 
-    ``search`` splits the query batch into contiguous slices (2 per
-    worker for balance), scatters them, and re-concatenates — output
-    is bit-identical to ``index.search`` on the whole batch. Use as a
-    context manager or call ``close()`` to free the shared memory.
+    ``search`` splits a request into contiguous slices of at least
+    ``POOL_TASK_QUERIES`` queries (at most 2 per worker, for
+    balance), scatters and re-concatenates them; a small request is
+    one task, so concurrent small requests from several client
+    threads each take a worker.
+    Output is bit-identical to ``index.search`` on the whole batch.
+    Use as a context manager or call ``close()`` to free the shared
+    memory.
     """
 
     def __init__(self, index, workers: int | None = None,
                  worker_threads: int = 1):
         import multiprocessing as mp
-        import os as _os
         from concurrent.futures import ProcessPoolExecutor
 
         # measured @100k/nprobe=50/10k-queries: 32 workers × 1 thread
@@ -1482,8 +1508,7 @@ class LocalServerPool:
                     np.empty((0, k), dtype=np.float64))
         if self.kind == "hnsw_routed":
             return self._search_hnsw_cells(q, k, nprobe)
-        nchunks = max(1, min(self.workers * 2, nq))
-        edges = np.linspace(0, nq, nchunks + 1, dtype=np.int64)
+        edges = np.linspace(0, nq, self._ntasks(nq) + 1, dtype=np.int64)
         futs = [
             self._exe.submit(_mp_search, q[s:e], k, nprobe, refine)
             for s, e in zip(edges[:-1], edges[1:]) if e > s
@@ -1492,6 +1517,9 @@ class LocalServerPool:
         return (np.vstack([p[0] for p in parts]),
                 np.vstack([p[1] for p in parts]))
 
+    def _ntasks(self, nq: int) -> int:
+        return max(1, min(self.workers * 2, nq // POOL_TASK_QUERIES))
+
     def _search_hnsw_cells(
         self, q: np.ndarray, k: int, nprobe,
     ) -> tuple[np.ndarray, np.ndarray]:
@@ -1499,7 +1527,7 @@ class LocalServerPool:
         query in the parent (one centroid pass — the same inputs and
         formula as ``LocalHnswRoutedIndex.search``), group the
         (cell, query) pairs by cell, balance cell groups across
-        ``workers×2`` tasks by routed-query load, and merge the
+        at most ``_ntasks`` tasks by routed-query load, and merge the
         per-cell top-k exactly like the in-process searcher (sort by
         (query, distance, id), head k). Queries ride to workers via
         one per-call shm segment; tasks carry only cell ids + query
@@ -1556,7 +1584,7 @@ class LocalServerPool:
             else:
                 split.append((cell, qidx))
         items = split
-        ntasks = max(1, min(self.workers * 2, len(items)))
+        ntasks = min(self._ntasks(nq), len(items))
         items.sort(key=lambda t: -len(t[1]))  # big cells first
         buckets: list[list] = [[] for _ in range(ntasks)]
         loads = [0] * ntasks

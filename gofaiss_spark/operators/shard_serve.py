@@ -828,72 +828,57 @@ class ShardedSearcher:
         }
 
 
+def _release_here(build_id: str, w: int) -> int:
+    """Drop this process's cached handles of ``build_id``'s shards and
+    unlink this host's segments (idempotent). Returns the number of
+    segments removed."""
+    for key in list(_CACHE):
+        if key[1] == build_id:
+            _, handles = _CACHE.pop(key)
+            for h in handles:
+                h.close()
+    return sum(_unlink_shard_segments(build_id, s) for s in range(w))
+
+
+def _release_task(build_id: str, w: int, _it):
+    """``release_shards``' task body. A module-level function, so
+    cloudpickle ships it by reference and it purges the WORKER's own
+    ``_CACHE``; a closure is shipped by value, with a pickled copy of
+    the driver's ``_CACHE`` (and its SharedMemory handles) as its
+    globals."""
+    yield _release_here(build_id, w)
+
+
 def release_shards(spark, path: str, meta: dict | None = None) -> int:
     """Unlink the host shared-memory segments of a sharded artifact on
     every host. Runs one over-partitioned job (4 tasks per parallelism
     slot) so every pooled python worker — and therefore every host —
     executes the idempotent unlink; also purges matching entries from
-    each worker's handle cache so the freed memory unmaps promptly."""
+    each worker's handle cache so the freed memory unmaps promptly.
+
+    If the job cannot run, this host's segments are freed directly
+    (segments are addressed by build_id-derived names, no Spark
+    needed). That is the crashed-JVM escape hatch: a 10M-vector
+    artifact pins ~5 GB of /dev/shm, and close() must not leak it just
+    because the session died first. Remote hosts' segments are then
+    reclaimed by the next attach (stale-generation rebuild) or a fresh
+    release_shards call from a live session."""
+    import functools
+    import warnings
+
     meta = meta or _read_shard_meta(path)
     build_id, w = meta["build_id"], meta["num_shards"]
-
-    def _local_release() -> int:
-        # free THIS host's segments directly (works from any process:
-        # segments are addressed by build_id-derived names, no Spark
-        # needed). The crashed-JVM escape hatch: a 10M-vector artifact
-        # pins ~5 GB of /dev/shm, and close() must not leak it just
-        # because the session died first. Remote hosts' segments are
-        # reclaimed by the next attach (stale-generation rebuild) or
-        # a fresh release_shards call from a live session.
-        for key in list(_CACHE):
-            if key[1] == build_id:
-                _, handles = _CACHE.pop(key)
-                for h in handles:
-                    h.close()
-        return sum(_unlink_shard_segments(build_id, s) for s in range(w))
-
     try:
-        par = max(1, spark.sparkContext.defaultParallelism)
-    except Exception:
-        import warnings
-
+        sc = spark.sparkContext
+        n_tasks = max(w, max(1, sc.defaultParallelism) * 4)
+        n = int(sc.parallelize(range(n_tasks), n_tasks).mapPartitions(
+            functools.partial(_release_task, build_id, w)).sum())
+    except Exception as exc:
         warnings.warn(
-            "release_shards: SparkSession unusable (JVM gone?); "
+            f"release_shards: cluster-wide unlink job failed ({exc}); "
             "unlinked this host's segments only",
             RuntimeWarning,
         )
-        return _local_release()
-    n_tasks = max(w, par * 4)
-
-    def rel(it):
-        import pandas as pd
-
         n = 0
-        hit = False
-        for pdf in it:
-            if len(pdf):
-                hit = True
-        if hit:
-            for key in list(_CACHE):
-                if key[1] == build_id:
-                    _, handles = _CACHE.pop(key)
-                    for h in handles:
-                        h.close()
-            for s in range(w):
-                n += _unlink_shard_segments(build_id, s)
-        yield pd.DataFrame({"n": [n]})
-
-    try:
-        total = (spark.range(0, n_tasks, 1, n_tasks)
-                 .mapInPandas(rel, schema="n long")
-                 .toPandas()["n"].sum())
-    except Exception:
-        import warnings
-
-        warnings.warn(
-            "release_shards: cluster-wide unlink job failed; "
-            "unlinked this host's segments only",
-            RuntimeWarning,
-        )
-        return _local_release()
-    return int(total)
+    # and the driver's own handles, when it attached shards itself
+    return n + _release_here(build_id, w)

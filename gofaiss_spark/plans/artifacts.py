@@ -815,8 +815,9 @@ def remove_from_index(spark: SparkSession, path: str, ids) -> int:
         primary = name == tables[0]
         tdir = f"{path}/{name}"
         df = _read_df(spark, tdir)
-        id_col = "id" if "id" in df.columns else df.columns[0]
-        hit = F.col(id_col).isin(ids)
+        if "id" not in df.columns:
+            continue  # not keyed by row id (OPQ's rotation: i, row)
+        hit = F.col("id").isin(ids)
         if name in partitioned:
             affected = [
                 r["list_id"]

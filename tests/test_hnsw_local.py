@@ -185,7 +185,7 @@ class TestAgainstDistributedRouted:
 
 
 class TestHnswPool:
-    def test_pool_bit_identical_routed(self):
+    def test_pool_bit_identical_routed(self, pool_both_ways):
         from gofaiss_spark.operators.local_serve import LocalServerPool
 
         graphs = [_mk_graph(n, 12, s)
@@ -200,13 +200,14 @@ class TestHnswPool:
         ids0, d0 = local.search(q, k=8, nprobe=2)
         pool = LocalServerPool(local, workers=3, worker_threads=1)
         try:
-            ids1, d1 = pool.search(q, k=8, nprobe=2)
+            (ids1, d1), ntasks = pool_both_ways(pool, q, k=8, nprobe=2)
         finally:
             pool.close()
+        assert ntasks > 1  # cell groups balanced over several tasks
         np.testing.assert_array_equal(ids0, ids1)
         np.testing.assert_array_equal(d0, d1)
 
-    def test_pool_single_graph_via_hnsw_to_local(self):
+    def test_pool_single_graph_via_hnsw_to_local(self, pool_both_ways):
         from gofaiss_spark.operators.hnsw import HnswIndex
         from gofaiss_spark.operators.local_serve import LocalServerPool
 
@@ -217,9 +218,10 @@ class TestHnswPool:
         ids0, d0 = local.search(q, k=5)
         pool = LocalServerPool(local, workers=2, worker_threads=1)
         try:
-            ids1, d1 = pool.search(q, k=5)
+            (ids1, d1), ntasks = pool_both_ways(pool, q, k=5)
         finally:
             pool.close()
+        assert ntasks > 1  # the one graph's queries split over tasks
         np.testing.assert_array_equal(ids0, ids1)
         np.testing.assert_array_equal(d0, d1)
 

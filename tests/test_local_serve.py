@@ -375,18 +375,19 @@ class TestServerPool:
             ),
         )
 
-    def test_ivf_pool_bit_identical(self, ivf_local):
+    def test_ivf_pool_bit_identical(self, ivf_local, pool_both_ways):
         from gofaiss_spark.operators.local_serve import LocalServerPool
 
         rng = np.random.default_rng(8)
         q = rng.random((300, 24), dtype=np.float32)
         with LocalServerPool(ivf_local, workers=3) as pool:
-            i_mp, d_mp = pool.search(q, k=5, nprobe=4)
+            (i_mp, d_mp), ntasks = pool_both_ways(pool, q, k=5, nprobe=4)
+        assert ntasks == 6
         i_sp, d_sp = ivf_local.search(q, k=5, nprobe=4)
         assert np.array_equal(i_mp, i_sp)
         assert np.array_equal(d_mp, d_sp)
 
-    def test_flat_pool_bit_identical(self, ivf_local):
+    def test_flat_pool_bit_identical(self, ivf_local, pool_both_ways):
         from gofaiss_spark.operators.local_serve import (
             LocalFlatIndex,
             LocalServerPool,
@@ -399,28 +400,31 @@ class TestServerPool:
         rng = np.random.default_rng(9)
         q = rng.random((100, 24), dtype=np.float32)
         with LocalServerPool(flat, workers=2) as pool:
-            i_mp, d_mp = pool.search(q, k=7, nprobe=None)
+            (i_mp, d_mp), ntasks = pool_both_ways(pool, q, k=7, nprobe=None)
+        assert ntasks == 4
         i_sp, d_sp = flat.search(q, k=7)
         assert np.array_equal(i_mp, i_sp)
         assert np.array_equal(d_mp, d_sp)
 
-    def test_pool_reuse_and_small_batches(self, ivf_local):
+    def test_pool_reuse_and_small_batches(self, ivf_local, pool_both_ways):
         from gofaiss_spark.operators.local_serve import LocalServerPool
 
         rng = np.random.default_rng(10)
         pool = LocalServerPool(ivf_local, workers=2)
         try:
-            # more chunks than rows; repeated use of one pool
+            # fewer rows than workers × 2, split one row a task;
+            # repeated use of one pool
             for nq in (1, 3, 50):
                 q = rng.random((nq, 24), dtype=np.float32)
-                i_mp, _ = pool.search(q, k=3, nprobe=20)
+                (i_mp, _), ntasks = pool_both_ways(pool, q, k=3, nprobe=20)
+                assert ntasks == min(4, nq)
                 i_sp, _ = ivf_local.search(q, k=3, nprobe=20)
                 assert np.array_equal(i_mp, i_sp)
         finally:
             pool.close()
         pool.close()  # idempotent
 
-    def test_pq_pool_bit_identical(self):
+    def test_pq_pool_bit_identical(self, pool_both_ways):
         from gofaiss_spark.operators.local_serve import (
             LocalPqIndex,
             LocalServerPool,
@@ -438,8 +442,9 @@ class TestServerPool:
         )
         q = rng.random((200, 24), dtype=np.float32)
         with LocalServerPool(idx, workers=3) as pool:
-            i_mp, d_mp = pool.search(q, k=5, nprobe=None)
-            ri_mp, rd_mp = pool.search(q, k=5, nprobe=None, refine=3)
+            (i_mp, d_mp), _ = pool_both_ways(pool, q, k=5, nprobe=None)
+            (ri_mp, rd_mp), _ = pool_both_ways(
+                pool, q, k=5, nprobe=None, refine=3)
         i_sp, d_sp = idx.search(q, k=5)
         ri_sp, rd_sp = idx.search(q, k=5, refine=3)
         np.testing.assert_array_equal(i_mp, i_sp)
@@ -447,7 +452,7 @@ class TestServerPool:
         np.testing.assert_array_equal(ri_mp, ri_sp)
         np.testing.assert_array_equal(rd_mp, rd_sp)
 
-    def test_ivfpq_pool_bit_identical(self):
+    def test_ivfpq_pool_bit_identical(self, pool_both_ways):
         from gofaiss_spark.operators.local_serve import (
             LocalIvfPqIndex,
             LocalServerPool,
@@ -469,8 +474,9 @@ class TestServerPool:
         )
         q = rng.random((150, 24), dtype=np.float32)
         with LocalServerPool(idx, workers=3) as pool:
-            i_mp, d_mp = pool.search(q, k=5, nprobe=3)
-            ri_mp, rd_mp = pool.search(q, k=5, nprobe=3, refine=4)
+            (i_mp, d_mp), _ = pool_both_ways(pool, q, k=5, nprobe=3)
+            (ri_mp, rd_mp), _ = pool_both_ways(
+                pool, q, k=5, nprobe=3, refine=4)
         i_sp, d_sp = idx.search(q, k=5, nprobe=3)
         ri_sp, rd_sp = idx.search(q, k=5, nprobe=3, refine=4)
         np.testing.assert_array_equal(i_mp, i_sp)
@@ -478,7 +484,7 @@ class TestServerPool:
         np.testing.assert_array_equal(ri_mp, ri_sp)
         np.testing.assert_array_equal(rd_mp, rd_sp)
 
-    def test_sq_pool_bit_identical(self):
+    def test_sq_pool_bit_identical(self, pool_both_ways):
         from gofaiss_spark.operators.local_serve import (
             LocalServerPool,
             LocalSqIndex,
@@ -497,8 +503,9 @@ class TestServerPool:
         )
         q = rng.random((120, dim), dtype=np.float32)
         with LocalServerPool(idx, workers=2) as pool:
-            i_mp, d_mp = pool.search(q, k=4, nprobe=None)
-            ri_mp, rd_mp = pool.search(q, k=4, nprobe=None, refine=3)
+            (i_mp, d_mp), _ = pool_both_ways(pool, q, k=4, nprobe=None)
+            (ri_mp, rd_mp), _ = pool_both_ways(
+                pool, q, k=4, nprobe=None, refine=3)
         i_sp, d_sp = idx.search(q, k=4)
         ri_sp, rd_sp = idx.search(q, k=4, refine=3)
         np.testing.assert_array_equal(i_mp, i_sp)

@@ -117,6 +117,28 @@ def test_opq_save_load_roundtrip(spark, tmp_path):
     assert loaded.stats()["index_type"] == "opq"
 
 
+def test_remove_keeps_opq_rotation(spark, tmp_path):
+    """remove_from_index deletes rows from the id-keyed tables only:
+    OPQ's rotation (keyed by row number ``i``) is not a data row, so
+    removing ids 0-2 must leave the saved rotation unchanged."""
+    from gofaiss_spark.plans.artifacts import (
+        load_index,
+        remove_from_index,
+        save_index,
+    )
+
+    data = _correlated(n=300, dim=16)
+    rows = [(int(i), [float(x) for x in v]) for i, v in enumerate(data)]
+    vec = spark.createDataFrame(rows, "id long, vec array<float>")
+    idx = build_opq(vec, m=4, nbits=4, n_iter=3, rotate=True)
+    path = str(tmp_path / "opq_rm")
+    save_index(idx, path)
+    assert remove_from_index(spark, path, [0, 1, 2]) == 3
+    loaded = load_index(spark, path)
+    np.testing.assert_array_equal(loaded.rotation, idx.rotation)
+    assert loaded.pq.codes.filter("id < 3").count() == 0
+
+
 def test_opq_via_unified_api(spark):
     from gofaiss_spark.api import build_index, search
 

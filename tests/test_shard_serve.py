@@ -168,6 +168,35 @@ class TestHostShmLifecycle:
         assert removed >= 2 * 4
         assert self._segs(meta["build_id"]) == []
 
+    def test_close_purges_every_worker_handle_cache(
+            self, spark, vectors, qmat, tmp_path_factory):
+        """close() drops the artifact's handles from each python
+        worker's own ``_CACHE``, so no worker keeps the unlinked
+        segments mapped."""
+        path = str(tmp_path_factory.mktemp("shard") / "flat_cache")
+        meta = save_sharded(vectors, path, num_shards=2)
+        sc = spark.sparkContext
+        n = sc.defaultParallelism * 4
+
+        def cached(_it):
+            import importlib
+
+            ss = importlib.import_module(
+                "gofaiss_spark.operators.shard_serve")
+            yield {key[1] for key in ss._CACHE}
+
+        def seen():
+            return set().union(*sc.parallelize(range(n), n)
+                               .mapPartitions(cached).collect())
+
+        srv = ShardedSearcher(spark, path)
+        try:
+            srv.search(qmat, k=5)
+            assert meta["build_id"] in seen()
+        finally:
+            srv.close()
+        assert meta["build_id"] not in seen()
+
     def test_close_idempotent_and_rewarm(self, spark, vectors, qmat,
                                          tmp_path_factory):
         path = str(tmp_path_factory.mktemp("shard") / "flat_shm2")

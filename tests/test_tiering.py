@@ -10,6 +10,7 @@ auto picks, the rows must equal the distributed plan's.
 from __future__ import annotations
 
 import os
+import threading
 
 import numpy as np
 import pytest
@@ -98,6 +99,7 @@ def test_serve_facade_np_path(base):
     assert _rows(srv.search(qdf, k=K)) == _rows(
         api.search(idx, qdf, k=K, params={"tier": "distributed"})
     )
+    srv.close()
 
 
 def test_serve_rejects_unknown_tier(base):
@@ -183,6 +185,7 @@ def test_plain_artifact_path_loads_and_routes(base, tmp_path):
     srv = api.serve(path, spark=vdf.sparkSession)
     assert srv.tier == "local"
     assert srv.index is api._LOADED_OPEN[os.path.realpath(path)][1]
+    srv.close()
 
 
 def test_hnsw_routed_pool_nprobe_default_invariance(base, monkeypatch):
@@ -272,6 +275,183 @@ def test_pool_fallback_is_counted_and_warns(monkeypatch):
     np.testing.assert_array_equal(d, want_d)
     assert ls.POOL_FALLBACKS == before + 1
     assert len(caught) == 1 and "no shared memory" in str(caught[0].message)
+
+def test_served_local_handle_runs_requests_as_pool_tasks(base):
+    """api.serve on the local tier spawns the replica's pool. A request
+    runs as nq // POOL_TASK_QUERIES pool tasks, at least one and at
+    most workers × 2, with the in-process replica's exact bits; and
+    close() joins every worker and unlinks the pool's segments."""
+    from gofaiss_spark.operators import local_serve as ls
+
+    vecs, vdf, _ = base
+    idx = api.build_index(vdf, index_type="ivf", params={"nlist": 8})
+    srv = api.serve(idx, tier="local")
+    pool = idx.__dict__["_tier_pool"]
+    assert pool in api._POOLS
+    tasks = []
+    submit = pool._exe.submit
+
+    def counted(fn, *args):
+        tasks.append(len(args[0]))
+        return submit(fn, *args)
+
+    pool._exe.submit = counted
+    local = idx.__dict__["_tier_local"]
+    rng = np.random.default_rng(11)
+    try:
+        assert ls.POOL_TASK_QUERIES == 16
+        w2 = pool.workers * 2
+        for nq, ntasks in ((1, 1), (16, 1), (31, 1), (64, min(w2, 4)),
+                           (600, w2)):
+            q = vecs[rng.integers(0, N, nq)] + rng.normal(
+                0, 0.01, (nq, DIM)).astype(np.float32)
+            tasks.clear()
+            ids, d = srv.search_np(q, k=K, params={"nprobe": 3})
+            assert len(tasks) == ntasks and sum(tasks) == nq
+            want_ids, want_d = local.search(q, k=K, nprobe=3)
+            np.testing.assert_array_equal(ids, want_ids)
+            np.testing.assert_array_equal(d, want_d)
+    finally:
+        procs = list(pool._exe._processes.values())
+        segs = [shm.name for shm in pool._shms]
+        srv.close()
+    assert procs and segs
+    assert all(not p.is_alive() for p in procs)
+    assert not any(os.path.exists(f"/dev/shm/{n}") for n in segs)
+    assert "_tier_pool" not in idx.__dict__ and pool not in api._POOLS
+
+
+def test_served_pool_survives_a_bad_request(base):
+    """A request the replica rejects too (wrong query dimension) is the
+    caller's error: it raises, and the resident pool stays."""
+    from gofaiss_spark.operators import local_serve as ls
+
+    vecs, vdf, _ = base
+    idx = api.build_index(vdf, index_type="ivf", params={"nlist": 8})
+    srv = api.serve(idx, tier="local")
+    pool = idx.__dict__["_tier_pool"]
+    before = ls.POOL_FALLBACKS
+    try:
+        with pytest.raises(ValueError):
+            srv.search_np(np.zeros((2, DIM + 1), np.float32), k=K)
+        assert idx.__dict__.get("_tier_pool") is pool
+        assert ls.POOL_FALLBACKS == before
+        ids, _ = srv.search_np(vecs[:2], k=K)
+        assert (ids[:, 0] == np.arange(2)).all()
+    finally:
+        srv.close()
+
+
+def test_serve_pool_spawn_failure_serves_in_process(base, monkeypatch):
+    """A pool that cannot spawn does not fail api.serve: the handle
+    serves in process, with POOL_FALLBACKS + 1 and exactly one
+    warning, however many requests follow."""
+    import warnings
+
+    from gofaiss_spark.operators import local_serve as ls
+
+    class _NoPool:
+        def __init__(self, *a, **kw):
+            raise OSError("no shared memory")
+
+    vecs, vdf, _ = base
+    idx = api.build_index(vdf, index_type="ivf", params={"nlist": 8})
+    monkeypatch.setattr(ls, "LocalServerPool", _NoPool)
+    before = ls.POOL_FALLBACKS
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        srv = api.serve(idx, tier="local")
+        for nq in (1, 16):
+            ids, d = srv.search_np(vecs[:nq], k=K, params={"nprobe": 3})
+            want_ids, want_d = idx.__dict__["_tier_local"].search(
+                vecs[:nq], k=K, nprobe=3)
+            np.testing.assert_array_equal(ids, want_ids)
+            np.testing.assert_array_equal(d, want_d)
+    assert ls.POOL_FALLBACKS == before + 1
+    failed = [w for w in caught if "LocalServerPool" in str(w.message)]
+    assert len(failed) == 1 and "no shared memory" in str(failed[0].message)
+    assert "_tier_pool" not in idx.__dict__
+    srv.close()
+
+
+class _FailingPool:
+    """A resident pool whose requests fail: the "early" thread's at
+    once, the "late" thread's only when ``late`` is set."""
+
+    def __init__(self, late: threading.Event):
+        self.late = late
+        self.both_in = threading.Barrier(2)
+        self.closed = False
+
+    def search(self, *a, **kw):
+        self.both_in.wait(timeout=30)
+        if threading.current_thread().name == "late":
+            self.late.wait(timeout=30)
+        raise RuntimeError("worker died")
+
+    def close(self):
+        self.closed = True
+
+
+def test_concurrent_pool_failures_drop_one_pool_once():
+    """Two requests in flight on one pool that fails: the pool is
+    counted, warned about and closed once, and the late request does
+    not close a fresh pool cached after the first drop."""
+    import types
+    import warnings
+
+    from gofaiss_spark.operators import local_serve as ls
+
+    rng = np.random.default_rng(4)
+    vecs = rng.normal(size=(N, DIM)).astype(np.float32)
+    h = ls.LocalFlatIndex(ids=np.arange(N, dtype=np.int64), vecs=vecs,
+                          metric="l2",
+                          norms_sq=np.einsum("ij,ij->i", vecs, vecs))
+    late = threading.Event()
+    dead, fresh = _FailingPool(late), _BoomPool()
+    index = types.SimpleNamespace(_tier_local=h, _tier_pool=dead)
+    want = h.search(vecs[:NQ], k=K)
+    got = {}
+
+    def client():
+        got[threading.current_thread().name] = api._local_search_np(
+            index, vecs[:NQ], K, {})
+
+    before = ls.POOL_FALLBACKS
+    threads = {n: threading.Thread(target=client, name=n)
+               for n in ("early", "late")}
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        for t in threads.values():
+            t.start()
+        threads["early"].join(30)
+        assert dead.closed and "_tier_pool" not in index.__dict__
+        index._tier_pool = fresh  # a later request spawned a new pool
+        late.set()
+        threads["late"].join(30)
+    assert set(got) == {"early", "late"}
+    for ids, d in got.values():
+        np.testing.assert_array_equal(ids, want[0])
+        np.testing.assert_array_equal(d, want[1])
+    assert ls.POOL_FALLBACKS == before + 1
+    assert len([w for w in caught if "worker died" in str(w.message)]) == 1
+    assert index._tier_pool is fresh and not fresh.closed
+
+
+def test_cached_pool_is_read_without_the_lock():
+    """Serving from a resident pool never waits on a spawn: a cached
+    pool is returned while the index's pool lock is held."""
+    import types
+
+    index = types.SimpleNamespace(_tier_pool=_BoomPool())
+    got = []
+    with api._pool_lock(index):
+        t = threading.Thread(
+            target=lambda: got.append(api._to_pool_handle(index)))
+        t.start()
+        t.join(10)
+    assert got == [index._tier_pool]
+
 
 def test_localization_cached_once(base):
     _, vdf, qdf = base
