@@ -21,12 +21,13 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 
 from gofaiss_spark.operators.flat import FlatIndex, build_flat
-from gofaiss_spark.operators.ivf import IvfIndex, build_ivf, search_ivf
-from gofaiss_spark.operators.ivfpq import IvfPqIndex, build_ivfpq, search_ivfpq
+from gofaiss_spark.operators.ivf import build_ivf
+from gofaiss_spark.operators.ivfpq import build_ivfpq
+from gofaiss_spark.operators.ivfsq import build_ivfsq
+from gofaiss_spark.operators.kinds import kind_of
 from gofaiss_spark.operators.lsh import LshIndex, build_lsh, search_lsh
-from gofaiss_spark.operators.pq import PqIndex, build_pq, search_pq
-from gofaiss_spark.operators.ivfsq import IvfSqIndex, build_ivfsq, search_ivfsq
-from gofaiss_spark.operators.sq import SqIndex, build_sq, search_sq
+from gofaiss_spark.operators.pq import build_pq
+from gofaiss_spark.operators.sq import build_sq
 from gofaiss_spark.operators.topk import collect_queries
 from gofaiss_spark.operators.topk import range_search as _range_search
 
@@ -231,19 +232,6 @@ def _close_pools() -> None:
     _POOLS.clear()
 
 
-def _tier_row_count(index) -> int:
-    """One count job per index object, cached (serving pattern)."""
-    n = index.__dict__.get("_tier_nrows")
-    if n is None:
-        for attr in ("vectors", "assignments", "codes"):
-            df = getattr(index, attr, None)
-            if df is not None and hasattr(df, "count"):
-                n = int(df.count())
-                break
-        index.__dict__["_tier_nrows"] = n
-    return n
-
-
 def localized_mb(index) -> float | None:
     """Estimated driver-resident footprint (MB) if ``index`` were
     localized; ``None`` when the type has no driver-colocated adapter
@@ -262,15 +250,15 @@ def localized_mb(index) -> float | None:
             mb = float(row["b"] or 0) / (1024 * 1024)
             index.__dict__["_tier_blob_mb"] = mb
         return mb
-    if isinstance(index, (FlatIndex, IvfIndex)):
-        per_row = index.dim * 4 + 16
-    elif isinstance(index, (PqIndex, IvfPqIndex)):
-        per_row = index.m + 16
-    elif isinstance(index, (SqIndex, IvfSqIndex)):
-        per_row = index.dim + 16
-    else:
+    kd = kind_of(index)
+    if kd is None:
         return None
-    return _tier_row_count(index) * per_row / (1024 * 1024)
+    n = index.__dict__.get("_tier_nrows")
+    if n is None:  # one count job per index object, cached
+        n = index.__dict__["_tier_nrows"] = int(
+            getattr(index, kd.table).count())
+    per_row = getattr(index, kd.width) * kd.elem_bytes + 16
+    return n * per_row / (1024 * 1024)
 
 
 def is_sharded_artifact(path: str) -> bool:
@@ -444,18 +432,9 @@ def _to_local_handle(index):
         return h
     from gofaiss_spark.operators import local_serve as ls
 
-    if isinstance(index, FlatIndex):
-        h = ls.to_local(index)
-    elif isinstance(index, IvfIndex):
-        h = ls.to_local_ivf(index)
-    elif isinstance(index, PqIndex):
-        h = ls.to_local_pq(index, vectors=None)
-    elif isinstance(index, IvfPqIndex):
-        h = ls.to_local_ivfpq(index, vectors=None)
-    elif isinstance(index, SqIndex):
-        h = ls.to_local_sq(index, vectors=None)
-    elif isinstance(index, IvfSqIndex):
-        h = ls.to_local_ivfsq(index, vectors=None)
+    kd = kind_of(index)
+    if kd is not None:
+        h = kd.localize(index)
     else:
         from gofaiss_spark.operators.hnsw import HnswIndex, HnswRoutedIndex
 
@@ -543,7 +522,6 @@ def _local_search_np(index, qmat, k: int, params: dict):
     spawns it) and a one-shot request of POOL_MIN_BATCH queries or
     more (spawning the pool); the replica serves the rest in process,
     and per-call ef_search overrides (the pool bakes ef at spawn)."""
-    from gofaiss_spark.operators import local_serve as ls
     from gofaiss_spark.operators.hnsw import HnswIndex, HnswRoutedIndex
 
     # Tier-invariance: the HNSW kinds default nprobe to the INDEX's
@@ -561,14 +539,9 @@ def _local_search_np(index, qmat, k: int, params: dict):
 
     def in_process():
         h = _to_local_handle(index)
-        if isinstance(h, ls.LocalFlatIndex):
-            return h.search(qmat, k=k)
-        if isinstance(h, ls.LocalIvfIndex):
-            return h.search(qmat, k=k, nprobe=nprobe)
-        if isinstance(h, (ls.LocalIvfPqIndex, ls.LocalIvfSqIndex)):
-            return h.search(qmat, k=k, nprobe=nprobe, refine=refine)
-        if isinstance(h, (ls.LocalPqIndex, ls.LocalSqIndex)):
-            return h.search(qmat, k=k, refine=refine)
+        kd = kind_of(index)
+        if kd is not None:
+            return h.search(qmat, k=k, **kd.args(nprobe=nprobe, refine=refine))
         # LocalHnswRoutedIndex (1-cell for plain HNSW)
         if isinstance(index, HnswIndex):
             return h.search(qmat, k=k, nprobe=1, ef_search=ef)
@@ -746,44 +719,15 @@ def search(index, queries: DataFrame, k: int = DEFAULT_K, params: dict | None = 
         return _np_results_to_df(queries.sparkSession, qids, ids, d)
     if tier != "distributed":
         raise ValueError(f"unknown tier {tier!r} (expected one of {TIERS})")
-    if isinstance(index, FlatIndex):
-        return index.search(queries, k=k, method=params.get("method", "local"))
-    if isinstance(index, IvfIndex):
-        return search_ivf(index, queries, k=k, nprobe=params.get("nprobe", DEFAULT_NPROBE))
-    if isinstance(index, PqIndex):
-        return search_pq(
-            index,
-            queries,
-            k=k,
-            refine=params.get("refine"),
-            base=params.get("base"),
-        )
-    if isinstance(index, SqIndex):
-        return search_sq(
-            index,
-            queries,
-            k=k,
-            refine=params.get("refine"),
-            base=params.get("base"),
-        )
-    if isinstance(index, IvfSqIndex):
-        return search_ivfsq(
-            index,
-            queries,
-            k=k,
+    kd = kind_of(index)
+    if kd is not None:
+        # each kind takes only its own arguments: IVF gets no refine
+        # or base, Flat only ``method``
+        return kd.search_df(
+            index, queries, k,
+            method=params.get("method", "local"),
             nprobe=params.get("nprobe", DEFAULT_NPROBE),
-            refine=params.get("refine"),
-            base=params.get("base"),
-        )
-    if isinstance(index, IvfPqIndex):
-        return search_ivfpq(
-            index,
-            queries,
-            k=k,
-            nprobe=params.get("nprobe", DEFAULT_NPROBE),
-            refine=params.get("refine"),
-            base=params.get("base"),
-        )
+            refine=params.get("refine"), base=params.get("base"))
     if isinstance(index, LshIndex):
         return search_lsh(
             index, queries, k=k, multiprobe=params.get("multiprobe", 0)

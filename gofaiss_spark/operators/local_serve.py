@@ -839,12 +839,6 @@ def _aligned_vecs(vectors, ids: np.ndarray) -> np.ndarray | None:
 # parquet slice, so every tier scores with the same kernels.
 # ---------------------------------------------------------------------
 
-_KINDS = {"flat": LocalFlatIndex, "ivf": LocalIvfIndex,
-          "pq": LocalPqIndex, "ivfpq": LocalIvfPqIndex,
-          "sq": LocalSqIndex, "ivfsq": LocalIvfSqIndex}
-_CELL_KINDS = ("ivf", "ivfpq", "ivfsq")
-
-
 def _list_matrix(col, width: int, dtype) -> np.ndarray:
     """(n, width) matrix of an Arrow list column (an Array or a
     ChunkedArray): one offsets-aware flatten per chunk over its
@@ -866,12 +860,16 @@ def local_arrays(tbl, spec: dict) -> dict:
     sorted by id, or by (list_id, id) with CSR offsets over
     ``spec["nlist"]`` cells; ids are unique, so the order is total.
     ``spec`` is a shard meta dict or ``_index_parts``'s: kind, dim,
-    m (PQ kinds) and nlist (cell kinds)."""
-    kind, names = spec["kind"], tbl.schema.names
+    m (PQ kinds) and nlist (cell kinds); the kind's record in
+    ``kinds.KINDS`` says whether it has cells and its code width and
+    dtype."""
+    from gofaiss_spark.operators.kinds import KINDS
+
+    kd, names = KINDS[spec["kind"]], tbl.schema.names
     ids = tbl.column("id").to_numpy(zero_copy_only=False).astype(
         np.int64, copy=False)
     out = {}
-    if kind in _CELL_KINDS:
+    if kd.cell:
         lids = tbl.column("list_id").to_numpy(zero_copy_only=False)
         order = np.lexsort((ids, lids))
         out["offsets"] = np.searchsorted(
@@ -881,9 +879,8 @@ def local_arrays(tbl, spec: dict) -> dict:
     out["ids"] = np.ascontiguousarray(ids[order])
     dim = spec.get("dim") or 0
     if "code" in names:
-        sq = kind in ("sq", "ivfsq")
-        codes = _list_matrix(tbl.column("code"), dim if sq else spec["m"],
-                             np.uint8 if sq else np.uint16)
+        codes = _list_matrix(tbl.column("code"), spec.get(kd.width) or 0,
+                             kd.dtype)
         out["codes"] = np.ascontiguousarray(codes[order])
     if "vec" in names:
         # RAW f32 rows for every metric (the _RawRows contract)
@@ -900,31 +897,30 @@ def local_index(kind: str, metric: str, arrays: dict):
     copies): rows from ``local_arrays`` plus the quantizer arrays
     (centroids, codebooks, vmin, step). Entries the kind has no field
     for are ignored."""
-    cls = _KINDS[kind]
-    names = {f.name for f in fields(cls)}
-    return cls(metric=metric,
-               **{key: a for key, a in arrays.items() if key in names})
+    from gofaiss_spark.operators.kinds import KINDS, fill
+
+    return fill(KINDS[kind].local, {**arrays, "metric": metric})
 
 
 def _index_parts(index) -> tuple[dict, dict, object]:
-    """A distributed index as the builder's inputs: its spec (kind,
-    metric, dim, m, nlist), its quantizer arrays in f64 and its rows
-    DataFrame (id, vec or code, and list_id for the cell kinds)."""
-    kind = {"FlatIndex": "flat", "IvfIndex": "ivf", "PqIndex": "pq",
-            "IvfPqIndex": "ivfpq", "SqIndex": "sq",
-            "IvfSqIndex": "ivfsq"}[type(index).__name__]
-    spec = {"kind": kind, "metric": getattr(index, "metric", "l2"),
+    """A distributed index as the builder's inputs, read from its
+    record in ``kinds.KINDS``: its spec (kind, metric, dim, m, nlist),
+    its quantizer arrays in f64 and its rows DataFrame (id, vec or
+    code, and list_id for the cell kinds)."""
+    from gofaiss_spark.operators.kinds import kind_of
+
+    kd = kind_of(index)
+    if kd is None:
+        raise TypeError(f"not a tabular index: {type(index).__name__}")
+    spec = {"kind": kd.name, "metric": getattr(index, "metric", "l2"),
             "dim": index.dim, "m": getattr(index, "m", None)}
     side = {key: np.asarray(getattr(index, key), dtype=np.float64)
-            for key in ("centroids", "codebooks", "vmin", "step")
-            if getattr(index, key, None) is not None}
-    cols = ["id", "vec" if kind in ("flat", "ivf") else "code"]
-    if kind in _CELL_KINDS:
+            for key in kd.quantizer}
+    cols = ["id", kd.row_col]
+    if kd.cell:
         spec["nlist"] = len(side["centroids"])
         cols.append("list_id")
-    rows = getattr(index, {"flat": "vectors", "ivf": "assignments"}.get(
-        kind, "codes"))
-    return spec, side, rows.select(*cols)
+    return spec, side, getattr(index, kd.table).select(*cols)
 
 
 def _to_local(index, vectors=None):
@@ -1273,41 +1269,10 @@ def _shm_attach(meta):
 
 def _mp_worker_init(spec: dict) -> None:
     """Runs once in every spawned worker: attach the shared-memory
-    index arrays (zero-copy) and cap this worker's BLAS threads."""
+    index arrays (zero-copy). The worker's BLAS thread cap is the
+    environment it was spawned with (``LocalServerPool.__init__``)."""
     global _WORKER_INDEX
 
-    # BLAS thread cap. PRIMARY mechanism: env inheritance during the
-    # spawn window (LocalServerPool.__init__ sets the vars before
-    # spawning) — numpy/BLAS read them at import, which in a spawned
-    # worker happens after this env is inherited. The env set below
-    # is belt-and-braces for exec'd children; it CANNOT retune the
-    # already-imported BLAS in this process — only threadpoolctl can,
-    # so a worker respawned outside the spawn window is capped only
-    # when threadpoolctl is importable (warn otherwise: the pool
-    # still returns correct results, just oversubscribed).
-    wt = str(int(spec["worker_threads"]))
-    for kk in ("OPENBLAS_NUM_THREADS", "OMP_NUM_THREADS",
-               "MKL_NUM_THREADS"):
-        _os.environ[kk] = wt
-    try:
-        from threadpoolctl import threadpool_limits
-
-        threadpool_limits(limits=int(spec["worker_threads"]))
-    except ImportError:
-        # missing threadpoolctl is advisory-only and the PARENT warns
-        # once per pool (LocalServerPool.__init__); warning from every
-        # spawned worker printed the same line W times per pool (160
-        # repeats in one bench run — log spam trains operators to
-        # ignore warnings)
-        pass
-    except Exception as exc:
-        # threadpoolctl present but erroring is NOT covered by the
-        # parent's ImportError warning — stay correct but signal the
-        # unbounded-BLAS oversubscription once per worker
-        import warnings
-
-        warnings.warn(f"threadpool_limits failed in pool worker: {exc!r}; "
-                      "BLAS threads uncapped (results unaffected)")
     arrays = {}
     for key, meta in spec["arrays"].items():
         shm, arr = _shm_attach(meta)
@@ -1329,14 +1294,10 @@ def _mp_ping(_: int) -> bool:
     return _WORKER_INDEX is not None
 
 
-def _mp_search(q: np.ndarray, k: int, nprobe, refine=None):
-    if isinstance(_WORKER_INDEX, (LocalIvfIndex, LocalHnswRoutedIndex)):
-        return _WORKER_INDEX.search(q, k=k, nprobe=nprobe)
-    if isinstance(_WORKER_INDEX, (LocalIvfPqIndex, LocalIvfSqIndex)):
-        return _WORKER_INDEX.search(q, k=k, nprobe=nprobe, refine=refine)
-    if isinstance(_WORKER_INDEX, (LocalPqIndex, LocalSqIndex)):
-        return _WORKER_INDEX.search(q, k=k, refine=refine)
-    return _WORKER_INDEX.search(q, k=k)
+def _mp_search(q: np.ndarray, k: int, args: dict):
+    """A tabular pool task; ``args`` are the search keywords the
+    kind takes (``Kind.args``)."""
+    return _WORKER_INDEX.search(q, k=k, **args)
 
 
 def _mp_search_hnsw_cells(qmeta: dict, items: list, k: int, ef: int):
@@ -1398,6 +1359,8 @@ class LocalServerPool:
         import multiprocessing as mp
         from concurrent.futures import ProcessPoolExecutor
 
+        from gofaiss_spark.operators.kinds import KINDS
+
         # measured @100k/nprobe=50/10k-queries: 32 workers × 1 thread
         # beats 16×2 (25.7k vs 20.9k QPS) and 8×4 (12.5k) — processes
         # sidestep the GIL entirely, so give every core its own
@@ -1405,21 +1368,8 @@ class LocalServerPool:
         self.workers = workers or max(1, min(32, cpu // max(1, worker_threads)))
         self._shms = []
         self._exe = None
-        try:
-            import threadpoolctl  # noqa: F401
-        except ImportError:
-            import warnings
-
-            # once per pool, from the parent (the workers stay silent:
-            # W identical warnings per pool is log spam)
-            warnings.warn(
-                "threadpoolctl not installed: a LocalServerPool worker "
-                "respawned after the spawn window keeps its inherited "
-                "BLAS thread count (results unaffected; may "
-                "oversubscribe cores)",
-                RuntimeWarning,
-            )
-        kind = {cls: kd for kd, cls in _KINDS.items()}.get(type(index))
+        kind = next((kd.name for kd in KINDS.values()
+                     if type(index) is kd.local), None)
         if kind is not None:
             # every array field, and the refine rows when present
             named = {f.name: getattr(index, f.name) for f in fields(index)
@@ -1455,8 +1405,7 @@ class LocalServerPool:
             shm, meta = _shm_export(arr)
             self._shms.append(shm)
             spec_arrays[key] = meta
-        spec = {"kind": kind, "metric": index.metric,
-                "arrays": spec_arrays, "worker_threads": worker_threads}
+        spec = {"kind": kind, "metric": index.metric, "arrays": spec_arrays}
         if kind == "hnsw_routed":
             spec["hnsw_opts"] = {
                 "ef_search": int(index.ef_search),
@@ -1479,10 +1428,10 @@ class LocalServerPool:
             # spawn + verify workers now (first-search latency belongs
             # to construction, not serving). Explicit check — assert
             # would vanish under ``python -O``. Eager spawn also means
-            # every worker imports numpy INSIDE the env window above,
-            # which is the primary BLAS-cap mechanism (threadpoolctl,
-            # when available, re-caps late-respawned workers too —
-            # see _mp_worker_init).
+            # every worker starts INSIDE the env window above, the one
+            # BLAS cap: without max_tasks_per_child the executor never
+            # replaces a worker (a dead one breaks the pool, which
+            # api._drop_pool handles).
             if not all(self._exe.map(_mp_ping, range(self.workers))):
                 raise RuntimeError(
                     "LocalServerPool: a worker failed to attach the "
@@ -1508,9 +1457,12 @@ class LocalServerPool:
                     np.empty((0, k), dtype=np.float64))
         if self.kind == "hnsw_routed":
             return self._search_hnsw_cells(q, k, nprobe)
+        from gofaiss_spark.operators.kinds import KINDS
+
+        args = KINDS[self.kind].args(nprobe=nprobe, refine=refine)
         edges = np.linspace(0, nq, self._ntasks(nq) + 1, dtype=np.int64)
         futs = [
-            self._exe.submit(_mp_search, q[s:e], k, nprobe, refine)
+            self._exe.submit(_mp_search, q[s:e], k, args)
             for s, e in zip(edges[:-1], edges[1:]) if e > s
         ]
         parts = [f.result() for f in futs]

@@ -94,29 +94,21 @@ def _decode_pq(codes: DataFrame, codebooks: np.ndarray,
 def reconstruct(index, ids: Sequence[int] | None = None) -> DataFrame:
     """(id, vec) for every stored id (or the given subset). Decoded —
     not original — for quantized indexes; see module docstring."""
-    from gofaiss_spark.operators.flat import FlatIndex
-    from gofaiss_spark.operators.ivf import IvfIndex
-    from gofaiss_spark.operators.ivfpq import IvfPqIndex
-    from gofaiss_spark.operators.ivfsq import IvfSqIndex
+    from gofaiss_spark.operators.kinds import kind_of
     from gofaiss_spark.operators.lsh import LshIndex
-    from gofaiss_spark.operators.pq import PqIndex
-    from gofaiss_spark.operators.sq import SqIndex
 
-    if isinstance(index, (FlatIndex, LshIndex)):
+    kd = kind_of(index)
+    if kd is not None:
+        rows = getattr(index, kd.table)
+        if kd.row_col == "vec":
+            return _filter_ids(rows.select("id", "vec"), ids)
+        cents = index.centroids if kd.cell else None
+        if "codebooks" in kd.quantizer:
+            return _decode_pq(_filter_ids(rows, ids), index.codebooks, cents)
+        return _decode_sq(_filter_ids(rows, ids), index.vmin, index.step,
+                          cents)
+    if isinstance(index, LshIndex):
         return _filter_ids(index.vectors.select("id", "vec"), ids)
-    if isinstance(index, IvfIndex):
-        return _filter_ids(index.assignments.select("id", "vec"), ids)
-    if isinstance(index, SqIndex):
-        return _decode_sq(_filter_ids(index.codes, ids), index.vmin,
-                          index.step, None)
-    if isinstance(index, IvfSqIndex):
-        return _decode_sq(_filter_ids(index.codes, ids), index.vmin,
-                          index.step, index.centroids)
-    if isinstance(index, PqIndex):
-        return _decode_pq(_filter_ids(index.codes, ids), index.codebooks, None)
-    if isinstance(index, IvfPqIndex):
-        return _decode_pq(_filter_ids(index.codes, ids), index.codebooks,
-                          index.centroids)
 
     from gofaiss_spark.operators.hnsw import (
         HnswIndex,
@@ -190,67 +182,24 @@ def merge_index(a, b, check_ids: bool = True):
     disjointness there)."""
     import dataclasses
 
-    from gofaiss_spark.operators.flat import FlatIndex
-    from gofaiss_spark.operators.ivf import IvfIndex
-    from gofaiss_spark.operators.ivfpq import IvfPqIndex
-    from gofaiss_spark.operators.ivfsq import IvfSqIndex
-    from gofaiss_spark.operators.pq import PqIndex
-    from gofaiss_spark.operators.sq import SqIndex
+    from gofaiss_spark.operators.kinds import kind_of
 
     _check(type(a) is type(b), f"{type(a).__name__} vs {type(b).__name__}")
 
-    if isinstance(a, FlatIndex):
-        _check(a.dim == b.dim and a.metric == b.metric, "dim/metric")
+    kd = kind_of(a)
+    if kd is not None:
+        # the trained state is the meta params and quantizer matrices
+        for name in ("dim", "metric") + kd.params + kd.matrices:
+            x, y = getattr(a, name, None), getattr(b, name, None)
+            _check(np.allclose(x, y) if isinstance(x, np.ndarray)
+                   else x == y, f"{name} differs")
+        rows_a, rows_b = getattr(a, kd.table), getattr(b, kd.table)
         if check_ids:
-            _check_disjoint_ids(a.vectors, b.vectors)
-        return dataclasses.replace(
-            a, vectors=a.vectors.unionByName(b.vectors)
-        )
-    if isinstance(a, IvfIndex):
-        _check(a.metric == b.metric and a.nlist == b.nlist, "metric/nlist")
-        _check(np.allclose(a.centroids, b.centroids), "centroids differ")
-        if check_ids:
-            _check_disjoint_ids(a.assignments, b.assignments)
-        return dataclasses.replace(
-            a, assignments=a.assignments.unionByName(b.assignments)
-        )
-    if isinstance(a, SqIndex):
-        _check(a.dim == b.dim, "dim")
-        _check(
-            np.allclose(a.vmin, b.vmin) and np.allclose(a.vmax, b.vmax),
-            "quantization range differs",
-        )
-        if check_ids:
-            _check_disjoint_ids(a.codes, b.codes)
-        return dataclasses.replace(a, codes=a.codes.unionByName(b.codes))
-    if isinstance(a, PqIndex):
-        _check(a.m == b.m and a.nbits == b.nbits, "m/nbits")
-        _check(np.allclose(a.codebooks, b.codebooks), "codebooks differ")
-        if check_ids:
-            _check_disjoint_ids(a.codes, b.codes)
-        return dataclasses.replace(a, codes=a.codes.unionByName(b.codes))
-    if isinstance(a, IvfSqIndex):
-        _check(a.nlist == b.nlist, "nlist")
-        _check(np.allclose(a.centroids, b.centroids), "centroids differ")
-        _check(
-            np.allclose(a.vmin, b.vmin) and np.allclose(a.vmax, b.vmax),
-            "quantization range differs",
-        )
-        if check_ids:
-            _check_disjoint_ids(a.codes, b.codes)
-        return dataclasses.replace(
-            a, codes=a.codes.unionByName(b.codes), colocated=False
-        )
-    if isinstance(a, IvfPqIndex):
-        _check(a.nlist == b.nlist and a.m == b.m and a.nbits == b.nbits,
-               "nlist/m/nbits")
-        _check(np.allclose(a.centroids, b.centroids), "centroids differ")
-        _check(np.allclose(a.codebooks, b.codebooks), "codebooks differ")
-        if check_ids:
-            _check_disjoint_ids(a.codes, b.codes)
-        return dataclasses.replace(
-            a, codes=a.codes.unionByName(b.codes), colocated=False
-        )
+            _check_disjoint_ids(rows_a, rows_b)
+        merged = {kd.table: rows_a.unionByName(rows_b)}
+        if hasattr(a, "colocated"):
+            merged["colocated"] = False  # each side's lists are separate
+        return dataclasses.replace(a, **merged)
 
     from gofaiss_spark.operators.hnsw import HnswRoutedIndex, HnswShardedIndex
 

@@ -92,14 +92,15 @@ def save_sharded(index_or_vectors, path: str, num_shards: int,
                  vectors=None) -> dict:
     """Persist a shard-partitioned serving artifact.
 
-    Accepts an IvfIndex (shards carry list_id; per-shard serving uses
-    the GLOBAL centroids, so nprobe cell selection is identical to the
-    single-node index), a FlatIndex, a raw (id, vec) DataFrame, or a
-    QUANTIZED index — PqIndex / IvfPqIndex / SqIndex (the families you
-    shard first at 100 TB; reference's biggest index is IVFPQ,
-    ivfpq.go:57-76). Quantized shards carry codes; codebooks/
-    centroids/quantizer params ride as per-shard sidecar arrays, and
-    the serving kernel is the matching Local*Index ADC path.
+    Accepts any tabular kind (``kinds.KINDS``: Flat, IVF, PQ, SQ,
+    IVFPQ, IVFSQ) or a raw (id, vec) DataFrame, read through
+    ``local_serve._index_parts`` like every other tier. The cell kinds'
+    shards carry list_id; per-shard serving uses the GLOBAL centroids,
+    so nprobe cell selection is identical to the single-node index.
+    Quantized shards carry codes (the families you shard first at
+    100 TB; reference's biggest index is IVFPQ, ivfpq.go:57-76);
+    codebooks/centroids/quantizer params ride as per-shard sidecar
+    arrays, and the serving kernel is the matching Local*Index.
 
     ``vectors``: optional (id, vec) DataFrame — when given with a
     quantized index, the original rows are stored next to the codes so
@@ -109,12 +110,8 @@ def save_sharded(index_or_vectors, path: str, num_shards: int,
     """
     from pyspark.sql import functions as F
 
-    from gofaiss_spark.operators.flat import FlatIndex
-    from gofaiss_spark.operators.ivf import IvfIndex
-    from gofaiss_spark.operators.ivfpq import IvfPqIndex
-    from gofaiss_spark.operators.ivfsq import IvfSqIndex
-    from gofaiss_spark.operators.pq import PqIndex
-    from gofaiss_spark.operators.sq import SqIndex
+    from gofaiss_spark.operators.kinds import KINDS, kind_of
+    from gofaiss_spark.operators.local_serve import _index_parts
 
     if num_shards < 1:
         raise ValueError(f"num_shards must be >= 1, got {num_shards}")
@@ -132,74 +129,26 @@ def save_sharded(index_or_vectors, path: str, num_shards: int,
             "supported — copy the artifact to a shared filesystem"
         )
 
-    centroids = None
-    codebooks = None
-    quant = {}
-    dim = None
-    if isinstance(index_or_vectors, IvfIndex):
-        kind = "ivf"
-        metric = metric or index_or_vectors.metric
-        df = index_or_vectors.assignments.select("id", "vec", "list_id")
-        centroids = np.asarray(index_or_vectors.centroids, dtype=np.float64)
-        dim = index_or_vectors.dim
-        cols = ["id", "vec", "list_id"]
-    elif isinstance(index_or_vectors, IvfPqIndex):
-        kind = "ivfpq"
-        idx = index_or_vectors
-        metric = metric or idx.metric
-        df = idx.codes.select("id", "code", "list_id")
-        centroids = np.asarray(idx.centroids, dtype=np.float64)
-        codebooks = np.asarray(idx.codebooks, dtype=np.float64)
-        quant = {"m": idx.m, "nbits": idx.nbits}
-        dim = idx.dim
-        cols = ["id", "code", "list_id"]
-    elif isinstance(index_or_vectors, PqIndex):
-        kind = "pq"
-        idx = index_or_vectors
+    kd = kind_of(index_or_vectors)
+    if kd is None:  # a raw (id, vec) DataFrame
+        kd, side, dim = KINDS["flat"], {}, None
         metric = metric or "l2"
-        df = idx.codes.select("id", "code")
-        codebooks = np.asarray(idx.codebooks, dtype=np.float64)
-        quant = {"m": idx.m, "nbits": idx.nbits}
-        dim = idx.dim
-        cols = ["id", "code"]
-    elif isinstance(index_or_vectors, SqIndex):
-        kind = "sq"
-        idx = index_or_vectors
-        metric = metric or idx.metric
-        df = idx.codes.select("id", "code")
-        quant = {"vmin": [float(x) for x in idx.vmin],
-                 "step": [float(x) for x in idx.step]}
-        dim = idx.dim
-        cols = ["id", "code"]
-    elif isinstance(index_or_vectors, IvfSqIndex):
-        # IVFSQ — the mid-Pareto quantized serving kind (r8 verdict
-        # item 3): residual SQ8 codes under the IVF coarse quantizer;
-        # the serving scan is a decode→f32 GEMM (LocalIvfSqIndex),
-        # ~4-6× more rows/s than PQ's ADC gather at 4× compression
-        kind = "ivfsq"
-        idx = index_or_vectors
-        metric = metric or idx.metric
-        df = idx.codes.select("id", "code", "list_id")
-        centroids = np.asarray(idx.centroids, dtype=np.float64)
-        quant = {"vmin": [float(x) for x in idx.vmin],
-                 "step": [float(x) for x in idx.step]}
-        dim = idx.dim
-        cols = ["id", "code", "list_id"]
+        df = index_or_vectors.select(F.col(id_col).alias("id"),
+                                     F.col(vec_col).alias("vec"))
     else:
-        kind = "flat"
-        if isinstance(index_or_vectors, FlatIndex):
-            df = index_or_vectors.vectors
-            metric = metric or index_or_vectors.metric
-            dim = index_or_vectors.dim
-        else:
-            df = index_or_vectors
-            metric = metric or "l2"
-        df = df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec"))
-        cols = ["id", "vec"]
+        spec, side, df = _index_parts(index_or_vectors)
+        metric, dim = metric or spec["metric"], spec["dim"]
+    # the PQ kinds' m and nbits and the SQ kinds' vmin and step ride in
+    # the meta; centroids and codebooks in sidecar files
+    quant = {key: getattr(index_or_vectors, key) for key in ("m", "nbits")
+             if key in kd.params}
+    quant.update((key, [float(x) for x in side[key]])
+                 for key in ("vmin", "step") if key in side)
+    kind, cols = kd.name, df.columns
     validate_metric(metric)
     persisted = None
     if vectors is not None:
-        if kind in ("flat", "ivf"):
+        if kd.row_col == "vec":
             raise ValueError(
                 "vectors= is for quantized kinds (flat/ivf shards "
                 "already store the vectors)")
@@ -239,7 +188,7 @@ def save_sharded(index_or_vectors, path: str, num_shards: int,
     # lets a shard skip batches whose probed cells it doesn't hold.
     # Flat/PQ/SQ have no cell structure — id-sharding balances them
     # exactly.
-    shard_key = "list_id" if kind in ("ivf", "ivfpq", "ivfsq") else "id"
+    shard_key = "list_id" if kd.cell else "id"
     sharded = df.withColumn(
         "shard_id", F.pmod(F.col(shard_key), F.lit(num_shards)).cast("int")
     )
@@ -248,10 +197,10 @@ def save_sharded(index_or_vectors, path: str, num_shards: int,
      .select(*cols, "shard_id")
      .write.mode("overwrite").partitionBy("shard_id")
      .parquet(f"{path}/shards"))
-    if centroids is not None:
-        _write_matrix(f"{path}/centroids", centroids)
-    if codebooks is not None:
-        np.save(f"{path}/codebooks.npy", codebooks)
+    if "centroids" in side:
+        _write_matrix(f"{path}/centroids", side["centroids"])
+    if "codebooks" in side:
+        np.save(f"{path}/codebooks.npy", side["codebooks"])
     if dim is None:  # a raw DataFrame: the only case that runs its plan again
         dim = len(df.select("vec").first()["vec"])
     meta = {
@@ -259,7 +208,7 @@ def save_sharded(index_or_vectors, path: str, num_shards: int,
         "metric": metric,
         "num_shards": int(num_shards),
         "dim": int(dim),
-        "nlist": int(centroids.shape[0]) if centroids is not None else None,
+        "nlist": len(side["centroids"]) if "centroids" in side else None,
         # partitionBy writes no directory for an empty shard (sparse
         # ids, num_shards > nlist): with 0 rows here, a missing
         # directory is a valid empty shard, not a torn artifact
@@ -427,16 +376,15 @@ def _read_shard_arrays(path: str, shard_id: int, meta: dict) -> dict:
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from gofaiss_spark.operators.local_serve import _CELL_KINDS, local_arrays
+    from gofaiss_spark.operators.kinds import KINDS
+    from gofaiss_spark.operators.local_serve import local_arrays
 
-    kind = meta["kind"]
-    quantized = kind in ("pq", "ivfpq", "sq", "ivfsq")
+    kd = KINDS[meta["kind"]]
     shard_dir = f"{path}/shards/shard_id={int(shard_id)}"
-    cols = ["id"]
-    cols += ["code"] if quantized else ["vec"]
-    if kind in _CELL_KINDS:
+    cols = ["id", kd.row_col]
+    if kd.cell:
         cols.append("list_id")
-    if quantized and meta.get("has_vectors"):
+    if kd.row_col == "code" and meta.get("has_vectors"):
         cols.append("vec")
     if os.path.isdir(shard_dir):
         tbl = pq.read_table(shard_dir, columns=cols)
@@ -455,10 +403,10 @@ def _read_shard_arrays(path: str, shard_id: int, meta: dict) -> dict:
                                     if c in ("vec", "code") else pa.int64())
                         for c in cols})
     arrays = local_arrays(tbl, meta)
-    if kind in ("pq", "ivfpq"):
+    if "codebooks" in kd.quantizer:
         arrays["codebooks"] = np.ascontiguousarray(
             np.load(f"{path}/codebooks.npy"))
-    if kind in _CELL_KINDS:
+    if kd.cell:
         arrays["centroids"] = _read_matrix(
             f"{path}/centroids", (meta["nlist"], meta["dim"]))
     return arrays
@@ -719,10 +667,12 @@ class ShardedSearcher:
         if nq == 0:
             return (np.empty((0, max(k, 0)), dtype=np.int64),
                     np.empty((0, max(k, 0)), dtype=np.float64))
+        from gofaiss_spark.operators.kinds import KINDS
+
         meta = self.meta
         path, build_id = self.path, meta["build_id"]
-        kind = meta["kind"]
-        npr = nprobe if nprobe is not None else 10
+        args = KINDS[meta["kind"]].args(
+            nprobe=nprobe if nprobe is not None else 10, refine=refine)
         sc = self.spark.sparkContext
         bq = sc.broadcast(q)
         w, n_slices = meta["num_shards"], self.slices
@@ -739,16 +689,7 @@ class ShardedSearcher:
                 idx = _load_shard(path, build_id, sid, meta)
                 if idx.ids.shape[0] == 0:
                     continue
-                if kind == "ivf":
-                    ids, dists = idx.search(qv[lo:hi], k=k, nprobe=npr)
-                elif kind in ("ivfpq", "ivfsq"):
-                    ids, dists = idx.search(qv[lo:hi], k=k, nprobe=npr,
-                                            refine=refine)
-                elif kind in ("pq", "sq"):
-                    ids, dists = idx.search(qv[lo:hi], k=k,
-                                            refine=refine)
-                else:
-                    ids, dists = idx.search(qv[lo:hi], k=k)
+                ids, dists = idx.search(qv[lo:hi], k=k, **args)
                 kk = ids.shape[1]
                 qi = np.repeat(np.arange(lo, hi, dtype=np.int64), kk)
                 fid, fd = ids.ravel(), dists.ravel()

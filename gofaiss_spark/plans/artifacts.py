@@ -204,6 +204,17 @@ def _read_matrix(path: str, shape: tuple, fmt: str = "parquet") -> np.ndarray:
     return out
 
 
+def _param(v):
+    """A ``_meta.json`` param: a scalar as is, an array as floats."""
+    return [float(x) for x in v] if np.ndim(v) else v
+
+
+def _matrix_shape(name: str, kw: dict) -> tuple:
+    if name == "centroids":
+        return (kw["nlist"], kw["dim"])
+    return (kw["m"], 1 << kw["nbits"], kw["dim"] // kw["m"])  # codebooks
+
+
 SCHEMA_FILE = "_schema.json"
 
 
@@ -268,22 +279,20 @@ def export_index_json(index, path: str) -> None:
 def save_index(index, path: str, fmt: str = "parquet") -> None:
     """Persist any index artifact (Save parity: flat.go:123-147,
     ivfpq.go:367-470 — but Parquet, not gob; ``fmt="json"`` gives the
-    debug export of pkg/storage/json.go)."""
-    from gofaiss_spark.operators.flat import FlatIndex
+    debug export of pkg/storage/json.go). A tabular kind writes what
+    its ``kinds`` record names: the meta params, one matrix table per
+    quantizer matrix and its rows table, partitioned by list_id for the
+    cell kinds."""
     from gofaiss_spark.operators.hnsw import (
         HnswIndex,
         HnswRoutedIndex,
         HnswShardedIndex,
     )
-    from gofaiss_spark.operators.ivf import IvfIndex
-    from gofaiss_spark.operators.ivfpq import IvfPqIndex
-    from gofaiss_spark.operators.ivfsq import IvfSqIndex
+    from gofaiss_spark.operators.kinds import kind_of
     from gofaiss_spark.operators.lsh import LshIndex
     from gofaiss_spark.operators.opq import OpqIndex
     from gofaiss_spark.operators.pca import PcaModel
-    from gofaiss_spark.operators.pq import PqIndex
     from gofaiss_spark.operators.retrieval import TextIndex, save_text_index
-    from gofaiss_spark.operators.sq import SqIndex
 
     if fmt not in ("parquet", "json"):
         raise ValueError(f"unknown artifact format {fmt!r}")
@@ -303,31 +312,17 @@ def save_index(index, path: str, fmt: str = "parquet") -> None:
     def wm(meta: dict) -> None:
         _write_meta(path, {**meta, "format": fmt})
 
-    if isinstance(index, FlatIndex):
-        wm({"index_type": "flat", "dim": index.dim, "metric": index.metric})
-        _write_df(index.vectors, f"{path}/vectors", fmt)
-    elif isinstance(index, IvfIndex):
-        wm(
-            {
-                "index_type": "ivf",
-                "dim": index.dim,
-                "metric": index.metric,
-                "params": {"nlist": index.nlist},
-            }
-        )
-        _write_matrix(f"{path}/centroids", index.centroids, fmt)
-        _write_df(index.assignments, f"{path}/assignments", fmt, "list_id")
-    elif isinstance(index, PqIndex):
-        wm(
-            {
-                "index_type": "pq",
-                "dim": index.dim,
-                "metric": "l2",
-                "params": {"m": index.m, "nbits": index.nbits},
-            }
-        )
-        _write_matrix(f"{path}/codebooks", index.codebooks, fmt)
-        _write_df(index.codes, f"{path}/codes", fmt)
+    kd = kind_of(index)
+    if kd is not None:
+        meta = {"index_type": kd.name, "dim": index.dim,
+                "metric": getattr(index, "metric", "l2")}
+        if kd.params:  # Flat has no params key
+            meta["params"] = {p: _param(getattr(index, p)) for p in kd.params}
+        wm(meta)
+        for name in kd.matrices:
+            _write_matrix(f"{path}/{name}", getattr(index, name), fmt)
+        _write_df(getattr(index, kd.table), f"{path}/{kd.table}", fmt,
+                  "list_id" if kd.cell else None)
     elif isinstance(index, OpqIndex):
         wm(
             {
@@ -355,22 +350,6 @@ def save_index(index, path: str, fmt: str = "parquet") -> None:
         _write_df(rot_df, f"{path}/rotation", fmt)
         _write_matrix(f"{path}/codebooks", index.pq.codebooks, fmt)
         _write_df(index.pq.codes, f"{path}/codes", fmt)
-    elif isinstance(index, IvfPqIndex):
-        wm(
-            {
-                "index_type": "ivfpq",
-                "dim": index.dim,
-                "metric": index.metric,
-                "params": {
-                    "nlist": index.nlist,
-                    "m": index.m,
-                    "nbits": index.nbits,
-                },
-            }
-        )
-        _write_matrix(f"{path}/centroids", index.centroids, fmt)
-        _write_matrix(f"{path}/codebooks", index.codebooks, fmt)
-        _write_df(index.codes, f"{path}/codes", fmt, "list_id")
     elif isinstance(index, LshIndex):
         wm(
             {
@@ -391,34 +370,6 @@ def save_index(index, path: str, fmt: str = "parquet") -> None:
         # is the artifact-size killer at scale)
         _write_df(index.buckets, f"{path}/buckets", fmt, "t")
         _write_df(index.vectors, f"{path}/vectors", fmt)
-    elif isinstance(index, IvfSqIndex):
-        wm(
-            {
-                "index_type": "ivfsq",
-                "dim": index.dim,
-                "metric": index.metric,
-                "params": {
-                    "nlist": index.nlist,
-                    "vmin": [float(x) for x in index.vmin],
-                    "vmax": [float(x) for x in index.vmax],
-                },
-            }
-        )
-        _write_matrix(f"{path}/centroids", index.centroids, fmt)
-        _write_df(index.codes, f"{path}/codes", fmt, "list_id")
-    elif isinstance(index, SqIndex):
-        wm(
-            {
-                "index_type": "sq",
-                "dim": index.dim,
-                "metric": index.metric,
-                "params": {
-                    "vmin": [float(x) for x in index.vmin],
-                    "vmax": [float(x) for x in index.vmax],
-                },
-            }
-        )
-        _write_df(index.codes, f"{path}/codes", fmt)
     elif isinstance(index, PcaModel):
         # components are k×dim floats (a few KB) — they ride in the
         # meta like the LSH projections; no table to write
@@ -519,7 +470,6 @@ def load_index(spark: SparkSession, path: str):
     """Load an index artifact by its ``_meta.json`` index_type — the
     NewSearcher/detectIndexType analogue (search.go:42-53, :193-208),
     but dispatching on declared metadata instead of a type switch."""
-    from gofaiss_spark.operators.flat import FlatIndex
     from gofaiss_spark.operators.hnsw import (
         MAX_LEVEL_CAP,
         HnswGraph,
@@ -527,15 +477,12 @@ def load_index(spark: SparkSession, path: str):
         HnswRoutedIndex,
         HnswShardedIndex,
     )
-    from gofaiss_spark.operators.ivf import IvfIndex
-    from gofaiss_spark.operators.ivfpq import IvfPqIndex
-    from gofaiss_spark.operators.ivfsq import IvfSqIndex
+    from gofaiss_spark.operators.kinds import KINDS, fill
     from gofaiss_spark.operators.lsh import LshIndex
     from gofaiss_spark.operators.opq import OpqIndex
     from gofaiss_spark.operators.pca import PcaModel
     from gofaiss_spark.operators.pq import PqIndex
     from gofaiss_spark.operators.retrieval import load_text_index
-    from gofaiss_spark.operators.sq import SqIndex
 
     meta = _read_meta(path)
     itype = meta["index_type"]
@@ -547,33 +494,20 @@ def load_index(spark: SparkSession, path: str):
     def rd(name: str):
         return _read_df(spark, f"{path}/{name}", fmt)
 
-    if itype == "flat":
-        return FlatIndex(
-            metric=meta["metric"],
-            dim=dim,
-            vectors=rd("vectors"),
-        )
-    if itype == "ivf":
-        nlist = int(meta["params"]["nlist"])
-        cents = _read_matrix(f"{path}/centroids", (nlist, dim), fmt)
-        return IvfIndex(
-            metric=meta["metric"],
-            nlist=nlist,
-            dim=dim,
-            centroids=cents,
-            assignments=rd("assignments"),
-        )
-    if itype == "pq":
-        m = int(meta["params"]["m"])
-        nbits = int(meta["params"]["nbits"])
-        cb = _read_matrix(f"{path}/codebooks", (m, 1 << nbits, dim // m), fmt)
-        return PqIndex(
-            dim=dim,
-            m=m,
-            nbits=nbits,
-            codebooks=cb,
-            codes=rd("codes"),
-        )
+    kd = KINDS.get(itype)
+    if kd is not None:
+        kw = {"metric": meta["metric"], "dim": dim, kd.table: rd(kd.table),
+              # a partitionBy("list_id") artifact's rows arrive
+              # list-contiguous: no re-shuffle for the code cell kinds
+              "colocated": True}
+        for name in kd.params:
+            v = meta["params"][name]
+            kw[name] = (np.asarray(v, dtype=np.float64)
+                        if isinstance(v, list) else int(v))
+        for name in kd.matrices:
+            kw[name] = _read_matrix(f"{path}/{name}", _matrix_shape(name, kw),
+                                    fmt)
+        return fill(kd.index, kw)
     if itype == "opq":
         m = int(meta["params"]["m"])
         nbits = int(meta["params"]["nbits"])
@@ -591,23 +525,6 @@ def load_index(spark: SparkSession, path: str):
         return OpqIndex(dim=dim, m=m, nbits=nbits, rotation=rot, pq=pq,
                         rotation_trained=bool(rt),
                         spectral_energy=se)
-    if itype == "ivfpq":
-        p = meta["params"]
-        nlist, m, nbits = int(p["nlist"]), int(p["m"]), int(p["nbits"])
-        cents = _read_matrix(f"{path}/centroids", (nlist, dim), fmt)
-        cb = _read_matrix(f"{path}/codebooks", (m, 1 << nbits, dim // m), fmt)
-        return IvfPqIndex(
-            metric=meta["metric"],
-            nlist=nlist,
-            dim=dim,
-            m=m,
-            nbits=nbits,
-            centroids=cents,
-            codebooks=cb,
-            codes=rd("codes"),
-            colocated=True,  # partitionBy("list_id") artifact: rows
-            # arrive list-contiguous, no re-shuffle needed for ADC
-        )
     if itype == "lsh":
         p = meta["params"]
         return LshIndex(
@@ -620,29 +537,6 @@ def load_index(spark: SparkSession, path: str):
             offsets=np.asarray(p["offsets"], dtype=np.float64),
             buckets=rd("buckets"),
             vectors=rd("vectors"),
-        )
-    if itype == "ivfsq":
-        p = meta["params"]
-        nlist = int(p["nlist"])
-        cents = _read_matrix(f"{path}/centroids", (nlist, dim), fmt)
-        return IvfSqIndex(
-            metric=meta["metric"],
-            nlist=nlist,
-            dim=dim,
-            centroids=cents,
-            vmin=np.asarray(p["vmin"], dtype=np.float64),
-            vmax=np.asarray(p["vmax"], dtype=np.float64),
-            codes=rd("codes"),
-            colocated=True,  # partitionBy("list_id") artifact
-        )
-    if itype == "sq":
-        p = meta["params"]
-        return SqIndex(
-            dim=dim,
-            metric=meta["metric"],
-            vmin=np.asarray(p["vmin"], dtype=np.float64),
-            vmax=np.asarray(p["vmax"], dtype=np.float64),
-            codes=rd("codes"),
         )
     if itype == "pca":
         p = meta["params"]
@@ -717,17 +611,26 @@ def load_index(spark: SparkSession, path: str):
 # artifact maintenance: compaction + persisted remove
 # ---------------------------------------------------------------------------
 
-#: index_type -> (data tables, partitioned-by-list_id tables)
+#: the other kinds' (data tables, partitioned-by-list_id tables)
 _DATA_TABLES: dict[str, tuple[list[str], list[str]]] = {
-    "flat": (["vectors"], []),
-    "ivf": (["assignments"], ["assignments"]),
-    "pq": (["codes"], []),
     "opq": (["codes", "rotation"], []),
-    "sq": (["codes"], []),
-    "ivfpq": (["codes"], ["codes"]),
-    "ivfsq": (["codes"], ["codes"]),
     "lsh": (["vectors", "buckets"], []),
 }
+
+
+def _data_tables(itype: str) -> tuple[list[str], list[str]]:
+    """(data tables, partitioned-by-list_id tables) of an artifact
+    type; a type whose rows cannot be rewritten raises, so a remove or
+    a compact never reports success having done nothing."""
+    from gofaiss_spark.operators.kinds import KINDS
+
+    kd = KINDS.get(itype)
+    if kd is not None:
+        return [kd.table], [kd.table] if kd.cell else []
+    if itype not in _DATA_TABLES:
+        raise ValueError(
+            f"remove and compact do not support {itype!r} artifacts")
+    return _DATA_TABLES[itype]
 
 
 def _parquet_files(path: str) -> list[str]:
@@ -768,7 +671,7 @@ def compact_index(
     in tests). Returns {table: {files_before, files_after, rows}}.
     """
     meta = _read_meta(path)
-    tables, partitioned = _DATA_TABLES.get(meta["index_type"], ([], []))
+    tables, partitioned = _data_tables(meta["index_type"])
     report: dict = {}
     for name in tables:
         tdir = f"{path}/{name}"
@@ -809,7 +712,7 @@ def remove_from_index(spark: SparkSession, path: str, ids) -> int:
         ids = [r[0] for r in ids.collect()]
     ids = [int(i) for i in ids]
     meta = _read_meta(path)
-    tables, partitioned = _DATA_TABLES.get(meta["index_type"], ([], []))
+    tables, partitioned = _data_tables(meta["index_type"])
     removed = 0
     for name in tables:
         primary = name == tables[0]

@@ -529,6 +529,38 @@ class TestServerPool:
         assert ids.shape == (0, 5) and d.shape == (0, 5)
         assert ids.dtype == np.int64 and d.dtype == np.float64
 
+    def test_pool_blas_cap_is_the_spawn_environment(self, ivf_local,
+                                                    monkeypatch):
+        """Building a pool warns about nothing; every worker exists
+        when it returns, so each one started inside the spawn window
+        and runs with its BLAS cap, while the parent gets its own
+        value back."""
+        import os
+        import time
+        import warnings
+
+        from gofaiss_spark.operators.local_serve import LocalServerPool
+
+        monkeypatch.setenv("OPENBLAS_NUM_THREADS", "3")
+        with warnings.catch_warnings():
+            warnings.simplefilter("error")
+            pool = LocalServerPool(ivf_local, workers=2, worker_threads=1)
+        try:
+            procs = list(pool._exe._processes.values())
+            assert len(procs) == 2 and all(p.is_alive() for p in procs)
+            assert os.environ["OPENBLAS_NUM_THREADS"] == "3"
+            # eval is a builtin, so the task pickles by reference
+            task = ("__import__('os').getpid(), "
+                    "__import__('os').environ.get('OPENBLAS_NUM_THREADS')")
+            seen, deadline = {}, time.monotonic() + 60
+            while len(seen) < 2 and time.monotonic() < deadline:
+                futs = [pool._exe.submit(eval, task) for _ in range(8)]
+                seen.update(f.result() for f in futs)
+            assert set(seen) == {p.pid for p in procs}
+            assert set(seen.values()) == {"1"}
+        finally:
+            pool.close()
+
     def test_shm_export_empty_array(self):
         from gofaiss_spark.operators.local_serve import (
             _shm_attach,
