@@ -18,6 +18,7 @@ import os
 import threading
 import time
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 
 from gofaiss_spark.operators.flat import FlatIndex, build_flat
@@ -257,7 +258,9 @@ def localized_mb(index) -> float | None:
     if n is None:  # one count job per index object, cached
         n = index.__dict__["_tier_nrows"] = int(
             getattr(index, kd.table).count())
-    per_row = getattr(index, kd.width) * kd.elem_bytes + 16
+    # the replica's row matrix in its local dtype, plus 16 bytes a
+    # row for the id and bookkeeping
+    per_row = getattr(index, kd.width) * np.dtype(kd.dtype).itemsize + 16
     return n * per_row / (1024 * 1024)
 
 
@@ -571,7 +574,6 @@ def _np_results_to_df(spark, qids, ids, dists) -> DataFrame:
     (query_id, id, distance, rank 1..k); padding rows (no k-th
     neighbor in the probed cells: id −1 / dist inf) are dropped, same
     as the distributed plan simply yielding fewer rows."""
-    import numpy as np
     import pandas as pd
 
     kk = ids.shape[1]

@@ -60,7 +60,6 @@ class Kind:
     quantizer: tuple   # arrays the Local*Index takes from the index, f64
     params: tuple      # ``_meta.json`` params, in file order
     width: str         # attribute giving a row's element count
-    elem_bytes: int    # bytes per row element, for ``api.localized_mb``
     dtype: type        # the local row matrix dtype
     takes: tuple       # search keywords the kind takes
     # named, not held: resolved at call time, so the module attribute
@@ -91,10 +90,9 @@ class Kind:
                         self.to_local)(index)
 
 
-_VEC = {"row_col": "vec", "width": "dim", "elem_bytes": 4,
-        "dtype": np.float32}
-_PQ = {"row_col": "code", "width": "m", "elem_bytes": 1, "dtype": np.uint16}
-_SQ = {"row_col": "code", "width": "dim", "elem_bytes": 1, "dtype": np.uint8}
+_VEC = {"row_col": "vec", "width": "dim", "dtype": np.float32}
+_PQ = {"row_col": "code", "width": "m", "dtype": np.uint16}
+_SQ = {"row_col": "code", "width": "dim", "dtype": np.uint8}
 
 KINDS = {kd.name: kd for kd in (
     Kind("flat", FlatIndex, LocalFlatIndex, "vectors", cell=False,

@@ -7,12 +7,14 @@ disposition (SURVEY.md §2.4): Parquet IS the binary format
 ``format_version`` field in ``_meta.json`` with the same compat rule.
 
 Layout on disk (all relative to the index root):
-    _meta.json                    {index_type, dim, metric, params, format_version}
+    _meta.json                    {index_type, dim, metric, params, format,
+                                   format_version[, deletes]}
     vectors/     (flat, lsh)      parquet
     centroids/   (ivf, ivfpq)     parquet (list_id, centroid)
     assignments/ (ivf)            parquet partitionBy(list_id)  ← nprobe pruning
     codebooks/   (pq, ivfpq)      parquet (m, k, centroid)
     codes/       (pq)             parquet; (ivfpq) partitionBy(list_id)
+    _deletes/                     <table>-<uuid>.parquet (file_name, id)
 
 partitionBy("list_id") is the load-bearing choice: an nprobe search
 filters list_id IN (...) and Catalyst prunes the untouched partition
@@ -26,6 +28,18 @@ read the same way. Every Spark-written component has a
 ``_schema.json`` sidecar in both formats, which ``load_index`` reads
 instead of running Spark's schema inference (without one, it infers).
 Sidecars are replaced atomically (``_write_json``).
+
+Removes are merge-on-read, in the shape of Iceberg position deletes
+and Delta deletion vectors: ``remove_from_index`` writes the
+(data file name, id) pairs of its victims to a delete file under
+``_deletes/`` and publishes it in ``_meta.json`` as
+``"deletes": {table: [file, ...]}``. Only listed delete files count,
+so a remove that dies before publishing changes nothing. Every reader
+of a table applies them (``_live_df``, a broadcast left-anti join);
+``compact_index`` rewrites the live rows and folds them away. Keying
+on the file name rather than the path keeps a delete valid when the
+artifact is copied or moved, and leaves an id added again later (it
+lands in a newer file) visible.
 """
 
 from __future__ import annotations
@@ -33,13 +47,16 @@ from __future__ import annotations
 import json
 import os
 import shutil
+import uuid
 
 import numpy as np
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-FORMAT_VERSION = "1.0.0"
+FORMAT_VERSION = "1.1.0"  # 1.1: the ``deletes`` meta key
+
+DELETES = "_deletes"
 
 
 def check_version_compat(found: str) -> None:
@@ -99,6 +116,11 @@ def migrate_index(spark: SparkSession, path: str, target: str | None = None) -> 
         meta["format_version"] = to_version
         _write_json(os.path.join(path, "_meta.json"), meta, indent=2)
     return meta
+
+
+# 1.1.0 only adds the optional ``deletes`` key: a 1.0.0 artifact is a
+# 1.1.0 artifact without deletes
+register_migration("1.0.0", "1.1.0", lambda spark, path, meta: meta)
 
 
 def artifact_size_mb(path: str) -> float:
@@ -255,6 +277,33 @@ def _read_df(spark: SparkSession, path: str, fmt: str = "parquet"):
     schema = _read_schema(path)
     reader = spark.read if schema is None else spark.read.schema(schema)
     return getattr(reader, fmt)(path)
+
+
+def _live_df(spark: SparkSession, path: str, meta: dict, name: str,
+             file_col: str | None = None):
+    """Table ``name`` of the artifact at ``path`` less the rows its
+    published delete files list: every reader of a table goes through
+    here. The deletes are one broadcast left-anti join on (data file
+    name, id) against a local relation, so the plan stays the same
+    size however many rows are deleted, and a probed ``list_id``
+    filter still prunes partition directories. The view has the
+    table's schema, plus each row's data file name in ``file_col``
+    when one is given."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    df = _read_df(spark, f"{path}/{name}", meta.get("format", "parquet"))
+    files = meta.get("deletes", {}).get(name)
+    if not files and file_col is None:
+        return df
+    col = file_col or "_file"
+    df = df.withColumn(col, F.col("_metadata.file_name"))
+    if files:
+        gone = pa.concat_tables(
+            [pq.read_table(os.path.join(path, DELETES, f)) for f in files])
+        gone = spark.createDataFrame(gone.rename_columns([col, "id"]))
+        df = df.join(F.broadcast(gone), [col, "id"], "left_anti")
+    return df if file_col else df.drop(col)
 
 
 def _drop_stale_schema(path: str, schema) -> None:
@@ -492,7 +541,7 @@ def load_index(spark: SparkSession, path: str):
     fmt = meta.get("format", "parquet")
 
     def rd(name: str):
-        return _read_df(spark, f"{path}/{name}", fmt)
+        return _live_df(spark, path, meta, name)
 
     kd = KINDS.get(itype)
     if kd is not None:
@@ -633,13 +682,21 @@ def _data_tables(itype: str) -> tuple[list[str], list[str]]:
     return _DATA_TABLES[itype]
 
 
-def _parquet_files(path: str) -> list[str]:
+def _data_files(path: str, fmt: str = "parquet") -> list[str]:
+    """The part files under ``path``; sidecars (``_schema.json``) and
+    hidden files are not data."""
     out = []
     for root, _dirs, files in os.walk(path):
-        out.extend(
-            os.path.join(root, f) for f in files if f.endswith(".parquet")
-        )
+        out.extend(os.path.join(root, f) for f in files
+                   if f.endswith(f".{fmt}") and not f.startswith(("_", ".")))
     return out
+
+
+def _footer_rows(files: list[str]) -> int:
+    """Rows in Parquet data files, from their footers: no Spark job."""
+    import pyarrow.parquet as pq
+
+    return sum(pq.read_metadata(f).num_rows for f in files)
 
 
 def _swap_dir(tmp: str, dst: str) -> None:
@@ -656,40 +713,54 @@ def _swap_dir(tmp: str, dst: str) -> None:
 def compact_index(
     spark: SparkSession, path: str, target_rows_per_file: int = 1_000_000
 ) -> dict:
-    """Compact a saved artifact's data tables: rewrite many small
-    files (the inevitable residue of streaming micro-batch appends —
-    one file per list per batch) into few balanced ones, preserving
+    """Compact a saved artifact: rewrite each data table's live rows
+    (its files less its published deletes) into few balanced files,
+    then publish ``_meta.json`` without ``deletes`` and unlink
+    ``_deletes/``. This folds the removes away, drops any delete file a
+    failed remove left unpublished, and merges the many small files
+    streaming appends leave (one file per list per batch), keeping
     the ``partitionBy(list_id)`` layout that nprobe pruning needs.
 
     Partitioned tables are rewritten with ``repartition("list_id")``
     — hash-clustered so each inverted list lands contiguous in one
     task → one file per list (the ``colocated`` fast path that skips
-    the per-partition ADC rebuild at search time). Unpartitioned
-    tables coalesce to ``ceil(rows / target_rows_per_file)`` files.
-    Readers are unaffected semantically: same rows, same schema, same
-    partition directories; search results are byte-identical (gated
-    in tests). Returns {table: {files_before, files_after, rows}}.
+    the per-partition ADC rebuild at search time); a list whose rows
+    were all removed gets no directory. Unpartitioned tables coalesce
+    to ``ceil(rows / target_rows_per_file)`` files, rows read from the
+    Parquet footers before the deletes apply (a JSON export gets one
+    file). ``rows`` in the report is read from the written files'
+    footers (``None`` for JSON), so the write is the only Spark work.
+    Readers are unaffected semantically: same live rows, same schema;
+    search results are byte-identical (gated in tests). A crash after a
+    table's swap but before the meta is published leaves deletes that
+    name files no longer there, which match nothing. Returns
+    {table: {files_before, files_after, rows}}.
     """
     meta = _read_meta(path)
+    fmt = meta.get("format", "parquet")
     tables, partitioned = _data_tables(meta["index_type"])
     report: dict = {}
     for name in tables:
         tdir = f"{path}/{name}"
-        before = len(_parquet_files(tdir))
-        df = _read_df(spark, tdir)
-        rows = df.count()
+        before = _data_files(tdir, fmt)
+        df = _live_df(spark, path, meta, name)
         tmp = f"{path}/.{name}.compact"
         if name in partitioned:
-            _write_df(df, tmp, "parquet", "list_id")
+            _write_df(df, tmp, fmt, "list_id")
         else:
+            rows = _footer_rows(before) if fmt == "parquet" else 0
             n_files = max(1, -(-rows // target_rows_per_file))
-            _write_df(df.coalesce(n_files), tmp, "parquet")
+            _write_df(df.coalesce(n_files), tmp, fmt)
         _swap_dir(tmp, tdir)
+        after = _data_files(tdir, fmt)
         report[name] = {
-            "files_before": before,
-            "files_after": len(_parquet_files(tdir)),
-            "rows": rows,
+            "files_before": len(before),
+            "files_after": len(after),
+            "rows": _footer_rows(after) if fmt == "parquet" else None,
         }
+    meta.pop("deletes", None)
+    _write_meta(path, meta)
+    shutil.rmtree(os.path.join(path, DELETES), ignore_errors=True)
     return report
 
 
@@ -698,58 +769,40 @@ def remove_from_index(spark: SparkSession, path: str, ids) -> int:
     "remove not supported" for IVF, ivf.go:176-178; our in-memory
     ``api.remove`` anti-joins — this is the persisted twin).
 
-    For list-partitioned tables the rewrite is PARTITION-PRUNED: the
-    ids are first located (one pruned-column scan of (id, list_id)),
-    then ONLY the affected list directories are rewritten and
-    atomically swapped; untouched lists keep their files — at
-    nlist=65k and a handful of deletes, that is a few directories,
-    not a table rewrite. Emptied lists have their directories
-    removed outright (the case dynamic partition overwrite silently
-    skips). Unpartitioned tables rewrite wholesale. Returns the
-    number of rows removed from the primary data table.
+    Merge-on-read: one Spark job per id-keyed table (two while deletes
+    are listed: the join broadcasts them) finds the live rows holding
+    ``ids`` and collects their (data file name, id). The
+    pairs are written to ``_deletes/<table>-<uuid>.parquet`` with
+    pyarrow and published by listing that file under ``deletes`` in
+    ``_meta.json`` (one atomic replace). No data file is opened for
+    writing: every reader drops the rows (``_live_df``) until
+    ``compact_index`` rewrites the tables without them. A remove that
+    dies before publishing leaves an unlisted delete file, which no
+    reader applies. Returns the number of rows removed from the
+    primary data table.
     """
+    import pyarrow.parquet as pq
+
     if not isinstance(ids, (list, tuple)):
         ids = [r[0] for r in ids.collect()]
-    ids = [int(i) for i in ids]
+    ids = sorted({int(i) for i in ids})
     meta = _read_meta(path)
-    tables, partitioned = _data_tables(meta["index_type"])
+    tables, _ = _data_tables(meta["index_type"])
+    deletes = dict(meta.get("deletes", {}))
     removed = 0
     for name in tables:
-        primary = name == tables[0]
-        tdir = f"{path}/{name}"
-        df = _read_df(spark, tdir)
+        df = _live_df(spark, path, meta, name, file_col="file_name")
         if "id" not in df.columns:
             continue  # not keyed by row id (OPQ's rotation: i, row)
-        hit = F.col("id").isin(ids)
-        if name in partitioned:
-            affected = [
-                r["list_id"]
-                for r in df.filter(hit).select("list_id").distinct().collect()
-            ]
-            if not affected:
-                continue
-            sub = df.filter(F.col("list_id").isin(affected))
-            if primary:
-                removed = sub.filter(hit).count()
-            keep = sub.filter(~hit)
-            tmp = f"{path}/.{name}.remove"
-            # the rewritten lists keep the table's schema, so its
-            # ``_schema.json`` stays true
-            _write_df(keep, tmp, "parquet", "list_id")
-            for lid in affected:
-                old = f"{tdir}/list_id={lid}"
-                new = f"{tmp}/list_id={lid}"
-                shutil.rmtree(old, ignore_errors=True)
-                if os.path.isdir(new):
-                    os.rename(new, old)
-            shutil.rmtree(tmp, ignore_errors=True)
-        else:
-            n = df.filter(hit).count()
-            if not n:
-                continue
-            if primary:
-                removed = n
-            tmp = f"{path}/.{name}.remove"
-            _write_df(df.filter(~hit), tmp, "parquet")
-            _swap_dir(tmp, tdir)
+        hits = df.filter(F.col("id").isin(ids)).select(
+            "file_name", "id").toArrow()
+        if name == tables[0]:
+            removed = hits.num_rows
+        if hits.num_rows:
+            fname = f"{name}-{uuid.uuid4().hex}.parquet"
+            os.makedirs(os.path.join(path, DELETES), exist_ok=True)
+            pq.write_table(hits, os.path.join(path, DELETES, fname))
+            deletes[name] = [*deletes.get(name, []), fname]
+    if deletes != meta.get("deletes", {}):
+        _write_meta(path, {**meta, "deletes": deletes})
     return removed

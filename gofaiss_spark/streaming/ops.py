@@ -294,15 +294,23 @@ def stream_add_to_ivf(
 
     def add_batch(batch: DataFrame, batch_id: int) -> None:
         from gofaiss_spark.operators.ivf import assign_to_centroids
-        from gofaiss_spark.plans.artifacts import _drop_stale_schema, load_index
+        from gofaiss_spark.plans.artifacts import (
+            _drop_stale_schema,
+            _read_matrix,
+            _read_meta,
+        )
 
         if batch.isEmpty():
             return
-        idx = load_index(batch.sparkSession, index_path)
+        # the centroids are all an append needs: no load_index, which
+        # would list every list directory of the artifact
+        meta = _read_meta(index_path)
+        shape = (int(meta["params"]["nlist"]), int(meta["dim"]))
         assigned = assign_to_centroids(
             batch.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec")),
-            idx.centroids,
-            idx.metric,
+            _read_matrix(f"{index_path}/centroids", shape,
+                         meta.get("format", "parquet")),
+            meta["metric"],
         )
         table = f"{index_path}/assignments"
         assigned.write.mode("append").partitionBy("list_id").parquet(table)

@@ -251,3 +251,45 @@ def test_meta_write_is_atomic(spark, vdf, tmp_path, monkeypatch):
         assert f.read() == before
     assert not glob.glob(f"{path}/*.tmp")
     assert load_index(spark, path).vectors.count() == N
+
+
+def test_load_of_many_lists_lists_them_on_the_driver(spark, vdf, tmp_path):
+    """More list directories than Spark's default parallel-discovery
+    threshold (32) are still listed on the driver: no Spark job."""
+    path = str(tmp_path / "ivf")
+    save_index(build_ivf(vdf, nlist=40, seed=3, trainer="local"), path)
+    assert len(glob.glob(f"{path}/assignments/list_id=*")) > 32
+    loaded, n_load = _jobs(spark, lambda: load_index(spark, path))
+    assert n_load == 0, n_load
+    assert loaded.assignments.count() == N
+
+
+def test_remove_runs_one_job(spark, vdf, tmp_path):
+    """A remove finds its victims with one scan and writes no data
+    file; before, it rewrote each list holding one, in several jobs."""
+    path = str(tmp_path / "ivf")
+    save_index(build_ivf(vdf, nlist=16, seed=3, trainer="local"), path)
+    n, jobs = _jobs(spark, lambda: remove_from_index(
+        spark, path, list(range(0, N, 10))))
+    assert (n, jobs) == (N // 10, 1)
+
+
+def test_format_version_gates_deletes(spark, vdf, tmp_path, monkeypatch):
+    """A 1.0.0 artifact (no deletes) loads and migrates to 1.1.0
+    unchanged; a 1.0.0 reader refuses an artifact that may carry
+    deletes instead of showing deleted rows."""
+    path = str(tmp_path / "flat")
+    save_index(build_flat(vdf), path)
+    meta_path = f"{path}/_meta.json"
+    with open(meta_path) as f:
+        meta = json.load(f)
+    assert meta["format_version"] == "1.1.0"
+    with open(meta_path, "w") as f:
+        json.dump({**meta, "format_version": "1.0.0"}, f)
+    assert load_index(spark, path).vectors.count() == N
+    assert artifacts.migrate_index(spark, path) == meta
+
+    remove_from_index(spark, path, [0, 1])
+    monkeypatch.setattr(artifacts, "FORMAT_VERSION", "1.0.0")
+    with pytest.raises(ValueError, match="newer"):
+        load_index(spark, path)

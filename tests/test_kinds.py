@@ -91,7 +91,7 @@ def _pinned_meta(kind, idx, fmt):
     meta = {"index_type": kind, "dim": DIM, "metric": "l2"}
     if params is not None:
         meta["params"] = params
-    return {**meta, "format": fmt, "format_version": "1.0.0"}
+    return {**meta, "format": fmt, "format_version": "1.1.0"}
 
 
 def _pinned_layout(kind):
@@ -196,3 +196,13 @@ def test_remove_and_compact_reject_artifacts_they_cannot_rewrite(
         remove_from_index(spark, path, [1, 2])
     with pytest.raises(ValueError, match=itype):
         compact_index(spark, path)
+
+
+@pytest.mark.parametrize("kind", list(BUILDS))
+def test_localized_mb_counts_the_replica_rows(indexes, kind):
+    """``api.localized_mb`` is the local replica's row matrix in its
+    own dtype (PQ codes are uint16) plus 16 bytes a row."""
+    idx, kd = indexes[kind], KINDS[kind]
+    local = kd.localize(idx)
+    rows = local.codes if kd.row_col == "code" else local.vecs
+    assert api.localized_mb(idx) * 2 ** 20 == rows.nbytes + 16 * N
