@@ -194,7 +194,11 @@ def cache_index(index) -> None:
 #                request of the served handle runs there (GIL-free),
 #                split into tasks of at least POOL_TASK_QUERIES (16)
 #                queries, at most workers × 2: a small request is one
-#                task, so concurrent callers each take a worker.
+#                task, so concurrent callers each take a worker. The
+#                caller's own thread sends each task down an idle
+#                worker's pipe and reads the answer back; there is no
+#                broker thread. A failed pool (a lost worker) raises
+#                on every call, and _drop_pool retires it.
 #   sharded      executor-colocated shm shards (operators/
 #                shard_serve.py) over a partitioned artifact.
 #   distributed  the Spark plan (scan per query batch) — the only tier

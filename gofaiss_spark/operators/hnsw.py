@@ -1204,7 +1204,7 @@ def search_hnsw_routed(
     carries (queries, per-shard probe lists), and each shard's task
     searches ONLY the queries routed to it. Result rows entering the
     global top-k: ≤ nprobe × q × k — nlist-independent."""
-    from gofaiss_spark.functions.distance import np_distance_matrix
+    from gofaiss_spark.operators.local_serve import _probe_cells
 
     ef = int(ef_search if ef_search is not None else index.ef_search)
     spark = index.spark or queries.sparkSession
@@ -1217,13 +1217,7 @@ def search_hnsw_routed(
     qmat = np.stack([np.asarray(r["qvec"], dtype=np.float32) for r in qrows])
     nlist = index.centroids.shape[0]
     np_ = int(nprobe if nprobe is not None else index.default_nprobe)
-    if np_ <= 0 or np_ > nlist:
-        np_ = nlist
-    dmat = np_distance_matrix(index.centroids, qmat, index.metric)  # (nlist, q)
-    if np_ < nlist:
-        sel = np.argpartition(dmat, np_ - 1, axis=0)[:np_, :]  # (nprobe, q)
-    else:
-        sel = np.broadcast_to(np.arange(nlist)[:, None], (nlist, qmat.shape[0]))
+    sel = _probe_cells(index.centroids, qmat, index.metric, np_).T  # (nprobe, q)
     probe_map: dict[int, np.ndarray] = {}
     qcols = np.broadcast_to(
         np.arange(qmat.shape[0])[None, :], sel.shape

@@ -50,6 +50,7 @@ from __future__ import annotations
 import os as _os
 import threading as _threading
 from dataclasses import dataclass, fields
+from multiprocessing.connection import wait as _mp_wait
 
 import numpy as np
 
@@ -90,13 +91,16 @@ _COUNTER_LOCK = _threading.Lock()
 # The fewest queries a LocalServerPool task carries: a request is
 # split into nq // POOL_TASK_QUERIES tasks, at least one and at most
 # workers × 2, so a request below 2 × POOL_TASK_QUERIES runs as ONE
-# task. Measured on a 50k × 128 IVF replica (nlist 128, nprobe 4,
-# 4 CPUs, 4 workers, closed-loop clients): split at 16 queries a
-# task, one client's 32- to 511-query requests reached 1.5-3× the
-# qps they reach as one task (a lone task leaves three workers
-# idle). With 4 clients a split gained nothing at 16-128 queries and
-# cost 30-55% at 256-511 (every worker is already busy; each extra
-# task adds a round trip), still 1.2-1.6× the in-process replica.
+# task, sent whole to one worker and returned as that worker's
+# answer. Measured on a 50k × 128 IVF replica (nlist 128, nprobe 4,
+# 4 CPUs, 4 workers, closed-loop clients, stdlib-executor transport):
+# split at 16 queries a task, one client's 32- to 511-query requests
+# reached 1.5-3× the qps they reach as one task (a lone task leaves
+# three workers idle). With 4 clients a split gained nothing at
+# 16-128 queries and cost 30-55% at 256-511 (every worker is already
+# busy; each extra task adds a round trip), still 1.2-1.6× the
+# in-process replica. A split request takes only the workers idle
+# when it starts.
 POOL_TASK_QUERIES = 16
 
 # result padding: a query with fewer than k candidates gets id
@@ -221,8 +225,9 @@ def _probe_cells(centroids: np.ndarray, q64: np.ndarray, metric: str,
     """The cell family's probe head (ivf.go:131-141): each query's
     probed cells (nq, nprobe), its nprobe nearest centroids in f64.
     Every tier probes with this one function (the distributed search
-    once per request, on the driver). nprobe ≤ 0 or > nlist probes
-    every cell (ivf.go:122-129)."""
+    once per request, on the driver), and so does the routed-HNSW
+    kind on every tier, with its raw f32 queries. nprobe ≤ 0 or
+    > nlist probes every cell (ivf.go:122-129)."""
     nlist = centroids.shape[0]
     if 0 < nprobe < nlist:
         dm = np_distance_matrix(centroids, q64, metric)
@@ -1015,7 +1020,6 @@ class LocalHnswRoutedIndex:
         like `topk` ranks the distributed results."""
         import pandas as pd
 
-        from gofaiss_spark.functions.distance import np_distance_matrix
         from gofaiss_spark.operators.hnsw import (
             _prep,
             _search_graph_batch,
@@ -1034,16 +1038,10 @@ class LocalHnswRoutedIndex:
         ef = int(ef_search if ef_search is not None else self.ef_search)
         G = len(self.graphs)
         np_ = int(nprobe) if nprobe is not None else int(self.default_nprobe)
-        if np_ <= 0 or np_ > G:
-            np_ = G
         # routing: raw f32 queries against the f64 centroid table —
-        # the same inputs search_hnsw_routed feeds np_distance_matrix,
-        # so the probed SET is identical
-        if np_ < G:
-            dmat = np_distance_matrix(self.centroids, q, self.metric)
-            sel = np.argpartition(dmat, np_ - 1, axis=0)[:np_, :]
-        else:
-            sel = np.broadcast_to(np.arange(G)[:, None], (G, nq))
+        # the same inputs search_hnsw_routed probes with, so the
+        # probed SET is identical
+        sel = _probe_cells(self.centroids, q, self.metric, np_).T
         qp = _prep(q, self.metric)
         # scan-once probe map (same shape as the distributed searcher)
         qcols = np.broadcast_to(np.arange(nq)[None, :], sel.shape).ravel()
@@ -1290,8 +1288,25 @@ def _mp_worker_init(spec: dict) -> None:
         _WORKER_INDEX = local_index(kind, metric, arrays)
 
 
-def _mp_ping(_: int) -> bool:
-    return _WORKER_INDEX is not None
+def _mp_worker(conn, spec: dict) -> None:
+    """A pool worker's whole life: attach the index and say ready,
+    then run each ``(fn, args)`` message from its own connection and
+    reply ``(ok, result or exception)``, until EOF."""
+    try:
+        _mp_worker_init(spec)
+        out = (True, None)
+    except Exception as exc:
+        out = (False, exc)
+    while True:
+        try:
+            conn.send(out)
+            fn, args = conn.recv()
+        except (EOFError, OSError):
+            return  # the pool is gone
+        try:
+            out = (True, fn(*args))
+        except Exception as exc:
+            out = (False, exc)
 
 
 def _mp_search(q: np.ndarray, k: int, args: dict):
@@ -1342,22 +1357,37 @@ class LocalServerPool:
     (default: W = cores / worker_threads, capped at 32). The spawn
     context is used (fork-safety with loaded BLAS); workers inherit
     ``OPENBLAS/OMP/MKL_NUM_THREADS = worker_threads`` so per-process
-    BLAS pools don't oversubscribe.
+    BLAS pools don't oversubscribe. Every worker is running and has
+    attached the index when the constructor returns.
+
+    Transport: one duplex pipe per worker, and no broker thread. A
+    call waits for one idle worker, then takes whichever others are
+    idle already, up to its task count, without waiting for more (a
+    call that holds workers never waits for another, so concurrent
+    calls cannot deadlock). It runs its tasks on the workers it
+    holds as each one frees, on the caller's own thread, and gives
+    them back; a one-task call is one send and one receive.
 
     ``search`` splits a request into contiguous slices of at least
     ``POOL_TASK_QUERIES`` queries (at most 2 per worker, for
-    balance), scatters and re-concatenates them; a small request is
-    one task, so concurrent small requests from several client
-    threads each take a worker.
-    Output is bit-identical to ``index.search`` on the whole batch.
-    Use as a context manager or call ``close()`` to free the shared
-    memory.
+    balance); a request below 2 × ``POOL_TASK_QUERIES`` is one task,
+    so concurrent small requests from several client threads each
+    take a worker. Output is bit-identical to ``index.search`` on the
+    whole batch.
+
+    Failure: an exception a task raises is re-raised to its caller
+    and the pool stays usable. A lost worker (EOF or a broken pipe)
+    breaks the pool: that call and every later one raise at once.
+    ``close()`` stops every worker (an idle one by closing its pipe,
+    as a worker exits on EOF; one mid-request by SIGTERM, and that
+    request raises), joins them and unlinks the shared memory; it
+    waits on no timeout and may be called again. Use the pool as a
+    context manager or call ``close()``.
     """
 
     def __init__(self, index, workers: int | None = None,
                  worker_threads: int = 1):
         import multiprocessing as mp
-        from concurrent.futures import ProcessPoolExecutor
 
         from gofaiss_spark.operators.kinds import KINDS
 
@@ -1367,7 +1397,10 @@ class LocalServerPool:
         cpu = _os.cpu_count() or 8
         self.workers = workers or max(1, min(32, cpu // max(1, worker_threads)))
         self._shms = []
-        self._exe = None
+        self._procs, self._conns = [], []  # index-aligned, one a worker
+        self._idle = []  # connections of the workers no call holds
+        self._cv = _threading.Condition()
+        self._broken = None  # why every call now raises, once it does
         kind = next((kd.name for kd in KINDS.values()
                      if type(index) is kd.local), None)
         if kind is not None:
@@ -1419,24 +1452,30 @@ class LocalServerPool:
         for kk in env_keys:
             _os.environ[kk] = str(worker_threads)
         try:
-            self._exe = ProcessPoolExecutor(
-                max_workers=self.workers,
-                mp_context=mp.get_context("spawn"),
-                initializer=_mp_worker_init,
-                initargs=(spec,),
-            )
-            # spawn + verify workers now (first-search latency belongs
-            # to construction, not serving). Explicit check — assert
-            # would vanish under ``python -O``. Eager spawn also means
-            # every worker starts INSIDE the env window above, the one
-            # BLAS cap: without max_tasks_per_child the executor never
-            # replaces a worker (a dead one breaks the pool, which
-            # api._drop_pool handles).
-            if not all(self._exe.map(_mp_ping, range(self.workers))):
-                raise RuntimeError(
-                    "LocalServerPool: a worker failed to attach the "
-                    "shared-memory index during eager spawn"
-                )
+            # spawn every worker INSIDE the env window above (the one
+            # BLAS cap) and wait until each has attached the index:
+            # first-search latency belongs to construction. A dead
+            # worker is never replaced; it breaks the pool, which
+            # api._drop_pool handles.
+            ctx = mp.get_context("spawn")
+            for _ in range(self.workers):
+                conn, child = ctx.Pipe()
+                p = ctx.Process(target=_mp_worker, args=(child, spec),
+                                daemon=True)
+                p.start()
+                child.close()
+                self._procs.append(p)
+                self._conns.append(conn)
+            self._idle = list(self._conns)
+            for conn in self._conns:
+                try:
+                    ok, exc = conn.recv()
+                except EOFError as eof:  # the worker died starting up
+                    ok, exc = False, eof
+                if not ok:
+                    raise RuntimeError(
+                        "LocalServerPool: a worker failed to start or to "
+                        "attach the shared-memory index") from exc
         except BaseException:
             self.close()
             raise
@@ -1460,17 +1499,67 @@ class LocalServerPool:
         from gofaiss_spark.operators.kinds import KINDS
 
         args = KINDS[self.kind].args(nprobe=nprobe, refine=refine)
-        edges = np.linspace(0, nq, self._ntasks(nq) + 1, dtype=np.int64)
-        futs = [
-            self._exe.submit(_mp_search, q[s:e], k, args)
-            for s, e in zip(edges[:-1], edges[1:]) if e > s
-        ]
-        parts = [f.result() for f in futs]
+        ntasks = self._ntasks(nq)
+        if ntasks == 1:
+            return self._run([(_mp_search, (q, k, args))])[0]
+        edges = np.linspace(0, nq, ntasks + 1, dtype=np.int64)
+        parts = self._run([(_mp_search, (q[s:e], k, args))
+                           for s, e in zip(edges[:-1], edges[1:]) if e > s])
         return (np.vstack([p[0] for p in parts]),
                 np.vstack([p[1] for p in parts]))
 
     def _ntasks(self, nq: int) -> int:
         return max(1, min(self.workers * 2, nq // POOL_TASK_QUERIES))
+
+    def _run(self, tasks: list) -> list:
+        """The pool's one dispatch: run ``(fn, args)`` tasks on the
+        workers this call checks out → their results, in task order."""
+        with self._cv:
+            while not self._idle and self._broken is None:
+                self._cv.wait()
+            if self._broken is not None:
+                raise RuntimeError(f"LocalServerPool is {self._broken}")
+            held = self._idle[-len(tasks):]
+            del self._idle[-len(tasks):]
+        out, err, busy, nxt = [None] * len(tasks), None, {}, 0
+        try:
+            while nxt < len(tasks) or busy:
+                while held and nxt < len(tasks):
+                    c = held.pop()
+                    busy[c], nxt = nxt, nxt + 1
+                    c.send(tasks[busy[c]])
+                ready = list(busy) if len(busy) == 1 else _mp_wait(list(busy))
+                for c in ready:
+                    ok, res = c.recv()
+                    i = busy.pop(c)
+                    held.append(c)
+                    if ok:
+                        out[i] = res
+                    elif err is None:
+                        err, nxt = res, len(tasks)  # drain, send no more
+        except BaseException as exc:
+            # a connection in an unknown state is never reused: a lost
+            # worker (or an interrupted call) breaks the pool
+            with self._cv:
+                self._broken = self._broken or (
+                    f"broken: {type(exc).__name__} on a worker connection")
+                self._cv.notify_all()
+            for c in [*held, *busy]:
+                c.close()
+            if isinstance(exc, (EOFError, OSError)):
+                raise RuntimeError(
+                    f"LocalServerPool is {self._broken}") from exc
+            raise
+        with self._cv:
+            if self._broken is None:
+                self._idle.extend(held)
+                self._cv.notify_all()
+                held = []
+        for c in held:  # the pool closed under this call
+            c.close()
+        if err is not None:
+            raise err
+        return out
 
     def _search_hnsw_cells(
         self, q: np.ndarray, k: int, nprobe,
@@ -1486,8 +1575,6 @@ class LocalServerPool:
         row indices. Output is bit-identical to ``index.search`` on
         the whole batch — the graph kernel is batch-composition
         independent and the merge is the same total order."""
-        from gofaiss_spark.functions.distance import np_distance_matrix
-
         if k <= 0:
             raise ValueError(f"k must be positive, got {k}")
         hr = self._hnsw_route
@@ -1500,13 +1587,7 @@ class LocalServerPool:
             return ids, dists
         G = int(hr["centroids"].shape[0])
         np_ = int(nprobe) if nprobe is not None else hr["nprobe"]
-        if np_ <= 0 or np_ > G:
-            np_ = G
-        if np_ < G:
-            dmat = np_distance_matrix(hr["centroids"], q, hr["metric"])
-            sel = np.argpartition(dmat, np_ - 1, axis=0)[:np_, :]
-        else:
-            sel = np.broadcast_to(np.arange(G)[:, None], (G, nq))
+        sel = _probe_cells(hr["centroids"], q, hr["metric"], np_).T
         qcols = np.broadcast_to(
             np.arange(nq)[None, :], sel.shape).ravel()
         order = np.argsort(sel.ravel(), kind="stable")
@@ -1546,12 +1627,9 @@ class LocalServerPool:
             loads[b] += len(it[1])
         shm, qmeta = _shm_export(q)
         try:
-            futs = [
-                self._exe.submit(
-                    _mp_search_hnsw_cells, qmeta, b, k_eff, hr["ef"])
-                for b in buckets if b
-            ]
-            parts = [f.result() for f in futs]
+            parts = self._run([(_mp_search_hnsw_cells,
+                                (qmeta, b, k_eff, hr["ef"]))
+                               for b in buckets if b])
         finally:
             shm.close()
             shm.unlink()
@@ -1569,9 +1647,18 @@ class LocalServerPool:
         return ids, dists
 
     def close(self) -> None:
-        if self._exe is not None:
-            self._exe.shutdown(wait=True)
-            self._exe = None
+        with self._cv:
+            idle, self._idle = self._idle, []
+            self._broken = "closed"
+            self._cv.notify_all()
+        for c in idle:
+            c.close()  # EOF: an idle worker exits
+        for p, c in zip(self._procs, self._conns):
+            if c not in idle:
+                p.terminate()  # mid-request; its caller's recv sees EOF
+        for p in self._procs:
+            p.join()
+        self._procs, self._conns = [], []
         for shm in self._shms:
             try:
                 shm.close()

@@ -45,13 +45,13 @@ def pool_both_ways():
 
     def run(pool, q, **kw):
         tasks = []
-        submit, per_task = pool._exe.submit, ls.POOL_TASK_QUERIES
+        run, per_task = pool._run, ls.POOL_TASK_QUERIES
 
-        def counted(fn, *args):
-            tasks.append(fn)
-            return submit(fn, *args)
+        def counted(batch):
+            tasks.extend(fn for fn, _ in batch)
+            return run(batch)
 
-        pool._exe.submit = counted
+        pool._run = counted
         try:
             ls.POOL_TASK_QUERIES = 1
             split = pool.search(q, **kw)
@@ -61,7 +61,7 @@ def pool_both_ways():
             whole = pool.search(q, **kw)
             assert len(tasks) == 1
         finally:
-            del pool._exe.submit
+            del pool._run
             ls.POOL_TASK_QUERIES = per_task
         for a, b in zip(split, whole):
             np.testing.assert_array_equal(a, b)

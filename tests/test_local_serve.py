@@ -546,7 +546,7 @@ class TestServerPool:
             warnings.simplefilter("error")
             pool = LocalServerPool(ivf_local, workers=2, worker_threads=1)
         try:
-            procs = list(pool._exe._processes.values())
+            procs = list(pool._procs)
             assert len(procs) == 2 and all(p.is_alive() for p in procs)
             assert os.environ["OPENBLAS_NUM_THREADS"] == "3"
             # eval is a builtin, so the task pickles by reference
@@ -554,12 +554,91 @@ class TestServerPool:
                     "__import__('os').environ.get('OPENBLAS_NUM_THREADS')")
             seen, deadline = {}, time.monotonic() + 60
             while len(seen) < 2 and time.monotonic() < deadline:
-                futs = [pool._exe.submit(eval, task) for _ in range(8)]
-                seen.update(f.result() for f in futs)
+                seen.update(pool._run([(eval, (task,))] * 8))
             assert set(seen) == {p.pid for p in procs}
             assert set(seen.values()) == {"1"}
         finally:
             pool.close()
+
+    def test_pool_close_stops_a_request_in_flight(self, ivf_local):
+        """close() while another thread's request runs returns within
+        seconds, leaves no worker alive and unlinks the segments; the
+        client's request raises instead of hanging. A second close()
+        is a no-op."""
+        import os
+        import threading
+        import time
+
+        from gofaiss_spark.operators.local_serve import LocalServerPool
+
+        pool = LocalServerPool(ivf_local, workers=2)
+        procs = list(pool._procs)
+        segs = [shm.name for shm in pool._shms]
+        q = np.random.default_rng(4).random((4096, 24), dtype=np.float32)
+        served, errors = threading.Event(), []
+
+        def client():
+            try:
+                while True:
+                    pool.search(q, k=10, nprobe=20)
+                    served.set()
+            except Exception as exc:
+                errors.append(exc)
+
+        t = threading.Thread(target=client, daemon=True)
+        t.start()
+        try:
+            assert served.wait(60)
+            t0 = time.monotonic()
+            pool.close()
+            assert time.monotonic() - t0 < 5
+        finally:
+            pool.close()
+        t.join(10)
+        assert not t.is_alive() and errors
+        assert procs and all(not p.is_alive() for p in procs)
+        assert not any(os.path.exists(f"/dev/shm/{n}") for n in segs)
+
+    def test_pool_concurrent_clients_outnumber_workers(self, ivf_local):
+        """8 client threads × 50 requests of 1-600 queries on 2
+        workers: split requests check out only the workers already
+        idle, so no call waits on another and the run finishes in
+        time, with every answer the in-process replica's bits. A short
+        switch interval makes the client threads interleave often."""
+        import sys
+        import threading
+        import time
+
+        from gofaiss_spark.operators.local_serve import LocalServerPool
+
+        wrong, done = [], []
+
+        def client(seed):
+            rng = np.random.default_rng(seed)
+            for _ in range(50):
+                q = rng.random((int(rng.integers(1, 601)), 24),
+                               dtype=np.float32)
+                got = pool.search(q, k=10, nprobe=4)
+                want = ivf_local.search(q, k=10, nprobe=4)
+                if not all(np.array_equal(a, b) for a, b in zip(got, want)):
+                    wrong.append(seed)
+            done.append(seed)
+
+        interval = sys.getswitchinterval()
+        sys.setswitchinterval(1e-5)
+        try:
+            with LocalServerPool(ivf_local, workers=2) as pool:
+                threads = [threading.Thread(target=client, args=(s,),
+                                            daemon=True) for s in range(8)]
+                deadline = time.monotonic() + 180
+                for t in threads:
+                    t.start()
+                for t in threads:
+                    t.join(max(0.0, deadline - time.monotonic()))
+                assert not any(t.is_alive() for t in threads)
+        finally:
+            sys.setswitchinterval(interval)
+        assert sorted(done) == list(range(8)) and not wrong
 
     def test_shm_export_empty_array(self):
         from gofaiss_spark.operators.local_serve import (

@@ -289,13 +289,13 @@ def test_served_local_handle_runs_requests_as_pool_tasks(base):
     pool = idx.__dict__["_tier_pool"]
     assert pool in api._POOLS
     tasks = []
-    submit = pool._exe.submit
+    run = pool._run
 
-    def counted(fn, *args):
-        tasks.append(len(args[0]))
-        return submit(fn, *args)
+    def counted(batch):
+        tasks.extend(len(args[0]) for _, args in batch)
+        return run(batch)
 
-    pool._exe.submit = counted
+    pool._run = counted
     local = idx.__dict__["_tier_local"]
     rng = np.random.default_rng(11)
     try:
@@ -312,7 +312,7 @@ def test_served_local_handle_runs_requests_as_pool_tasks(base):
             np.testing.assert_array_equal(ids, want_ids)
             np.testing.assert_array_equal(d, want_d)
     finally:
-        procs = list(pool._exe._processes.values())
+        procs = list(pool._procs)
         segs = [shm.name for shm in pool._shms]
         srv.close()
     assert procs and segs
@@ -340,6 +340,47 @@ def test_served_pool_survives_a_bad_request(base):
         assert (ids[:, 0] == np.arange(2)).all()
     finally:
         srv.close()
+
+
+def test_served_pool_with_a_killed_worker_falls_back_once(base):
+    """A worker of a served pool is killed (SIGKILL). The request that
+    lands on it is served in process with the same bits, POOL_FALLBACKS
+    rises by exactly 1, and the pool is closed and unregistered with no
+    worker process or pool segment left."""
+    import signal
+
+    from gofaiss_spark.operators import local_serve as ls
+
+    vecs, vdf, _ = base
+    idx = api.build_index(vdf, index_type="ivf", params={"nlist": 8})
+    srv = api.serve(idx, tier="local")
+    pool = idx.__dict__["_tier_pool"]
+    local = idx.__dict__["_tier_local"]
+    procs = list(pool._procs)
+    segs = [shm.name for shm in pool._shms]
+    # workers × 2 tasks (below POOL_MIN_BATCH, so no new pool spawns):
+    # every request checks out every idle worker, the dead one too
+    nq = min(api.POOL_MIN_BATCH - 1,
+             2 * pool.workers * ls.POOL_TASK_QUERIES)
+    rng = np.random.default_rng(13)
+    before = ls.POOL_FALLBACKS
+    try:
+        os.kill(procs[0].pid, signal.SIGKILL)
+        procs[0].join(30)
+        with pytest.warns(RuntimeWarning, match="LocalServerPool failed"):
+            for _ in range(3):
+                q = vecs[rng.integers(0, N, nq)] + rng.normal(
+                    0, 0.01, (nq, DIM)).astype(np.float32)
+                ids, d = srv.search_np(q, k=K, params={"nprobe": 3})
+                want_ids, want_d = local.search(q, k=K, nprobe=3)
+                np.testing.assert_array_equal(ids, want_ids)
+                np.testing.assert_array_equal(d, want_d)
+    finally:
+        srv.close()
+    assert ls.POOL_FALLBACKS == before + 1
+    assert "_tier_pool" not in idx.__dict__ and pool not in api._POOLS
+    assert all(not p.is_alive() for p in procs)
+    assert not any(os.path.exists(f"/dev/shm/{n}") for n in segs)
 
 
 def test_serve_pool_spawn_failure_serves_in_process(base, monkeypatch):
